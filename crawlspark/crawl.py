@@ -18,7 +18,6 @@ which the pytest oracle comparison asserts.
 from __future__ import annotations
 
 import os
-import threading
 import time as _time
 from dataclasses import dataclass, field
 
@@ -237,8 +236,8 @@ def _hosts_frame(hosts_df: DataFrame) -> DataFrame:
 # Batch-invariant Column expressions, built ONCE per SparkContext.
 # Driver-side expression construction is py4j-roundtrip-bound (~1-2 ms per
 # pyspark.sql.functions call; one outcome-style CASE chain alone costs
-# ~17 ms) and totalled ~1 s of EVERY politeness batch (the CRAWLSPARK_PROF
-# "dag_build" tick).  Column objects are unresolved expression trees —
+# ~17 ms) and totalled ~1 s of EVERY politeness batch's plan building.
+# Column objects are unresolved expression trees —
 # reusable across DataFrames and batches; the cache is keyed by the
 # context's applicationId (unique per started context) — id() could be
 # reused by CPython for a NEW SparkContext after the old one is collected,
@@ -246,14 +245,10 @@ def _hosts_frame(hosts_df: DataFrame) -> DataFrame:
 _COLS_CACHE: dict = {}
 
 
-def _invariant_cols(spark: SparkSession) -> dict:
-    key = spark.sparkContext.applicationId
-    cached = _COLS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    _COLS_CACHE.clear()
-    lhost = U.host_expr(F.col("link"))
-    outcome = (
+def _outcome_expr():
+    """Fetch row → progress outcome (done | retry | failed | skipped |
+    revalidated)."""
+    return (
         # corrupt transfer stream (gzip decode failure) retries like a 5xx
         # (reference GzipRetryMiddleware, middlewares.py:36-52)
         F.when(
@@ -278,8 +273,17 @@ def _invariant_cols(spark: SparkSession) -> dict:
         )
         .otherwise(F.lit("failed"))
     )
+
+
+def _invariant_cols(spark: SparkSession) -> dict:
+    key = spark.sparkContext.applicationId
+    cached = _COLS_CACHE.get(key)
+    if cached is not None:
+        return cached
+    _COLS_CACHE.clear()
+    lhost = U.host_expr(F.col("link"))
     c = {
-        "outcome_aliased": outcome.alias("outcome"),
+        "outcome_aliased": _outcome_expr().alias("outcome"),
         "link_skip": U.skip_filter_expr(
             F.col("link"), F.col("link_host"), F.col("link_domain")
         ),
@@ -308,9 +312,9 @@ def _invariant_cols(spark: SparkSession) -> dict:
         # ---- cached SELECT LISTS for the per-batch projections ----
         # Each py4j DataFrame/Column call costs ~3-15 ms of driver time
         # (measured); the batch loop's projections totalled ~100+ calls of
-        # pure plan construction per batch ("dag_build" tick).  Everything
-        # batch-INVARIANT is pre-built here; run_batch only creates the
-        # two or three F.lit(batch_id) terms per projection.
+        # pure plan construction per batch.  Everything batch-INVARIANT
+        # is pre-built here; the batch phases only create the two or three
+        # F.lit(batch_id) terms per projection.
         "rec_fetch": F.col("rec") == "fetch",
         "rec_not_fetch": F.col("rec") != "fetch",
         "rec_link": F.col("rec") == "link",
@@ -568,16 +572,18 @@ def reset_for_recrawl(spark: SparkSession, cfg: CrawlConfig,
     )
 
 
-def _bloom_lineage(bloom: BloomState) -> dict:
+def _bloom_lineage(bloom: BloomState | BloomBucketStore) -> dict:
     """Per-snapshot Bloom health lineage: key count + worst-bucket FPR —
     visible in every manifest so capacity drift is observable."""
     return {
-        "bloom_keys": int(bloom.n_items.sum()),
+        "bloom_keys": bloom.bloom_keys(),
         "bloom_fpr_estimate": round(bloom.fpr_estimate(), 8),
     }
 
 
-def _pending(catalog: SnapshotCatalog, manifest: dict) -> DataFrame:
+def _pending(catalog: SnapshotCatalog, manifest: dict,
+             new_frontier: DataFrame | None = None,
+             new_progress: DataFrame | None = None) -> DataFrame:
     """MERGE-style pending set: a frontier row is pending until a progress
     row exists for the same (url, attempt).
 
@@ -586,6 +592,9 @@ def _pending(catalog: SnapshotCatalog, manifest: dict) -> DataFrame:
     progress DELTAS committed after S can retire current frontier rows, so
     the anti-join's right side is those delta files, not the full
     append-only log (which grows with total fetches ever: 10^10-scale).
+
+    ``new_frontier``/``new_progress``: a batch's uncommitted appends, which
+    compaction folds in to get the pending set AFTER that batch.
     """
     fpaths = manifest.get("tables", {}).get("frontier", [])
     ppaths = manifest.get("tables", {}).get("progress", [])
@@ -593,6 +602,9 @@ def _pending(catalog: SnapshotCatalog, manifest: dict) -> DataFrame:
     recent = [p for p in ppaths if catalog.snap_of(p) > base_snap]
     frontier = catalog.read("frontier", manifest)
     progress = catalog.read_files("progress", recent)
+    if new_frontier is not None:
+        frontier = frontier.unionByName(new_frontier)
+        progress = progress.unionByName(new_progress)
     return frontier.join(
         progress.select("url", F.col("attempt").alias("retry_count")).distinct(),
         on=["url", "retry_count"],
@@ -600,10 +612,507 @@ def _pending(catalog: SnapshotCatalog, manifest: dict) -> DataFrame:
     )
 
 
+def _new_hosts_frame(spark: SparkSession, hosts_tbl: DataFrame, hosts,
+                     known_hosts: set | None = None) -> DataFrame | None:
+    """HOSTS rows (robots fetched) for the names in ``hosts`` that the
+    hosts table lacks, or None when there are none.  Only the tiny name
+    list touches the driver; the robots fetch+parse runs distributed.
+    ``known_hosts`` holds names already verified present: when it covers
+    every name, the membership job is skipped outright."""
+    cand = set(hosts or ()) - (known_hosts or set())
+    if not cand:
+        return None
+    cand_df = spark.createDataFrame([(h,) for h in sorted(cand)], "host string")
+    unknown = sorted(
+        r["host"]
+        for r in cand_df.join(hosts_tbl.select("host"), on="host", how="left_anti").collect()
+    )
+    if not unknown:
+        return None
+    return _hosts_frame(
+        spark.createDataFrame([(h,) for h in unknown], "host string")
+    ).coalesce(1)
+
+
+@dataclass
+class _Batch:
+    """What the phases of one run_batch share."""
+
+    spark: SparkSession
+    catalog: SnapshotCatalog
+    cfg: CrawlConfig
+    manifest: dict
+    batch_id: int
+    is_compact: bool
+    # deferred-count mode: n_sched is the previous batch's count (sizing
+    # only) and the true count is observed on the progress write
+    deferred: bool
+    n_sched: int
+    cols: dict  # _invariant_cols
+    bloom: BloomState | None
+    store: BloomBucketStore | None  # replaced by the state update
+    probe_store: BloomBucketStore | None  # pre-update store, probed this batch
+    prof: dict | None  # phase -> seconds, when CRAWLSPARK_PROF is set
+    known_hosts: set | None  # see run_batch
+    pending: DataFrame | None = None
+    hosts_tbl: DataFrame | None = None
+    trip_hosts: DataFrame | None = None  # hosts behind an open circuit breaker
+    scheduled: DataFrame | None = None
+    retired: DataFrame | None = None  # progress rows of blocked / cached rows
+    revalid_hashes: DataFrame | None = None
+    pipe: DataFrame | None = None
+    new_frontier: DataFrame | None = None
+    sched_obs: Observation | None = None
+    new_hosts: set | None = None
+
+
+def _phase(b: _Batch, fn, *args):
+    """Run one phase of the batch; CRAWLSPARK_PROF records its wall time
+    under the phase's name."""
+    t0 = _time.perf_counter()
+    out = fn(b, *args)
+    if b.prof is not None:
+        b.prof[fn.__name__.lstrip("_")] = _time.perf_counter() - t0
+    return out
+
+
+def _schedule(b: _Batch) -> None:
+    """Pending frontier → politeness top-K ``scheduled`` plus the
+    ``retired`` progress rows (robots-blocked and cache-served rows get a
+    terminal record so they leave the pending set instead of being
+    re-scanned every batch).  The counted path counts ``scheduled``."""
+    cfg, catalog, manifest = b.cfg, b.catalog, b.manifest
+    b.pending = _pending(catalog, manifest)
+    b.hosts_tbl = catalog.read("hosts", manifest)
+    hosts_df = _hosts_with_rx(b.hosts_tbl, cfg.budget_override)
+    if cfg.autothrottle and cfg.budget_override is None:
+        hosts_df = scheduler.apply_autothrottle(
+            hosts_df, catalog.read("metrics", manifest),
+            start_delay_ms=cfg.autothrottle_start_delay_ms,
+            max_delay_ms=cfg.autothrottle_max_delay_ms,
+            target_concurrency=cfg.autothrottle_target_concurrency,
+            period_ms=int(rules.BATCH_PERIOD_S * 1000),
+        )
+    if cfg.failure_trip_threshold is not None:
+        # circuit breaker: zero the budget of hosts whose breaker is open
+        # (their pending rows stay in the frontier and re-admit when the
+        # cooldown passes).  Applied AFTER autothrottle and regardless of
+        # budget_override: a dead host's budget is 0 under every policy.
+        b.trip_hosts = scheduler.breaker_blocked_hosts(
+            catalog.read("metrics", manifest), batch_id=b.batch_id,
+            threshold=cfg.failure_trip_threshold,
+            cooldown=cfg.failure_trip_cooldown_batches,
+        ).persist()
+        hosts_df = scheduler.apply_circuit_breaker(hosts_df, b.trip_hosts)
+    scheduled, robots_blocked = scheduler.schedule(
+        b.pending, hosts_df, b.batch_id, return_blocked=True
+    )
+    if cfg.global_batch_cap is not None:
+        # fleet fetch capacity: admit the top-cap rows by historical host
+        # yield (cache-served rows count against the cap too — admission
+        # happens before the cache split so the admitted set is a pure
+        # function of frontier + metrics state, not of cache contents)
+        scheduled = scheduler.cap_global_batch(
+            scheduled,
+            scheduler.host_yield_scores(
+                catalog.read("metrics", manifest), cfg.yield_prior_permille
+            ),
+            cfg.global_batch_cap, cfg.yield_prior_permille,
+            age_bonus_permille=cfg.yield_age_bonus_permille,
+            batch_id=b.batch_id,
+        )
+    retired = robots_blocked.select(
+        "url", F.xxhash64("url").alias("url_hash"), F.lit(b.batch_id).alias("batch_id"),
+        F.lit(0).alias("status"), F.lit("robots_blocked").alias("outcome"),
+        F.col("retry_count").alias("attempt"),
+    )
+    fetched_log = None
+    if cfg.use_fetch_cache:
+        fetched_log = catalog.read("fetched", manifest)
+        cached = _cache_hits(b, scheduled, fetched_log)
+        retired = retired.unionByName(cached)
+        scheduled = scheduled.join(cached.select("url"), on="url", how="left_anti")
+    b.scheduled = scheduled.persist()
+    b.retired = retired.persist()
+    if cfg.revalidate_stale and fetched_log is not None:
+        # conditional-revalidation lookup: the latest logged body hash of
+        # each STALE scheduled article (fresh ones were served as 'cached'
+        # above, so article rows ∩ the log are exactly the expired set).
+        # The log is scanned once against the broadcast batch, never
+        # shuffled; the hashes ride into the fused stage, where an
+        # unchanged page skips the parse itself — the work a real 304 saves.
+        stale_arts = b.scheduled.filter(F.col("page_kind") == "article").select("url")
+        b.revalid_hashes = (
+            fetched_log.join(F.broadcast(stale_arts), on="url", how="left_semi")
+            .groupBy("url")
+            .agg(F.max(F.struct(
+                F.coalesce(F.col("snap_id"), F.lit(0)).alias("snap_id"),
+                F.col("body_hash"),
+            )).alias("m"))
+            .select("url", F.col("m.body_hash").alias("cached_hash"))
+        )
+    if not b.deferred:
+        b.n_sched = b.scheduled.count()
+
+
+def _cache_hits(b: _Batch, scheduled: DataFrame, fetched_log: DataFrame) -> DataFrame:
+    """Fetched-cache skip (reference HTTPCACHE re-run semantics, settings.py
+    :84-89): scheduled ARTICLE pages with a fresh entry in the fetched log
+    → terminal 'cached' progress rows instead of a refetch.  Listings are
+    always refetched (they are the link-discovery surface; a refresh crawl
+    must see new articles)."""
+    cfg = b.cfg
+    cur_snap = b.manifest["snapshot_id"] + 1
+    if cfg.fetch_cache_adaptive:
+        # per-URL adaptive freshness: serve while the change-history
+        # interval has not elapsed (operators/freshness.py).  The
+        # coalesce mirrors the fixed-window branch: legacy null
+        # snap_ids read as oldest-possible so they come due first.
+        from crawlspark.operators.freshness import freshness_state
+
+        hist = fetched_log.select(
+            "url",
+            F.coalesce(F.col("snap_id"), F.lit(0)).cast("long").alias("snap_id"),
+            F.coalesce(F.col("body_hash"), F.lit("")).alias("body_hash"),
+        )
+        state = freshness_state(
+            hist, base_snaps=cfg.adaptive_base_snaps,
+            max_doublings=cfg.adaptive_max_doublings,
+        )
+        fresh = state.filter(F.col("next_due_snap") > F.lit(cur_snap)).select("url")
+    elif cfg.fetch_cache_max_age_snaps is not None:
+        # refresh-if-older-than-N: keep only entries whose write commit is
+        # within the age window; a url with ANY fresh row is served
+        # (row-level filter before distinct ≡ max(snap_id) per url).
+        # coalesce(snap_id, 0): pre-snap_id warehouses read null here —
+        # treat them as oldest-possible (expire under any window; one
+        # refetch beats serving an unboundedly stale page) rather than
+        # NULL-failing the comparison in a schema-contradicting way
+        fresh = fetched_log.filter(
+            F.coalesce(F.col("snap_id"), F.lit(0))
+            >= cur_snap - cfg.fetch_cache_max_age_snaps
+        ).select("url").distinct()
+    else:
+        fresh = fetched_log.select("url").distinct()
+    return (
+        scheduled.filter(F.col("page_kind") == "article")
+        .join(fresh, on="url", how="left_semi")
+        .select(
+            "url", F.xxhash64("url").alias("url_hash"),
+            F.lit(b.batch_id).alias("batch_id"), F.lit(200).alias("status"),
+            F.lit("cached").alias("outcome"),
+            F.col("retry_count").alias("attempt"),
+        )
+    )
+
+
+def _finished(b: _Batch) -> bool:
+    """Stop check for a batch that scheduled nothing: finished unless a
+    pending row is backoff-gated or held back only by an open circuit
+    breaker whose cooldown will pass."""
+    if b.pending.filter(F.col("not_before_batch") > b.batch_id).count():
+        return False
+    return b.trip_hosts is None or not (
+        b.pending.filter(F.col("not_before_batch") <= b.batch_id)
+        .join(b.trip_hosts, on="host", how="left_semi").count()
+    )
+
+
+def _zero_batch(b: _Batch) -> dict | None:
+    """Counted path with nothing scheduled: commit just the retired rows,
+    skip forward over a waiting frontier, or finish (None).  Only here is
+    the retired count needed — the common path unions retired rows into
+    the progress append unconditionally."""
+    retired = b.retired.count() > 0
+    if not retired and _finished(b):
+        return None
+    appends = {"progress": b.retired.coalesce(1)} if retired else {}
+    return b.catalog.commit(b.batch_id, appends=appends)
+
+
+def _fetch_parse(b: _Batch) -> None:
+    """Fused fetch→parse→clean: one Python stage, bodies never cross
+    Arrow; partition count sized to the batch (~100 pages/partition) so
+    small politeness batches don't pay a full worker-pool spin-up."""
+    cfg = b.cfg
+    sched_in = b.scheduled
+    if b.revalid_hashes is not None:
+        # optional cached_hash column for the in-worker 304 check; left
+        # join so non-candidates carry null and behave exactly as before
+        sched_in = sched_in.join(F.broadcast(b.revalid_hashes), on="url", how="left")
+    b.pipe = fetch_parse_stage(
+        sched_in, cfg.spec, num_partitions=max(1, (b.n_sched + 99) // 100),
+        entire_site=cfg.search_entire_site, strip_tracking=cfg.strip_tracking,
+        obey_meta_robots=cfg.obey_meta_robots,
+        use_canonical_link=cfg.use_canonical_link,
+        use_feeds=cfg.use_feeds,
+        obey_link_rel=cfg.obey_link_rel,
+    ).persist()
+    if b.n_sched > 1000:
+        # eager: downstream jobs (probe branches, writes) must all read the
+        # cache — recomputing the fused stage is a wide batch's main cost;
+        # for tiny politeness batches the extra job isn't worth it (measured
+        # ~0.3-1.0 s/batch for the count PLUS ~0.7-1.0 s/batch of slower
+        # plan construction once the cache is materialized).
+        #
+        # Concurrency note: the commit overlaps the state update with the
+        # table writes, so for small (lazy) batches two jobs can race the
+        # first materialization of this persist() and compute a partition
+        # twice.  That is correctness-neutral HERE because run_batch's
+        # fetcher is always the deterministic synthetic transfer
+        # (fetch_parse_stage is called without fetch_fn); if a real
+        # side-effecting fetch_fn is ever wired into this loop, this
+        # materialization must become unconditional to keep the
+        # single-fetch guarantee.
+        b.pipe.count()
+
+
+def _link_probe(b: _Batch) -> None:
+    """Extracted links → skip filter → depth cap → in-batch dedup →
+    URL-seen probe → the batch's new frontier rows (persisted: the state
+    update and the frontier/urlseen appends all read them)."""
+    cols, cfg = b.cols, b.cfg
+    links = b.pipe.filter(cols["rec_link"]).select(*cols["links_sel"])
+    links = links.select("*", cols["link_domain_aliased"])
+    links = links.filter(~cols["link_skip"]).filter(
+        F.col("depth") + 1 <= cfg.max_depth
+    )
+    # in-batch dedup with deterministic meta winner (min source url)
+    cand = links.groupBy(cols["link_as_url"]).agg(
+        cols["cand_winner"]
+    ).select(*cols["cand_sel"])
+    # small_positives: a batch's Bloom-positive sliver is bounded by its
+    # extracted links, so the exact check broadcast-SCANS urlseen instead
+    # of shuffling it (at 10^10 seen rows the shuffle, not the sliver, is
+    # what would dominate every micro-batch)
+    urlseen_all = b.catalog.read("urlseen", b.manifest)
+    if b.store is not None:
+        new_links = probe_unseen_partitioned(
+            b.spark, cand, urlseen_all, b.store, small_positives=True
+        )
+    else:
+        new_links = probe_unseen(b.spark, cand, urlseen_all, b.bloom, small_positives=True)
+    if cfg.trap_template_cap is not None:
+        # cap AFTER the seen-set filter: slots go only to genuinely-new
+        # URLs (a re-linked already-seen sibling would otherwise win a
+        # slot and then vanish in the dedup — permanently starving the
+        # new URL it displaced instead of bounding the template linearly)
+        new_links = scheduler.cap_template_explosion(
+            new_links, cfg.trap_template_cap
+        )
+    b.new_frontier = new_links.select(
+        *cols["frontier_pre"],
+        F.lit(b.batch_id).alias("discovered_batch"),
+        cols["zero_retry"],
+        F.lit(b.batch_id + 1).alias("not_before_batch"),
+        "page_kind",
+        "meta",
+    ).persist()
+
+
+def _commit_plans(b: _Batch) -> dict:
+    """The batch's per-table appends (lazy plans): frontier (new links +
+    retries), urlseen, progress, documents, metrics and the fetch log.
+    All projections select CACHED batch-invariant Column lists — only the
+    F.lit(batch_id) terms are built per batch."""
+    cols, batch_id = b.cols, b.batch_id
+    bid = F.lit(batch_id)
+    fetched = b.pipe.filter(cols["rec_fetch"]).select("*", cols["outcome_aliased"])
+    progress = fetched.select(
+        *cols["progress_pre"], bid.alias("batch_id"), *cols["progress_post"]
+    ).unionByName(b.retired)
+    if b.deferred:
+        # observe the true scheduled count on the progress write: every
+        # scheduled row lands exactly one progress record, retired rows
+        # are excluded by outcome.  (The state job's small-batch path is a
+        # LIMIT collect, which scans partially and would under-observe.)
+        b.sched_obs = Observation(f"sched_{batch_id}")
+        progress = progress.observe(
+            b.sched_obs,
+            F.sum(
+                (~F.col("outcome").isin("robots_blocked", "cached")).cast("long")
+            ).alias("n"),
+            F.count(F.lit(1)).alias("n_all"),
+        )
+    # retry re-entry with exponential backoff (reference :543-555, :636)
+    retries = fetched.filter(cols["is_retry"]).select(
+        *cols["retries_pre"],
+        bid.alias("discovered_batch"),
+        cols["retry_inc"],
+        (bid + cols["retry_backoff_int"]).alias("not_before_batch"),
+        "page_kind", "meta",
+    )
+    # docs path: same broadcast-scan inversion as the urlseen exact
+    # check — the batch's doc ids are bounded, the documents table grows
+    # with the crawl, so scan it against the broadcast batch ids instead
+    # of shuffling it
+    docs = docs_from_pipe(b.pipe.filter(cols["rec_doc"]), batch_id)
+    doc_hits = b.catalog.read("documents", b.manifest).select("doc_id").join(
+        F.broadcast(docs.select("doc_id").distinct()), on="doc_id", how="left_semi",
+    )
+    docs = docs.join(F.broadcast(doc_hits), on="doc_id", how="left_anti")
+    # metrics (per batch × host lineage; SURVEY §2.4 A2)
+    parsed_counts = b.pipe.filter(cols["rec_not_fetch"]).groupBy("host").agg(
+        *cols["parsed_aggs"]
+    )
+    metrics = (
+        fetched.groupBy("host")
+        .agg(*cols["metrics_aggs"])
+        .join(parsed_counts, on="host", how="left")
+        .select(bid.alias("batch_id"), *cols["metrics_sel"])
+    )
+    # per-fetch cache log (S9): url + transfer encoding + decoded-body
+    # hash; snap_id = this commit's snapshot, the entry's write-time clock
+    fetch_log = fetched.filter(cols["is_done"]).select(
+        *cols["fetch_log_pre"], bid.alias("batch_id"),
+        F.lit(b.manifest["snapshot_id"] + 1).alias("snap_id"),
+    )
+    # batch-sized appends: coalesce to a file count proportional to the
+    # batch so a small politeness batch writes 1 file per table, not
+    # shuffle-partitions-many KB-sized files (read cost of later batches
+    # scales with file count)
+    k_files = max(1, b.n_sched // 2000)
+    return {
+        "frontier": retries.unionByName(b.new_frontier).coalesce(k_files),
+        "urlseen": b.new_frontier.select(
+            "url", "url_hash", bid.alias("added_batch")
+        ).coalesce(k_files),
+        "progress": progress.coalesce(k_files),
+        "documents": docs.coalesce(k_files),
+        "metrics": metrics.coalesce(1),
+        "fetched": fetch_log.coalesce(k_files),
+    }
+
+
+def _state_update(b: _Batch) -> dict:
+    """The commit's ``state_fn``: the Bloom update and host discovery in
+    one job (host names piggyback on it; in the partitioned layout blob
+    bytes never reach the driver), plus the capacity auto-guard on
+    compaction batches.  Returns the state for the commit's manifest and
+    a late hosts append when the batch discovered new hosts."""
+    if b.store is not None:
+        b.store, b.new_hosts = update_buckets_partitioned(
+            b.spark, b.new_frontier, b.store, b.catalog.bloom_bucket_dir(b.batch_id),
+            collect_hosts=True,
+        )
+        lineage = _bloom_lineage(b.store)
+    else:
+        # politeness-sized batches skip the shuffle job: accepted rows
+        # are bounded by n_sched × links-per-page (~64 is generous for
+        # news listings; overshooting only costs the driver a few MB,
+        # never correctness — same hashes, same numpy kernel either way)
+        delta, b.new_hosts = bloom_delta(
+            b.spark, b.new_frontier, b.bloom, collect_hosts=True,
+            small_batch_rows=b.n_sched * 64,
+        )
+        b.bloom.merge(delta)
+        lineage = _bloom_lineage(b.bloom)
+    hosts = _new_hosts_frame(b.spark, b.hosts_tbl, b.new_hosts, b.known_hosts)
+    if b.is_compact:
+        lineage.update(_bloom_autosplit(b))
+    return {"bloom": b.bloom, "bloom_store": b.store, "state": lineage,
+            "appends": {} if hosts is None else {"hosts": hosts}}
+
+
+def _bloom_autosplit(b: _Batch) -> dict:
+    """Bloom capacity auto-guard (partitioned layout): past 10x the target
+    FPR, rebuild at double the bucket count from the exact seen set
+    (urlseen + this batch's accepted rows — bits cannot be split, but the
+    exact set can always re-derive them).  One distributed
+    groupBy(bucket).applyInPandas job, same kernel as the steady-state
+    update; old blob files stay referenced by old snapshots (isolation)
+    and are swept at expiry.  Returns the lineage update."""
+    store = b.store
+    if (store is None or not b.cfg.bloom_autosplit
+            or store.fpr_estimate() <= 10 * b.cfg.bloom_target_fpr):
+        return {}
+    all_seen = b.catalog.read("urlseen", b.manifest).select("url").unionByName(
+        b.new_frontier.select("url")
+    )
+    fresh = BloomBucketStore(store.n_buckets * 2, store.m, store.k)
+    store.release()
+    b.store = update_buckets_partitioned(
+        b.spark, all_seen, fresh, b.catalog.bloom_bucket_dir(b.batch_id)
+    )
+    fresh.release()  # the rebuild job's empty-manifest broadcast
+    return {"bloom_resplit_to": b.store.n_buckets, **_bloom_lineage(b.store)}
+
+
+def _compaction(b: _Batch, appends: dict) -> dict:
+    """Compaction commit arguments.  The pending set after this batch
+    replaces the frontier (taking over the frontier append), so the
+    per-batch frontier read stays flat as the crawl grows.  progress and
+    urlseen stay append-only: urlseen IS the exact dedup set and progress
+    is the crawl-order audit, read by column.  Their delta files (and
+    those of the other logs) since the last merge are folded into one file
+    per table, so per-batch read cost scales with compaction count, not
+    batch count."""
+    catalog, manifest = b.catalog, b.manifest
+    pending_after = _pending(catalog, manifest, appends.pop("frontier"), appends["progress"])
+    rewrite = {}
+    merged_th = manifest["state"].get("merged_through_snap", 0)
+    for tbl in ("urlseen", "progress", "fetched", "metrics", "hosts"):
+        deltas = [
+            p for p in manifest.get("tables", {}).get(tbl, [])
+            if catalog.snap_of(p) > merged_th
+        ]
+        if len(deltas) >= 2:
+            rewrite[tbl] = (deltas, catalog.read_files(tbl, deltas).coalesce(1))
+    # the new commit's snapshot id = prev + 1; recording THAT id keeps
+    # the merged output (written at the new snap) out of future merges,
+    # so each merge's input is only the inter-compaction delta window
+    return {
+        "replace": {"frontier": pending_after},
+        "rewrite": rewrite,
+        "state": {"merged_through_snap": manifest["snapshot_id"] + 1},
+    }
+
+
+def _commit(b: _Batch, appends: dict) -> dict:
+    """One atomic commit.  The state update runs INSIDE it as ``state_fn``,
+    on this thread, overlapped with the pooled table-delta writes (guide
+    §2.6: independent jobs submitted together back-fill idle cores); its
+    Bloom state and hosts append land in the same manifest."""
+    kw = _compaction(b, appends) if b.is_compact else {}
+    manifest = b.catalog.commit(
+        b.batch_id, appends=appends,
+        state_fn=lambda: _phase(b, _state_update), **kw,
+    )
+    if b.is_compact and b.cfg.keep_snapshots:
+        b.catalog.expire_snapshots(keep_last=b.cfg.keep_snapshots)
+    return manifest
+
+
+def _release(b: _Batch) -> None:
+    """Drop the batch's caches and broadcasts (its state is committed) and
+    print the CRAWLSPARK_PROF line."""
+    for df in (b.scheduled, b.retired, b.pipe, b.new_frontier, b.trip_hosts):
+        if df is not None:
+            df.unpersist()
+    if b.bloom is not None:
+        b.bloom.release()
+    if b.probe_store is not None:
+        b.probe_store.release()
+    if b.prof is not None:
+        print(f"[prof] batch {b.batch_id} n_sched={b.n_sched}: "
+              + ", ".join(f"{k}={v:.2f}s" for k, v in b.prof.items()))
+
+
 def run_batch(spark: SparkSession, catalog: SnapshotCatalog, cfg: CrawlConfig, manifest: dict,
               known_hosts: set | None = None, sched_hint: int | None = None,
               loop_stats: dict | None = None) -> dict | None:
     """One micro-batch; returns the new manifest, or None when finished.
+
+    The batch runs as phases over one shared ``_Batch``: ``_schedule``
+    (pending frontier → politeness top-K), ``_fetch_parse`` (the fused
+    fetch→parse→clean stage), ``_link_probe`` (links → URL-seen probe →
+    new frontier rows), ``_commit_plans`` (the per-table appends) and
+    ``_commit`` (one atomic commit; ``_state_update``, the Bloom update
+    and host discovery, runs inside it).  Set CRAWLSPARK_PROF=1 to print
+    each phase's wall time, one line per batch — the politeness-bound
+    loop's fixed cost is job count × fixed job overhead, so this is the
+    first thing to look at when a batch is slower than its page count
+    explains.
 
     ``known_hosts``: optional driver-side cache of host names verified
     present in the hosts table (run_crawl threads one across its batches).
@@ -618,623 +1127,58 @@ def run_batch(spark: SparkSession, catalog: SnapshotCatalog, cfg: CrawlConfig, m
     threads it via ``loop_stats``).  With a positive hint, the batch skips
     the dedicated schedule-count job — one whole Spark action (~0.6-0.9 s)
     per steady-state batch — and instead observes the true count on the
-    state-update job (an Observation on the scheduled plan).  The hint is
-    used only for SIZING (pipeline partitions, the Bloom small-batch
-    collect cap — both self-correcting: a low hint only means a fallback
-    to the distributed delta path); every correctness decision (the
-    zero-batch branch, file sizing) uses the observed true count.  A None
-    or non-positive hint falls back to the counted path, so the first
-    batch of a run and all external callers keep the old behavior.
-
-    Set CRAWLSPARK_PROF=1 to print a per-batch wall-time breakdown of the
-    batch's Spark ACTIONS (schedule-count, pipeline materialization, state
-    update, commit) — the politeness-bound loop's fixed cost is job count
-    × fixed job overhead, so this is the first thing to look at when a
-    batch is slower than its page count explains."""
-    prof: dict | None = {} if os.environ.get("CRAWLSPARK_PROF") else None
-
-    def _tick(tag: str, t0: float) -> None:
-        if prof is not None:
-            prof[tag] = prof.get(tag, 0.0) + (_time.time() - t0)
-
+    progress write (an Observation).  The hint is used only for SIZING
+    (pipeline partitions, the Bloom small-batch collect cap — both
+    self-correcting: a low hint only means a fallback to the distributed
+    delta path); the stop decision uses the observed true count.  A None
+    or non-positive hint, or a compaction batch (which re-reads the
+    progress append to derive the pending set), takes the counted path:
+    the first batch of a run and every caller without a hint count the
+    schedule before fetching."""
     batch_id = manifest["batch_id"] + 1
-    _t = _time.time()
     # Bloom layout follows the manifest (resume-safe across config edits):
     # a bloom_store_path means the partitioned per-bucket layout
     store = catalog.load_bloom_store(manifest)
-    bloom = None if store is not None else catalog.load_bloom(manifest)
-    probe_store = store  # pre-update version: its manifest broadcast is
-    # shared by this batch's probe + update jobs and released post-commit
-
-    pending = _pending(catalog, manifest)
-    hosts_tbl = catalog.read("hosts", manifest)
-    hosts_df = _hosts_with_rx(hosts_tbl, cfg.budget_override)
-    if cfg.autothrottle and cfg.budget_override is None:
-        hosts_df = scheduler.apply_autothrottle(
-            hosts_df, catalog.read("metrics", manifest),
-            start_delay_ms=cfg.autothrottle_start_delay_ms,
-            max_delay_ms=cfg.autothrottle_max_delay_ms,
-            target_concurrency=cfg.autothrottle_target_concurrency,
-            period_ms=int(rules.BATCH_PERIOD_S * 1000),
-        )
-    trip_hosts = None
-    if cfg.failure_trip_threshold is not None:
-        # circuit breaker: zero the budget of hosts whose breaker is open
-        # (their pending rows stay in the frontier and re-admit when the
-        # cooldown passes).  Applied AFTER autothrottle and regardless of
-        # budget_override: a dead host's budget is 0 under every policy.
-        trip_hosts = scheduler.breaker_blocked_hosts(
-            catalog.read("metrics", manifest), batch_id=batch_id,
-            threshold=cfg.failure_trip_threshold,
-            cooldown=cfg.failure_trip_cooldown_batches,
-        ).persist()
-        hosts_df = scheduler.apply_circuit_breaker(hosts_df, trip_hosts)
-    scheduled, robots_blocked = scheduler.schedule(
-        pending, hosts_df, batch_id, return_blocked=True
-    )
-    if cfg.global_batch_cap is not None:
-        # fleet fetch capacity: admit the top-cap rows by historical host
-        # yield (cache-served rows count against the cap too — admission
-        # happens before the cache split so the admitted set is a pure
-        # function of frontier + metrics state, not of cache contents)
-        scheduled = scheduler.cap_global_batch(
-            scheduled,
-            scheduler.host_yield_scores(
-                catalog.read("metrics", manifest), cfg.yield_prior_permille
-            ),
-            cfg.global_batch_cap, cfg.yield_prior_permille,
-            age_bonus_permille=cfg.yield_age_bonus_permille,
-            batch_id=batch_id,
-        )
-    # fetched-cache skip (reference HTTPCACHE re-run semantics, settings.py
-    # :84-89): in a re-crawl epoch, ARTICLE pages already in the fetched
-    # log are served from cache — retired with a terminal 'cached' record
-    # instead of refetched.  Listings are always refetched (they are the
-    # link-discovery surface; a refresh crawl must see new articles).
-    cached_progress = None
-    fetched_all = None  # full (unwindowed) log, kept for revalidate_stale
-    if cfg.use_fetch_cache:
-        fetched_tbl = catalog.read("fetched", manifest)
-        fetched_all = fetched_tbl
-        if cfg.fetch_cache_adaptive:
-            # per-URL adaptive freshness: serve while the change-history
-            # interval has not elapsed (operators/freshness.py).  The
-            # coalesce mirrors the fixed-window branch: legacy null
-            # snap_ids read as oldest-possible so they come due first.
-            from crawlspark.operators.freshness import freshness_state
-
-            cur_snap = manifest["snapshot_id"] + 1
-            hist = fetched_tbl.select(
-                "url",
-                F.coalesce(F.col("snap_id"), F.lit(0)).cast("long")
-                .alias("snap_id"),
-                F.coalesce(F.col("body_hash"), F.lit("")).alias("body_hash"),
-            )
-            state = freshness_state(
-                hist, base_snaps=cfg.adaptive_base_snaps,
-                max_doublings=cfg.adaptive_max_doublings,
-            )
-            fetched_cache = state.filter(
-                F.col("next_due_snap") > F.lit(cur_snap)
-            ).select("url")
-        elif cfg.fetch_cache_max_age_snaps is not None:
-            # refresh-if-older-than-N: keep only entries whose write commit
-            # is within the age window; a url with ANY fresh row is served
-            # (row-level filter before distinct ≡ max(snap_id) per url)
-            cur_snap = manifest["snapshot_id"] + 1
-            # coalesce(snap_id, 0): pre-snap_id warehouses read null here —
-            # treat them as oldest-possible (expire under any window; one
-            # refetch beats serving an unboundedly stale page) rather than
-            # NULL-failing the comparison in a schema-contradicting way
-            fetched_tbl = fetched_tbl.filter(
-                F.coalesce(F.col("snap_id"), F.lit(0))
-                >= cur_snap - cfg.fetch_cache_max_age_snaps
-            )
-            fetched_cache = fetched_tbl.select("url").distinct()
-        else:
-            fetched_cache = fetched_tbl.select("url").distinct()
-        cached_progress = (
-            scheduled.filter(F.col("page_kind") == "article")
-            .join(fetched_cache, on="url", how="left_semi")
-            .select(
-                "url", F.xxhash64("url").alias("url_hash"),
-                F.lit(batch_id).alias("batch_id"), F.lit(200).alias("status"),
-                F.lit("cached").alias("outcome"),
-                F.col("retry_count").alias("attempt"),
-            )
-        )
-        scheduled = scheduled.join(
-            cached_progress.select("url"), on="url", how="left_anti"
-        )
-    _tick("setup", _t)  # state load + lazy plan building up to here
-    # deferred-count mode: a positive hint skips the dedicated count
-    # action; the true count is observed on the progress WRITE at commit
-    # (the one action guaranteed to scan every scheduled row exactly once
-    # — the state job's small-batch path is a LIMIT collect, which scans
-    # partially and would under-observe).  Compaction batches re-read
-    # progress_new in a second plan, which would double-execute the
-    # observed subtree, so they use the counted path.
     is_compact = bool(cfg.compact_every) and batch_id % cfg.compact_every == 0
-    deferred = sched_hint is not None and sched_hint > 0 and not is_compact
-    scheduled = scheduled.persist()
-    # conditional-revalidation lookup (cfg.revalidate_stale): the latest
-    # logged body hash for each STALE scheduled article (anything fresh
-    # was already served as 'cached' above, so what remains of the
-    # article rows ∩ the log is exactly the expired set).  Batch-bounded
-    # via the same broadcast-scan inversion as the urlseen/doc checks —
-    # the log is scanned once against the broadcast batch, never
-    # shuffled.  The hashes ride INTO the fused fetch/parse stage as an
-    # optional cached_hash column, where the worker compares them to the
-    # fresh body hash BEFORE parsing — an unchanged page skips the parse
-    # itself, which is the work a real 304 saves.
-    revalid_hashes = None
-    if cfg.revalidate_stale and fetched_all is not None:
-        stale_arts = scheduled.filter(
-            F.col("page_kind") == "article"
-        ).select("url")
-        revalid_hashes = (
-            fetched_all.join(F.broadcast(stale_arts), on="url", how="left_semi")
-            .groupBy("url")
-            .agg(F.max(F.struct(
-                F.coalesce(F.col("snap_id"), F.lit(0)).alias("snap_id"),
-                F.col("body_hash"),
-            )).alias("m"))
-            .select("url", F.col("m.body_hash").alias("cached_hash"))
-        )
-    _t = _time.time()
-    # retire robots-disallowed rows (and cache hits) with a terminal
-    # progress record so they leave the pending set instead of being
-    # re-scanned every batch
-    blocked_progress = robots_blocked.select(
-        "url", F.xxhash64("url").alias("url_hash"), F.lit(batch_id).alias("batch_id"),
-        F.lit(0).alias("status"), F.lit("robots_blocked").alias("outcome"),
-        F.col("retry_count").alias("attempt"),
+    deferred = bool(sched_hint and sched_hint > 0 and not is_compact)
+    b = _Batch(
+        spark=spark, catalog=catalog, cfg=cfg, manifest=manifest,
+        batch_id=batch_id, is_compact=is_compact, deferred=deferred,
+        n_sched=sched_hint if deferred else 0, cols=_invariant_cols(spark),
+        bloom=None if store is not None else catalog.load_bloom(manifest),
+        store=store, probe_store=store,
+        prof={} if os.environ.get("CRAWLSPARK_PROF") else None,
+        known_hosts=known_hosts,
     )
-    if cached_progress is not None:
-        blocked_progress = blocked_progress.unionByName(cached_progress)
-    blocked_progress = blocked_progress.persist()
-
-    def _zero_batch(extra_unpersist: tuple = ()) -> dict | None:
-        # rare branch: only here is the blocked count needed (the common
-        # path unions blocked rows into the progress append unconditionally
-        # — counting them every batch was one whole Spark job per batch)
-        n_blocked = blocked_progress.count()
-        scheduled.unpersist()
-        for df in extra_unpersist:
-            df.unpersist()
-        if bloom is not None:
-            bloom.release()
-        if probe_store is not None:
-            probe_store.release()
-        if n_blocked > 0:
-            m = catalog.commit(
-                batch_id, appends={"progress": blocked_progress.coalesce(1)},
-            )
-            blocked_progress.unpersist()
-            if trip_hosts is not None:
-                trip_hosts.unpersist()
-            return m
-        blocked_progress.unpersist()
-        # nothing eligible now; if anything is backoff-gated — or held
-        # back only by an open circuit breaker whose cooldown will pass —
-        # skip forward instead of finishing
-        n_future = pending.filter(F.col("not_before_batch") > batch_id).count()
-        if n_future == 0 and trip_hosts is not None:
-            n_future = (
-                pending.filter(F.col("not_before_batch") <= batch_id)
-                .join(trip_hosts, on="host", how="left_semi").count()
-            )
-        if trip_hosts is not None:
-            trip_hosts.unpersist()
-        if n_future == 0:
-            return None
-        return catalog.commit(batch_id, appends={})
-
-    if not deferred:
-        n_sched = scheduled.count()
-        _tick("schedule_count", _t)
-        if loop_stats is not None:
-            loop_stats["n_sched"] = n_sched
-        if n_sched == 0:
-            return _zero_batch()
-    else:
-        n_sched = sched_hint  # sizing estimate; true count observed at commit
-
-    # fused fetch→parse→clean: one Python stage, bodies never cross Arrow;
-    # partition count sized to the batch (~100 pages/partition) so small
-    # politeness batches don't pay a full worker-pool spin-up
-    sched_in = scheduled
-    if revalid_hashes is not None:
-        # optional cached_hash column for the in-worker 304 check; left
-        # join so non-candidates carry null and behave exactly as before
-        sched_in = scheduled.join(
-            F.broadcast(revalid_hashes), on="url", how="left"
-        )
-    pipe = fetch_parse_stage(
-        sched_in, cfg.spec, num_partitions=max(1, (n_sched + 99) // 100),
-        entire_site=cfg.search_entire_site, strip_tracking=cfg.strip_tracking,
-        obey_meta_robots=cfg.obey_meta_robots,
-        use_canonical_link=cfg.use_canonical_link,
-        use_feeds=cfg.use_feeds,
-        obey_link_rel=cfg.obey_link_rel,
-    ).persist()
-    _t = _time.time()
-    if n_sched > 1000:
-        # eager: downstream jobs (probe branches, writes) must all read the
-        # cache — recomputing the fused stage is a wide batch's main cost;
-        # for tiny politeness batches the extra job isn't worth it (measured
-        # ~0.3-1.0 s/batch for the count PLUS ~0.7-1.0 s/batch of slower
-        # plan construction once the cache is materialized).
-        #
-        # Concurrency note: the commit below overlaps the engine-state job
-        # with the table writes, so for small (lazy) batches two jobs can
-        # race the first materialization of this persist() and compute a
-        # partition twice.  That is correctness-neutral HERE because
-        # run_batch's fetcher is always the deterministic synthetic
-        # transfer (fetch_parse_stage is called without fetch_fn); if a
-        # real side-effecting fetch_fn is ever wired into this loop, this
-        # materialization must become unconditional to keep the
-        # single-fetch guarantee.
-        pipe.count()
-    _tick("pipe_count", _t)
-    cols = _invariant_cols(spark)
-    # all projections below select CACHED batch-invariant Column lists —
-    # only the F.lit(batch_id) terms are built per batch (see the
-    # _invariant_cols select-list comment; "dag_build" was ~1 s/batch of
-    # pure py4j plan construction before the lists were cached)
-    bid = F.lit(batch_id)
-    fetched_o = pipe.filter(cols["rec_fetch"]).select("*", cols["outcome_aliased"])
-    parsed = pipe.filter(cols["rec_not_fetch"])
-
-    # ---- links path (the only plans the STATE job consumes) ----
-    links = parsed.filter(cols["rec_link"]).select(*cols["links_sel"])
-    links = links.select("*", cols["link_domain_aliased"])
-    links = links.filter(~cols["link_skip"]).filter(
-        F.col("depth") + 1 <= cfg.max_depth
-    )
-    # in-batch dedup with deterministic meta winner (min source url)
-    cand = links.groupBy(cols["link_as_url"]).agg(
-        cols["cand_winner"]
-    ).select(*cols["cand_sel"])
-    # small_positives: a batch's Bloom-positive sliver is bounded by its
-    # extracted links, so the exact check broadcast-SCANS urlseen instead
-    # of shuffling it (at 10^10 seen rows the shuffle, not the sliver, is
-    # what would dominate every micro-batch)
-    urlseen_all = catalog.read("urlseen", manifest)
-    if store is not None:
-        new_links = probe_unseen_partitioned(
-            spark, cand, urlseen_all, store, small_positives=True
-        )
-    else:
-        new_links = probe_unseen(spark, cand, urlseen_all, bloom, small_positives=True)
-    if cfg.trap_template_cap is not None:
-        # cap AFTER the seen-set filter: slots go only to genuinely-new
-        # URLs (a re-linked already-seen sibling would otherwise win a
-        # slot and then vanish in the dedup — permanently starving the
-        # new URL it displaced instead of bounding the template linearly)
-        new_links = scheduler.cap_template_explosion(
-            new_links, cfg.trap_template_cap
-        )
-    new_frontier = new_links.select(
-        *cols["frontier_pre"],
-        bid.alias("discovered_batch"),
-        cols["zero_retry"],
-        F.lit(batch_id + 1).alias("not_before_batch"),
-        "page_kind",
-        "meta",
-    ).persist()
-    _tick("dag_build", _t)  # lazy-plan construction since the last action
-
-    # ---- commit-time plans (progress / retries / docs / metrics), built
-    # CONCURRENTLY with the state-update job below.  None of these feed
-    # the state job — they are consumed only at commit — and plan
-    # construction is py4j-roundtrip-bound (~0.2-0.3 s of pure driver
-    # time per batch), while state_update blocks the main thread in a JVM
-    # job for ~1-1.5 s with the GIL released.  The helper thread only
-    # BUILDS lazy plans (analysis-time catalog/py4j calls, both
-    # thread-safe); every Spark ACTION stays on the main thread.
-    commit_plans: dict = {}
-    commit_errs: list = []
-
-    def _build_commit_plans() -> None:
-        t0 = _time.time()
-        try:
-            progress_new = fetched_o.select(
-                *cols["progress_pre"], bid.alias("batch_id"), *cols["progress_post"]
-            ).unionByName(blocked_progress)
-            # retry re-entry with exponential backoff (reference :543-555, :636)
-            retries = fetched_o.filter(cols["is_retry"]).select(
-                *cols["retries_pre"],
-                bid.alias("discovered_batch"),
-                cols["retry_inc"],
-                (bid + cols["retry_backoff_int"]).alias("not_before_batch"),
-                "page_kind", "meta",
-            )
-            # docs path: same broadcast-scan inversion as the urlseen exact
-            # check — the batch's doc ids are bounded, the documents table
-            # grows with the crawl, so scan it against the broadcast batch
-            # ids instead of shuffling it
-            docs_new = docs_from_pipe(parsed.filter(cols["rec_doc"]), batch_id)
-            existing_docs = catalog.read("documents", manifest)
-            doc_hits = existing_docs.select("doc_id").join(
-                F.broadcast(docs_new.select("doc_id").distinct()),
-                on="doc_id", how="left_semi",
-            )
-            docs_new = docs_new.join(
-                F.broadcast(doc_hits), on="doc_id", how="left_anti"
-            )
-            # metrics (per batch × host lineage; SURVEY §2.4 A2)
-            parsed_counts = parsed.groupBy("host").agg(*cols["parsed_aggs"])
-            metrics = (
-                fetched_o.groupBy("host")
-                .agg(*cols["metrics_aggs"])
-                .join(parsed_counts, on="host", how="left")
-                .select(bid.alias("batch_id"), *cols["metrics_sel"])
-            )
-            commit_plans.update(
-                progress_new=progress_new, retries=retries,
-                docs_new=docs_new, metrics=metrics,
-            )
-        except BaseException as e:  # surfaced on the main thread post-join
-            commit_errs.append(e)
-        finally:
-            _tick("dag_commit_async", t0)
-
-    # CRAWLSPARK_SYNC_PLANS=1 builds the commit plans synchronously —
-    # the A/B lever for measuring the overlap (and an escape hatch)
-    if os.environ.get("CRAWLSPARK_SYNC_PLANS"):
-        _build_commit_plans()
-        plan_thread = None
-    else:
-        plan_thread = threading.Thread(target=_build_commit_plans, daemon=True)
-        plan_thread.start()
-
-    # ---- state updates (tiny driver-side collects: host names + either
-    # bucket summaries (partitioned) or delta blobs (broadcast), all
-    # piggybacked on one job — blob BYTES never reach the driver in
-    # partitioned mode).  Wrapped as a closure so the steady-state path
-    # can run it CONCURRENTLY with the commit's delta writes (guide §2.6:
-    # independent jobs submitted together back-fill idle cores — the
-    # state job and the table writes share only the persisted new_frontier
-    # cache, and the sole state→commit dependency is the rare new-hosts
-    # append, which commit() writes after the closure returns and before
-    # the manifest swap).  Compaction batches — whose capacity auto-guard
-    # reads the UPDATED store — call it inline, preserving the old order.
-    state_res: dict = {}
-
-    def _run_state() -> dict:
-        nonlocal store
-        t0 = _time.time()
-        if store is not None:
-            store, new_hosts = update_buckets_partitioned(
-                spark, new_frontier, store, catalog.bloom_bucket_dir(batch_id),
-                collect_hosts=True,
-            )
-            lineage = {"bloom_keys": store.bloom_keys(),
-                       "bloom_fpr_estimate": round(store.fpr_estimate(), 8)}
-        else:
-            # politeness-sized batches skip the shuffle job: accepted rows
-            # are bounded by n_sched × links-per-page (~64 is generous for
-            # news listings; overshooting only costs the driver a few MB,
-            # never correctness — same hashes, same numpy kernel either way)
-            delta, new_hosts = bloom_delta(
-                spark, new_frontier, bloom, collect_hosts=True,
-                small_batch_rows=n_sched * 64,
-            )
-            bloom.merge(delta)
-            lineage = _bloom_lineage(bloom)
-        # robots fetch only for genuinely-new hosts (tiny per-batch set);
-        # the known-hosts cache skips the membership JOB outright when
-        # every accepted host was already verified present earlier
-        unknown_hosts: list[str] = []
-        if new_hosts:
-            cand = set(new_hosts) if known_hosts is None else set(new_hosts) - known_hosts
-            if cand:
-                cand_hosts = spark.createDataFrame(
-                    [(h,) for h in sorted(cand)], "host string"
-                )
-                unknown_hosts = [
-                    r["host"]
-                    for r in cand_hosts.join(
-                        hosts_tbl.select("host"), on="host", how="left_anti"
-                    ).collect()
-                ]
-        extra: dict = {}
-        if unknown_hosts:
-            # only spend a write job on the hosts table when the batch
-            # actually discovered new hosts (each per-table write is a full
-            # Spark job — empty writes were ~1 wasted job per batch); only
-            # the tiny name list touches the driver (it already did, via
-            # the state piggyback) — the robots fetch+parse runs distributed
-            extra["hosts"] = _hosts_frame(
-                spark.createDataFrame(
-                    [(h,) for h in sorted(unknown_hosts)], "host string"
-                )
-            ).coalesce(1)
-        state_res.update(new_hosts=new_hosts, lineage=lineage)
-        _tick("state_update", t0)
-        return {"bloom": bloom, "bloom_store": store, "state": lineage,
-                "appends": extra}
-
-    if plan_thread is not None:
-        plan_thread.join()
-    if commit_errs:
-        raise commit_errs[0]
-    progress_new = commit_plans["progress_new"]
-    retries = commit_plans["retries"]
-    docs_new = commit_plans["docs_new"]
-    metrics = commit_plans["metrics"]
-    sched_obs = None
-    if deferred:
-        # observe the true scheduled count on the progress write: every
-        # scheduled row lands exactly one progress record (fetched_o),
-        # blocked/cached rows are excluded by outcome
-        sched_obs = Observation(f"sched_{batch_id}")
-        progress_new = progress_new.observe(
-            sched_obs,
-            F.sum(
-                (~F.col("outcome").isin("robots_blocked", "cached")).cast("long")
-            ).alias("n"),
-            F.count(F.lit(1)).alias("n_all"),
-        )
-    _t = _time.time()
-
-    # batch-sized appends: coalesce to a file count proportional to the
-    # batch so a small politeness batch writes 1 file per table, not
-    # shuffle-partitions-many KB-sized files (read cost of later batches
-    # scales with file count)
-    k_files = max(1, n_sched // 2000)
-    frontier_append = retries.unionByName(new_frontier).coalesce(k_files)
-    new_seen = new_frontier.select(
-        "url", "url_hash", bid.alias("added_batch")
-    ).coalesce(k_files)
-    # per-fetch cache log (S9): url + transfer encoding + decoded-body hash
-    fetch_log = fetched_o.filter(cols["is_done"]).select(
-        *cols["fetch_log_pre"], bid.alias("batch_id"),
-        # this batch's commit will be snapshot prev+1 — the entry's global
-        # write-time clock for cache staleness
-        F.lit(manifest["snapshot_id"] + 1).alias("snap_id"),
-    )
-    appends = {
-        "frontier": frontier_append,
-        "urlseen": new_seen,
-        "progress": progress_new.coalesce(k_files),
-        "documents": docs_new.coalesce(k_files),
-        "metrics": metrics.coalesce(1),
-        "fetched": fetch_log.coalesce(k_files),
-    }
-    _tick("dag_appends", _t)
-    _t = _time.time()
-    if cfg.compact_every and batch_id % cfg.compact_every == 0:
-        # sequential state update: the auto-guard below reads the UPDATED
-        # store, and the merged hosts append must join this commit
-        sres = _run_state()
-        lineage = sres["state"]
-        appends.update(sres["appends"])
-        # ---- Bloom capacity auto-guard (partitioned layout) ----
-        # Lineage records bloom_keys/FPR every commit; here we ACT on it:
-        # past 10x the target FPR, rebuild at double the bucket count from
-        # the exact seen set (urlseen + this batch's accepted rows — bits
-        # cannot be split, but the exact set can always re-derive them).
-        # One distributed groupBy(bucket).applyInPandas job, same kernel as
-        # the steady-state update; old blob files stay referenced by old
-        # snapshots (isolation) and are swept at expiry.
-        if (store is not None and cfg.bloom_autosplit
-                and store.fpr_estimate() > 10 * cfg.bloom_target_fpr):
-            all_seen = catalog.read("urlseen", manifest).select("url").unionByName(
-                new_seen.select("url")
-            )
-            fresh = BloomBucketStore(store.n_buckets * 2, store.m, store.k)
-            store.release()
-            store = update_buckets_partitioned(
-                spark, all_seen, fresh, catalog.bloom_bucket_dir(batch_id)
-            )
-            fresh.release()  # the rebuild job's empty-manifest broadcast
-            lineage = {**lineage, "bloom_resplit_to": store.n_buckets,
-                       "bloom_keys": store.bloom_keys(),
-                       "bloom_fpr_estimate": round(store.fpr_estimate(), 8)}
-        # compaction: rewrite pending-after-this-batch as the new frontier
-        # base so the per-batch frontier read stays flat as the crawl
-        # grows.  progress and urlseen stay append-only: urlseen IS the
-        # exact dedup set (its anti-join probe side is only Bloom
-        # positives) and progress is the crawl-order/lineage audit — the
-        # pending anti-join reads just its (url, attempt) columns, which
-        # parquet column pruning keeps cheap.
-        frontier_all = catalog.read("frontier", manifest)
-        full_frontier = frontier_all.unionByName(frontier_append)
-        # same manifest-level pruning as _pending: the previous base
-        # already excludes progress up to its snapshot
-        fpaths = manifest.get("tables", {}).get("frontier", [])
-        base_prev = min((catalog.snap_of(p) for p in fpaths), default=0)
-        recent_prev = [
-            p for p in manifest.get("tables", {}).get("progress", [])
-            if catalog.snap_of(p) > base_prev
-        ]
-        full_progress = catalog.read_files("progress", recent_prev).unionByName(progress_new)
-        pending_after = full_frontier.join(
-            full_progress.select("url", F.col("attempt").alias("retry_count")).distinct(),
-            on=["url", "retry_count"],
-            how="left_anti",
-        )
-        compact_appends = {k: v for k, v in appends.items() if k != "frontier"}
-        # tiered small-file merge for the append-only logs: fold the delta
-        # files accumulated since the last merge into one file per table —
-        # per-batch read cost then scales with compaction count, not batch
-        # count (merge input is bounded by the inter-compaction window)
-        rewrite = {}
-        merged_th = manifest["state"].get("merged_through_snap", 0)
-        for tbl in ("urlseen", "progress", "fetched", "metrics", "hosts"):
-            deltas = [
-                p for p in manifest.get("tables", {}).get(tbl, [])
-                if catalog.snap_of(p) > merged_th
-            ]
-            if len(deltas) >= 2:
-                rewrite[tbl] = (deltas, catalog.read_files(tbl, deltas).coalesce(1))
-        # the new commit's snapshot id = prev + 1; recording THAT id keeps
-        # the merged output (written at the new snap) out of future merges,
-        # so each merge's input is only the inter-compaction delta window
-        lineage = {**lineage, "merged_through_snap": manifest["snapshot_id"] + 1}
-        new_manifest = catalog.commit(
-            batch_id,
-            appends=compact_appends,
-            replace={"frontier": pending_after},
-            rewrite=rewrite,
-            bloom=bloom,
-            bloom_store=store,
-            state=lineage,
-        )
-        if cfg.keep_snapshots:
-            catalog.expire_snapshots(keep_last=cfg.keep_snapshots)
-        _tick("commit_compact", _t)
-    else:
-        # steady-state commit: the engine-state job runs on this thread
-        # INSIDE commit, overlapped with the pooled table-delta writes
-        new_manifest = catalog.commit(
-            batch_id, appends=appends, state_fn=_run_state,
-        )
-        _tick("commit", _t)
-    n_all = None
-    if sched_obs is not None:
-        # deferred-count mode: the progress write has run, the observation
-        # carries the true scheduled count (and the total incl. blocked)
-        row = sched_obs.get
-        n_sched = int(row["n"] or 0)
-        n_all = int(row["n_all"] or 0)
-        if loop_stats is not None:
-            loop_stats["n_sched"] = n_sched
-    if prof is not None:
-        print(f"[prof] batch {batch_id} n_sched={n_sched}: "
-              + ", ".join(f"{k}={v:.2f}s" for k, v in prof.items()))
-    for df in (scheduled, pipe, new_frontier, blocked_progress):
-        df.unpersist()
-    if trip_hosts is not None:
-        trip_hosts.unpersist()
-    if bloom is not None:
-        bloom.release()  # free the batch's Bloom broadcast (state committed)
-    if probe_store is not None:
-        probe_store.release()  # free the batch's manifest broadcast
-    # cache update only AFTER the commit succeeded: if commit raises and a
-    # custom driver loop retries run_batch, the cache must not claim hosts
-    # whose robots rows were never written
-    new_hosts = state_res.get("new_hosts")
-    if new_hosts and known_hosts is not None and len(known_hosts) < 2_000_000:
-        # names only (~60 B/host): 10^6 hosts ≈ 60 MB of driver memory,
-        # capped — past the cap we just fall back to the per-batch join
-        known_hosts.update(new_hosts)
-    if sched_obs is not None and n_sched == 0 and n_all == 0:
-        # the hint over-promised: this batch scheduled AND retired nothing
-        # (the commit above appended only empty deltas).  Same terminal
-        # decision as the counted zero branch: stop unless something is
-        # still backoff-gated or held only by an open circuit breaker.
-        n_future = pending.filter(F.col("not_before_batch") > batch_id).count()
-        if n_future == 0 and trip_hosts is not None:
-            n_future = (
-                pending.filter(F.col("not_before_batch") <= batch_id)
-                .join(trip_hosts, on="host", how="left_semi").count()
-            )
-        if n_future == 0:
-            return None
-    return new_manifest
+    try:
+        _phase(b, _schedule)
+        if not deferred:
+            if loop_stats is not None:
+                loop_stats["n_sched"] = b.n_sched
+            if b.n_sched == 0:
+                return _phase(b, _zero_batch)
+        _phase(b, _fetch_parse)
+        _phase(b, _link_probe)
+        appends = _phase(b, _commit_plans)
+        new_manifest = _phase(b, _commit, appends)
+        # cache update only AFTER the commit succeeded: if commit raises
+        # and a custom driver loop retries run_batch, the cache must not
+        # claim hosts whose robots rows were never written.  Names only
+        # (~60 B/host), capped at 2*10^6: past it the membership join runs
+        if b.new_hosts and known_hosts is not None and len(known_hosts) < 2_000_000:
+            known_hosts.update(b.new_hosts)
+        if deferred:
+            row = b.sched_obs.get
+            b.n_sched = int(row["n"] or 0)
+            if loop_stats is not None:
+                loop_stats["n_sched"] = b.n_sched
+            # the hint over-promised: this batch scheduled AND retired
+            # nothing (the commit appended only empty deltas)
+            if b.n_sched == 0 and int(row["n_all"] or 0) == 0 and _finished(b):
+                return None
+        return new_manifest
+    finally:
+        _release(b)
 
 
 def enrich_frontier(spark: SparkSession, cfg: CrawlConfig, extra_seeds) -> dict:
@@ -1261,30 +1205,16 @@ def enrich_frontier(spark: SparkSession, cfg: CrawlConfig, extra_seeds) -> dict:
         new = probe_unseen(spark, seeds, urlseen_all, bloom).persist()
         delta, new_hosts = bloom_delta(spark, new, bloom, collect_hosts=True)
         bloom.merge(delta)
-    hosts_tbl = catalog.read("hosts", manifest)
-    hosts_append = catalog._empty("hosts")
-    if new_hosts:
-        cand_hosts = spark.createDataFrame([(h,) for h in sorted(new_hosts)], "host string")
-        unknown = [
-            r["host"]
-            for r in cand_hosts.join(hosts_tbl.select("host"), on="host", how="left_anti").collect()
-        ]
-        if unknown:
-            hosts_append = _hosts_frame(
-                spark.createDataFrame([(h,) for h in sorted(unknown)], "host string")
-            )
-    out = catalog.commit(
-        batch_id,
-        appends={
-            "frontier": new.coalesce(1),
-            "urlseen": new.select(
-                "url", "url_hash", F.lit(batch_id).alias("added_batch")
-            ).coalesce(1),
-            "hosts": hosts_append.coalesce(1),
-        },
-        bloom=bloom,
-        bloom_store=store,
-    )
+    appends = {
+        "frontier": new.coalesce(1),
+        "urlseen": new.select(
+            "url", "url_hash", F.lit(batch_id).alias("added_batch")
+        ).coalesce(1),
+    }
+    hosts = _new_hosts_frame(spark, catalog.read("hosts", manifest), new_hosts)
+    if hosts is not None:
+        appends["hosts"] = hosts
+    out = catalog.commit(batch_id, appends=appends, bloom=bloom, bloom_store=store)
     new.unpersist()
     if bloom is not None:
         bloom.release()

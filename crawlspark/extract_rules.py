@@ -18,7 +18,7 @@ breadth costs nothing at the 1000-executor scale.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 # A selector: (tag, class-or-None).  class=None matches any element of the
 # tag; our mini-DOM has no descendant combinators — the reference's deep

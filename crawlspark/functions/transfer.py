@@ -8,8 +8,8 @@ Behavioral spec from the reference (middlewares.py:36-61):
     claims gzip but the body is plain) falls back to the uncompressed
     body as-is.
 
-Merged policy here (one function shared by the fused pipeline, the
-unfused fetch stage and the single-threaded oracle): BadGzipFile →
+Merged policy here (one function shared by the fused pipeline and the
+single-threaded oracle): BadGzipFile →
 forgiving passthrough; truncated/other stream errors → decode_error=True,
 which the crawl loop turns into a retry with backoff.
 """

@@ -55,6 +55,9 @@ class BloomState:
     def state_bytes(self) -> int:
         return int(self.blobs.nbytes)
 
+    def bloom_keys(self) -> int:
+        return int(self.n_items.sum())
+
     # ---- broadcast lifecycle: ONE broadcast per state version, not one
     # per probe call — unbounded broadcast accumulation at multi-GB blob
     # sizes was a driver/executor memory leak otherwise.

@@ -5,67 +5,24 @@ date parse + per-source COVID window (:2480-2526), media-credit and
 footnote cleaning (:1616-1645, :1648-2014), keyword filter (:2543-2546),
 empty-body drop (:2530-2531), filename → doc_id derivation (:2547-2557).
 
-One Arrow-batched mapInPandas does the Python-only work (span cleaning +
-messy-date parsing); every filter after it is a pure built-in Column so
-Catalyst can reorder/push them.
+The Python-only work (span cleaning + messy-date parsing) runs inside the
+fused fetch/parse stage (operators/pipeline.py); every filter after it is
+a pure built-in Column so Catalyst can reorder/push them.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from crawlspark import rules, schemas
-from crawlspark.functions.dates import parse_date_py
-from crawlspark.functions.textclean import clean_spans
+from crawlspark import rules
 from crawlspark.functions.urls import domain_expr, host_expr
-
-_CLEANED = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("host", T.StringType()),
-        T.StructField("title", T.StringType()),
-        T.StructField("published_date", T.DateType()),
-        T.StructField("spans", T.ArrayType(schemas.SPAN)),
-    ]
-)
 
 
 def doc_id_py(url: str) -> str:
     return hashlib.sha1(url.encode("utf-8", "surrogatepass")).hexdigest()
-
-
-def docs_stage(parsed_docs: DataFrame, batch_id: int) -> DataFrame:
-    """parsed rec='doc' rows → DOCUMENTS rows (filtered, cleaned, keyed)."""
-
-    def clean(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                raw = r.spans if r.spans is not None else []
-                spans_in = [(s["kind"], s["text"], s["media_ref"]) for s in raw]
-                cleaned = clean_spans(spans_in)
-                rows.append(
-                    {
-                        "url": r.url,
-                        "host": r.host,
-                        "title": r.title,
-                        "published_date": parse_date_py(r.date_raw),
-                        "spans": cleaned,
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    cleaned = parsed_docs.select("url", "host", "title", "date_raw", "spans").mapInPandas(
-        clean, schema=_CLEANED
-    )
-    return finalize_documents(cleaned, batch_id)
 
 
 # Batch-invariant Column trees for the filter tail, built once per
@@ -121,12 +78,12 @@ def _finalize_cols(spark) -> dict:
 
 
 def finalize_documents(cleaned: DataFrame, batch_id: int) -> DataFrame:
-    """The pure-Column filter tail shared by the fused and unfused doc
-    pipelines: empty-body drop (F5), date window (F4), keyword relevance
-    (F3), source labeling (F7), doc_id derivation (C6), in-batch dedup.
+    """The pure-Column filter tail of the fused stage's doc records:
+    empty-body drop (F5), date window (F4), keyword relevance (F3), source
+    labeling (F7), doc_id derivation (C6), in-batch dedup.
 
     ``cleaned`` must carry (url, title, published_date, spans) with spans
-    already cleaned and dates already parsed.
+    already cleaned and dates already parsed (pipeline.docs_from_pipe).
     """
     c = _finalize_cols(cleaned.sparkSession)
     return (

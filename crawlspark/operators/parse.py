@@ -1,21 +1,18 @@
 """Parse stage: fetched pages → link rows + document rows (one pass).
 
 Reference analog: ``parse`` / ``parse_articles`` / ``get_next_pages`` /
-``get_article_content`` (covid_news_spider.py:881-2471).  One Arrow-batched
-mapInPandas emits a union of 'link' and 'doc' records (schemas.PARSED);
-downstream filters split the two paths — the page body is parsed exactly
-once per fetch, like the reference's single callback per response.
+``get_article_content`` (covid_news_spider.py:881-2471).  ``_parse_row``
+turns one fetched page into 'link' and 'doc' records (schemas.PARSED
+columns); the fused fetch/parse stage (operators/pipeline.py) calls it
+once per fetched page, like the reference's single callback per response,
+and downstream filters split the two paths.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame
-
-from crawlspark import html_parse, schemas, synthetic
+from crawlspark import html_parse, synthetic
 from crawlspark.functions import urls as U
 
 
@@ -164,30 +161,3 @@ def _parse_row(url: str, host: str, depth: int, page_kind: str, status: int, bod
             )
     return out
 
-
-def parse_stage(fetched: DataFrame, entire_site: bool = True,
-                strip_tracking: bool = False,
-                obey_meta_robots: bool = False,
-                use_canonical_link: bool = False,
-                use_feeds: bool = False,
-                obey_link_rel: bool = False) -> DataFrame:
-    """FETCHED (status==200 rows) → PARSED union rows."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in schemas.PARSED.fields]
-        for pdf in batches:
-            rows: list[dict] = []
-            for r in pdf.itertuples(index=False):
-                meta = r.meta if isinstance(r.meta, dict) else None
-                rows.extend(
-                    _parse_row(r.final_url or r.url, r.host, r.depth, r.page_kind, r.status, r.body, meta,
-                               entire_site=entire_site, strip_tracking=strip_tracking,
-                               obey_meta_robots=obey_meta_robots,
-                               use_canonical_link=use_canonical_link,
-                               use_feeds=use_feeds,
-                               obey_link_rel=obey_link_rel)
-                )
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    return fetched.mapInPandas(run, schema=schemas.PARSED)

@@ -1,15 +1,13 @@
 """Fused fetch→parse→clean stage: ONE mapInPandas per micro-batch.
 
-Why fused: the unfused pipeline (fetch.py → parse.py → docs.py) chains
-three Python stages, so every task runs three Python workers and the full
-page body crosses the JVM↔Python Arrow boundary twice.  Measured on
-local[32] that oversubscribes the box ~3× and caps throughput below
-local[8].  Fused, the body is born and dies inside one Python worker —
-the stage's output is only the small stuff (links, cleaned spans, fetch
-outcomes), and parallelism equals the partition count.
-
-The per-record logic is byte-identical to the unfused operators (same
-functions), which stay for unit tests and for composing custom pipelines.
+Each page is fetched, transfer-decoded, hashed, parsed (parse._parse_row)
+and its spans cleaned inside one Python worker, so the page body is born
+and dies there and crosses the JVM↔Python Arrow boundary not at all: the
+stage's output is only the small stuff (links, cleaned spans, fetch
+outcomes), and parallelism equals the partition count.  Splitting the
+stage into separate fetch/parse/clean UDFs would run three Python workers
+per task and ship every body across Arrow twice (measured on local[32]:
+~3x oversubscription, throughput below local[8]).
 """
 
 from __future__ import annotations
@@ -130,8 +128,8 @@ def fetch_parse_stage(
                                     use_feeds=use_feeds,
                                     obey_link_rel=obey_link_rel):
                     # parse rows are keyed by the PARSED url (= final_url
-                    # under a redirect), matching the unfused parse_stage —
-                    # link src_url / min_by winners agree fused vs unfused
+                    # under a redirect), as the oracle keys them — link
+                    # src_url / min_by winners follow the redirect
                     out = {**base, "rec": p["rec"], "url": final_url or r.url,
                            "link": p["link"],
                            "link_kind": p["link_kind"], "meta": p["meta"],
@@ -150,15 +148,18 @@ def fetch_parse_stage(
     sp = int(scheduled.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     n_parts = min(num_partitions, sp) if num_partitions else sp
     salt = F.pmod(F.xxhash64("url"), F.lit(64))
-    # explicit partition count: AQE would coalesce the slim input shuffle
-    # and serialize the CPU-heavy stage (see operators/fetch.py note)
+    # Partition by (host, salt): per-host locality for connection reuse,
+    # without capping parallelism at the distinct-host count.  The
+    # partition count is EXPLICIT: the input shuffle is slim URL rows, so
+    # AQE would coalesce it to one partition and serialize the CPU-heavy
+    # stage (observed: 32 cores at single-core throughput).
     return scheduled.repartition(n_parts, F.col("host"), salt).mapInPandas(run, schema=PIPE)
 
 
 def docs_from_pipe(pipe_docs: DataFrame, batch_id: int) -> DataFrame:
-    """PIPE rec='doc' rows → DOCUMENTS rows via the SAME filter tail as the
-    unfused path (spans already cleaned, dates already parsed inside the
-    fused stage) — one implementation, no fused/unfused drift."""
+    """PIPE rec='doc' rows → DOCUMENTS rows through the pure-Column filter
+    tail (spans already cleaned, dates already parsed inside the fused
+    stage)."""
     from crawlspark.operators.docs import finalize_documents
 
     return finalize_documents(

@@ -73,19 +73,6 @@ PROGRESS = T.StructType(
     ]
 )
 
-# --- fetched: transient intra-batch schema out of the fetch stage
-FETCHED = T.StructType(
-    list(FRONTIER.fields)
-    + [
-        T.StructField("final_url", T.StringType(), True),
-        T.StructField("status", T.IntegerType(), False),
-        T.StructField("body", T.StringType(), True),  # transfer-DECODED
-        T.StructField("elapsed_ms", T.LongType(), False),
-        T.StructField("content_encoding", T.StringType(), True),
-        T.StructField("decode_error", T.BooleanType(), False),
-    ]
-)
-
 # --- fetched_cache: persistent per-fetch log (reference HTTPCACHE,
 # settings.py:84-89): what was fetched, how it was transfer-encoded, and
 # the decoded body's content hash.  Bodies themselves are NOT persisted
@@ -110,7 +97,8 @@ FETCHED_CACHE = T.StructType(
     ]
 )
 
-# --- parsed: union row out of the parse stage (rec='link' | 'doc')
+# --- parsed: one parse._parse_row record (rec='link' | 'doc'); the fused
+# stage's PIPE rows carry these columns
 PARSED = T.StructType(
     [
         T.StructField("rec", T.StringType(), False),

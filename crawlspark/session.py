@@ -16,6 +16,10 @@ from pyspark.sql import SparkSession
 # spark.sql.shuffle.partitions via --conf (AQE coalesces the small case).
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# the directory holding the crawlspark package: Python workers import
+# crawlspark from here whatever the driver's working directory is
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "crawlspark",
@@ -29,6 +33,8 @@ def get_spark(
     frontier are the expected skew source, cf. reference seed-host skew at
     covid_news_spider.py:299-305).  Arrow is on: every non-SQL operator in
     this engine is a pandas UDF over Arrow batches (no per-row Python UDFs).
+    The package root goes on the executors' PYTHONPATH, so UDFs that import
+    crawlspark work when the driver runs from any directory.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -43,6 +49,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
         # Arrow batch sizing is BYTE-bounded (guide §4.2): wide document
         # rows (KB-scale bodies/spans) still land ~1-3k rows per batch
         # under the 16 MB cap, while narrow rows (the 16-byte hash pairs

@@ -174,11 +174,6 @@ class SnapshotCatalog:
                     state = {**(state or {}), **sres["state"]}
                 late_appends = sres.get("appends") or {}
             results = [(k, t, e, f.result()) for k, t, e, f in futs]
-        for table, df in late_appends.items():
-            p = write(table, df)
-            if p:
-                tables.setdefault(table, []).append(p)
-            lineage[table] = {"mode": "append", "path": p}
         for kind, table, extra, p in results:
             if kind == "replace":
                 tables[table] = [p] if p else []
@@ -193,6 +188,13 @@ class SnapshotCatalog:
                 if p:
                     tables.setdefault(table, []).append(p)
                 lineage[table] = {"mode": "append", "path": p}
+        # late appends go on AFTER the replace/rewrite file lists are
+        # settled: a same-table replace must not drop them
+        for table, df in late_appends.items():
+            p = write(table, df)
+            if p:
+                tables.setdefault(table, []).append(p)
+            lineage[table] = {"mode": "append", "path": p}
 
         new_state = dict(prev.get("state") or {})
         new_state.update(state or {})

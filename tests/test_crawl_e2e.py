@@ -2,9 +2,10 @@
 resume-from-snapshot equality — the BASELINE.json pytest contract."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from crawlspark import synthetic
-from crawlspark.crawl import CrawlConfig, run_crawl
+from crawlspark.crawl import CrawlConfig, init_crawl, run_batch, run_crawl
 from crawlspark.oracle import crawl_oracle
 from crawlspark.tables import SnapshotCatalog
 
@@ -454,3 +455,26 @@ def test_trap_cap_bounds_admissions_when_binding(spark, tmp_path, engine_run):
         .count().filter(F.col("count") > 1)
     )
     assert over.count() == 0, over.limit(5).collect()
+
+
+@pytest.mark.parametrize("sched_hint", [None, 5])
+def test_stop_check_on_both_count_paths(spark, tmp_path, sched_hint):
+    """A batch that schedules nothing finishes (None) only when nothing is
+    pending; a pending row gated to a later batch makes it commit and skip
+    forward instead.  The counted path (no hint) and the deferred path (a
+    hint that over-promises) must agree."""
+    spec = synthetic.WebSpec(scale=SCALE)
+    empty = CrawlConfig(warehouse=str(tmp_path / "empty"), spec=spec, seed_urls=[])
+    m = init_crawl(spark, empty)
+    cat = SnapshotCatalog(spark, empty.warehouse)
+    assert run_batch(spark, cat, empty, m, sched_hint=sched_hint) is None
+
+    gated = CrawlConfig(warehouse=str(tmp_path / "gated"), spec=spec,
+                        seed_urls=synthetic.seed_urls(spec)[:1])
+    m = init_crawl(spark, gated)
+    cat = SnapshotCatalog(spark, gated.warehouse)
+    frontier = cat.read("frontier", m).withColumn("not_before_batch", F.lit(10))
+    m = cat.commit(0, appends={}, replace={"frontier": frontier})
+    nxt = run_batch(spark, cat, gated, m, sched_hint=sched_hint)
+    assert nxt is not None and nxt["batch_id"] == 1
+    assert cat.read("progress", nxt).count() == 0

@@ -328,3 +328,23 @@ def test_concurrent_commit_loses_cleanly(spark, tmp_path):
     res = cat.expire_snapshots(keep_last=10)
     assert res["files_removed"] >= 1
     assert cat.read("metrics").count() == 6
+
+
+def test_state_fn_late_append_survives_same_table_replace(spark, tmp_path):
+    """A state_fn late append lands on top of a same-table replace: both
+    row sets read back (a compaction batch can replace or rewrite the
+    hosts table while its state update appends newly discovered hosts)."""
+
+    def hosts_df(names):
+        return spark.createDataFrame(
+            [(h, 1.0, 5, [], []) for h in names], schemas.HOSTS)
+
+    cat = SnapshotCatalog(spark, str(tmp_path))
+    cat.commit(1, appends={"hosts": hosts_df(["old.example"])})
+    m = cat.commit(
+        2, appends={}, replace={"hosts": hosts_df(["a.example", "b.example"])},
+        state_fn=lambda: {"appends": {"hosts": hosts_df(["new.example"])}},
+    )
+    got = sorted(r["host"] for r in cat.read("hosts", m).collect())
+    assert got == ["a.example", "b.example", "new.example"]
+    assert len(m["tables"]["hosts"]) == 2
