@@ -14,7 +14,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from crawlspark import synthetic
-from crawlspark.operators.bloom import BloomState
+from crawlspark.operators.bloom import new_seen_state
 from crawlspark.operators.pipeline import docs_from_pipe, fetch_parse_stage
 from crawlspark.operators.urlseen import probe_unseen
 
@@ -38,31 +38,20 @@ def synthetic_frontier(spark: SparkSession, n: int, n_hosts: int = 1000):
 def bench_dedup(spark: SparkSession, n_candidates: int = 1_000_000, n_seen: int = 200_000,
                 buckets: int = 64, bits: int = 1 << 18, partitioned: bool = False) -> dict:
     """Frontier-dedup ops/sec: Bloom probe + exact anti-join fallback over
-    a pre-seeded seen set.  ``partitioned=True`` uses the co-partitioned
-    per-bucket-store probe (the >broadcast-scale layout) instead of the
-    broadcast mapInArrow probe."""
+    a pre-seeded seen set.  ``partitioned=True`` uses the per-bucket-store
+    layout (the >broadcast-scale one, probed co-partitioned) instead of the
+    broadcast one."""
     import tempfile
 
-    from crawlspark.operators.bloom import BloomBucketStore
-    from crawlspark.operators.urlseen import (
-        bloom_delta,
-        probe_unseen_partitioned,
-        update_buckets_partitioned,
-    )
+    from crawlspark.operators.urlseen import bloom_delta
 
-    bloom = BloomState(buckets, bits)
+    seen = new_seen_state(buckets, bits, tempfile.mkdtemp(prefix="benchbkt-"),
+                          partitioned=partitioned)
     seen_df = spark.range(n_seen).select(
         F.concat(F.lit("https://www.h"), (F.col("id") % 1000).cast("string"),
                  F.lit(".example/p/"), F.col("id").cast("string")).alias("url")
     ).persist()
-    store = None
-    if partitioned:
-        store = BloomBucketStore(buckets, bits, k=7)
-        store = update_buckets_partitioned(
-            spark, seen_df, store, tempfile.mkdtemp(prefix="benchbkt-")
-        )
-    else:
-        bloom.merge(bloom_delta(spark, seen_df, bloom))
+    seen.merge(bloom_delta(spark, seen_df, seen))
     # candidates: 20% re-discoveries of seen URLs (they become Bloom
     # positives and exercise the exact-join fallback), 80% fresh (the
     # Bloom-negative fast path that skips the join entirely)
@@ -77,11 +66,7 @@ def bench_dedup(spark: SparkSession, n_candidates: int = 1_000_000, n_seen: int 
         ).alias("url")
     )
     t0 = time.time()
-    if partitioned:
-        fresh = probe_unseen_partitioned(spark, cand, seen_df, store)
-    else:
-        fresh = probe_unseen(spark, cand, seen_df, bloom)
-    n_fresh = fresh.count()
+    n_fresh = probe_unseen(spark, cand, seen_df, seen).count()
     dt = time.time() - t0
     return {"sec": dt, "ops_per_sec": n_candidates / dt, "n_fresh": n_fresh}
 

@@ -28,14 +28,9 @@ from pyspark.sql import functions as F
 from crawlspark import rules, schemas, synthetic
 from crawlspark.functions import urls as U
 from crawlspark.operators import scheduler
-from crawlspark.operators.bloom import BloomBucketStore, BloomState
+from crawlspark.operators.bloom import new_seen_state
 from crawlspark.operators.pipeline import docs_from_pipe, fetch_parse_stage
-from crawlspark.operators.urlseen import (
-    bloom_delta,
-    probe_unseen,
-    probe_unseen_partitioned,
-    update_buckets_partitioned,
-)
+from crawlspark.operators.urlseen import bloom_delta, probe_unseen
 from crawlspark.tables import SnapshotCatalog
 
 
@@ -51,11 +46,11 @@ class CrawlConfig:
     keep_snapshots: int = 0  # >0: expire_snapshots(keep_last=N) after compaction
     expected_urls: int | None = None  # auto-size the Bloom for this key count
     budget_override: int | None = None  # tests: force small per-host budgets
-    # Bloom state layout: None = auto (partitioned once the configured
-    # state exceeds the broadcast cap — the 10^10-key regime); True/False
-    # force either path (tests force True to run e2e equality on it)
+    # Bloom state layout of a new crawl: None = auto (partitioned once the
+    # configured state exceeds bloom.BROADCAST_CAP_BYTES — the 10^10-key
+    # regime); True/False force either path (tests force True to run e2e
+    # equality on it).  A resumed crawl keeps its manifest's layout.
     bloom_partitioned: bool | None = None
-    bloom_broadcast_cap_bytes: int = 256 << 20
     # serve previously-fetched articles from the fetched-cache log instead
     # of refetching (re-crawl mode; see reset_for_recrawl)
     use_fetch_cache: bool = False
@@ -90,13 +85,13 @@ class CrawlConfig:
     # every entry is fresh (served from cache before scheduling), or
     # when the response redirected (a real 304 cannot redirect).
     revalidate_stale: bool = False
-    # Bloom capacity auto-guard (partitioned layout): when the worst
-    # bucket's theoretical FPR exceeds 10x the design target, the next
-    # compaction rebuilds the store at DOUBLE the bucket count from the
-    # exact seen set (urlseen — rebuild, because Bloom bits cannot be
-    # split).  Rare and exponentially spaced: each doubling halves
-    # per-bucket load, so total rebuild work over a crawl's lifetime is
-    # O(final seen set), amortized O(1) bits per key.
+    # Bloom capacity auto-guard (either layout): when the worst bucket's
+    # theoretical FPR exceeds 10x the design target, the next compaction
+    # rebuilds the filter at DOUBLE the bucket count from the exact seen
+    # set (urlseen — rebuild, because Bloom bits cannot be split).  Rare
+    # and exponentially spaced: each doubling halves per-bucket load, so
+    # total rebuild work over a crawl's lifetime is O(final seen set),
+    # amortized O(1) bits per key.
     bloom_target_fpr: float = 0.01
     bloom_autosplit: bool = True
     # reference SEARCH_ENTIRE_WEBSITE (:34, default 1): True follows every
@@ -200,12 +195,6 @@ class CrawlConfig:
     # seeds + max_depth=0):
     seed_urls: list[str] | None = None
     seed_file: str | None = None
-
-    @property
-    def use_partitioned_bloom(self) -> bool:
-        if self.bloom_partitioned is not None:
-            return self.bloom_partitioned
-        return self.bloom_buckets * (self.bloom_bits // 8) > self.bloom_broadcast_cap_bytes
 
 
 def _hosts_frame(hosts_df: DataFrame) -> DataFrame:
@@ -493,21 +482,14 @@ def _sitemap_frontier(hosts_src: DataFrame,
 
 
 def _seed_bloom(spark: SparkSession, cfg: CrawlConfig, catalog: SnapshotCatalog,
-                seeds_df: DataFrame) -> dict:
-    """→ commit kwargs ({'bloom': ...} or {'bloom_store': ...}) for a fresh
-    filter seeded with the seed URLs."""
-    if cfg.use_partitioned_bloom:
-        # never build full state in one place, even at init: the seed bits
-        # are written per-bucket by the same grouped-map the loop uses
-        seed_store = BloomBucketStore(cfg.bloom_buckets, cfg.bloom_bits, k=7)
-        store = update_buckets_partitioned(
-            spark, seeds_df, seed_store, catalog.bloom_bucket_dir(0)
-        )
-        seed_store.release()
-        return {"bloom_store": store}
-    bloom = BloomState(cfg.bloom_buckets, cfg.bloom_bits)
-    bloom.merge(bloom_delta(spark, seeds_df, bloom))
-    return {"bloom": bloom}
+                seeds_df: DataFrame):
+    """A fresh URL-seen filter in the configured layout, holding the seed
+    URLs (written per bucket by the same grouped-map job the loop uses)."""
+    seen = new_seen_state(cfg.bloom_buckets, cfg.bloom_bits, catalog.state_dir,
+                          partitioned=cfg.bloom_partitioned)
+    seen.merge(bloom_delta(spark, seeds_df, seen))
+    seen.release()
+    return seen
 
 
 def init_crawl(spark: SparkSession, cfg: CrawlConfig) -> dict:
@@ -518,7 +500,8 @@ def init_crawl(spark: SparkSession, cfg: CrawlConfig) -> dict:
     seen_df = seeds_df.select("url", "url_hash", F.lit(0).alias("added_batch"))
     hosts_df = _hosts_frame(seeds_df)
     appends = {"frontier": seeds_df, "urlseen": seen_df, "hosts": hosts_df}
-    return catalog.commit(0, appends=appends, state={}, **_seed_bloom(spark, cfg, catalog, seeds_df))
+    return catalog.commit(0, appends=appends, state={},
+                          bloom=_seed_bloom(spark, cfg, catalog, seeds_df))
 
 
 def reset_for_recrawl(spark: SparkSession, cfg: CrawlConfig,
@@ -564,15 +547,11 @@ def reset_for_recrawl(spark: SparkSession, cfg: CrawlConfig,
         0,
         appends=appends,
         replace=replace,
-        # clear BOTH bloom layouts from the carried-over state; the kwarg
-        # below re-sets whichever layout this epoch uses (run_batch picks
-        # the layout from the manifest, so a stale path would be wrong)
-        state={"bloom_path": None, "bloom_store_path": None},
-        **_seed_bloom(spark, cfg, catalog, seeds_df),
+        bloom=_seed_bloom(spark, cfg, catalog, seeds_df),
     )
 
 
-def _bloom_lineage(bloom: BloomState | BloomBucketStore) -> dict:
+def _bloom_lineage(bloom) -> dict:
     """Per-snapshot Bloom health lineage: key count + worst-bucket FPR —
     visible in every manifest so capacity drift is observable."""
     return {
@@ -649,9 +628,8 @@ class _Batch:
     deferred: bool
     n_sched: int
     cols: dict  # _invariant_cols
-    bloom: BloomState | None
-    store: BloomBucketStore | None  # replaced by the state update
-    probe_store: BloomBucketStore | None  # pre-update store, probed this batch
+    seen: object  # URL-seen filter, any layout; the state update folds the batch in
+    probed: object  # the pre-update filter the probe broadcast
     prof: dict | None  # phase -> seconds, when CRAWLSPARK_PROF is set
     known_hosts: set | None  # see run_batch
     pending: DataFrame | None = None
@@ -886,12 +864,7 @@ def _link_probe(b: _Batch) -> None:
     # of shuffling it (at 10^10 seen rows the shuffle, not the sliver, is
     # what would dominate every micro-batch)
     urlseen_all = b.catalog.read("urlseen", b.manifest)
-    if b.store is not None:
-        new_links = probe_unseen_partitioned(
-            b.spark, cand, urlseen_all, b.store, small_positives=True
-        )
-    else:
-        new_links = probe_unseen(b.spark, cand, urlseen_all, b.bloom, small_positives=True)
+    new_links = probe_unseen(b.spark, cand, urlseen_all, b.seen, small_positives=True)
     if cfg.trap_template_cap is not None:
         # cap AFTER the seen-set filter: slots go only to genuinely-new
         # URLs (a re-linked already-seen sibling would otherwise win a
@@ -990,52 +963,38 @@ def _state_update(b: _Batch) -> dict:
     bytes never reach the driver), plus the capacity auto-guard on
     compaction batches.  Returns the state for the commit's manifest and
     a late hosts append when the batch discovered new hosts."""
-    if b.store is not None:
-        b.store, b.new_hosts = update_buckets_partitioned(
-            b.spark, b.new_frontier, b.store, b.catalog.bloom_bucket_dir(b.batch_id),
-            collect_hosts=True,
-        )
-        lineage = _bloom_lineage(b.store)
-    else:
-        # politeness-sized batches skip the shuffle job: accepted rows
-        # are bounded by n_sched × links-per-page (~64 is generous for
-        # news listings; overshooting only costs the driver a few MB,
-        # never correctness — same hashes, same numpy kernel either way)
-        delta, b.new_hosts = bloom_delta(
-            b.spark, b.new_frontier, b.bloom, collect_hosts=True,
-            small_batch_rows=b.n_sched * 64,
-        )
-        b.bloom.merge(delta)
-        lineage = _bloom_lineage(b.bloom)
+    # politeness-sized batches skip the shuffle job: accepted rows are
+    # bounded by n_sched × links-per-page (~64 is generous for news
+    # listings; overshooting only costs the driver a few MB, never
+    # correctness — same hashes, same numpy kernel either way)
+    delta, b.new_hosts = bloom_delta(
+        b.spark, b.new_frontier, b.seen, collect_hosts=True,
+        small_batch_rows=b.n_sched * 64,
+    )
+    b.seen.merge(delta)
     hosts = _new_hosts_frame(b.spark, b.hosts_tbl, b.new_hosts, b.known_hosts)
-    if b.is_compact:
-        lineage.update(_bloom_autosplit(b))
-    return {"bloom": b.bloom, "bloom_store": b.store, "state": lineage,
+    resplit = _bloom_autosplit(b) if b.is_compact else {}
+    return {"bloom": b.seen, "state": {**_bloom_lineage(b.seen), **resplit},
             "appends": {} if hosts is None else {"hosts": hosts}}
 
 
 def _bloom_autosplit(b: _Batch) -> dict:
-    """Bloom capacity auto-guard (partitioned layout): past 10x the target
-    FPR, rebuild at double the bucket count from the exact seen set
-    (urlseen + this batch's accepted rows — bits cannot be split, but the
-    exact set can always re-derive them).  One distributed
-    groupBy(bucket).applyInPandas job, same kernel as the steady-state
-    update; old blob files stay referenced by old snapshots (isolation)
-    and are swept at expiry.  Returns the lineage update."""
-    store = b.store
-    if (store is None or not b.cfg.bloom_autosplit
-            or store.fpr_estimate() <= 10 * b.cfg.bloom_target_fpr):
+    """Bloom capacity auto-guard: past 10x the target FPR, rebuild at
+    double the bucket count from the exact seen set (urlseen + this
+    batch's accepted rows — bits cannot be split, but the exact set can
+    always re-derive them).  One distributed groupBy(bucket).applyInPandas
+    job, same kernel as the steady-state update; old blob files stay
+    referenced by old snapshots (isolation) and are swept at expiry.
+    Returns the lineage update."""
+    if (not b.cfg.bloom_autosplit
+            or b.seen.fpr_estimate() <= 10 * b.cfg.bloom_target_fpr):
         return {}
     all_seen = b.catalog.read("urlseen", b.manifest).select("url").unionByName(
         b.new_frontier.select("url")
     )
-    fresh = BloomBucketStore(store.n_buckets * 2, store.m, store.k)
-    store.release()
-    b.store = update_buckets_partitioned(
-        b.spark, all_seen, fresh, b.catalog.bloom_bucket_dir(b.batch_id)
-    )
-    fresh.release()  # the rebuild job's empty-manifest broadcast
-    return {"bloom_resplit_to": b.store.n_buckets, **_bloom_lineage(b.store)}
+    b.seen = b.seen.empty_like(b.seen.n_buckets * 2)
+    b.seen.merge(bloom_delta(b.spark, all_seen, b.seen))
+    return {"bloom_resplit_to": b.seen.n_buckets}
 
 
 def _compaction(b: _Batch, appends: dict) -> dict:
@@ -1089,10 +1048,8 @@ def _release(b: _Batch) -> None:
     for df in (b.scheduled, b.retired, b.pipe, b.new_frontier, b.trip_hosts):
         if df is not None:
             df.unpersist()
-    if b.bloom is not None:
-        b.bloom.release()
-    if b.probe_store is not None:
-        b.probe_store.release()
+    b.probed.release()
+    b.seen.release()
     if b.prof is not None:
         print(f"[prof] batch {b.batch_id} n_sched={b.n_sched}: "
               + ", ".join(f"{k}={v:.2f}s" for k, v in b.prof.items()))
@@ -1136,17 +1093,15 @@ def run_batch(spark: SparkSession, catalog: SnapshotCatalog, cfg: CrawlConfig, m
     the first batch of a run and every caller without a hint count the
     schedule before fetching."""
     batch_id = manifest["batch_id"] + 1
-    # Bloom layout follows the manifest (resume-safe across config edits):
-    # a bloom_store_path means the partitioned per-bucket layout
-    store = catalog.load_bloom_store(manifest)
+    # Bloom layout follows the manifest (resume-safe across config edits)
+    seen = catalog.load_bloom(manifest)
     is_compact = bool(cfg.compact_every) and batch_id % cfg.compact_every == 0
     deferred = bool(sched_hint and sched_hint > 0 and not is_compact)
     b = _Batch(
         spark=spark, catalog=catalog, cfg=cfg, manifest=manifest,
         batch_id=batch_id, is_compact=is_compact, deferred=deferred,
         n_sched=sched_hint if deferred else 0, cols=_invariant_cols(spark),
-        bloom=None if store is not None else catalog.load_bloom(manifest),
-        store=store, probe_store=store,
+        seen=seen, probed=seen,
         prof={} if os.environ.get("CRAWLSPARK_PROF") else None,
         known_hosts=known_hosts,
     )
@@ -1190,21 +1145,13 @@ def enrich_frontier(spark: SparkSession, cfg: CrawlConfig, extra_seeds) -> dict:
     manifest = catalog.latest()
     if manifest is None:
         manifest = init_crawl(spark, cfg)
-    store = catalog.load_bloom_store(manifest)
-    bloom = None if store is not None else catalog.load_bloom(manifest)
-    probe_store = store
+    seen = catalog.load_bloom(manifest)
     batch_id = manifest["batch_id"]
     urlseen_all = catalog.read("urlseen", manifest)
     seeds = extra_seeds.dropDuplicates(["url"])
-    if store is not None:
-        new = probe_unseen_partitioned(spark, seeds, urlseen_all, store).persist()
-        store, new_hosts = update_buckets_partitioned(
-            spark, new, store, catalog.bloom_bucket_dir(batch_id), collect_hosts=True
-        )
-    else:
-        new = probe_unseen(spark, seeds, urlseen_all, bloom).persist()
-        delta, new_hosts = bloom_delta(spark, new, bloom, collect_hosts=True)
-        bloom.merge(delta)
+    new = probe_unseen(spark, seeds, urlseen_all, seen).persist()
+    delta, new_hosts = bloom_delta(spark, new, seen, collect_hosts=True)
+    seen.merge(delta)
     appends = {
         "frontier": new.coalesce(1),
         "urlseen": new.select(
@@ -1214,12 +1161,9 @@ def enrich_frontier(spark: SparkSession, cfg: CrawlConfig, extra_seeds) -> dict:
     hosts = _new_hosts_frame(spark, catalog.read("hosts", manifest), new_hosts)
     if hosts is not None:
         appends["hosts"] = hosts
-    out = catalog.commit(batch_id, appends=appends, bloom=bloom, bloom_store=store)
+    out = catalog.commit(batch_id, appends=appends, bloom=seen)
     new.unpersist()
-    if bloom is not None:
-        bloom.release()
-    if probe_store is not None:
-        probe_store.release()
+    seen.release()
     return out
 
 

@@ -77,10 +77,11 @@ def fix_url_py(url: str, base_url: str = "https://www.example.com/") -> str:
         u = urljoin(base_url, u)
     # canonical form: drop fragment, then strip (fragment removal can
     # expose trailing whitespace — strip AFTER so fix∘fix == fix), then
-    # drop trailing slash on path
+    # drop trailing slashes on path, re-stripping whitespace they exposed
+    # ('a / /' → 'a'), again so fix∘fix == fix
     u = u.split("#", 1)[0].strip()
-    if u.endswith("/") and u.count("/") > 3:
-        u = u.rstrip("/")
+    while u.endswith("/") and u.count("/") > 3:
+        u = u.rstrip("/").rstrip()
     return u
 
 

@@ -3,43 +3,83 @@
 Replaces the reference's request-fingerprint dupefilter
 (settings.py:92,107) with an explicit, persistable structure:
 
-  * keys are canonical URLs; each key owns two independent 64-bit values
-    derived from its md5 (double hashing: pos_i = (h1 + i*h2) mod m);
+  * keys are canonical URLs, hashed JVM-side into two 64-bit values
+    (h1 = xxhash64(url), h2 = xxhash64(salt, url) | 1; urlseen._hash_cols)
+    and probed by double hashing: pos_i = (h1 + i*h2) mod m, computed in
+    one place, ``BloomState._positions``;
   * the bit space is split into ``n_buckets`` independent filters keyed by
     ``bucket = h1 mod n_buckets``, so (a) each bucket's blob stays small
     enough for one executor even at 10^10 keys (~1.2 GB per 10^9 keys at
     1% FPR, split across buckets), and (b) probe/update parallelize per
     bucket with zero cross-bucket coordination;
-  * probes are vectorized numpy over Arrow batches (mapInPandas with the
-    blobs broadcast — zero shuffle — for state that fits in memory;
-    groupBy(bucket).applyInPandas co-partitioned probing is the >memory
-    path at full scale);
-  * Bloom positives are verified with an exact LEFT ANTI join against the
-    frontier (the seen set's exact form), so false positives never drop a
-    URL — false-negative-free by construction, and the exact join input
-    is only the tiny positive subset.
+  * two layouts of the same bits: ``BloomState`` holds every blob and is
+    broadcast to a vectorized pandas-UDF probe (zero shuffle);
+    ``BloomBucketStore`` keeps one file per bucket and is probed
+    co-partitioned (one bucket shuffle, one blob per task) — the state
+    past ``BROADCAST_CAP_BYTES``.  Per-bucket tasks of either layout run
+    the same kernel on a one-bucket ``BloomState``;
+  * Bloom positives are verified with an exact join against the urlseen
+    table (the seen set's exact form; urlseen._split_and_verify), so
+    false positives never drop a URL — false-negative-free by
+    construction, and the exact join input is only the tiny positive
+    subset.
+
+A snapshot manifest names its layout by the state key it records
+(``MANIFEST_KEY``); ``load_seen_state``/``seen_state_files`` read it back.
 """
 
 from __future__ import annotations
 
-import hashlib
+import json
+import os
 
 import numpy as np
 
-
-def key_hashes(urls: list[str]) -> tuple[np.ndarray, np.ndarray]:
-    """Two independent uint64 per key from md5 (stable across engines)."""
-    h1 = np.empty(len(urls), dtype=np.uint64)
-    h2 = np.empty(len(urls), dtype=np.uint64)
-    for i, u in enumerate(urls):
-        d = hashlib.md5(u.encode("utf-8", "surrogatepass")).digest()
-        h1[i] = int.from_bytes(d[:8], "big")
-        h2[i] = int.from_bytes(d[8:16], "big") | 1  # odd → full cycle
-    return h1, h2
+# state past this many bytes of bits is not broadcast: new_seen_state
+# picks the per-bucket-file layout instead
+BROADCAST_CAP_BYTES = 256 << 20
+# BloomBucketStore blob files live in this directory beside its manifests
+BLOB_DIR = "bloom-buckets"
 
 
-class BloomState:
+def _npz(path: str) -> str:
+    # np.savez_compressed appends .npz to a path without it, so accept a
+    # recorded path either way
+    return path if path.endswith(".npz") else path + ".npz"
+
+
+class BroadcastCache:
+    """ONE cached Spark broadcast per state version, not one per probe
+    call — unbounded broadcast accumulation at multi-GB blob sizes was a
+    driver/executor memory leak otherwise.  Mutators set ``_bcast_dirty``;
+    the crawl loop calls ``release()`` after each batch's commit."""
+
+    _bcast = None
+    _bcast_dirty = True
+
+    def broadcast(self, spark):
+        if self._bcast is None or self._bcast_dirty:
+            self.release()
+            self._bcast = spark.sparkContext.broadcast(self)
+            self._bcast_dirty = False
+        return self._bcast
+
+    def release(self) -> None:
+        """Unpersist the cached broadcast (frees executor copies; Spark
+        re-ships on demand if a straggler job still references it)."""
+        if self._bcast is not None:
+            self._bcast.unpersist(blocking=False)
+            self._bcast = None
+        self._bcast_dirty = True
+
+    def __getstate__(self):  # executors get the state, not the handle
+        return {**self.__dict__, "_bcast": None}
+
+
+class BloomState(BroadcastCache):
     """n_buckets independent bit arrays + per-bucket key counts."""
+
+    MANIFEST_KEY = "bloom_path"
 
     def __init__(self, n_buckets: int = 32, bits_per_bucket: int = 1 << 20, k: int = 7):
         assert n_buckets & (n_buckets - 1) == 0, "n_buckets must be a power of two"
@@ -48,8 +88,19 @@ class BloomState:
         self.k = k
         self.blobs = np.zeros((n_buckets, bits_per_bucket // 8), dtype=np.uint8)
         self.n_items = np.zeros(n_buckets, dtype=np.int64)
-        self._bcast = None  # cached Spark broadcast of the blobs
-        self._bcast_dirty = True
+
+    @classmethod
+    def single(cls, m: int, k: int, blob: np.ndarray | None = None) -> "BloomState":
+        """One bucket's filter over ``blob`` (all zeros when None): the view
+        a per-bucket task runs the kernel on.  Positions depend on h1/h2
+        only, so its bits equal that bucket's bits in the full state."""
+        st = cls(1, m, k)
+        if blob is not None:
+            st.blobs = blob.reshape(1, -1)
+        return st
+
+    def empty_like(self, n_buckets: int | None = None) -> "BloomState":
+        return BloomState(n_buckets or self.n_buckets, self.m, self.k)
 
     @property
     def state_bytes(self) -> int:
@@ -57,28 +108,6 @@ class BloomState:
 
     def bloom_keys(self) -> int:
         return int(self.n_items.sum())
-
-    # ---- broadcast lifecycle: ONE broadcast per state version, not one
-    # per probe call — unbounded broadcast accumulation at multi-GB blob
-    # sizes was a driver/executor memory leak otherwise.
-    def broadcast(self, spark):
-        if self._bcast is not None and not self._bcast_dirty:
-            return self._bcast
-        self.release()
-        self._bcast = spark.sparkContext.broadcast(
-            (self.n_buckets, self.m, self.k, self.blobs)
-        )
-        self._bcast_dirty = False
-        return self._bcast
-
-    def release(self) -> None:
-        """Unpersist the cached broadcast (frees executor copies; Spark
-        re-ships on demand if a straggler job still references it).  The
-        crawl loop calls this after each batch's commit."""
-        if self._bcast is not None:
-            self._bcast.unpersist(blocking=False)
-            self._bcast = None
-        self._bcast_dirty = True
 
     # -- serialization (persisted per snapshot; see tables.SnapshotCatalog)
     def to_npz(self, path: str) -> None:
@@ -96,64 +125,49 @@ class BloomState:
         st.n_items = z["n_items"]
         return st
 
-    # ---- hash-column API: keys pre-hashed JVM-side with F.xxhash64 ----
-    # (h1 = xxhash64(url), h2 = xxhash64('salt', url) | 1, both viewed as
-    # uint64).  Bucket = h1 % n_buckets matches Spark's pmod(h1, n) because
-    # n_buckets is a power of two (2^64 ≡ 0 mod 2^k).  This keeps ALL
-    # per-key hashing in the JVM; the Python side is pure numpy bit math.
+    def save_snapshot(self, state_dir: str, snap_id: int) -> str:
+        path = os.path.join(state_dir, f"bloom-{snap_id:06d}.npz")
+        self.to_npz(path)
+        return path
+
+    @staticmethod
+    def files(path: str) -> set[str]:
+        return {_npz(path)}
+
+    @classmethod
+    def load(cls, path: str) -> "BloomState":
+        return cls.from_npz(_npz(path))
+
+    # ---- the bit kernel, over keys pre-hashed JVM-side with F.xxhash64 ----
+    # (h1, h2 viewed as uint64).  Bucket = h1 % n_buckets matches Spark's
+    # pmod(h1, n) because n_buckets is a power of two (2^64 ≡ 0 mod 2^k).
+    # This keeps ALL per-key hashing in the JVM; the Python side is pure
+    # numpy bit math.
 
     def probe_hashes(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
         if len(h1) == 0:
             return np.zeros(0, dtype=bool)
-        buckets, pos = self._positions(h1, h2 | np.uint64(1))
-        byte_idx, bit = pos >> 3, (pos & 7).astype(np.uint8)
+        buckets, byte_idx, bit = self._positions(h1, h2)
         bits = (self.blobs[buckets[:, None], byte_idx] >> bit) & 1
         return bits.all(axis=1)
 
     def add_hashes(self, h1: np.ndarray, h2: np.ndarray) -> None:
         if len(h1) == 0:
             return
-        buckets, pos = self._positions(h1, h2 | np.uint64(1))
-        byte_idx, bit = pos >> 3, (pos & 7).astype(np.uint8)
+        buckets, byte_idx, bit = self._positions(h1, h2)
         np.bitwise_or.at(
             self.blobs, (buckets[:, None].repeat(self.k, 1), byte_idx), np.uint8(1) << bit
         )
         np.add.at(self.n_items, buckets, 1)
         self._bcast_dirty = True
 
-    def _positions(self, h1: np.ndarray, h2: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    def _positions(self, h1: np.ndarray, h2: np.ndarray):
+        """→ (bucket, byte index, bit in byte) of each key's k bits."""
+        h2 = h2 | np.uint64(1)  # odd step: the k positions are distinct
         buckets = (h1 % np.uint64(self.n_buckets)).astype(np.int64)
         i = np.arange(self.k, dtype=np.uint64)[None, :]
-        pos = (h1[:, None] + i * h2[:, None]) % np.uint64(self.m)
-        return buckets, pos.astype(np.int64)
-
-    def probe(self, urls: list[str]) -> np.ndarray:
-        """Vectorized membership test → bool array (True = maybe seen)."""
-        if not urls:
-            return np.zeros(0, dtype=bool)
-        h1, h2 = key_hashes(urls)
-        buckets, pos = self._positions(h1, h2)
-        byte_idx, bit = pos >> 3, (pos & 7).astype(np.uint8)
-        bits = (self.blobs[buckets[:, None], byte_idx] >> bit) & 1
-        return bits.all(axis=1)
-
-    def add(self, urls: list[str]) -> None:
-        if not urls:
-            return
-        h1, h2 = key_hashes(urls)
-        buckets, pos = self._positions(h1, h2)
-        byte_idx, bit = pos >> 3, (pos & 7).astype(np.uint8)
-        np.bitwise_or.at(
-            self.blobs, (buckets[:, None].repeat(self.k, 1), byte_idx), np.uint8(1) << bit
-        )
-        np.add.at(self.n_items, buckets, 1)
-        self._bcast_dirty = True
-
-    def delta_bits(self, urls: list[str]) -> "BloomState":
-        """Bits for new keys only, as a fresh state (OR-mergeable)."""
-        d = BloomState(self.n_buckets, self.m, self.k)
-        d.add(urls)
-        return d
+        pos = ((h1[:, None] + i * h2[:, None]) % np.uint64(self.m)).astype(np.int64)
+        return buckets, pos >> 3, (pos & 7).astype(np.uint8)
 
     def merge(self, other: "BloomState") -> None:
         assert (self.n_buckets, self.m, self.k) == (other.n_buckets, other.m, other.k)
@@ -166,66 +180,39 @@ class BloomState:
         n = int(self.n_items.max()) if self.n_items.size else 0
         return float((1.0 - np.exp(-self.k * n / self.m)) ** self.k)
 
-    # ---- per-bucket file store (the >broadcast-scale probe path) ----
-    def to_bucket_store(self, dir_path: str) -> "BloomBucketStore":
-        """Materialize this in-memory state as a BloomBucketStore (one blob
-        file per bucket) — used to seed the partitioned path from a small
-        initial state; steady-state updates go through
-        urlseen.update_buckets_partitioned and never rebuild full state."""
-        import os
 
-        os.makedirs(dir_path, exist_ok=True)
-        paths: dict[int, str] = {}
-        for b in range(self.n_buckets):
-            p = os.path.join(dir_path, f"bucket-{b:05d}.npy")
-            np.save(p, self.blobs[b])
-            paths[b] = p
-        n_items = {b: int(self.n_items[b]) for b in range(self.n_buckets)}
-        return BloomBucketStore(self.n_buckets, self.m, self.k, paths, n_items)
-
-
-class BloomBucketStore:
+class BloomBucketStore(BroadcastCache):
     """Manifest-addressed per-bucket Bloom blobs: the state layout for
     filters too large to broadcast (the 10^10-key regime, ~12 GB total).
 
     * ``paths[bucket]`` → an immutable blob file (local FS here; each path
       would be an object-store key on a real cluster);
-    * a micro-batch's update writes NEW files for only the buckets it
-      touched and re-references the rest, so commit cost scales with the
-      batch — full state never materializes in one place (not on the
-      driver, not in any single task);
+    * a micro-batch's update writes NEW files under ``root`` for only the
+      buckets it touched (urlseen.bloom_delta) and ``merge`` re-points
+      those buckets, so commit cost scales with the batch — full state
+      never materializes in one place (not on the driver, not in any
+      single task);
     * older snapshots keep pointing at their own files (snapshot isolation
       for the Bloom state, same as the parquet tables);
     * a missing bucket entry ≡ an all-zeros blob (probe: unseen).
     """
 
+    MANIFEST_KEY = "bloom_store_path"
+
     def __init__(self, n_buckets: int, m: int, k: int,
                  paths: dict[int, str] | None = None,
-                 n_items: dict[int, int] | None = None):
+                 n_items: dict[int, int] | None = None,
+                 root: str | None = None):
         assert n_buckets & (n_buckets - 1) == 0
         self.n_buckets = n_buckets
         self.m = m
         self.k = k
         self.paths = dict(paths or {})
         self.n_items = {int(b): int(n) for b, n in (n_items or {}).items()}
-        self._bcast = None  # cached broadcast of the bucket→path manifest
+        self.root = root  # where updates write new blob files
 
-    # ---- manifest broadcast lifecycle: ONE broadcast per store version
-    # (paths are immutable per instance — updates build a NEW store), not
-    # one per probe/update call: a fresh broadcast every micro-batch
-    # accumulated driver/executor bookkeeping unboundedly over long crawls.
-    def broadcast(self, spark):
-        if self._bcast is None:
-            self._bcast = spark.sparkContext.broadcast(dict(self.paths))
-        return self._bcast
-
-    def release(self) -> None:
-        """Unpersist the cached manifest broadcast (driver re-ships on
-        demand if a straggler still references it); the crawl loop calls
-        this once the batch's commit has landed."""
-        if self._bcast is not None:
-            self._bcast.unpersist(blocking=False)
-            self._bcast = None
+    def empty_like(self, n_buckets: int | None = None) -> "BloomBucketStore":
+        return BloomBucketStore(n_buckets or self.n_buckets, self.m, self.k, root=self.root)
 
     @property
     def state_bytes(self) -> int:
@@ -238,9 +225,15 @@ class BloomBucketStore:
         n = max(self.n_items.values(), default=0)
         return float((1.0 - np.exp(-self.k * n / self.m)) ** self.k)
 
-    def save(self, path: str) -> None:
-        import json
+    def merge(self, other: "BloomBucketStore") -> None:
+        """Fold in an update: its buckets' rewritten files replace ours."""
+        assert (self.n_buckets, self.m, self.k) == (other.n_buckets, other.m, other.k)
+        self.paths.update(other.paths)
+        for b, n in other.n_items.items():
+            self.n_items[b] = self.n_items.get(b, 0) + n
+        self._bcast_dirty = True
 
+    def save(self, path: str) -> None:
         with open(path, "w") as f:
             json.dump(
                 {"n_buckets": self.n_buckets, "m": self.m, "k": self.k,
@@ -251,15 +244,61 @@ class BloomBucketStore:
 
     @classmethod
     def load(cls, path: str) -> "BloomBucketStore":
-        import json
-
         with open(path) as f:
             d = json.load(f)
         return cls(
             d["n_buckets"], d["m"], d["k"],
             {int(b): p for b, p in d["paths"].items()},
             {int(b): n for b, n in d["n_items"].items()},
+            root=os.path.join(os.path.dirname(path), BLOB_DIR),
         )
+
+    def save_snapshot(self, state_dir: str, snap_id: int) -> str:
+        # the snapshot records only the tiny bucket→file manifest; blob
+        # files are written by the batch's grouped-map update and shared
+        # by reference across snapshots
+        path = os.path.join(state_dir, f"bloom-buckets-{snap_id:06d}.json")
+        self.save(path)
+        return path
+
+    @classmethod
+    def files(cls, path: str) -> set[str]:
+        if not os.path.exists(path):
+            return set()
+        return {path} | cls.load(path).referenced_files()
 
     def referenced_files(self) -> set[str]:
         return set(self.paths.values())
+
+
+# load order: a manifest naming both (possible only before commit cleared
+# the other layout's key) was crawled partitioned
+_LAYOUTS = (BloomBucketStore, BloomState)
+SEEN_STATE_KEYS = tuple(cls.MANIFEST_KEY for cls in _LAYOUTS)
+
+
+def new_seen_state(n_buckets: int, bits: int, state_dir: str,
+                   partitioned: bool | None = None):
+    """An empty URL-seen filter.  ``partitioned=None`` picks the layout by
+    size: the broadcast ``BloomState`` up to BROADCAST_CAP_BYTES of bits,
+    else the ``BloomBucketStore`` with its blobs under ``state_dir``;
+    True/False force either."""
+    if partitioned is None:
+        partitioned = n_buckets * (bits // 8) > BROADCAST_CAP_BYTES
+    if partitioned:
+        return BloomBucketStore(n_buckets, bits, k=7, root=os.path.join(state_dir, BLOB_DIR))
+    return BloomState(n_buckets, bits)
+
+
+def load_seen_state(state: dict):
+    """The URL-seen filter a manifest's state names, or None."""
+    for cls in _LAYOUTS:
+        if state.get(cls.MANIFEST_KEY):
+            return cls.load(state[cls.MANIFEST_KEY])
+    return None
+
+
+def seen_state_files(state: dict) -> set[str]:
+    """Every file the URL-seen filter named by a manifest's state uses."""
+    return {f for cls in _LAYOUTS if state.get(cls.MANIFEST_KEY)
+            for f in cls.files(state[cls.MANIFEST_KEY])}

@@ -20,6 +20,8 @@ Layout mirrors BloomState so the probe plumbing is shared:
   * probe/delete are vectorized numpy over the whole batch; insert is a
     per-key kick loop (politeness batches are bounded, and the
     partitioned path runs one loop per bucket in parallel executors);
+  * the state is broadcast whole and probed by urlseen.probe_unseen's
+    pandas UDF, the same one the broadcast BloomState uses;
   * false negatives: none for live keys.  Deletion carries the standard
     cuckoo-filter caveat — deleting key A removes one copy of A's
     (index, fp) pair, so if a *different* live key B collides on the full
@@ -29,14 +31,16 @@ Layout mirrors BloomState so the probe plumbing is shared:
     exactly verified against the urlseen table (urlseen._split_and_verify).
 
 Capacity: 4-way buckets + 500 kicks sustain ~95% load; size with headroom
-(`for_keys`) the same way BloomState.sized_for does, and add each key ONCE
-(the unseen-probe gate guarantees that in the loop) — duplicate adds
-consume slots like a counting filter, and delete removes one copy.
+(``for_keys``), and add each key ONCE (the unseen-probe gate guarantees
+that in the loop) — duplicate adds consume slots like a counting filter,
+and delete removes one copy.
 """
 
 from __future__ import annotations
 
 import numpy as np
+
+from crawlspark.operators.bloom import BroadcastCache
 
 _FP_MIX = np.uint64(2654435761)  # Knuth multiplicative mix for i2 offset
 
@@ -45,7 +49,7 @@ class CuckooFull(RuntimeError):
     """Insert exceeded max_kicks — the partition is over capacity."""
 
 
-class CuckooState:
+class CuckooState(BroadcastCache):
     """n_buckets independent cuckoo sub-filters + per-bucket key counts."""
 
     def __init__(self, n_buckets: int = 32, n_slots: int = 1 << 16,
@@ -57,8 +61,6 @@ class CuckooState:
         self.max_kicks = max_kicks
         self.table = np.zeros((n_buckets, n_slots, 4), dtype=np.uint16)
         self.n_items = np.zeros(n_buckets, dtype=np.int64)
-        self._bcast = None
-        self._bcast_dirty = True
 
     @classmethod
     def for_keys(cls, n_keys: int, n_buckets: int = 32,
@@ -76,24 +78,6 @@ class CuckooState:
         """Upper-bound FPR: 2 buckets x 4 slots x P(fp match) at current load."""
         load = float(self.n_items.sum()) / (self.n_buckets * self.n_slots * 4)
         return 8.0 * load / 65535.0
-
-    # ---- broadcast lifecycle (same contract as BloomState) ----
-    def broadcast(self, spark):
-        if self._bcast is not None and not self._bcast_dirty:
-            return self._bcast
-        self.release()
-        self._bcast = spark.sparkContext.broadcast(
-            (self.n_buckets, self.n_slots, self.max_kicks, self.table,
-             self.n_items)
-        )
-        self._bcast_dirty = False
-        return self._bcast
-
-    def release(self) -> None:
-        if self._bcast is not None:
-            self._bcast.unpersist(blocking=False)
-            self._bcast = None
-        self._bcast_dirty = True
 
     # ---- serialization ----
     def to_npz(self, path: str) -> None:
@@ -205,7 +189,6 @@ def apply_partitioned(spark, keys_df, state: CuckooState, op: str = "add"
     Layout (not just membership) matches the driver-side kernel because
     both sort by (h1, h2) before applying."""
     import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F401
 
     nb, ns, mk = state.n_buckets, state.n_slots, state.max_kicks
     b = state.broadcast(spark)
@@ -213,10 +196,9 @@ def apply_partitioned(spark, keys_df, state: CuckooState, op: str = "add"
 
     def one_bucket(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
         bucket = int(key[0])
-        _, _, _, table, n_items = b.value
         sub = CuckooState(1, ns, mk)
-        sub.table[0] = table[bucket]
-        sub.n_items[0] = int(n_items[bucket])
+        sub.table[0] = b.value.table[bucket]
+        sub.n_items[0] = int(b.value.n_items[bucket])
         h1 = pdf["_h1"].to_numpy(dtype=np.int64).view(np.uint64)
         # collapse the partition index: sub-filter has n_buckets=1 so
         # h1 % 1 == 0 routes every key to its (only) row; i1/fp unchanged

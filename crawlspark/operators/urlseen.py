@@ -6,26 +6,29 @@ fingerprint set; at 10^10 URLs that set does not fit one machine, so here:
   1. in-batch ``dropDuplicates('url')`` (reference analog: the per-crawl
      set() dedup, :571) — cheap, before any state probe;
   2. key hashing happens JVM-side: h1 = xxhash64(url), h2 = xxhash64(salt,
-     url) — the probe UDF is pure numpy bit math over Arrow batches with
-     the blobs shipped via a Spark broadcast variable (zero shuffle).
+     url) — the probe UDF is pure numpy bit math over Arrow batches.
      Negatives are *guaranteed unseen* (no false negatives) and bypass the
      join;
   3. only Bloom positives — a tiny slice at the configured FPR — hit the
      exact LEFT ANTI join against the urlseen table, so the expensive
      join's probe side shrinks by ~(1-FPR);
   4. the Bloom delta for accepted keys is computed distributed
-     (groupBy(bucket).applyInPandas → one (bucket, blob) row per bucket,
-     bucket = pmod(h1, n_buckets) which matches the uint64 view because
-     n_buckets is a power of two) and OR-merged into the snapshot state on
-     the driver — state per bucket stays executor-sized at any scale; for
-     state larger than broadcastable, the same applyInPandas pattern
-     probes per-bucket blobs read from storage instead (co-partitioned,
-     one shuffle).
+     (groupBy(bucket).applyInPandas → one row per touched bucket, bucket =
+     pmod(h1, n_buckets), which matches the uint64 view because n_buckets
+     is a power of two) — state per bucket stays executor-sized at any
+     scale.
+
+This module and operators/bloom.py are the only places that know which
+layout a seen state has: ``probe_unseen`` and ``bloom_delta`` take any of
+them (bloom.BloomState, bloom.BloomBucketStore, and for the probe
+cuckoo.CuckooState), and ``state.merge(delta)`` folds an update in.
 """
 
 from __future__ import annotations
 
 import itertools
+import os
+import uuid
 from typing import Iterator, Tuple
 
 import numpy as np
@@ -33,7 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from crawlspark.operators.bloom import BloomState
+from crawlspark.operators.bloom import BloomBucketStore, BloomState
 
 _H2_SALT = "bloom-h2"
 _VIEW_SEQ = itertools.count()
@@ -83,7 +86,7 @@ def _split_and_verify(spark: SparkSession, probed: DataFrame, urlseen: DataFrame
 
     One probe pass, not three: the fresh branch, the positive branch, and
     the positive-id broadcast each re-reference the probed subtree, and
-    Catalyst inlines it per reference — the mapInArrow probe (candidate
+    Catalyst inlines it per reference — the probe UDF (candidate
     generation + double xxhash + a full Arrow round-trip) was executing
     2-3x per call.  Keying the branches behind one url-hash exchange lets
     ReuseExchange dedup the subtree to a single execution (guide §2.4:
@@ -153,267 +156,167 @@ def _exact_unseen(positives: DataFrame, urlseen: DataFrame,
 
 
 def probe_unseen(spark: SparkSession, candidates: DataFrame, urlseen: DataFrame,
-                 bloom: BloomState, small_positives: bool = False) -> DataFrame:
-    """candidates(url, …) → subset whose url was never seen before."""
+                 state, small_positives: bool = False) -> DataFrame:
+    """candidates(url, …) → subset whose url was never seen before.
+
+    ``state`` is any URL-seen layout.  A ``BloomState`` or ``CuckooState``
+    ships whole in one broadcast (zero shuffle).  A ``BloomBucketStore``
+    broadcasts only its bucket→file manifest: candidates shuffle ONCE on
+    bucket = pmod(h1, n_buckets) and each task loads only its buckets'
+    blobs (local FS here, object store on a real cluster), so the per-task
+    working set is one blob whatever the total state size.  Positives of
+    every layout are verified against ``urlseen``, the matching exact set.
+    """
     # cached per state version — NOT a fresh broadcast per micro-batch
     # (that accumulated executor copies unboundedly); the crawl loop calls
-    # bloom.release() after each batch's commit
-    b = bloom.broadcast(spark)
+    # state.release() after each batch's commit
+    b = state.broadcast(spark)
 
-    # vectorized pandas_udf over JUST the two 8-byte hash columns (guide
-    # §4.1: pass only what the function needs) — the previous mapInArrow
-    # form shipped every candidate column (url string + frontier metadata)
-    # through the Python worker and back, ~5x the Arrow bytes for the same
-    # numpy bit math.  Iterator form: the Bloom view over the broadcast
-    # blobs is built once per task, not per batch (guide §4.5).
-    @F.pandas_udf("boolean")
-    def probe(it: Iterator[Tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        nb, m, k, blobs = b.value
-        st = BloomState(nb, m, k)
-        st.blobs = blobs
-        for h1, h2 in it:
-            yield pd.Series(st.probe_hashes(_u64(h1), _u64(h2)))
+    # vectorized pandas_udf over JUST the hash columns (guide §4.1: pass
+    # only what the function needs) — shipping every candidate column (url
+    # string + frontier metadata) through the Python worker and back was
+    # ~5x the Arrow bytes for the same numpy bit math.
+    if isinstance(state, BloomBucketStore):
+        m, k = state.m, state.k
 
-    probed = _with_hashes(candidates).withColumn(
-        "maybe_seen", probe(F.col("_h1"), F.col("_h2"))
-    )
-    return _split_and_verify(spark, probed, urlseen, small_positives,
-                             drop=("_h1", "_h2"))
+        # rows are SORTED by bucket within each partition, so blobs stream
+        # through one at a time and the single cached blob is the task's
+        # working set
+        @F.pandas_udf("boolean")
+        def probe(it: Iterator[Tuple[pd.Series, pd.Series, pd.Series]]
+                  ) -> Iterator[pd.Series]:
+            cur_b, cur = None, None
+            for h1s, h2s, bks in it:
+                h1, h2, bk = _u64(h1s), _u64(h2s), bks.to_numpy(dtype=np.int64)
+                out = np.zeros(len(bk), dtype=bool)
+                for bucket in np.unique(bk):  # bucket-sorted input: 1-2 per batch
+                    if bucket != cur_b:
+                        cur_b = bucket
+                        path = b.value.paths.get(int(bucket))
+                        cur = None if path is None else BloomState.single(m, k, np.load(path))
+                    if cur is not None:  # else bucket never written: nothing seen
+                        sel = bk == bucket
+                        out[sel] = cur.probe_hashes(h1[sel], h2[sel])
+                yield pd.Series(out)
+
+        probed = (
+            candidates.select("*", *_hash_cols(spark, state.n_buckets))
+            .repartition(F.col("bucket"))
+            .sortWithinPartitions("bucket")
+            .withColumn("maybe_seen", probe(F.col("_h1"), F.col("_h2"), F.col("bucket")))
+        )
+        drop = ("_h1", "_h2", "bucket")
+    else:
+        # iterator form: the state is unpickled once per task, not per
+        # batch (guide §4.5)
+        @F.pandas_udf("boolean")
+        def probe(it: Iterator[Tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
+            st = b.value
+            for h1, h2 in it:
+                yield pd.Series(st.probe_hashes(_u64(h1), _u64(h2)))
+
+        probed = _with_hashes(candidates).withColumn(
+            "maybe_seen", probe(F.col("_h1"), F.col("_h2"))
+        )
+        drop = ("_h1", "_h2")
+    return _split_and_verify(spark, probed, urlseen, small_positives, drop)
 
 
-def probe_unseen_cuckoo(spark: SparkSession, candidates: DataFrame,
-                        urlseen: DataFrame, cuckoo,
-                        small_positives: bool = False) -> DataFrame:
-    """candidates(url, …) → subset not in the cuckoo seen set.
-
-    The cuckoo twin of probe_unseen — same JVM hashing, same
-    mapInArrow-over-broadcast probe, same _split_and_verify exact check of
-    positives.  What it adds over the Bloom layout is that the state
-    supports DELETION (operators/cuckoo.delete_hashes), so cache expiry
-    can re-admit URLs through this standard unseen path: delete the
-    expired keys and they probe fresh again, no separate staleness join.
-    ``urlseen`` must be the matching exact set (live keys only) so Bloom/
-    cuckoo false positives are verified away identically."""
-    from crawlspark.operators.cuckoo import CuckooState
-
-    b = cuckoo.broadcast(spark)
-
-    # same column-pruned vectorized probe shape as probe_unseen (guide
-    # §4.1/§4.5): only the two hash columns cross the Python boundary
-    @F.pandas_udf("boolean")
-    def probe(it: Iterator[Tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        nb, ns, mk, table, n_items = b.value
-        st = CuckooState(nb, ns, mk)
-        st.table = table
-        st.n_items = n_items
-        for h1, h2 in it:
-            yield pd.Series(st.probe_hashes(_u64(h1), _u64(h2)))
-
-    probed = _with_hashes(candidates).withColumn(
-        "maybe_seen", probe(F.col("_h1"), F.col("_h2"))
-    )
-    return _split_and_verify(spark, probed, urlseen, small_positives,
-                             drop=("_h1", "_h2"))
+_SMALL_BATCH_CAP = 50_000
 
 
 def bloom_delta(
-    spark: SparkSession, accepted: DataFrame, bloom: BloomState, collect_hosts: bool = False,
+    spark: SparkSession, accepted: DataFrame, state, collect_hosts: bool = False,
     small_batch_rows: int | None = None,
 ):
-    """Distributed delta-bit computation for the accepted new URLs: one
-    (bucket, blob) row per touched bucket, OR-merged on the driver.
+    """The accepted URLs' Bloom bits as a delta of ``state``'s own layout,
+    folded in by ``state.merge(delta)``.  One grouped-map job: each touched
+    bucket's task runs the bloom kernel on that bucket alone.  For a
+    ``BloomState`` the delta holds the new bits, OR-merged on the driver.
+    For a ``BloomBucketStore`` each task ORs the keys into a copy of the
+    bucket's current blob and writes it as a NEW file under ``state.root``
+    (old files stay — snapshot isolation); the delta holds those paths, so
+    the driver only ever sees (bucket, n, path) rows, never blob bytes.
 
     ``collect_hosts=True`` piggybacks the distinct hosts of the accepted
     rows onto the same job (the crawl loop needs them for robots state —
     one Spark job instead of two per batch) and returns (delta, hosts).
 
-    ``small_batch_rows``: when the caller can BOUND the accepted-row count
-    (the politeness loop: n_scheduled × max links/page) and the bound is
-    small, skip the groupBy+applyInPandas job (two stages, a shuffle and a
-    Python-worker round per micro-batch — ~1.5 s of fixed cost) and
-    instead collect the JVM-computed (h1, h2, host) rows and run the SAME
-    numpy add kernel on the driver.  Identical bits by construction (same
-    hashes, same kernel); the collect is capped by the bound (~24 B/row →
-    a 50k bound is ~1 MB).  The driver already received the touched blobs
-    under the distributed path, so this strictly REDUCES driver traffic
-    for small batches; wide batches keep the distributed path.
+    ``small_batch_rows`` (``BloomState`` only): when the caller can BOUND
+    the accepted-row count (the politeness loop: n_scheduled × max
+    links/page) and the bound is small, skip the groupBy+applyInPandas job
+    (two stages, a shuffle and a Python-worker round per micro-batch —
+    ~1.5 s of fixed cost) and instead collect the JVM-computed (h1, h2,
+    host) rows and run the SAME numpy add kernel on the driver.  Identical
+    bits by construction (same hashes, same kernel); the collect is capped
+    by the bound (~24 B/row → a 50k bound is ~1 MB).  The driver already
+    received the touched blobs under the distributed path, so this
+    strictly REDUCES driver traffic for small batches; wide batches keep
+    the distributed path.
     """
-    nb, m, k = bloom.n_buckets, bloom.m, bloom.k
     with_host = collect_hosts and "host" in accepted.columns
+    cols = ["url", "host"] if with_host else ["url"]
+    delta = state.empty_like()
 
-    if small_batch_rows is not None and small_batch_rows <= 50_000:
-        cols = ["_h1", "_h2", "host"] if with_host else ["_h1", "_h2"]
+    if (isinstance(state, BloomState) and small_batch_rows is not None
+            and small_batch_rows <= _SMALL_BATCH_CAP):
         # the caller's bound is an ESTIMATE (pages × assumed links/page) —
         # hard-cap the driver's exposure with limit(cap+1): if the batch
         # actually exceeds the cap (link-farm pages), fall through to the
         # distributed path below instead of materializing an unbounded
         # collect.  The probe touched only the (persisted) input, so the
         # fallback recomputes nothing upstream.
-        cap = 50_000
-        rows = _with_hashes(
-            accepted.select(*(["url", "host"] if with_host else ["url"]))
-        ).select(*cols).limit(cap + 1).collect()
-        if len(rows) <= cap:
-            delta = BloomState(nb, m, k)
+        rows = _with_hashes(accepted.select(*cols)).select(
+            "_h1", "_h2", *cols[1:]
+        ).limit(_SMALL_BATCH_CAP + 1).collect()
+        if len(rows) <= _SMALL_BATCH_CAP:
             if rows:
                 h1 = np.array([r["_h1"] for r in rows], dtype=np.int64).view(np.uint64)
                 h2 = np.array([r["_h2"] for r in rows], dtype=np.int64).view(np.uint64)
                 delta.add_hashes(h1, h2)
-            if collect_hosts:
-                return delta, {r["host"] for r in rows} if with_host else set()
-            return delta
+            hosts = {r["host"] for r in rows} if with_host else set()
+            return (delta, hosts) if collect_hosts else delta
 
-    def per_bucket(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        st = BloomState(1, m, k)
-        h1 = _u64(pdf["_h1"])
-        h2 = _u64(pdf["_h2"]) | np.uint64(1)
-        i = np.arange(k, dtype=np.uint64)[None, :]
-        pos = ((h1[:, None] + i * h2[:, None]) % np.uint64(m)).astype(np.int64)
-        byte_idx, bit = pos >> 3, (pos & 7).astype(np.uint8)
-        np.bitwise_or.at(st.blobs, (np.zeros_like(byte_idx), byte_idx), np.uint8(1) << bit)
-        hosts = sorted(set(pdf["host"])) if "host" in pdf.columns else []
-        return pd.DataFrame(
-            {"bucket": [int(key[0])], "n": [len(h1)],
-             "blob": [st.blobs[0].tobytes()], "hosts": [hosts]}
-        )
-
-    cols = ["url", "host"] if with_host else ["url"]
-    rows = (
-        _with_hashes(accepted.select(*cols))
-        .withColumn("bucket", F.pmod(F.col("_h1"), F.lit(nb)).cast("int"))
-        .groupBy("bucket")
-        .applyInPandas(per_bucket, schema="bucket int, n long, blob binary, hosts array<string>")
-        .collect()
-    )
-    delta = BloomState(nb, m, k)
-    hosts: set = set()
-    for r in rows:
-        delta.blobs[r["bucket"]] |= np.frombuffer(r["blob"], dtype=np.uint8)
-        delta.n_items[r["bucket"]] += r["n"]
-        hosts.update(r["hosts"] or [])
-    if collect_hosts:
-        return delta, hosts
-    return delta
-
-
-def probe_unseen_partitioned(
-    spark: SparkSession, candidates: DataFrame, urlseen: DataFrame, store,
-    small_positives: bool = False,
-) -> DataFrame:
-    """Co-partitioned probe for Bloom state too large to broadcast
-    (the 10^10-key regime: ~12 GB total, MBs per bucket).
-
-    Candidates shuffle ONCE on bucket = pmod(h1, n_buckets); each task
-    loads only its bucket's blob from the BloomBucketStore manifest (local
-    FS here, object store on a real cluster) and probes with the same
-    numpy kernel.  Per-task working set is one bucket's blob regardless of
-    total state size; only the tiny bucket→path manifest is broadcast.
-    """
-    m, k, nb = store.m, store.k, store.n_buckets
-    # cached per store version; the crawl loop release()s it post-commit
-    b_paths = store.broadcast(spark)
-
-    # Column-pruned vectorized probe (guide §4.1): only the two 8-byte hash
-    # columns + the bucket id cross the Python boundary — the previous
-    # groupBy().applyInPandas shipped EVERY candidate column (url string +
-    # frontier metadata) into pandas and back.  The bucket co-partitioning
-    # (candidates shuffle ONCE on bucket) and the per-task working-set
-    # contract are preserved: rows are additionally SORTED by bucket within
-    # each partition, so blobs stream through one at a time and the single
-    # cached blob is the task's working set regardless of total state size.
-    @F.pandas_udf("boolean")
-    def probe(it: Iterator[Tuple[pd.Series, pd.Series, pd.Series]]
-              ) -> Iterator[pd.Series]:
-        i = np.arange(k, dtype=np.uint64)[None, :]
-        cur_b: int | None = None
-        cur_blob: np.ndarray | None = None
-        for h1s, h2s, bks in it:
-            h1 = _u64(h1s)
-            h2 = _u64(h2s) | np.uint64(1)
-            bk = bks.to_numpy(dtype=np.int64)
-            pos = ((h1[:, None] + i * h2[:, None]) % np.uint64(m)).astype(np.int64)
-            byte_idx, bit = pos >> 3, (pos & 7).astype(np.uint8)
-            out = np.zeros(len(bk), dtype=bool)
-            for b in np.unique(bk):  # bucket-sorted input: 1-2 per batch
-                if int(b) != cur_b:
-                    cur_b = int(b)
-                    path = b_paths.value.get(cur_b)
-                    cur_blob = np.load(path) if path is not None else None
-                if cur_blob is None:
-                    continue  # bucket never written: nothing seen
-                sel = bk == b
-                bits = (cur_blob[byte_idx[sel]] >> bit[sel]) & 1
-                out[sel] = bits.all(axis=1)
-            yield pd.Series(out)
-
-    withh = candidates.select("*", *_hash_cols(spark, nb))
-    probed = (
-        withh.repartition(F.col("bucket"))
-        .sortWithinPartitions("bucket")
-        .withColumn("maybe_seen", probe(F.col("_h1"), F.col("_h2"), F.col("bucket")))
-    )
-    return _split_and_verify(spark, probed, urlseen, small_positives,
-                             drop=("_h1", "_h2", "bucket"))
-
-
-def update_buckets_partitioned(
-    spark: SparkSession, accepted: DataFrame, store, dst_dir: str,
-    collect_hosts: bool = False,
-):
-    """OR the accepted keys' bits into each touched bucket's blob and write
-    one NEW blob file per touched bucket (old files stay — snapshot
-    isolation); returns a new BloomBucketStore whose manifest re-references
-    every untouched bucket.  The driver only ever sees the tiny
-    (bucket, n, path, hosts) summary rows — never blob bytes — so this is
-    the no-driver-OR-merge counterpart of bloom_delta for the >broadcast
-    regime.  ``collect_hosts`` piggybacks the accepted rows' distinct hosts
-    on the same job (as bloom_delta does).
-    """
-    import os
-    import uuid
-
-    from crawlspark.operators.bloom import BloomBucketStore
-
-    os.makedirs(dst_dir, exist_ok=True)
-    m, k, nb = store.m, store.k, store.n_buckets
-    # same cached broadcast the probe used (store versions are immutable)
-    b_paths = store.broadcast(spark)
-    with_host = collect_hosts and "host" in accepted.columns
+    src = dst = None
+    if isinstance(state, BloomBucketStore):
+        # tasks start from each bucket's current file and write a new one
+        src = state.broadcast(spark)
+        dst = os.path.join(state.root, uuid.uuid4().hex[:12])
+        os.makedirs(dst)
+    m, k = state.m, state.k
 
     def per_bucket(key, pdf: pd.DataFrame) -> pd.DataFrame:
         b = int(key[0])
-        src = b_paths.value.get(b)
-        blob = np.load(src) if src is not None else np.zeros(m // 8, dtype=np.uint8)
-        blob = blob.copy()
-        h1 = _u64(pdf["_h1"])
-        h2 = _u64(pdf["_h2"]) | np.uint64(1)
-        i = np.arange(k, dtype=np.uint64)[None, :]
-        pos = ((h1[:, None] + i * h2[:, None]) % np.uint64(m)).astype(np.int64)
-        byte_idx, bit = pos >> 3, (pos & 7).astype(np.uint8)
-        np.bitwise_or.at(blob, byte_idx, np.uint8(1) << bit)
-        out = os.path.join(dst_dir, f"bucket-{b:05d}-{uuid.uuid4().hex[:8]}.npy")
-        np.save(out, blob)
-        hosts = sorted(set(pdf["host"])) if "host" in pdf.columns else []
+        path = src.value.paths.get(b) if src is not None else None
+        st = BloomState.single(m, k, None if path is None else np.load(path))
+        st.add_hashes(_u64(pdf["_h1"]), _u64(pdf["_h2"]))
+        if dst is None:
+            blob, out = st.blobs[0].tobytes(), None
+        else:
+            blob, out = None, os.path.join(dst, f"bucket-{b:05d}-{uuid.uuid4().hex[:8]}.npy")
+            np.save(out, st.blobs[0])
         return pd.DataFrame(
-            {"bucket": [b], "n": [len(h1)], "path": [out], "hosts": [hosts]}
+            {"bucket": [b], "n": [len(pdf)], "blob": [blob], "path": [out],
+             "hosts": [sorted(set(pdf["host"])) if "host" in pdf.columns else []]}
         )
 
-    cols = ["url", "host"] if with_host else ["url"]
     rows = (
-        _with_hashes(accepted.select(*cols))
-        .withColumn("bucket", F.pmod(F.col("_h1"), F.lit(nb)).cast("int"))
+        accepted.select(*cols)
+        .select("*", *_hash_cols(spark, state.n_buckets))
         .groupBy("bucket")
-        .applyInPandas(per_bucket, schema="bucket int, n long, path string, hosts array<string>")
+        .applyInPandas(
+            per_bucket,
+            schema="bucket int, n long, blob binary, path string, hosts array<string>",
+        )
         .collect()
     )
-    new_paths = dict(store.paths)
-    new_items = dict(store.n_items)
     hosts: set = set()
     for r in rows:
-        new_paths[r["bucket"]] = r["path"]
-        new_items[r["bucket"]] = new_items.get(r["bucket"], 0) + r["n"]
+        if dst is not None:
+            delta.paths[r["bucket"]] = r["path"]
+            delta.n_items[r["bucket"]] = r["n"]
+        else:
+            delta.blobs[r["bucket"]] |= np.frombuffer(r["blob"], dtype=np.uint8)
+            delta.n_items[r["bucket"]] += r["n"]
         hosts.update(r["hosts"] or [])
-    new_store = BloomBucketStore(nb, m, k, new_paths, new_items)
-    if collect_hosts:
-        return new_store, hosts
-    return new_store
+    return (delta, hosts) if collect_hosts else delta

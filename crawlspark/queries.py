@@ -2428,8 +2428,6 @@ def whitespace_cleanup(spark, sf_dir):
     NBSP / zero-width-space / literal '<200b>' -> space, then strip — run
     through the SAME shared Python function the parse/clean stages use,
     over an Arrow batch."""
-    import pandas as pd
-
     from crawlspark.functions.textclean import clean_ws
 
     d = T(spark, sf_dir, "documents")
@@ -3984,9 +3982,9 @@ def cuckoo_expire_readmit(spark, sf_dir):
     (operators/cuckoo.py), then run the standard unseen probe — expired
     URLs re-admit through the same path fresh URLs take, no separate
     staleness join.  This exercises the REAL kernel end to end (JVM
-    xxhash64 pair → delete_hashes → mapInArrow probe →
-    exact-verify positives via urlseen._split_and_verify); the oracle is
-    the exact set semantics (cand minus live), which the engine matches
+    xxhash64 pair → delete_hashes → urlseen.probe_unseen's pandas-UDF
+    probe → exact-verify positives via urlseen._split_and_verify); the
+    oracle is the exact set semantics (cand minus live), which the engine matches
     because negatives are collision-checked here and positives are
     verified exactly.  State build collects JVM-computed hashes (seen set
     is query-bounded; the 10^10-key path is cuckoo.apply_partitioned,
@@ -3994,9 +3992,7 @@ def cuckoo_expire_readmit(spark, sf_dir):
     import numpy as np
 
     from crawlspark.operators.cuckoo import CuckooState
-    from crawlspark.operators.urlseen import (
-        _hash_cols, probe_unseen_cuckoo,
-    )
+    from crawlspark.operators.urlseen import _hash_cols, probe_unseen
 
     od = T(spark, sf_dir, "orders")
     li = T(spark, sf_dir, "lineitem")
@@ -4021,7 +4017,7 @@ def cuckoo_expire_readmit(spark, sf_dir):
 
     live = seen.filter(~F.col("expired")).select("url")
     cand = li.select(mkurl(F.col("l_orderkey")).alias("url")).distinct()
-    return probe_unseen_cuckoo(spark, cand, live, st)
+    return probe_unseen(spark, cand, live, st)
 
 
 # ---- round-5 continuation: privacy, chunking, corpus paragraph dedup,

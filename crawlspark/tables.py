@@ -34,7 +34,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from crawlspark import schemas
-from crawlspark.operators.bloom import BloomBucketStore, BloomState
+from crawlspark.operators.bloom import BLOB_DIR, SEEN_STATE_KEYS, load_seen_state, seen_state_files
 
 # commit()'s table-delta leaf-dir naming (snapNNNNNN-<uuid8>); the
 # crash-orphan sweep in expire_snapshots matches against this exactly so
@@ -52,7 +52,7 @@ class SnapshotCatalog:
         self.spark = spark
         self.root = root
         os.makedirs(os.path.join(root, "_snapshots"), exist_ok=True)
-        os.makedirs(os.path.join(root, "_state"), exist_ok=True)
+        os.makedirs(self.state_dir, exist_ok=True)
 
     # ---------- snapshot plumbing ----------
     @property
@@ -99,10 +99,9 @@ class SnapshotCatalog:
         self,
         batch_id: int,
         appends: dict[str, DataFrame],
-        bloom: BloomState | None = None,
+        bloom=None,
         state: dict | None = None,
         replace: dict[str, DataFrame] | None = None,
-        bloom_store: BloomBucketStore | None = None,
         rewrite: dict[str, tuple[list[str], DataFrame]] | None = None,
         state_fn=None,
     ) -> dict:
@@ -115,6 +114,8 @@ class SnapshotCatalog:
         compaction of append-only logs) — older manifests keep referencing
         the dropped files, so snapshot isolation holds and expire_snapshots
         garbage-collects them once no surviving manifest needs them.
+        ``bloom`` is the URL-seen filter, in either Bloom layout; the
+        manifest records it under that layout's key only.
 
         Optimistic concurrency: the catalog is single-writer by design;
         if another writer swung LATEST between this commit's base read
@@ -169,7 +170,6 @@ class SnapshotCatalog:
                 # atomic multi-table commit property is unchanged.
                 sres = state_fn() or {}
                 bloom = sres.get("bloom", bloom)
-                bloom_store = sres.get("bloom_store", bloom_store)
                 if sres.get("state"):
                     state = {**(state or {}), **sres["state"]}
                 late_appends = sres.get("appends") or {}
@@ -199,16 +199,11 @@ class SnapshotCatalog:
         new_state = dict(prev.get("state") or {})
         new_state.update(state or {})
         if bloom is not None:
-            bloom_path = os.path.join(self.root, "_state", f"bloom-{snap_id:06d}.npz")
-            bloom.to_npz(bloom_path)
-            new_state["bloom_path"] = bloom_path + ("" if bloom_path.endswith(".npz") else ".npz")
-        if bloom_store is not None:
-            # partitioned Bloom: the snapshot records only the tiny
-            # bucket→file manifest; blob files are written by the batch's
-            # grouped-map update and shared by reference across snapshots
-            bs_path = os.path.join(self.root, "_state", f"bloom-buckets-{snap_id:06d}.json")
-            bloom_store.save(bs_path)
-            new_state["bloom_store_path"] = bs_path
+            # one layout per snapshot: drop the key a previous layout
+            # recorded (a recrawl may switch), then record this one's
+            for key in SEEN_STATE_KEYS:
+                new_state.pop(key, None)
+            new_state[bloom.MANIFEST_KEY] = bloom.save_snapshot(self.state_dir, snap_id)
 
         manifest = {
             "snapshot_id": snap_id,
@@ -336,13 +331,7 @@ class SnapshotCatalog:
                     m = json.load(fh)
                 for paths in m.get("tables", {}).values():
                     out.update(p for p in paths if p)
-                bp = (m.get("state") or {}).get("bloom_path")
-                if bp:
-                    out.add(bp if bp.endswith(".npz") else bp + ".npz")
-                bsp = (m.get("state") or {}).get("bloom_store_path")
-                if bsp and os.path.exists(bsp):
-                    out.add(bsp)
-                    out.update(BloomBucketStore.load(bsp).referenced_files())
+                out.update(seen_state_files(m.get("state") or {}))
             # manifests may record paths under a different spelling of the
             # warehouse root than this session opened it with (relative vs
             # absolute, symlinked, './wh' vs 'wh') — comparing spellings
@@ -359,7 +348,7 @@ class SnapshotCatalog:
         # bucket dirs for such orphans too (safe here: expire runs only
         # right after a commit, so every file of the in-flight batch is
         # referenced by the LATEST manifest, which is always in ``keep``).
-        bucket_root = os.path.join(self.root, "_state", "bloom-buckets")
+        bucket_root = os.path.join(self.state_dir, BLOB_DIR)
         if os.path.isdir(bucket_root):
             for dirpath, _dirs, files in os.walk(bucket_root):
                 for fn in files:
@@ -395,22 +384,13 @@ class SnapshotCatalog:
             os.remove(os.path.join(snap_dir, fn))
         return {"snapshots_removed": len(drop), "files_removed": n_files}
 
-    def load_bloom(self, manifest: dict | None = None) -> BloomState | None:
+    def load_bloom(self, manifest: dict | None = None):
+        """The URL-seen filter of ``manifest`` (default: LATEST) in the
+        layout it was committed in, or None."""
         m = manifest or self.latest()
-        p = (m or {}).get("state", {}).get("bloom_path")
-        if not p:
-            return None
-        if not p.endswith(".npz"):
-            p += ".npz"
-        return BloomState.from_npz(p)
+        return load_seen_state((m or {}).get("state", {}))
 
-    def load_bloom_store(self, manifest: dict | None = None) -> BloomBucketStore | None:
-        m = manifest or self.latest()
-        p = (m or {}).get("state", {}).get("bloom_store_path")
-        return BloomBucketStore.load(p) if p else None
-
-    def bloom_bucket_dir(self, batch_id: int) -> str:
-        """Per-batch destination dir for new bucket blob files."""
-        d = os.path.join(self.root, "_state", "bloom-buckets", f"b{batch_id:06d}")
-        os.makedirs(d, exist_ok=True)
-        return d
+    @property
+    def state_dir(self) -> str:
+        """Engine-state files: Bloom snapshots and bucket blobs."""
+        return os.path.join(self.root, "_state")

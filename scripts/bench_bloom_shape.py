@@ -8,12 +8,13 @@ MEASURES that shape instead of asserting it:
      ~50%-fill of a filter at design load → realistic ~0.8% FPR at k=7)
      DISTRIBUTED via mapInPandas — full state never exists in one place;
   2. probes a 4M-candidate shard per worker through the co-partitioned
-     probe (probe_unseen_partitioned: one bucket shuffle, per-task working
-     set = one 2.1 MB blob) at TWO executor-emulation levels — W=1 and
-     W=4 independent executor-shaped JVMs (local[2], 8g) over disjoint
-     shards of the same store, barrier-started (the same N → 4N protocol
-     as bench_scaling.py; single-JVM core scaling under-reports Python
-     stages because Arrow transfer serializes per JVM);
+     probe (probe_unseen over a BloomBucketStore: one bucket shuffle,
+     per-task working set = one 2.1 MB blob) at TWO executor-emulation
+     levels — W=1 and W=4 independent executor-shaped JVMs (local[2], 8g)
+     over disjoint shards of the same store, barrier-started (the same
+     N → 4N protocol as bench_scaling.py; single-JVM core scaling
+     under-reports Python stages because Arrow transfer serializes per
+     JVM);
   3. reports combined throughput at both levels + scaling efficiency.
 
 Usage: python scripts/bench_bloom_shape.py [n_shard_per_worker]
@@ -67,7 +68,7 @@ sys.path.insert(0, %(repo)r)
 from crawlspark.session import get_spark
 from pyspark.sql import functions as F
 from crawlspark.operators.bloom import BloomBucketStore
-from crawlspark.operators.urlseen import probe_unseen_partitioned
+from crawlspark.operators.urlseen import probe_unseen
 
 cores = int(sys.argv[1]); widx = int(sys.argv[2]); n_shard = int(sys.argv[3])
 ready_dir = sys.argv[4]; store_dir = sys.argv[5]
@@ -81,7 +82,7 @@ cand = spark.range(lo, lo + n_shard).select(
     F.concat(F.lit("https://www.h"), (F.col("id") %% 4096).cast("string"),
              F.lit(".example/p/"), F.col("id").cast("string")).alias("url"))
 # warmup: touches all 4096 buckets (uniform hash) -> page cache + JIT hot
-probe_unseen_partitioned(spark, cand.limit(400_000), urlseen, store).count()
+probe_unseen(spark, cand.limit(400_000), urlseen, store).count()
 open(os.path.join(ready_dir, f"ready-{widx}"), "w").close()
 while not os.path.exists(os.path.join(ready_dir, "go")):
     time.sleep(0.05)
@@ -90,7 +91,7 @@ t0 = time.time()
 # candidates at random-bit fill) survive the exact check, so the output
 # count equals n_shard — the measured path is the bucket-shuffle probe +
 # negative filter + the sliver's (trivial) join, which is what scales.
-n_out = probe_unseen_partitioned(spark, cand, urlseen, store).count()
+n_out = probe_unseen(spark, cand, urlseen, store).count()
 dt = time.time() - t0
 print("RESULT " + json.dumps({"widx": widx, "sec": dt, "n_out": n_out}))
 spark.stop()

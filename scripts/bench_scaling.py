@@ -237,7 +237,7 @@ local[{hi}] fetch_parse {r_hi['fetch_parse_sec']:.1f}s, dedup {r_hi['dedup_sec']
   (never cross the JVM<->Python boundary), so the per-page cost is pure
   local CPU.
 * frontier dedup hashes keys JVM-side (xxhash64), probes a broadcast
-  Bloom in numpy via mapInArrow (zero shuffle), and anti-joins ONLY the
+  Bloom in numpy via a pandas UDF (zero shuffle), and anti-joins ONLY the
   Bloom-positive sliver against the exact seen set.  Bloom state is
   partitioned into power-of-two buckets, each executor-sized at any
   frontier scale (~1.2 GB per 10^9 keys at 1% FPR, split across buckets).

@@ -51,8 +51,7 @@ def main():
                          "default serves cached articles forever")
     ap.add_argument("--bloom-target-fpr", type=float, default=0.01,
                     help="design FPR for the capacity auto-guard: past 10x "
-                         "this, compaction doubles the bucket count "
-                         "(partitioned layout)")
+                         "this, compaction doubles the bucket count")
     ap.add_argument("--no-bloom-autosplit", action="store_true",
                     help="disable the capacity auto-guard")
     ap.add_argument("--targeted", action="store_true",

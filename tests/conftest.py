@@ -1,6 +1,7 @@
 import sys
 from pathlib import Path
 
+import numpy as np
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -13,3 +14,16 @@ def spark():
     s = get_spark("tests", master="local[8]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def random_keys():
+    """``draw(n, seed)`` → n random (h1, h2) uint64 key hashes, as the
+    JVM's xxhash64 pair; distinct seeds give disjoint key sets (collisions
+    aside, ~2^-64)."""
+    def draw(n, seed):
+        rng = np.random.default_rng(seed)
+        return tuple(rng.integers(0, 2**64 - 1, size=n, dtype=np.uint64, endpoint=True)
+                     for _ in range(2))
+    return draw
+

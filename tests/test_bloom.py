@@ -1,52 +1,60 @@
-"""Bloom filter properties: zero false negatives, bounded FPR, merge/serde."""
+"""Bloom filter properties: zero false negatives, bounded FPR, merge/serde,
+and probe/update equality across the URL-seen layouts."""
 
 import numpy as np
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
-from crawlspark.operators.bloom import BloomState
+from crawlspark.operators.bloom import BloomBucketStore, BloomState
+from crawlspark.operators.cuckoo import CuckooState
+from crawlspark.operators.urlseen import _hash_cols, bloom_delta, probe_unseen
+
+U64 = st.integers(min_value=0, max_value=2**64 - 1)
 
 
 @settings(max_examples=30, deadline=None)
-@given(st.lists(st.text(min_size=1, max_size=40), min_size=1, max_size=200, unique=True))
-def test_no_false_negatives(urls):
+@given(st.lists(st.tuples(U64, U64), min_size=1, max_size=200, unique=True))
+def test_no_false_negatives(pairs):
     b = BloomState(n_buckets=8, bits_per_bucket=1 << 14)
-    b.add(urls)
-    assert b.probe(urls).all()
+    h1, h2 = (np.array(col, dtype=np.uint64) for col in zip(*pairs))
+    b.add_hashes(h1, h2)
+    assert b.probe_hashes(h1, h2).all()
 
 
-def test_fpr_bound():
+def test_fpr_bound(random_keys):
     b = BloomState(n_buckets=16, bits_per_bucket=1 << 16, k=7)
-    added = [f"https://h{i % 50}.example/p/{i}" for i in range(20000)]
-    b.add(added)
-    fresh = [f"https://other{i}.example/q/{i}" for i in range(20000)]
-    fp = int(b.probe(fresh).sum())
+    b.add_hashes(*random_keys(20000, seed=1))
+    fp = int(b.probe_hashes(*random_keys(20000, seed=2)).sum())
     # theoretical ~ (1-e^{-kn/m})^k per bucket; assert a loose 4x margin
-    assert fp / len(fresh) < 4 * max(b.fpr_estimate(), 1e-4), fp
+    assert fp / 20000 < 4 * max(b.fpr_estimate(), 1e-4), fp
 
 
-def test_merge_and_serde(tmp_path):
+def test_merge_and_serde(tmp_path, random_keys):
     a = BloomState(4, 1 << 12)
     b = BloomState(4, 1 << 12)
-    a.add(["u1", "u2"])
-    b.add(["u3"])
+    h1, h2 = random_keys(3, seed=3)
+    a.add_hashes(h1[:2], h2[:2])
+    b.add_hashes(h1[2:], h2[2:])
     a.merge(b)
-    assert a.probe(["u1", "u2", "u3"]).all()
+    assert a.probe_hashes(h1, h2).all()
     p = str(tmp_path / "bloom.npz")
     a.to_npz(p)
     c = BloomState.from_npz(p)
-    assert c.probe(["u1", "u2", "u3"]).all()
+    assert c.probe_hashes(h1, h2).all()
     assert np.array_equal(c.blobs, a.blobs)
 
 
-def test_delta_bits_or_merge():
+def test_delta_bits_or_merge(random_keys):
     base = BloomState(4, 1 << 12)
-    base.add(["seed"])
-    delta = base.delta_bits(["new1", "new2"])
-    assert not base.probe(["new1"]).any()
+    h1, h2 = random_keys(3, seed=4)  # key 0 is the seed, keys 1-2 are new
+    base.add_hashes(h1[:1], h2[:1])
+    delta = base.empty_like()
+    delta.add_hashes(h1[1:], h2[1:])
+    assert not base.probe_hashes(h1[1:2], h2[1:2]).any()
     base.merge(delta)
-    assert base.probe(["seed", "new1", "new2"]).all()
+    assert base.probe_hashes(h1, h2).all()
 
 
 def test_mismatched_merge_rejected():
@@ -54,64 +62,74 @@ def test_mismatched_merge_rejected():
         BloomState(4, 1 << 12).merge(BloomState(8, 1 << 12))
 
 
-def test_partitioned_probe_equals_broadcast(spark, tmp_path):
-    """The co-partitioned (per-bucket store) probe must accept exactly the
-    same URLs as the broadcast probe + exact fallback, and the grouped-map
-    update must produce the same bits as the driver OR-merge path."""
-    from pyspark.sql import functions as F
+def _urls(spark, n, key):
+    return spark.range(n).select(
+        "id", F.concat(F.lit("https://h"), (key % 40).cast("string"),
+                       F.lit("/p/"), key.cast("string")).alias("url"))
 
-    from crawlspark.operators.bloom import BloomBucketStore
-    from crawlspark.operators.urlseen import (
-        bloom_delta,
-        probe_unseen,
-        probe_unseen_partitioned,
-        update_buckets_partitioned,
-    )
 
+@pytest.mark.parametrize("small_positives", [False, True])
+@pytest.mark.parametrize("layout", ["broadcast", "bucket_store", "cuckoo"])
+def test_probe_unseen_equals_exact_antijoin(spark, tmp_path, layout, small_positives):
+    """probe_unseen over each URL-seen layout returns exactly the
+    candidates missing from the exact set, with the candidates' own
+    columns.  The cuckoo state holds keys since deleted (expired), which
+    must re-admit."""
+    seen = _urls(spark, 3000, F.col("id"))
+    live = seen.filter(F.col("id") % 4 != 0).select("url")
+    if layout == "cuckoo":
+        keyed = seen.select("id", *_hash_cols(spark, None)).collect()
+        h1 = np.array([r["_h1"] for r in keyed], dtype=np.int64).view(np.uint64)
+        h2 = np.array([r["_h2"] for r in keyed], dtype=np.int64).view(np.uint64)
+        expired = np.array([r["id"] % 4 == 0 for r in keyed])
+        state = CuckooState.for_keys(len(keyed), n_buckets=8)
+        state.add_hashes(h1, h2)
+        state.delete_hashes(h1[expired], h2[expired])
+    else:
+        state = (BloomState(8, 1 << 14) if layout == "broadcast"
+                 else BloomBucketStore(8, 1 << 14, 7, root=str(tmp_path / "blobs")))
+        state.merge(bloom_delta(spark, live, state))
+    # overlaps the live, the expired and the never-seen keys
+    cand = _urls(spark, 3000, F.col("id") + 1500).withColumn("tag", F.lit("c"))
+    got = probe_unseen(spark, cand, live, state, small_positives=small_positives)
+    assert got.columns == cand.columns
+    want = {r.url for r in cand.join(live, "url", "left_anti").collect()}
+    assert {r.url for r in got.collect()} == want
+    assert 0 < len(want) < 3000  # some candidates are live: Bloom positives
+    state.release()
+
+
+def test_bucket_store_update_equals_broadcast_bits(spark, tmp_path):
+    """The per-bucket store's grouped-map update writes the same bits as
+    the broadcast layout's driver OR-merge, rewrites only the buckets a
+    later update touches, and round-trips through its JSON manifest."""
     bloom = BloomState(n_buckets=16, bits_per_bucket=1 << 14)
-    seen = spark.range(5000).select(
-        F.concat(F.lit("https://h"), (F.col("id") % 40).cast("string"),
-                 F.lit("/p/"), F.col("id").cast("string")).alias("url"))
+    seen = _urls(spark, 5000, F.col("id"))
     bloom.merge(bloom_delta(spark, seen, bloom))
 
-    # store built via the distributed grouped-map update (the crawl path),
-    # starting from an EMPTY store — full state never on the driver
-    store = BloomBucketStore(16, 1 << 14, k=7)
-    store = update_buckets_partitioned(spark, seen, store, str(tmp_path / "b0"))
+    # built from an EMPTY store by the distributed update (the crawl
+    # path) — full state never on the driver
+    store = BloomBucketStore(16, 1 << 14, k=7, root=str(tmp_path / "blobs"))
+    store.merge(bloom_delta(spark, seen, store))
     assert store.bloom_keys() == 5000
-    # the update wrote the same bits as the driver OR-merge
-    import numpy as np
     for b, path in store.paths.items():
         assert np.array_equal(np.load(path), bloom.blobs[b]), b
 
-    cand = spark.range(8000).select(
-        F.when(F.col("id") % 3 == 0,
-               F.concat(F.lit("https://h"), (F.col("id") % 40).cast("string"),
-                        F.lit("/p/"), (F.col("id") % 5000).cast("string")))
-        .otherwise(F.concat(F.lit("https://new/q/"), F.col("id").cast("string")))
-        .alias("url")).dropDuplicates(["url"])
-
-    a = {r["url"] for r in probe_unseen(spark, cand, seen, bloom).collect()}
-    b = {r["url"] for r in probe_unseen_partitioned(spark, cand, seen, store).collect()}
-    assert a == b
-    # and none of the accepted were actually seen
-    seen_set = {r["url"] for r in seen.collect()}
-    assert not (a & seen_set)
-
     # incremental update writes only touched buckets; untouched buckets
     # keep referencing the prior snapshot's files
+    before = dict(store.paths)
     extra = spark.range(50).select(
         F.concat(F.lit("https://new/q/"), F.col("id").cast("string")).alias("url"))
-    store2 = update_buckets_partitioned(spark, extra, store, str(tmp_path / "b1"))
-    touched = {b for b in store2.paths if store2.paths[b] != store.paths.get(b)}
+    store.merge(bloom_delta(spark, extra, store))
+    touched = {b for b in store.paths if store.paths[b] != before.get(b)}
     assert 0 < len(touched) <= 16
-    untouched = set(store.paths) - touched
-    assert all(store2.paths[b] == store.paths[b] for b in untouched)
-    assert store2.bloom_keys() == 5050
+    assert all(store.paths[b] == before[b] for b in set(before) - touched)
+    assert store.bloom_keys() == 5050
     # round-trip through the JSON manifest
-    store2.save(str(tmp_path / "m.json"))
+    store.save(str(tmp_path / "m.json"))
     loaded = BloomBucketStore.load(str(tmp_path / "m.json"))
-    assert loaded.paths == store2.paths and loaded.n_items == store2.n_items
+    assert loaded.paths == store.paths and loaded.n_items == store.n_items
+    store.release()
 
 
 def test_capacity_autosplit_doubles_buckets_and_keeps_equality(spark, tmp_path):
@@ -120,8 +138,6 @@ def test_capacity_autosplit_doubles_buckets_and_keeps_equality(spark, tmp_path):
     seen set, the crawl must stay equal to the oracle across the resize,
     and every seen URL must still probe positive (no false negatives —
     the rebuild derives bits from urlseen, not from the old bits)."""
-    from pyspark.sql import functions as F
-
     from crawlspark import synthetic
     from crawlspark.crawl import CrawlConfig, run_crawl
     from crawlspark.oracle import crawl_oracle
@@ -140,7 +156,8 @@ def test_capacity_autosplit_doubles_buckets_and_keeps_equality(spark, tmp_path):
     run_crawl(spark, cfg)
     cat = SnapshotCatalog(spark, wh)
     m = cat.latest()
-    store = cat.load_bloom_store(m)
+    store = cat.load_bloom(m)
+    assert isinstance(store, BloomBucketStore)
     assert store.n_buckets > 2, "capacity guard never split"
     assert store.n_buckets & (store.n_buckets - 1) == 0  # still a power of 2
     assert m["state"].get("bloom_resplit_to") == store.n_buckets
@@ -154,12 +171,10 @@ def test_capacity_autosplit_doubles_buckets_and_keeps_equality(spark, tmp_path):
     # no false negatives after the rebuild: probing the full seen set
     # through the engine's own co-partitioned path must return NOTHING —
     # a false negative would surface as a "fresh" (unseen) row
-    from crawlspark.operators.urlseen import probe_unseen_partitioned
-
     cand = cat.read("urlseen").select("url").withColumn(
         "host", F.lit("h")
     )
-    unseen = probe_unseen_partitioned(
+    unseen = probe_unseen(
         spark, cand, cat.read("urlseen"), store, small_positives=True
     )
     assert unseen.count() == 0, "seen URL probed as unseen after resplit"
@@ -192,7 +207,8 @@ def test_resume_after_autosplit_stays_equal(spark, tmp_path):
     # phase 2: resume to completion
     run_crawl(spark, CrawlConfig(max_batches=8, **base), resume=True)
     m = cat.latest()
-    store = cat.load_bloom_store(m)
+    store = cat.load_bloom(m)
+    assert isinstance(store, BloomBucketStore)
     assert store.n_buckets == mid["state"]["bloom_resplit_to"] or \
         store.n_buckets > mid["state"]["bloom_resplit_to"]  # may double again
     ora = crawl_oracle(spec, max_batches=8, budget_override=10)
@@ -207,10 +223,6 @@ def test_small_batch_delta_cap_falls_back_to_distributed(spark):
     the actual row count exceeds the hard cap the function must fall
     through to the distributed path (bounded driver exposure) and still
     produce exactly the same bits."""
-    from pyspark.sql import functions as F
-
-    from crawlspark.operators.urlseen import bloom_delta
-
     urls = spark.range(60_000).select(
         F.concat(F.lit("https://h"), (F.col("id") % 9).cast("string"),
                  F.lit("/p/"), F.col("id").cast("string")).alias("url"),

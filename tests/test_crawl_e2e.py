@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from crawlspark import synthetic
 from crawlspark.crawl import CrawlConfig, init_crawl, run_batch, run_crawl
+from crawlspark.operators.bloom import BloomBucketStore
 from crawlspark.oracle import crawl_oracle
 from crawlspark.tables import SnapshotCatalog
 
@@ -126,7 +127,8 @@ def test_partitioned_bloom_crawl_equals_broadcast(spark, tmp_path, engine_run):
     cat = SnapshotCatalog(spark, wh)
     m = cat.latest()
     assert m["state"].get("bloom_store_path") and not m["state"].get("bloom_path")
-    store = cat.load_bloom_store(m)
+    store = cat.load_bloom(m)
+    assert isinstance(store, BloomBucketStore)
     assert store.bloom_keys() == len(_tables(spark, wh)[0])  # == |urlseen|
     # manifest JSON carries no per-host state and stays O(bucket manifest)
     assert "hosts" not in m["state"]

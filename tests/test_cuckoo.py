@@ -1,36 +1,32 @@
 """Cuckoo-filter URL-seen layout: kernel invariants, deletion/readmit,
-capacity, serde, partitioned parity, and probe-path equivalence."""
+capacity, serde and partitioned parity (probe-path equivalence is
+test_bloom.test_probe_unseen_equals_exact_antijoin)."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from crawlspark.operators.bloom import key_hashes
 from crawlspark.operators.cuckoo import CuckooFull, CuckooState, apply_partitioned
-from crawlspark.operators.urlseen import _hash_cols, probe_unseen_cuckoo
+from crawlspark.operators.urlseen import _hash_cols
 
 
 def _urls(lo, hi, tag="p"):
     return [f"https://www.h{i % 37}.example/{tag}/{i}" for i in range(lo, hi)]
 
 
-def _hashes(urls):
-    return key_hashes(urls)  # md5-derived uint64 pair, fine for kernel tests
-
-
-def test_no_false_negatives_and_fpr():
+def test_no_false_negatives_and_fpr(random_keys):
     st = CuckooState.for_keys(10_000, n_buckets=8)
-    h1, h2 = _hashes(_urls(0, 10_000))
+    h1, h2 = random_keys(10_000, seed=0)
     st.add_hashes(h1, h2)
     assert st.probe_hashes(h1, h2).all(), "live keys must always probe True"
-    g1, g2 = _hashes(_urls(10_000, 30_000))
+    g1, g2 = random_keys(20_000, seed=1)
     fpr = st.probe_hashes(g1, g2).mean()
     assert fpr < 5e-3, fpr  # design bound ~1.2e-4 at this load
 
 
-def test_delete_readmits_and_keeps_others():
+def test_delete_readmits_and_keeps_others(random_keys):
     st = CuckooState.for_keys(8_000, n_buckets=4)
-    h1, h2 = _hashes(_urls(0, 8_000))
+    h1, h2 = random_keys(8_000, seed=2)
     st.add_hashes(h1, h2)
     exp1, exp2 = h1[::2], h2[::2]  # expire every other key
     removed = st.delete_hashes(exp1, exp2)
@@ -42,24 +38,24 @@ def test_delete_readmits_and_keeps_others():
     assert int(st.n_items.sum()) == len(h1) - removed
 
 
-def test_high_load_factor_inserts():
+def test_high_load_factor_inserts(random_keys):
     st = CuckooState(n_buckets=2, n_slots=512)  # 4096 slots
     n = int(2 * 512 * 4 * 0.9)
-    h1, h2 = _hashes(_urls(0, n, "lf"))
+    h1, h2 = random_keys(n, seed=3)
     st.add_hashes(h1, h2)  # 90% load must not raise
     assert st.probe_hashes(h1, h2).all()
 
 
-def test_overfill_raises_cuckoo_full():
+def test_overfill_raises_cuckoo_full(random_keys):
     st = CuckooState(n_buckets=1, n_slots=8, max_kicks=50)  # 32 slots
-    h1, h2 = _hashes(_urls(0, 100, "of"))
+    h1, h2 = random_keys(100, seed=4)
     with pytest.raises(CuckooFull):
         st.add_hashes(h1, h2)
 
 
-def test_npz_roundtrip(tmp_path):
+def test_npz_roundtrip(tmp_path, random_keys):
     st = CuckooState.for_keys(1_000, n_buckets=4)
-    h1, h2 = _hashes(_urls(0, 1_000))
+    h1, h2 = random_keys(1_000, seed=5)
     st.add_hashes(h1, h2)
     p = str(tmp_path / "cuckoo.npz")
     st.to_npz(p)
@@ -69,9 +65,9 @@ def test_npz_roundtrip(tmp_path):
     assert (back.n_buckets, back.n_slots) == (st.n_buckets, st.n_slots)
 
 
-def test_insert_order_invariant_layout():
+def test_insert_order_invariant_layout(random_keys):
     a, b = CuckooState(4, 256), CuckooState(4, 256)
-    h1, h2 = _hashes(_urls(0, 2_000, "ord"))
+    h1, h2 = random_keys(2_000, seed=6)
     a.add_hashes(h1, h2)
     rev = np.arange(len(h1))[::-1]
     b.add_hashes(h1[rev], h2[rev])
@@ -108,31 +104,3 @@ def test_partitioned_apply_matches_driver_kernel(spark):
     dist2 = apply_partitioned(spark, exp_keyed, dist, op="delete")
     assert np.array_equal(dist2.table, driver.table)
     assert np.array_equal(dist2.n_items, driver.n_items)
-
-
-def test_probe_unseen_cuckoo_equals_exact_antijoin(spark):
-    seen_urls = _urls(0, 3_000, "s")
-    expired = seen_urls[::4]
-    live = sorted(set(seen_urls) - set(expired))
-    cand_urls = _urls(1_500, 4_500, "s")  # overlaps live, expired, and fresh
-
-    keyed = _jvm_hashed(spark, seen_urls, 8)
-    rows = keyed.collect()
-    h1 = np.array([r["_h1"] for r in rows], dtype=np.int64).view(np.uint64)
-    h2 = np.array([r["_h2"] for r in rows], dtype=np.int64).view(np.uint64)
-    st = CuckooState.for_keys(len(seen_urls), n_buckets=8)
-    st.add_hashes(h1, h2)
-
-    erows = _jvm_hashed(spark, expired, 8).collect()
-    e1 = np.array([r["_h1"] for r in erows], dtype=np.int64).view(np.uint64)
-    e2 = np.array([r["_h2"] for r in erows], dtype=np.int64).view(np.uint64)
-    st.delete_hashes(e1, e2)
-
-    cand = spark.createDataFrame([(u,) for u in cand_urls], "url string")
-    live_df = spark.createDataFrame([(u,) for u in live], "url string")
-    got = {
-        r.url for r in probe_unseen_cuckoo(spark, cand, live_df, st).collect()
-    }
-    want = set(cand_urls) - set(live)
-    assert got == want  # exact: positives verified, negatives guaranteed
-    st.release()

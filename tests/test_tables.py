@@ -6,6 +6,7 @@ import os
 from pyspark.sql import functions as F
 
 from crawlspark import schemas
+from crawlspark.operators.bloom import BloomBucketStore, BloomState
 from crawlspark.tables import SnapshotCatalog
 
 
@@ -175,7 +176,8 @@ def test_expire_sweeps_orphaned_bloom_blobs(spark, tmp_path):
                                  compact_every=3, bloom_partitioned=True))
     cat = SnapshotCatalog(spark, wh)
     m = cat.latest()
-    store = cat.load_bloom_store(m)
+    store = cat.load_bloom(m)
+    assert isinstance(store, BloomBucketStore)
     live_before = set(store.referenced_files())
     assert live_before
     # plant a fake retry-orphan next to a real blob
@@ -185,7 +187,9 @@ def test_expire_sweeps_orphaned_bloom_blobs(spark, tmp_path):
     res = cat.expire_snapshots(keep_last=1)
     assert not os.path.exists(orphan), "orphan blob must be swept"
     # every blob the surviving manifest references is still there
-    for p in cat.load_bloom_store(cat.latest()).referenced_files():
+    store = cat.load_bloom(cat.latest())
+    assert isinstance(store, BloomBucketStore)
+    for p in store.referenced_files():
         assert os.path.exists(p), p
     assert res["files_removed"] >= 1
 
@@ -233,14 +237,17 @@ def test_expire_with_symlinked_root_keeps_live_blobs(spark, tmp_path):
     alias = str(tmp_path / "wh-alias")
     os.symlink(wh, alias)
     cat = SnapshotCatalog(spark, alias)  # differently-spelled root
-    live = set(cat.load_bloom_store(cat.latest()).referenced_files())
+    store = cat.load_bloom(cat.latest())
+    assert isinstance(store, BloomBucketStore)
+    live = set(store.referenced_files())
     assert live
     cat.expire_snapshots(keep_last=1)
     for p in live:
         assert os.path.exists(p), f"live blob wrongly swept: {p}"
     # warehouse still loads and probes after the sweep through the alias
-    store = cat.load_bloom_store(cat.latest())
-    assert store is not None and set(store.referenced_files()) == live
+    store = cat.load_bloom(cat.latest())
+    assert isinstance(store, BloomBucketStore)
+    assert set(store.referenced_files()) == live
 
 
 def test_legacy_fetched_cache_without_snap_id_still_reads(spark, tmp_path):
@@ -348,3 +355,26 @@ def test_state_fn_late_append_survives_same_table_replace(spark, tmp_path):
     got = sorted(r["host"] for r in cat.read("hosts", m).collect())
     assert got == ["a.example", "b.example", "new.example"]
     assert len(m["tables"]["hosts"]) == 2
+
+
+def test_commit_records_only_its_own_bloom_layout(spark, tmp_path):
+    """A commit records its Bloom layout's manifest key and drops the
+    other layout's, whichever the previous snapshot held (broadcast →
+    partitioned → broadcast), and load_bloom returns the matching type."""
+    import numpy as np
+
+    cat = SnapshotCatalog(spark, str(tmp_path))
+    bloom = BloomState(4, 1 << 12)
+    bloom.add_hashes(np.array([1, 2], dtype=np.uint64), np.array([3, 5], dtype=np.uint64))
+    blob = os.path.join(str(tmp_path), "bucket-00000.npy")
+    np.save(blob, bloom.blobs[0])
+    store = BloomBucketStore(4, 1 << 12, 7, {0: blob}, {0: 1})
+    layouts = ((bloom, "bloom_path"), (store, "bloom_store_path"), (bloom, "bloom_path"))
+    for batch, (seen, key) in enumerate(layouts, start=1):
+        m = cat.commit(batch, appends={}, bloom=seen, state={"kept": batch})
+        assert [k for k in m["state"] if k.startswith("bloom")] == [key]
+        assert m["state"]["kept"] == batch
+        loaded = cat.load_bloom(m)
+        assert type(loaded) is type(seen)
+        assert loaded.bloom_keys() == seen.bloom_keys()
+

@@ -1,7 +1,7 @@
 """fix_url / skip filter: unit cases + Spark↔Python parity + idempotence."""
 
 import pandas as pd
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -43,6 +43,8 @@ def test_fix_url_relative():
 
 @settings(max_examples=200, deadline=None)
 @given(st.text(min_size=0, max_size=60))
+@example("0 /")  # a trailing-slash strip exposed trailing whitespace
+@example("0 / /")
 def test_fix_url_idempotent(s):
     once = U.fix_url_py(s)
     assert U.fix_url_py(once) == once
