@@ -19,22 +19,6 @@ from crawlspark.operators.pipeline import docs_from_pipe, fetch_parse_stage
 from crawlspark.operators.urlseen import probe_unseen
 
 
-def synthetic_frontier(spark: SparkSession, n: int, n_hosts: int = 1000):
-    """n frontier URLs over n_hosts hosts with a hot-host skew (~25% of
-    rows on 2 hosts, mirroring the reference's seed-host skew)."""
-    df = spark.range(n)
-    hot = F.col("id") % 4 == 0
-    host = F.when(
-        hot, F.concat(F.lit("www.hot"), (F.col("id") % 2).cast("string"), F.lit(".example"))
-    ).otherwise(
-        F.concat(F.lit("www.h"), (F.col("id") % n_hosts).cast("string"), F.lit(".example"))
-    )
-    return df.select(
-        F.concat(F.lit("https://"), host, F.lit("/p/"), F.col("id").cast("string")).alias("url"),
-        host.alias("host"),
-    )
-
-
 def bench_dedup(spark: SparkSession, n_candidates: int = 1_000_000, n_seen: int = 200_000,
                 buckets: int = 64, bits: int = 1 << 18, partitioned: bool = False) -> dict:
     """Frontier-dedup ops/sec: Bloom probe + exact anti-join fallback over

@@ -22,7 +22,7 @@ import time as _time
 from dataclasses import dataclass, field
 
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crawlspark import rules, schemas, synthetic
@@ -591,17 +591,13 @@ def _pending(catalog: SnapshotCatalog, manifest: dict,
     )
 
 
-def _new_hosts_frame(spark: SparkSession, hosts_tbl: DataFrame, hosts,
-                     known_hosts: set | None = None) -> DataFrame | None:
+def _new_hosts_frame(spark: SparkSession, hosts_tbl: DataFrame, hosts) -> DataFrame | None:
     """HOSTS rows (robots fetched) for the names in ``hosts`` that the
     hosts table lacks, or None when there are none.  Only the tiny name
-    list touches the driver; the robots fetch+parse runs distributed.
-    ``known_hosts`` holds names already verified present: when it covers
-    every name, the membership job is skipped outright."""
-    cand = set(hosts or ()) - (known_hosts or set())
-    if not cand:
+    list touches the driver; the robots fetch+parse runs distributed."""
+    if not hosts:
         return None
-    cand_df = spark.createDataFrame([(h,) for h in sorted(cand)], "host string")
+    cand_df = spark.createDataFrame([(h,) for h in sorted(hosts)], "host string")
     unknown = sorted(
         r["host"]
         for r in cand_df.join(hosts_tbl.select("host"), on="host", how="left_anti").collect()
@@ -623,15 +619,11 @@ class _Batch:
     manifest: dict
     batch_id: int
     is_compact: bool
-    # deferred-count mode: n_sched is the previous batch's count (sizing
-    # only) and the true count is observed on the progress write
-    deferred: bool
-    n_sched: int
     cols: dict  # _invariant_cols
     seen: object  # URL-seen filter, any layout; the state update folds the batch in
     probed: object  # the pre-update filter the probe broadcast
     prof: dict | None  # phase -> seconds, when CRAWLSPARK_PROF is set
-    known_hosts: set | None  # see run_batch
+    n_sched: int = 0
     pending: DataFrame | None = None
     hosts_tbl: DataFrame | None = None
     trip_hosts: DataFrame | None = None  # hosts behind an open circuit breaker
@@ -640,8 +632,6 @@ class _Batch:
     revalid_hashes: DataFrame | None = None
     pipe: DataFrame | None = None
     new_frontier: DataFrame | None = None
-    sched_obs: Observation | None = None
-    new_hosts: set | None = None
 
 
 def _phase(b: _Batch, fn, *args):
@@ -658,7 +648,7 @@ def _schedule(b: _Batch) -> None:
     """Pending frontier → politeness top-K ``scheduled`` plus the
     ``retired`` progress rows (robots-blocked and cache-served rows get a
     terminal record so they leave the pending set instead of being
-    re-scanned every batch).  The counted path counts ``scheduled``."""
+    re-scanned every batch), and the ``scheduled`` row count."""
     cfg, catalog, manifest = b.cfg, b.catalog, b.manifest
     b.pending = _pending(catalog, manifest)
     b.hosts_tbl = catalog.read("hosts", manifest)
@@ -729,8 +719,7 @@ def _schedule(b: _Batch) -> None:
             )).alias("m"))
             .select("url", F.col("m.body_hash").alias("cached_hash"))
         )
-    if not b.deferred:
-        b.n_sched = b.scheduled.count()
+    b.n_sched = b.scheduled.count()
 
 
 def _cache_hits(b: _Batch, scheduled: DataFrame, fetched_log: DataFrame) -> DataFrame:
@@ -784,25 +773,20 @@ def _cache_hits(b: _Batch, scheduled: DataFrame, fetched_log: DataFrame) -> Data
     )
 
 
-def _finished(b: _Batch) -> bool:
-    """Stop check for a batch that scheduled nothing: finished unless a
-    pending row is backoff-gated or held back only by an open circuit
-    breaker whose cooldown will pass."""
-    if b.pending.filter(F.col("not_before_batch") > b.batch_id).count():
-        return False
-    return b.trip_hosts is None or not (
-        b.pending.filter(F.col("not_before_batch") <= b.batch_id)
-        .join(b.trip_hosts, on="host", how="left_semi").count()
-    )
-
-
 def _zero_batch(b: _Batch) -> dict | None:
-    """Counted path with nothing scheduled: commit just the retired rows,
-    skip forward over a waiting frontier, or finish (None).  Only here is
-    the retired count needed — the common path unions retired rows into
-    the progress append unconditionally."""
+    """A batch that scheduled nothing: commit just the retired rows, skip
+    forward over a waiting frontier, or finish (None).  It is finished
+    only when nothing was retired and no pending row is backoff-gated or
+    held back by an open circuit breaker whose cooldown will pass.  Only
+    here is the retired count needed — the common path unions retired
+    rows into the progress append unconditionally."""
     retired = b.retired.count() > 0
-    if not retired and _finished(b):
+    if not retired and not (
+        b.pending.filter(F.col("not_before_batch") > b.batch_id).count()
+        or (b.trip_hosts is not None and b.pending.filter(
+            F.col("not_before_batch") <= b.batch_id
+        ).join(b.trip_hosts, on="host", how="left_semi").count())
+    ):
         return None
     appends = {"progress": b.retired.coalesce(1)} if retired else {}
     return b.catalog.commit(b.batch_id, appends=appends)
@@ -811,7 +795,12 @@ def _zero_batch(b: _Batch) -> dict | None:
 def _fetch_parse(b: _Batch) -> None:
     """Fused fetch→parse→clean: one Python stage, bodies never cross
     Arrow; partition count sized to the batch (~100 pages/partition) so
-    small politeness batches don't pay a full worker-pool spin-up."""
+    small politeness batches don't pay a full worker-pool spin-up.
+
+    The stage is persisted and materialized here, before any downstream
+    job reads it: the commit runs the state update overlapped with the
+    table writes, and those concurrent jobs then only ever read a filled
+    cache, so every scheduled page is fetched exactly once."""
     cfg = b.cfg
     sched_in = b.scheduled
     if b.revalid_hashes is not None:
@@ -826,23 +815,7 @@ def _fetch_parse(b: _Batch) -> None:
         use_feeds=cfg.use_feeds,
         obey_link_rel=cfg.obey_link_rel,
     ).persist()
-    if b.n_sched > 1000:
-        # eager: downstream jobs (probe branches, writes) must all read the
-        # cache — recomputing the fused stage is a wide batch's main cost;
-        # for tiny politeness batches the extra job isn't worth it (measured
-        # ~0.3-1.0 s/batch for the count PLUS ~0.7-1.0 s/batch of slower
-        # plan construction once the cache is materialized).
-        #
-        # Concurrency note: the commit overlaps the state update with the
-        # table writes, so for small (lazy) batches two jobs can race the
-        # first materialization of this persist() and compute a partition
-        # twice.  That is correctness-neutral HERE because run_batch's
-        # fetcher is always the deterministic synthetic transfer
-        # (fetch_parse_stage is called without fetch_fn); if a real
-        # side-effecting fetch_fn is ever wired into this loop, this
-        # materialization must become unconditional to keep the
-        # single-fetch guarantee.
-        b.pipe.count()
+    b.pipe.count()
 
 
 def _link_probe(b: _Batch) -> None:
@@ -894,19 +867,6 @@ def _commit_plans(b: _Batch) -> dict:
     progress = fetched.select(
         *cols["progress_pre"], bid.alias("batch_id"), *cols["progress_post"]
     ).unionByName(b.retired)
-    if b.deferred:
-        # observe the true scheduled count on the progress write: every
-        # scheduled row lands exactly one progress record, retired rows
-        # are excluded by outcome.  (The state job's small-batch path is a
-        # LIMIT collect, which scans partially and would under-observe.)
-        b.sched_obs = Observation(f"sched_{batch_id}")
-        progress = progress.observe(
-            b.sched_obs,
-            F.sum(
-                (~F.col("outcome").isin("robots_blocked", "cached")).cast("long")
-            ).alias("n"),
-            F.count(F.lit(1)).alias("n_all"),
-        )
     # retry re-entry with exponential backoff (reference :543-555, :636)
     retries = fetched.filter(cols["is_retry"]).select(
         *cols["retries_pre"],
@@ -967,12 +927,12 @@ def _state_update(b: _Batch) -> dict:
     # bounded by n_sched × links-per-page (~64 is generous for news
     # listings; overshooting only costs the driver a few MB, never
     # correctness — same hashes, same numpy kernel either way)
-    delta, b.new_hosts = bloom_delta(
+    delta, new_hosts = bloom_delta(
         b.spark, b.new_frontier, b.seen, collect_hosts=True,
         small_batch_rows=b.n_sched * 64,
     )
     b.seen.merge(delta)
-    hosts = _new_hosts_frame(b.spark, b.hosts_tbl, b.new_hosts, b.known_hosts)
+    hosts = _new_hosts_frame(b.spark, b.hosts_tbl, new_hosts)
     resplit = _bloom_autosplit(b) if b.is_compact else {}
     return {"bloom": b.seen, "state": {**_bloom_lineage(b.seen), **resplit},
             "appends": {} if hosts is None else {"hosts": hosts}}
@@ -1055,83 +1015,41 @@ def _release(b: _Batch) -> None:
               + ", ".join(f"{k}={v:.2f}s" for k, v in b.prof.items()))
 
 
-def run_batch(spark: SparkSession, catalog: SnapshotCatalog, cfg: CrawlConfig, manifest: dict,
-              known_hosts: set | None = None, sched_hint: int | None = None,
-              loop_stats: dict | None = None) -> dict | None:
+def run_batch(spark: SparkSession, catalog: SnapshotCatalog, cfg: CrawlConfig,
+              manifest: dict) -> dict | None:
     """One micro-batch; returns the new manifest, or None when finished.
+    The batch is a function of ``manifest`` alone: no driver state is
+    carried from one batch to the next.
 
     The batch runs as phases over one shared ``_Batch``: ``_schedule``
-    (pending frontier → politeness top-K), ``_fetch_parse`` (the fused
-    fetch→parse→clean stage), ``_link_probe`` (links → URL-seen probe →
-    new frontier rows), ``_commit_plans`` (the per-table appends) and
-    ``_commit`` (one atomic commit; ``_state_update``, the Bloom update
-    and host discovery, runs inside it).  Set CRAWLSPARK_PROF=1 to print
-    each phase's wall time, one line per batch — the politeness-bound
-    loop's fixed cost is job count × fixed job overhead, so this is the
-    first thing to look at when a batch is slower than its page count
-    explains.
-
-    ``known_hosts``: optional driver-side cache of host names verified
-    present in the hosts table (run_crawl threads one across its batches).
-    The per-batch "any genuinely-new hosts?" membership check is a whole
-    Spark job (~0.5-1s of a politeness batch's fixed cost); with the cache,
-    steady-state batches — whose accepted links revisit known hosts — skip
-    it entirely.  Only host NAMES the driver already saw (via the state
-    piggyback) are cached, never robots state, and the cache is an
-    optimization only: a cold/absent cache falls back to the anti-join.
-
-    ``sched_hint``: the PREVIOUS batch's scheduled-row count (run_crawl
-    threads it via ``loop_stats``).  With a positive hint, the batch skips
-    the dedicated schedule-count job — one whole Spark action (~0.6-0.9 s)
-    per steady-state batch — and instead observes the true count on the
-    progress write (an Observation).  The hint is used only for SIZING
-    (pipeline partitions, the Bloom small-batch collect cap — both
-    self-correcting: a low hint only means a fallback to the distributed
-    delta path); the stop decision uses the observed true count.  A None
-    or non-positive hint, or a compaction batch (which re-reads the
-    progress append to derive the pending set), takes the counted path:
-    the first batch of a run and every caller without a hint count the
-    schedule before fetching."""
+    (pending frontier → politeness top-K, counted), ``_fetch_parse`` (the
+    fused fetch→parse→clean stage, materialized), ``_link_probe`` (links →
+    URL-seen probe → new frontier rows), ``_commit_plans`` (the per-table
+    appends) and ``_commit`` (one atomic commit; ``_state_update``, the
+    Bloom update and host discovery, runs inside it).  A batch that
+    schedules nothing goes to ``_zero_batch`` instead, which holds the
+    stop check.  Set CRAWLSPARK_PROF=1 to print each phase's wall time,
+    one line per batch — the politeness-bound loop's fixed cost is job
+    count × fixed job overhead, so this is the first thing to look at
+    when a batch is slower than its page count explains."""
     batch_id = manifest["batch_id"] + 1
     # Bloom layout follows the manifest (resume-safe across config edits)
     seen = catalog.load_bloom(manifest)
-    is_compact = bool(cfg.compact_every) and batch_id % cfg.compact_every == 0
-    deferred = bool(sched_hint and sched_hint > 0 and not is_compact)
     b = _Batch(
         spark=spark, catalog=catalog, cfg=cfg, manifest=manifest,
-        batch_id=batch_id, is_compact=is_compact, deferred=deferred,
-        n_sched=sched_hint if deferred else 0, cols=_invariant_cols(spark),
-        seen=seen, probed=seen,
+        batch_id=batch_id,
+        is_compact=bool(cfg.compact_every) and batch_id % cfg.compact_every == 0,
+        cols=_invariant_cols(spark), seen=seen, probed=seen,
         prof={} if os.environ.get("CRAWLSPARK_PROF") else None,
-        known_hosts=known_hosts,
     )
     try:
         _phase(b, _schedule)
-        if not deferred:
-            if loop_stats is not None:
-                loop_stats["n_sched"] = b.n_sched
-            if b.n_sched == 0:
-                return _phase(b, _zero_batch)
+        if b.n_sched == 0:
+            return _phase(b, _zero_batch)
         _phase(b, _fetch_parse)
         _phase(b, _link_probe)
         appends = _phase(b, _commit_plans)
-        new_manifest = _phase(b, _commit, appends)
-        # cache update only AFTER the commit succeeded: if commit raises
-        # and a custom driver loop retries run_batch, the cache must not
-        # claim hosts whose robots rows were never written.  Names only
-        # (~60 B/host), capped at 2*10^6: past it the membership join runs
-        if b.new_hosts and known_hosts is not None and len(known_hosts) < 2_000_000:
-            known_hosts.update(b.new_hosts)
-        if deferred:
-            row = b.sched_obs.get
-            b.n_sched = int(row["n"] or 0)
-            if loop_stats is not None:
-                loop_stats["n_sched"] = b.n_sched
-            # the hint over-promised: this batch scheduled AND retired
-            # nothing (the commit appended only empty deltas)
-            if b.n_sched == 0 and int(row["n_all"] or 0) == 0 and _finished(b):
-                return None
-        return new_manifest
+        return _phase(b, _commit, appends)
     finally:
         _release(b)
 
@@ -1171,6 +1089,10 @@ def run_crawl(spark: SparkSession, cfg: CrawlConfig, resume: bool = False,
               resume_from_snapshot: int | None = None) -> dict:
     """Run to completion (or max_batches); returns a summary dict.
 
+    The loop feeds each committed manifest to the next ``run_batch`` and
+    carries nothing else between batches, so a resumed run continues
+    exactly as a straight run would.
+
     ``resume_from_snapshot``: time-travel resume — roll the warehouse
     back to that retained snapshot (catalog.rollback) and continue from
     exactly the state committed there, abandoning any later snapshots
@@ -1185,12 +1107,8 @@ def run_crawl(spark: SparkSession, cfg: CrawlConfig, resume: bool = False,
         manifest = catalog.latest() if resume else None
     if manifest is None:
         manifest = init_crawl(spark, cfg)
-    known_hosts: set = set()  # per-run cache; see run_batch docstring
-    loop_stats: dict = {}  # previous batch's n_sched → next batch's hint
     while manifest["batch_id"] < cfg.max_batches:
-        nxt = run_batch(spark, catalog, cfg, manifest, known_hosts=known_hosts,
-                        sched_hint=loop_stats.get("n_sched"),
-                        loop_stats=loop_stats)
+        nxt = run_batch(spark, catalog, cfg, manifest)
         if nxt is None:
             break
         manifest = nxt

@@ -18,7 +18,6 @@ from __future__ import annotations
 import re
 from urllib.parse import urljoin, urlsplit
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -156,21 +155,13 @@ def domain_for_country_expr(host: Column, country: Column) -> Column:
     return c.otherwise(d)
 
 
-def canonicalize_series(urls: pd.Series, bases: pd.Series) -> pd.Series:
-    """Vectorized canonicalization over an Arrow batch (pandas UDF body)."""
-    return pd.Series(
-        [fix_url_py(u, b) for u, b in zip(urls.tolist(), bases.tolist())],
-        dtype=object,
-    )
-
-
 # ---------- Spark Column forms (pure built-ins, codegen'd) ----------
 
 def fix_url_expr(url: Column) -> Column:
     """The regexp-repair subset of fix_url as a Column chain (no urljoin).
 
     Used for absolute URLs (the common case at scale) and for the DuckDB
-    oracle cross-check; relative URLs go through the pandas UDF path.
+    oracle cross-check.
     """
     c = F.trim(url)
     for pat, repl in _REPAIRS:

@@ -95,7 +95,8 @@ def schedule(pending: DataFrame, hosts: DataFrame, batch_id: int,
 
     hosts is a small dimension → broadcast join (no shuffle on the big
     side for the budget/robots lookup); the only shuffle is the per-host
-    rank, bounded by the two-phase salt.
+    rank, bounded by the two-phase salt.  hosts must carry the compiled
+    ``robots_rx`` column (crawl._hosts_with_rx).
 
     ``return_blocked=True`` also returns the robots-disallowed eligible
     rows so the caller can retire them with a terminal progress record —
@@ -103,30 +104,6 @@ def schedule(pending: DataFrame, hosts: DataFrame, batch_id: int,
     batch and rewritten by every compaction.
     """
     df = pending.filter(F.col("not_before_batch") <= F.lit(batch_id))
-    if "robots_rx" not in hosts.columns:
-        from pyspark.sql import types as T
-
-        # convenience fallback for callers that pass a bare HOSTS frame
-        # (tests / ad-hoc). It collects the hosts dimension to the driver,
-        # so it is capped: the crawl loop precompiles robots_rx executor-
-        # side (crawl._hosts_with_rx) and never takes this branch.
-        rows = hosts.limit(100_001).collect()
-        assert len(rows) <= 100_000, (
-            "schedule() fallback collects hosts driver-side; pass a "
-            "robots_rx column (crawl._hosts_with_rx) for large host dims"
-        )
-        rx_map = {
-            r["host"]: robots_rx_py(
-                r["robots_disallow"],
-                r["robots_allow"] if "robots_allow" in r.__fields__ else None,
-            )
-            for r in rows
-        }
-        hosts = hosts.sparkSession.createDataFrame(
-            [(h, rx) for h, rx in sorted(rx_map.items())],
-            T.StructType([T.StructField("host", T.StringType()),
-                          T.StructField("robots_rx", T.StringType())]),
-        ).join(hosts, on="host")
     df = df.join(F.broadcast(hosts), on="host", how="inner")
 
     # robots: Disallow prefix check against the precompiled per-host regex.

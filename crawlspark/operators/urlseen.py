@@ -76,13 +76,16 @@ def _split_and_verify(spark: SparkSession, probed: DataFrame, urlseen: DataFrame
     """probed(+maybe_seen) → unseen rows: guaranteed-fresh negatives UNION
     the exactly-verified Bloom-positive sliver.
 
-    The small_positives (crawl-loop) path issues ONE spark.sql statement
-    over temp views instead of the 8-op DataFrame chain (2 filters, 2
-    drops, distinct, 2 broadcast joins, union) — same physical plan
-    (verified by test_bloom equality + the broadcast assertions), ~3 py4j
-    roundtrips instead of ~15 per politeness batch.  The join semantics
-    are identical to _exact_unseen: urlseen is only ever broadcast-SCANNED
-    against the batch-bounded positive sliver, never shuffled.
+    ``small_positives=False`` verifies the positives with a plain LEFT
+    ANTI join, which shuffles both sides.  ``small_positives=True`` (the
+    crawl loop) relies on the sliver being batch-bounded: it BROADCASTS
+    the positive ids and verifies with a broadcast LEFT SEMI **scan** of
+    urlseen followed by a broadcast anti-join against the hits, so the
+    10^10-row seen table is only ever scanned (column-pruned to url),
+    never repartitioned.  It is ONE spark.sql statement over temp views
+    instead of the 8-op DataFrame chain (2 filters, 2 drops, distinct, 2
+    broadcast joins, union) — ~3 py4j roundtrips instead of ~15 per
+    politeness batch.
 
     One probe pass, not three: the fresh branch, the positive branch, and
     the positive-id broadcast each re-reference the probed subtree, and
@@ -106,7 +109,9 @@ def _split_and_verify(spark: SparkSession, probed: DataFrame, urlseen: DataFrame
     if not small_positives:
         fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen", *drop)
         positives = probed.filter(F.col("maybe_seen")).drop("maybe_seen", *drop)
-        return fresh.unionByName(_exact_unseen(positives, urlseen, False))
+        return fresh.unionByName(
+            positives.join(urlseen.select("url"), on="url", how="left_anti")
+        )
     keep = ", ".join(
         f"`{c}`" for c in probed.columns if c != "maybe_seen" and c not in drop
     )
@@ -133,26 +138,6 @@ def _split_and_verify(spark: SparkSession, probed: DataFrame, urlseen: DataFrame
     spark.catalog.dropTempView(pv)
     spark.catalog.dropTempView(uv)
     return out
-
-
-def _exact_unseen(positives: DataFrame, urlseen: DataFrame,
-                  small_positives: bool) -> DataFrame:
-    """Exact check for the Bloom-positive sliver.
-
-    ``small_positives=True`` (the crawl loop): the sliver is batch-bounded
-    (≤ links-per-batch), so BROADCAST it and verify with a broadcast
-    LEFT SEMI **scan** of urlseen followed by a broadcast anti-join — the
-    10^10-row seen table is only ever SCANNED (column-pruned to url, no
-    shuffle, no shuffle files), never repartitioned.  The default
-    plan (plain LEFT ANTI) shuffles BOTH sides, which at web scale means
-    re-shuffling the full seen set every micro-batch.
-    """
-    if not small_positives:
-        return positives.join(urlseen.select("url"), on="url", how="left_anti")
-    seen_hits = urlseen.select("url").join(
-        F.broadcast(positives.select("url").distinct()), on="url", how="left_semi"
-    )
-    return positives.join(F.broadcast(seen_hits), on="url", how="left_anti")
 
 
 def probe_unseen(spark: SparkSession, candidates: DataFrame, urlseen: DataFrame,

@@ -90,9 +90,7 @@ class SnapshotCatalog:
         against the basename only, anchored — a warehouse root that happens
         to contain 'snapN-' in a parent dir must not shadow every file's
         real snapshot id (that would corrupt _pending's manifest pruning)."""
-        import re as _re
-
-        m = _re.match(r"snap(\d+)-", os.path.basename(path.rstrip("/")))
+        m = re.match(r"snap(\d+)-", os.path.basename(path.rstrip("/")))
         return int(m.group(1)) if m else 0
 
     def commit(
@@ -213,7 +211,14 @@ class SnapshotCatalog:
             "state": new_state,
             "lineage": lineage,
         }
-        snap_file = f"snap-{snap_id:06d}.json"
+        self._publish(manifest, prev["snapshot_id"])
+        return manifest
+
+    def _publish(self, manifest: dict, base_id: int) -> None:
+        """Write ``manifest`` and swing LATEST to it, unless LATEST has
+        moved off ``base_id`` (the snapshot the manifest was computed
+        against): then raise ConcurrentCommitError and publish nothing."""
+        snap_file = f"snap-{manifest['snapshot_id']:06d}.json"
         snap_path = os.path.join(self.root, "_snapshots", snap_file)
         tmp = snap_path + f".{uuid.uuid4().hex[:8]}.tmp"
         with open(tmp, "w") as f:
@@ -228,10 +233,10 @@ class SnapshotCatalog:
         # LATEST unmoved is a CRASH leftover (manifest written, pointer
         # never swung) and is correctly overwritten.
         cur_id = (self.latest() or {"snapshot_id": 0})["snapshot_id"]
-        if cur_id != prev["snapshot_id"]:
+        if cur_id != base_id:
             os.remove(tmp)
             raise ConcurrentCommitError(
-                f"commit based on snapshot {prev['snapshot_id']} but LATEST "
+                f"commit based on snapshot {base_id} but LATEST "
                 f"moved to {cur_id}; retry from the new base"
             )
         os.replace(tmp, snap_path)  # manifest durable first
@@ -239,7 +244,6 @@ class SnapshotCatalog:
         with open(ptr_tmp, "w") as f:
             f.write(snap_file)
         os.replace(ptr_tmp, self._latest_path)  # the atomic commit point
-        return manifest
 
     def snapshots(self) -> list[int]:
         """Retained snapshot ids, ascending (the time-travel surface:
@@ -277,29 +281,20 @@ class SnapshotCatalog:
         This is the time-travel resume primitive: rollback(S) then
         run_crawl(resume=True) re-runs the crawl from exactly the state
         committed at S (deterministic engine ⇒ same final state as a
-        straight run)."""
+        straight run).  Like commit, it refuses (ConcurrentCommitError)
+        when another writer moves LATEST while it runs."""
+        base_id = (self.latest() or {"snapshot_id": 0})["snapshot_id"]
         target = self.manifest_at(snapshot_id)  # raises if expired/absent
         snaps = self.snapshots()
-        new_id = (snaps[-1] if snaps else 0) + 1
         manifest = {
-            "snapshot_id": new_id,
+            "snapshot_id": (snaps[-1] if snaps else 0) + 1,
             "batch_id": target["batch_id"],
             "committed_at": time.time(),
             "tables": {k: list(v) for k, v in target["tables"].items()},
             "state": dict(target.get("state") or {}),
             "lineage": {"rollback_of": snapshot_id},
         }
-        snap_dir = os.path.join(self.root, "_snapshots")
-        snap_file = f"snap-{new_id:06d}.json"
-        snap_path = os.path.join(snap_dir, snap_file)
-        tmp = snap_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, snap_path)  # manifest durable first
-        ptr_tmp = self._latest_path + ".tmp"
-        with open(ptr_tmp, "w") as f:
-            f.write(snap_file)
-        os.replace(ptr_tmp, self._latest_path)  # the atomic commit point
+        self._publish(manifest, base_id)
         return manifest
 
     def expire_snapshots(self, keep_last: int = 2) -> dict:

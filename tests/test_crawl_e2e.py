@@ -459,17 +459,15 @@ def test_trap_cap_bounds_admissions_when_binding(spark, tmp_path, engine_run):
     assert over.count() == 0, over.limit(5).collect()
 
 
-@pytest.mark.parametrize("sched_hint", [None, 5])
-def test_stop_check_on_both_count_paths(spark, tmp_path, sched_hint):
+def test_zero_batch_stop_check(spark, tmp_path):
     """A batch that schedules nothing finishes (None) only when nothing is
     pending; a pending row gated to a later batch makes it commit and skip
-    forward instead.  The counted path (no hint) and the deferred path (a
-    hint that over-promises) must agree."""
+    forward instead."""
     spec = synthetic.WebSpec(scale=SCALE)
     empty = CrawlConfig(warehouse=str(tmp_path / "empty"), spec=spec, seed_urls=[])
     m = init_crawl(spark, empty)
     cat = SnapshotCatalog(spark, empty.warehouse)
-    assert run_batch(spark, cat, empty, m, sched_hint=sched_hint) is None
+    assert run_batch(spark, cat, empty, m) is None
 
     gated = CrawlConfig(warehouse=str(tmp_path / "gated"), spec=spec,
                         seed_urls=synthetic.seed_urls(spec)[:1])
@@ -477,6 +475,33 @@ def test_stop_check_on_both_count_paths(spark, tmp_path, sched_hint):
     cat = SnapshotCatalog(spark, gated.warehouse)
     frontier = cat.read("frontier", m).withColumn("not_before_batch", F.lit(10))
     m = cat.commit(0, appends={}, replace={"frontier": frontier})
-    nxt = run_batch(spark, cat, gated, m, sched_hint=sched_hint)
+    nxt = run_batch(spark, cat, gated, m)
     assert nxt is not None and nxt["batch_id"] == 1
     assert cat.read("progress", nxt).count() == 0
+
+
+def test_small_batch_fused_stage_is_materialized(spark, tmp_path):
+    """A politeness-sized batch's fused fetch/parse stage is fully cached
+    before any downstream job runs, so the commit's overlapped jobs only
+    ever read the cache and no page is fetched twice."""
+    from crawlspark.crawl import _Batch, _fetch_parse, _invariant_cols, _release, _schedule
+
+    cfg = CrawlConfig(warehouse=str(tmp_path / "wh"), spec=synthetic.WebSpec(scale=SCALE),
+                      budget_override=BUDGET)
+    m = init_crawl(spark, cfg)
+    cat = SnapshotCatalog(spark, cfg.warehouse)
+    seen = cat.load_bloom(m)
+    b = _Batch(spark=spark, catalog=cat, cfg=cfg, manifest=m, batch_id=1,
+               is_compact=False, cols=_invariant_cols(spark), seen=seen,
+               probed=seen, prof=None)
+    try:
+        _schedule(b)
+        assert 0 < b.n_sched < 1000
+        _fetch_parse(b)
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        entry = cache.lookupCachedData(b.pipe._jdf)
+        assert entry.isDefined()
+        builder = entry.get().cachedRepresentation().cacheBuilder()
+        assert builder.isCachedColumnBuffersLoaded()
+    finally:
+        _release(b)

@@ -1,11 +1,13 @@
 """Source hygiene without a linter: every import in the crawlspark
 package is used — a module-level one somewhere in its module, one inside
-a function somewhere in that function."""
+a function somewhere in that function — and every undecorated top-level
+function or class in it is referenced somewhere."""
 
 import ast
 from pathlib import Path
 
-PKG = Path(__file__).resolve().parent.parent / "crawlspark"
+ROOT = Path(__file__).resolve().parent.parent
+PKG = ROOT / "crawlspark"
 
 
 def _imports(nodes) -> dict[str, int]:
@@ -26,7 +28,7 @@ def _names(tree: ast.AST) -> set[str]:
 
 
 def _report(path: Path, imported: dict[str, int], used: set[str]) -> list[str]:
-    return [f"{path.relative_to(PKG.parent)}:{line} {name}"
+    return [f"{path.relative_to(ROOT)}:{line} {name}"
             for name, line in sorted(imported.items(), key=lambda kv: kv[1])
             if name not in used]
 
@@ -59,3 +61,33 @@ def test_no_unused_module_imports():
 def test_no_unused_function_imports():
     unused = [u for p in sorted(PKG.rglob("*.py")) for u in _unused_function_imports(p)]
     assert unused == []
+
+
+def _referenced(tree: ast.AST) -> set[str]:
+    """Names a module uses: bare names, attributes and imported names."""
+    out = _names(tree)
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rsplit(".", 1)[-1])
+    return out
+
+
+def test_no_unreferenced_top_level_defs():
+    """Decorated defs register themselves (query packs, UDFs); any other
+    top-level function or class nobody names is dead code."""
+    sources = [*PKG.rglob("*.py"), *(ROOT / "scripts").rglob("*.py"),
+               *(ROOT / "perfbench").rglob("*.py"), *(ROOT / "tests").rglob("*.py"),
+               ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+    used: set[str] = set()
+    for p in sources:
+        used |= _referenced(ast.parse(p.read_text(), filename=str(p)))
+    dead = [
+        f"{p.relative_to(ROOT)}:{node.lineno} {node.name}"
+        for p in sorted(PKG.rglob("*.py"))
+        for node in ast.parse(p.read_text(), filename=str(p)).body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        and not node.decorator_list and node.name not in used
+    ]
+    assert dead == []

@@ -65,6 +65,7 @@ def test_fetch_stage_not_coalesced_to_one(spark):
 
 def test_scheduler_uses_broadcast_for_hosts(spark):
     from crawlspark import schemas
+    from crawlspark.crawl import _hosts_with_rx
     from crawlspark.operators.scheduler import schedule
     from pyspark.sql import functions as F
 
@@ -78,9 +79,9 @@ def test_scheduler_uses_broadcast_for_hosts(spark):
         F.lit(0).alias("not_before_batch"), F.lit("article").alias("page_kind"),
         F.lit(None).cast(schemas.META).alias("meta"),
     )
-    hosts = spark.createDataFrame(
+    hosts = _hosts_with_rx(spark.createDataFrame(
         [(f"www.h{i}.example", 0.5, 10, [], []) for i in range(5)], schemas.HOSTS
-    )
+    ), None)
     p = _plan(spark, schedule(pending, hosts, 1))
     assert "BroadcastHashJoin" in p
 
@@ -105,41 +106,44 @@ def test_pending_antijoin_prunes_progress_columns(spark, tmp_path):
         assert "status" not in line and "outcome" not in line, line
 
 
-def test_exact_unseen_small_positives_never_shuffles_urlseen(spark):
-    """crawl-loop dedup: with small_positives the exact check must be two
-    BROADCAST joins (semi-scan of urlseen + anti vs the hit set) — zero
-    SortMergeJoin even when auto-broadcast is disabled, i.e. the 10^10-row
-    seen table is scanned, never repartitioned."""
+def test_probe_small_positives_never_shuffles_urlseen(spark):
+    """crawl-loop dedup: with small_positives the exact check of the Bloom
+    positives must be two BROADCAST joins (semi-scan of urlseen + anti vs
+    the hit set) — zero SortMergeJoin even when auto-broadcast is
+    disabled, i.e. the 10^10-row seen table is scanned, never
+    repartitioned."""
     from pyspark.sql import functions as F
 
-    from crawlspark.operators.urlseen import _exact_unseen
+    from crawlspark.operators.bloom import BloomState
+    from crawlspark.operators.urlseen import bloom_delta, probe_unseen
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    state = BloomState(8, 1 << 18)
     try:
-        pos = spark.range(100).select(
+        cand = spark.range(100).select(
             F.concat(F.lit("https://h/p/"), F.col("id").cast("string")).alias("url"),
             F.lit(1).alias("depth"),
         )
         seen = spark.range(100000).select(
             F.concat(F.lit("https://h/p/"), (F.col("id") * 2).cast("string")).alias("url")
         )
-        mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+        state.merge(bloom_delta(spark, seen, state))
 
-        fast = _exact_unseen(pos, seen, small_positives=True)
-        plan = fast._jdf.queryExecution().explainString(mode)
+        fast = probe_unseen(spark, cand, seen, state, small_positives=True)
+        plan = _plan(spark, fast)
         assert "SortMergeJoin" not in plan
         # formatted mode lists every node twice (tree + details): 2 joins
         assert plan.count("BroadcastHashJoin") >= 2
 
-        slow = _exact_unseen(pos, seen, small_positives=False)
-        plan2 = slow._jdf.queryExecution().explainString(mode)
-        assert "SortMergeJoin" in plan2  # the default shape this replaces
+        slow = probe_unseen(spark, cand, seen, state, small_positives=False)
+        assert "SortMergeJoin" in _plan(spark, slow)  # the default shape
 
         # and the two shapes agree
         a = {r["url"] for r in fast.collect()}
         b = {r["url"] for r in slow.collect()}
         assert a == b and len(a) == 50
     finally:
+        state.release()
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
 
 

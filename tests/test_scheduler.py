@@ -6,6 +6,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from crawlspark import schemas
+from crawlspark.crawl import _hosts_with_rx
 from crawlspark.operators.scheduler import schedule
 
 
@@ -26,10 +27,10 @@ def _pending(spark, n, n_hosts=3):
 
 
 def _hosts(spark, hosts, budget=25, disallow=None, allow=None):
-    return spark.createDataFrame(
+    return _hosts_with_rx(spark.createDataFrame(
         [(h, 0.5, budget, disallow or [], allow or []) for h in hosts],
         schemas.HOSTS,
-    )
+    ), None)
 
 
 def test_two_phase_topk_equals_plain_topk(spark):

@@ -301,12 +301,25 @@ def test_expire_sweeps_crash_orphan_table_dirs(spark, tmp_path):
     assert cat.read("metrics").count() == 6  # both committed deltas read
 
 
+def _latest_moves_after_first_read(cat, stale):
+    """Patch ``cat.latest`` so its first call returns ``stale`` (the base a
+    second writer would have read) and every later call the real LATEST."""
+    from unittest import mock
+
+    calls = {"n": 0}
+    real = cat.latest
+
+    def stale_then_real():
+        calls["n"] += 1
+        return stale if calls["n"] == 1 else real()
+
+    return mock.patch.object(cat, "latest", side_effect=stale_then_real)
+
+
 def test_concurrent_commit_loses_cleanly(spark, tmp_path):
     """Optimistic concurrency: a commit based on a stale LATEST must be
     refused at swap time, corrupting nothing — the winner's manifest and
     data survive, the loser's deltas become sweepable orphans."""
-    from unittest import mock
-
     import pytest
 
     from crawlspark.tables import ConcurrentCommitError
@@ -316,14 +329,7 @@ def test_concurrent_commit_loses_cleanly(spark, tmp_path):
     stale = cat.latest()  # the base a second writer would have read
     cat.commit(2, appends={"metrics": _metrics_df(spark, 2)})  # winner
 
-    calls = {"n": 0}
-    real = cat.latest
-
-    def stale_then_real():
-        calls["n"] += 1
-        return stale if calls["n"] == 1 else real()
-
-    with mock.patch.object(cat, "latest", side_effect=stale_then_real):
+    with _latest_moves_after_first_read(cat, stale):
         with pytest.raises(ConcurrentCommitError):
             cat.commit(3, appends={"metrics": _metrics_df(spark, 3)})
 
@@ -335,6 +341,26 @@ def test_concurrent_commit_loses_cleanly(spark, tmp_path):
     res = cat.expire_snapshots(keep_last=10)
     assert res["files_removed"] >= 1
     assert cat.read("metrics").count() == 6
+
+
+def test_rollback_refuses_moved_latest(spark, tmp_path):
+    """rollback publishes through the same conflict check as commit: when
+    LATEST moves between its base read and its pointer swap, it is
+    refused and publishes no manifest."""
+    import pytest
+
+    from crawlspark.tables import ConcurrentCommitError
+
+    cat = SnapshotCatalog(spark, str(tmp_path))
+    cat.commit(1, appends={"metrics": _metrics_df(spark, 1)})
+    stale = cat.latest()
+    cat.commit(2, appends={"metrics": _metrics_df(spark, 2)})  # winner
+
+    with _latest_moves_after_first_read(cat, stale):
+        with pytest.raises(ConcurrentCommitError):
+            cat.rollback(1)
+    assert cat.latest()["snapshot_id"] == 2
+    assert cat.snapshots() == [1, 2]
 
 
 def test_state_fn_late_append_survives_same_table_replace(spark, tmp_path):
