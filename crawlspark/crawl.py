@@ -46,11 +46,12 @@ class CrawlConfig:
     keep_snapshots: int = 0  # >0: expire_snapshots(keep_last=N) after compaction
     expected_urls: int | None = None  # auto-size the Bloom for this key count
     budget_override: int | None = None  # tests: force small per-host budgets
-    # Bloom state layout of a new crawl: None = auto (partitioned once the
-    # configured state exceeds bloom.BROADCAST_CAP_BYTES — the 10^10-key
-    # regime); True/False force either path (tests force True to run e2e
-    # equality on it).  A resumed crawl keeps its manifest's layout.
-    bloom_partitioned: bool | None = None
+    # Bloom state layout of a new crawl: chosen by size (partitioned once
+    # the configured state exceeds bloom.BROADCAST_CAP_BYTES — the
+    # 10^10-key regime); True forces the partitioned layout (tests force
+    # it to run e2e equality on it).  A resumed crawl keeps its manifest's
+    # layout.
+    bloom_partitioned: bool = False
     # serve previously-fetched articles from the fetched-cache log instead
     # of refetching (re-crawl mode; see reset_for_recrawl)
     use_fetch_cache: bool = False
@@ -71,7 +72,6 @@ class CrawlConfig:
     # filter shape is identical.
     fetch_cache_adaptive: bool = False
     adaptive_base_snaps: int = 2
-    adaptive_max_doublings: int = 5
     # conditional revalidation of STALE cache entries (the HTTP 304 /
     # RFC 7232 If-None-Match analog, over the fetched log's decoded-body
     # hash): a scheduled article whose cache entry has expired is still
@@ -93,7 +93,6 @@ class CrawlConfig:
     # total rebuild work over a crawl's lifetime is O(final seen set),
     # amortized O(1) bits per key.
     bloom_target_fpr: float = 0.01
-    bloom_autosplit: bool = True
     # reference SEARCH_ENTIRE_WEBSITE (:34, default 1): True follows every
     # anchor; False = targeted pagination — domains with a next_page_text
     # rule follow only their "Next Page"-style anchor (:751-758), others
@@ -113,7 +112,6 @@ class CrawlConfig:
     # the optimistic prior so discovery is never starved).  None (default)
     # = politeness budgets alone bound the batch, plans untouched.
     global_batch_cap: int | None = None
-    yield_prior_permille: int = 1000
     # anti-starvation aging under the global cap: each batch a row waits
     # adds this much to its effective yield score (0 = pure yield order)
     yield_age_bonus_permille: int = 0
@@ -159,15 +157,13 @@ class CrawlConfig:
     use_canonical_link: bool = False
     # AutoThrottle (reference settings scaffold settings.py:71-80, at
     # batch granularity): per-host fetch budget adapts to OBSERVED
-    # latency — delay folds toward latency/target_concurrency each batch,
-    # clamped between the robots crawl-delay (politeness floor: never
-    # faster than robots) and max_delay; budget = period // delay.  First
-    # contact is cautious (start_delay), then fast hosts speed up.
+    # latency — delay folds toward the mean latency each batch, clamped
+    # between the robots crawl-delay (politeness floor: never faster than
+    # robots) and rules.AUTOTHROTTLE_MAX_DELAY_MS; budget = period // delay.
+    # First contact is cautious (rules.AUTOTHROTTLE_START_DELAY_MS), then
+    # fast hosts speed up.
     # Ignored while budget_override is set (the test sizing knob wins).
     autothrottle: bool = False
-    autothrottle_start_delay_ms: int = 5000
-    autothrottle_max_delay_ms: int = 60000
-    autothrottle_target_concurrency: int = 1
     # per-host circuit breaker (scheduler.breaker_blocked_hosts): a host
     # whose last N ACTIVE batches produced zero successful fetches stops
     # being scheduled for `cooldown` batches, then re-admits for one probe
@@ -504,8 +500,7 @@ def init_crawl(spark: SparkSession, cfg: CrawlConfig) -> dict:
                           bloom=_seed_bloom(spark, cfg, catalog, seeds_df))
 
 
-def reset_for_recrawl(spark: SparkSession, cfg: CrawlConfig,
-                      refresh_robots: bool = True) -> dict:
+def reset_for_recrawl(spark: SparkSession, cfg: CrawlConfig) -> dict:
     """Begin a NEW crawl epoch in an existing warehouse: frontier, urlseen,
     Bloom state and progress are reset to the seeds; documents, metrics
     and the fetched cache are RETAINED — the reference's HTTPCACHE re-run
@@ -514,38 +509,26 @@ def reset_for_recrawl(spark: SparkSession, cfg: CrawlConfig,
     listings (the link-discovery surface) but serves previously-fetched
     articles from the cache log as terminal 'cached' records.
 
-    ``refresh_robots`` (default True, matching the reference: Scrapy
-    re-fetches robots.txt every run even when the HTTP cache persists):
-    the hosts politeness table is REBUILT by re-fetching robots for every
-    known + seed host — one distributed job, no host list on the driver.
-    False appends only the genuinely-new seed hosts and keeps stale
-    politeness state."""
+    The hosts politeness table is REBUILT by re-fetching robots for every
+    known + seed host (the reference's Scrapy re-fetches robots.txt every
+    run even when the HTTP cache persists) — one distributed job, no host
+    list on the driver."""
     catalog = SnapshotCatalog(spark, cfg.warehouse)
     assert catalog.latest() is not None, "reset_for_recrawl needs an existing crawl"
     seeds_df = _seed_frontier(spark, cfg)
     seen_df = seeds_df.select("url", "url_hash", F.lit(0).alias("added_batch"))
-    hosts_tbl = catalog.read("hosts")
+    all_hosts = catalog.read("hosts").select("host").unionByName(
+        seeds_df.select("host")
+    ).distinct()
     replace = {
         "frontier": seeds_df,
         "urlseen": seen_df,
         "progress": catalog._empty("progress"),
+        "hosts": _hosts_frame(all_hosts),
     }
-    appends = {}
-    if refresh_robots:
-        all_hosts = hosts_tbl.select("host").unionByName(
-            seeds_df.select("host")
-        ).distinct()
-        replace["hosts"] = _hosts_frame(all_hosts)
-    else:
-        new_hosts_df = seeds_df.select("host").distinct().join(
-            hosts_tbl.select("host"), on="host", how="left_anti"
-        )
-        # once-per-epoch path: always append (commit tolerates a 0-row
-        # file); no host names cross the driver
-        appends = {"hosts": _hosts_frame(new_hosts_df)}
     return catalog.commit(
         0,
-        appends=appends,
+        appends={},
         replace=replace,
         bloom=_seed_bloom(spark, cfg, catalog, seeds_df),
     )
@@ -655,12 +638,7 @@ def _schedule(b: _Batch) -> None:
     hosts_df = _hosts_with_rx(b.hosts_tbl, cfg.budget_override)
     if cfg.autothrottle and cfg.budget_override is None:
         hosts_df = scheduler.apply_autothrottle(
-            hosts_df, catalog.read("metrics", manifest),
-            start_delay_ms=cfg.autothrottle_start_delay_ms,
-            max_delay_ms=cfg.autothrottle_max_delay_ms,
-            target_concurrency=cfg.autothrottle_target_concurrency,
-            period_ms=int(rules.BATCH_PERIOD_S * 1000),
-        )
+            hosts_df, catalog.read("metrics", manifest))
     if cfg.failure_trip_threshold is not None:
         # circuit breaker: zero the budget of hosts whose breaker is open
         # (their pending rows stay in the frontier and re-admit when the
@@ -682,10 +660,8 @@ def _schedule(b: _Batch) -> None:
         # function of frontier + metrics state, not of cache contents)
         scheduled = scheduler.cap_global_batch(
             scheduled,
-            scheduler.host_yield_scores(
-                catalog.read("metrics", manifest), cfg.yield_prior_permille
-            ),
-            cfg.global_batch_cap, cfg.yield_prior_permille,
+            scheduler.host_yield_scores(catalog.read("metrics", manifest)),
+            cfg.global_batch_cap,
             age_bonus_permille=cfg.yield_age_bonus_permille,
             batch_id=b.batch_id,
         )
@@ -742,10 +718,7 @@ def _cache_hits(b: _Batch, scheduled: DataFrame, fetched_log: DataFrame) -> Data
             F.coalesce(F.col("snap_id"), F.lit(0)).cast("long").alias("snap_id"),
             F.coalesce(F.col("body_hash"), F.lit("")).alias("body_hash"),
         )
-        state = freshness_state(
-            hist, base_snaps=cfg.adaptive_base_snaps,
-            max_doublings=cfg.adaptive_max_doublings,
-        )
+        state = freshness_state(hist, base_snaps=cfg.adaptive_base_snaps)
         fresh = state.filter(F.col("next_due_snap") > F.lit(cur_snap)).select("url")
     elif cfg.fetch_cache_max_age_snaps is not None:
         # refresh-if-older-than-N: keep only entries whose write commit is
@@ -946,8 +919,7 @@ def _bloom_autosplit(b: _Batch) -> dict:
     job, same kernel as the steady-state update; old blob files stay
     referenced by old snapshots (isolation) and are swept at expiry.
     Returns the lineage update."""
-    if (not b.cfg.bloom_autosplit
-            or b.seen.fpr_estimate() <= 10 * b.cfg.bloom_target_fpr):
+    if b.seen.fpr_estimate() <= 10 * b.cfg.bloom_target_fpr:
         return {}
     all_seen = b.catalog.read("urlseen", b.manifest).select("url").unionByName(
         b.new_frontier.select("url")

@@ -278,14 +278,12 @@ SEEN_STATE_KEYS = tuple(cls.MANIFEST_KEY for cls in _LAYOUTS)
 
 
 def new_seen_state(n_buckets: int, bits: int, state_dir: str,
-                   partitioned: bool | None = None):
-    """An empty URL-seen filter.  ``partitioned=None`` picks the layout by
-    size: the broadcast ``BloomState`` up to BROADCAST_CAP_BYTES of bits,
-    else the ``BloomBucketStore`` with its blobs under ``state_dir``;
-    True/False force either."""
-    if partitioned is None:
-        partitioned = n_buckets * (bits // 8) > BROADCAST_CAP_BYTES
-    if partitioned:
+                   partitioned: bool = False):
+    """An empty URL-seen filter.  The layout goes by size: the broadcast
+    ``BloomState`` up to BROADCAST_CAP_BYTES of bits, else the
+    ``BloomBucketStore`` with its blobs under ``state_dir``;
+    ``partitioned=True`` forces the latter."""
+    if partitioned or n_buckets * (bits // 8) > BROADCAST_CAP_BYTES:
         return BloomBucketStore(n_buckets, bits, k=7, root=os.path.join(state_dir, BLOB_DIR))
     return BloomState(n_buckets, bits)
 

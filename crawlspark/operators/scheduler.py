@@ -26,6 +26,10 @@ from pyspark.sql import functions as F
 from crawlspark import rules
 
 SALT_BUCKETS = 16  # phase-1 sub-groups per host (hot-host skew mitigation)
+# yield admission: the optimistic score of a host without evidence, and
+# the terminal failures that count as evidence without an ok fetch
+YIELD_PRIOR_PERMILLE = 1000
+MIN_EVIDENCE = 3
 
 
 def priority_expr(depth, page_kind, url):
@@ -134,19 +138,17 @@ def schedule(pending: DataFrame, hosts: DataFrame, batch_id: int,
 
 # ------------------------------------------------------- adaptive admission
 
-def host_yield_scores(metrics: DataFrame,
-                      prior_permille: int = 1000,
-                      min_evidence: int = 3) -> DataFrame:
+def host_yield_scores(metrics: DataFrame) -> DataFrame:
     """host → integer yield score from the per-(batch, host) metrics table:
     documents produced per successful fetch, in permille.  Hosts without
-    enough evidence keep the optimistic ``prior_permille`` (new hosts must
-    not be starved before they have had a chance to produce — OPIC-style
-    optimism).  Evidence means at least one ok fetch, or at least
-    ``min_evidence`` terminal failures/skips: one unlucky 404 must not
+    enough evidence keep the optimistic YIELD_PRIOR_PERMILLE (new hosts
+    must not be starved before they have had a chance to produce —
+    OPIC-style optimism).  Evidence means at least one ok fetch, or at
+    least MIN_EVIDENCE terminal failures/skips: one unlucky 404 must not
     zero a host forever (with a binding cap and no ok fetches, a zeroed
     host is never rescheduled, so the score could never self-correct),
-    but a host that has failed ``min_evidence`` times with nothing ok
-    scores 0 rather than outranking measured live hosts.
+    but a host that has failed MIN_EVIDENCE times with nothing ok scores
+    0 rather than outranking measured live hosts.
 
     All-integer ((docs*1000) DIV max(ok,1)) so the score — and therefore
     the admission order built on it — is bit-identical at any parallelism.
@@ -156,18 +158,17 @@ def host_yield_scores(metrics: DataFrame,
         (F.sum("n_failed") + F.sum("n_skipped")).alias("terminal_bad"),
     )
     has_evidence = (F.col("ok") > 0) | (
-        F.col("terminal_bad") >= int(min_evidence)
+        F.col("terminal_bad") >= MIN_EVIDENCE
     )
     return agg.select(
         "host",
         F.when(has_evidence, F.expr("(docs * 1000) div greatest(ok, 1)"))
-        .otherwise(F.lit(prior_permille)).cast("long")
+        .otherwise(F.lit(YIELD_PRIOR_PERMILLE)).cast("long")
         .alias("yield_permille"),
     )
 
 
 def cap_global_batch(sched: DataFrame, scores: DataFrame, cap: int,
-                     prior_permille: int = 1000,
                      age_bonus_permille: int = 0,
                      batch_id: int | None = None) -> DataFrame:
     """Global fetch-capacity cap with yield-weighted admission: when the
@@ -192,7 +193,7 @@ def cap_global_batch(sched: DataFrame, scores: DataFrame, cap: int,
     as TakeOrderedAndProject — a per-partition top-``cap`` heap plus a
     driver merge of cap-sized slivers, never a global sort."""
     s = sched.join(F.broadcast(scores), on="host", how="left").withColumn(
-        "_ys", F.coalesce("yield_permille", F.lit(prior_permille))
+        "_ys", F.coalesce("yield_permille", F.lit(YIELD_PRIOR_PERMILLE))
     )
     if age_bonus_permille and batch_id is not None:
         s = s.withColumn(
@@ -249,39 +250,39 @@ def cap_template_explosion(cand: DataFrame, cap: int,
 # ---- AutoThrottle: latency-adaptive per-host budgets ---------------------
 
 def autothrottle_fold_py(batches: list[tuple[int, int, int]], *,
-                         min_delay_ms: int, start_delay_ms: int,
-                         max_delay_ms: int, target_concurrency: int) -> int:
+                         min_delay_ms: int) -> int:
     """The per-host delay recurrence, shared verbatim by the engine's
     grouped-map kernel and the crawl oracle so the two cannot drift:
-    Scrapy AutoThrottle's update (delay → average of delay and
-    latency/target_concurrency; reference settings scaffold
+    Scrapy AutoThrottle's update (delay → average of delay and latency,
+    at target concurrency 1; reference settings scaffold
     settings.py:71-80) at batch granularity and in exact integer
     milliseconds.  ``batches`` is the host's metrics history as
     (batch_id, n_scheduled, sum_elapsed_ms), any order.  The robots
     crawl-delay stays the politeness FLOOR (throttling never fetches
-    faster than robots allows); the start delay makes the first contact
+    faster than robots allows) and rules.AUTOTHROTTLE_MAX_DELAY_MS the
+    ceiling; rules.AUTOTHROTTLE_START_DELAY_MS makes the first contact
     cautious, then observed latencies speed the host up."""
-    d = max(start_delay_ms, min_delay_ms)
+    d = max(rules.AUTOTHROTTLE_START_DELAY_MS, min_delay_ms)
     for _, n, sum_ms in sorted(batches):
         if not n:
             continue
-        target = (sum_ms // n) // target_concurrency
-        d = (d + target) // 2
-        d = min(max(d, min_delay_ms), max_delay_ms)
+        d = (d + sum_ms // n) // 2
+        d = min(max(d, min_delay_ms), rules.AUTOTHROTTLE_MAX_DELAY_MS)
     return d
 
 
-def apply_autothrottle(hosts: DataFrame, metrics: DataFrame, *,
-                       start_delay_ms: int, max_delay_ms: int,
-                       target_concurrency: int, period_ms: int) -> DataFrame:
+def apply_autothrottle(hosts: DataFrame, metrics: DataFrame) -> DataFrame:
     """Replace the static robots-derived ``budget_per_batch`` with the
-    AutoThrottle budget ``max(1, period // delay)``, where delay folds the
-    host's full metrics history (autothrottle_fold_py).  The fold runs as
-    a grouped-map pandas kernel keyed by host — each host's history is
-    n_batches rows, so at 10^5+ hosts the state scan is one distributed
-    job and nothing lands on the driver.  Hosts with no history yet get
-    the cautious initial budget from max(start_delay, robots delay)."""
+    AutoThrottle budget ``max(1, period // delay)``, where the period is
+    rules.BATCH_PERIOD_S and delay folds the host's full metrics history
+    (autothrottle_fold_py).  The fold runs as a grouped-map pandas kernel
+    keyed by host — each host's history is n_batches rows, so at 10^5+
+    hosts the state scan is one distributed job and nothing lands on the
+    driver.  Hosts with no history yet get the cautious initial budget
+    from max(start delay, robots delay)."""
     import pandas as pd
+
+    period_ms = int(rules.BATCH_PERIOD_S * 1000)
 
     delays = hosts.select(
         "host", (F.col("crawl_delay_s") * 1000).cast("long").alias("_min_d")
@@ -296,9 +297,7 @@ def apply_autothrottle(hosts: DataFrame, metrics: DataFrame, *,
             list(zip(pdf["batch_id"].astype(int),
                      pdf["n_scheduled"].astype(int),
                      pdf["sum_elapsed_ms"].astype(int))),
-            min_delay_ms=min_d, start_delay_ms=start_delay_ms,
-            max_delay_ms=max_delay_ms,
-            target_concurrency=target_concurrency,
+            min_delay_ms=min_d,
         )
         return pd.DataFrame(
             {"host": [host],
@@ -309,7 +308,7 @@ def apply_autothrottle(hosts: DataFrame, metrics: DataFrame, *,
         fold, schema="host string, _at_budget long")
     init_budget = F.greatest(
         F.lit(1),
-        F.expr(f"{period_ms} div greatest({start_delay_ms}L, "
+        F.expr(f"{period_ms} div greatest({rules.AUTOTHROTTLE_START_DELAY_MS}L, "
                f"cast(crawl_delay_s * 1000 as long))"),
     )
     return (

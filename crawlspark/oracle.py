@@ -62,19 +62,13 @@ def crawl_oracle(
     # AutoThrottle state (engine twin: scheduler.apply_autothrottle):
     # per-host metrics history, folded by the SHARED recurrence
     at_hist: dict[str, list[tuple[int, int, int]]] = {}
-    _AT_START, _AT_MAX, _AT_C = 5000, 60000, 1
-    _AT_PERIOD = int(rules.BATCH_PERIOD_S * 1000)
 
     def at_budget(host: str) -> int:
         from crawlspark.operators.scheduler import autothrottle_fold_py
 
         min_d = int(hosts[host]["crawl_delay_s"] * 1000)
-        d = autothrottle_fold_py(
-            at_hist.get(host, []), min_delay_ms=min_d,
-            start_delay_ms=_AT_START, max_delay_ms=_AT_MAX,
-            target_concurrency=_AT_C,
-        )
-        return max(1, _AT_PERIOD // d)
+        d = autothrottle_fold_py(at_hist.get(host, []), min_delay_ms=min_d)
+        return max(1, int(rules.BATCH_PERIOD_S * 1000) // d)
     # pending: url -> record
     pending: dict[str, dict] = {}
 

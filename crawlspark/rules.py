@@ -372,3 +372,7 @@ MAX_RETRIES = 5
 DEFAULT_CRAWL_DELAY_S = 0.5
 BATCH_PERIOD_S = 30.0  # virtual micro-batch period → per-host budget
 DEFAULT_BUDGET_PER_BATCH = int(BATCH_PERIOD_S / DEFAULT_CRAWL_DELAY_S)  # 60
+# AutoThrottle delay bounds (reference AUTOTHROTTLE_START_DELAY /
+# AUTOTHROTTLE_MAX_DELAY, settings.py:71-80), in milliseconds
+AUTOTHROTTLE_START_DELAY_MS = 5000
+AUTOTHROTTLE_MAX_DELAY_MS = 60000

@@ -7,14 +7,17 @@ compaction — over plain Parquet + JSON manifests:
 
   * every micro-batch writes its per-table delta files, then one manifest
     JSON listing the *complete* file set of every table plus engine state
-    (Bloom blobs, host politeness, batch counter), then atomically renames
-    a tmp pointer onto ``_snapshots/LATEST`` — readers see either the old
-    or the new snapshot, never a partial commit (north_rule: "resume
-    exactly from the last committed frontier snapshot");
+    (the URL-seen filter, batch counter, Bloom lineage; host politeness
+    lives in the ``hosts`` table), then atomically renames a tmp pointer
+    onto ``_snapshots/LATEST`` — readers see either the old or the new
+    snapshot, never a partial commit (north_rule: "resume exactly from
+    the last committed frontier snapshot");
   * ``pending`` frontier = frontier deltas LEFT ANTI JOIN progress deltas
-    (MERGE-style updates without rewriting the big table); ``compact()``
-    rewrites the pending set as a new base and truncates the progress log
-    so per-batch read cost stays flat as the crawl grows;
+    (MERGE-style updates without rewriting the big table); a compaction
+    commit (``replace`` + ``rewrite``, driven by ``crawl._compaction``)
+    rewrites the pending set as a new frontier base and folds each
+    append-only log's deltas into one file, so per-batch read cost stays
+    flat as the crawl grows while progress stays the complete audit log;
   * per-snapshot lineage: the manifest records, per table, which files
     each batch added (metrics table holds per-(batch, host) counters).
 

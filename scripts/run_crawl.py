@@ -52,8 +52,6 @@ def main():
     ap.add_argument("--bloom-target-fpr", type=float, default=0.01,
                     help="design FPR for the capacity auto-guard: past 10x "
                          "this, compaction doubles the bucket count")
-    ap.add_argument("--no-bloom-autosplit", action="store_true",
-                    help="disable the capacity auto-guard")
     ap.add_argument("--targeted", action="store_true",
                     help="targeted pagination (SEARCH_ENTIRE_WEBSITE=0 "
                          "analog): follow only per-domain next-page "
@@ -85,9 +83,11 @@ def main():
                          "(requires --recrawl + --cache-max-age)")
     ap.add_argument("--autothrottle", action="store_true",
                     help="latency-adaptive per-host budgets (AutoThrottle "
-                         "analog): cautious first contact, then budget = "
-                         "period // folded delay, floored at robots "
-                         "crawl-delay")
+                         "analog): cautious first contact at "
+                         "rules.AUTOTHROTTLE_START_DELAY_MS, then budget = "
+                         "rules.BATCH_PERIOD_S // folded delay, floored at "
+                         "robots crawl-delay and capped at "
+                         "rules.AUTOTHROTTLE_MAX_DELAY_MS")
     ap.add_argument("--failure-trip-threshold", type=int, default=None,
                     metavar="N",
                     help="circuit breaker: stop scheduling a host after N "
@@ -118,12 +118,11 @@ def main():
         compact_every=args.compact_every,
         seed_file=args.seed_file,
         expected_urls=args.expected_urls,
-        bloom_partitioned=True if args.bloom_partitioned else None,
+        bloom_partitioned=args.bloom_partitioned,
         use_fetch_cache=args.recrawl,
         fetch_cache_max_age_snaps=args.cache_max_age,
         revalidate_stale=args.revalidate_stale,
         bloom_target_fpr=args.bloom_target_fpr,
-        bloom_autosplit=not args.no_bloom_autosplit,
         search_entire_site=not args.targeted,
         use_sitemaps=args.use_sitemaps,
         use_feeds=args.use_feeds,

@@ -4,7 +4,7 @@ settings.py:71-80).  The engine's grouped-map fold and the oracle share
 autothrottle_fold_py, so equality here proves the metrics histories the
 two sides fold are identical, batch for batch."""
 
-from crawlspark import synthetic
+from crawlspark import rules, synthetic
 from crawlspark.crawl import CrawlConfig, run_crawl
 from crawlspark.operators.scheduler import (
     apply_autothrottle,
@@ -18,15 +18,15 @@ MAX_BATCHES = 25
 
 
 def test_fold_recurrence_properties():
-    kw = dict(min_delay_ms=500, start_delay_ms=5000, max_delay_ms=60000,
-              target_concurrency=1)
-    assert autothrottle_fold_py([], **kw) == 5000  # cautious first contact
+    kw = dict(min_delay_ms=500)
+    # cautious first contact
+    assert autothrottle_fold_py([], **kw) == rules.AUTOTHROTTLE_START_DELAY_MS
     # fast host converges to the robots floor, never below it
     hist = [(i, 10, 1000) for i in range(1, 30)]
     assert autothrottle_fold_py(hist, **kw) == 500
     # slow host converges toward its latency, clamped at max
     slow = [(i, 2, 400_000) for i in range(1, 30)]
-    assert autothrottle_fold_py(slow, **kw) == 60000
+    assert autothrottle_fold_py(slow, **kw) == rules.AUTOTHROTTLE_MAX_DELAY_MS
     # fold is order-independent (sorted inside)
     assert autothrottle_fold_py(list(reversed(hist)), **kw) == 500
 
@@ -43,19 +43,15 @@ def test_engine_fold_matches_python(spark):
     )
     out = {
         r["host"]: r["budget_per_batch"]
-        for r in apply_autothrottle(
-            hosts, metrics, start_delay_ms=5000, max_delay_ms=60000,
-            target_concurrency=1, period_ms=30000,
-        ).collect()
+        for r in apply_autothrottle(hosts, metrics).collect()
     }
+    period_ms = int(rules.BATCH_PERIOD_S * 1000)
     for host, min_d, hist in (
         ("h1", 500, [(1, 6, 600), (2, 12, 2400)]),
         ("h2", 2000, [(1, 3, 90_000)]),
     ):
-        d = autothrottle_fold_py(
-            hist, min_delay_ms=min_d, start_delay_ms=5000,
-            max_delay_ms=60000, target_concurrency=1)
-        assert out[host] == max(1, 30000 // d), host
+        d = autothrottle_fold_py(hist, min_delay_ms=min_d)
+        assert out[host] == max(1, period_ms // d), host
 
 
 def test_autothrottle_equals_oracle_and_speeds_up(spark, tmp_path):

@@ -255,8 +255,7 @@ def test_recrawl_refreshes_robots(spark, tmp_path):
     """The re-crawl epoch re-fetches robots for every known host (the
     reference re-reads robots.txt each run even with a persistent HTTP
     cache): the hosts table is REPLACED with one freshly-built file set,
-    values re-derived from robots.txt, one row per host, no duplicates —
-    and refresh_robots=False keeps the old append-only behavior."""
+    values re-derived from robots.txt, one row per host, no duplicates."""
     from crawlspark.crawl import reset_for_recrawl
 
     wh = str(tmp_path / "whr")
@@ -266,7 +265,7 @@ def test_recrawl_refreshes_robots(spark, tmp_path):
     cat = SnapshotCatalog(spark, wh)
     hosts_before = {r["host"]: r["crawl_delay_s"]
                     for r in cat.read("hosts").collect()}
-    m = reset_for_recrawl(spark, cfg)  # refresh_robots defaults True
+    m = reset_for_recrawl(spark, cfg)
     assert m["lineage"]["hosts"]["mode"] == "replace"
     after = cat.read("hosts", m)
     rows = after.collect()
@@ -388,12 +387,14 @@ def test_global_cap_resume_equals_uninterrupted(spark, tmp_path):
     """The caps compose with resume: a capped crawl killed mid-run and
     resumed lands on exactly the uninterrupted capped crawl's seen set and
     documents (admission is a pure function of frontier + metrics state,
-    both snapshot-committed, so the cut is replayed identically)."""
+    both snapshot-committed, so the cut is replayed identically).  Aging
+    is on, so its batch-id term must replay identically too."""
     # cap=40 binds while the frontier is rich but still lets the crawl
     # terminate naturally inside max_batches — natural termination is what
     # makes the two warehouses directly comparable
     cfg_kw = dict(spec=synthetic.WebSpec(scale=SCALE), budget_override=BUDGET,
-                  compact_every=4, global_batch_cap=40, trap_template_cap=50)
+                  compact_every=4, global_batch_cap=40, trap_template_cap=50,
+                  yield_age_bonus_permille=200)
     wh_a = str(tmp_path / "wh_capfull")
     run_crawl(spark, CrawlConfig(warehouse=wh_a, max_batches=40, **cfg_kw))
     wh_b = str(tmp_path / "wh_capresume")

@@ -1,9 +1,11 @@
 """Source hygiene without a linter: every import in the crawlspark
 package is used — a module-level one somewhere in its module, one inside
-a function somewhere in that function — and every undecorated top-level
-function or class in it is referenced somewhere."""
+a function somewhere in that function — every undecorated top-level
+function or class in it is referenced somewhere, and every CrawlConfig
+field is set by some caller."""
 
 import ast
+import dataclasses
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -91,3 +93,18 @@ def test_no_unreferenced_top_level_defs():
         and not node.decorator_list and node.name not in used
     ]
     assert dead == []
+
+
+def test_every_crawl_config_field_is_passed_somewhere():
+    """A CrawlConfig field no caller ever sets is a constant in disguise:
+    each field must appear as a call keyword outside crawl.py."""
+    from crawlspark.crawl import CrawlConfig
+
+    sources = [*(p for p in PKG.rglob("*.py") if p != PKG / "crawl.py"),
+               *(ROOT / "scripts").rglob("*.py"), *(ROOT / "perfbench").rglob("*.py"),
+               *(ROOT / "tests").rglob("*.py"), ROOT / "bench.py"]
+    passed = {kw.arg for p in sources
+              for n in ast.walk(ast.parse(p.read_text(), filename=str(p)))
+              if isinstance(n, ast.Call) for kw in n.keywords}
+    unset = [f.name for f in dataclasses.fields(CrawlConfig) if f.name not in passed]
+    assert unset == []
