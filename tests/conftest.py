@@ -1,3 +1,4 @@
+import os
 import sys
 from pathlib import Path
 
@@ -11,7 +12,12 @@ from crawlspark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", master="local[8]", shuffle_partitions=8)
+    # Test data is tiny: four task slots and a 4 GiB heap are plenty.
+    # Under get_spark's 48 GiB default the JVM grows past 14 GB during the
+    # suite, more than a 16 GB machine can spare.
+    s = get_spark("tests", master="local[4]", shuffle_partitions=4,
+                  extra_conf={"spark.driver.memory":
+                              os.environ.get("SPARK_GRAFT_DRIVER_MEM", "4g")})
     yield s
     s.stop()
 

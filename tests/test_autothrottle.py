@@ -4,6 +4,8 @@ settings.py:71-80).  The engine's grouped-map fold and the oracle share
 autothrottle_fold_py, so equality here proves the metrics histories the
 two sides fold are identical, batch for batch."""
 
+import pytest
+
 from crawlspark import rules, synthetic
 from crawlspark.crawl import CrawlConfig, run_crawl
 from crawlspark.operators.scheduler import (
@@ -54,13 +56,21 @@ def test_engine_fold_matches_python(spark):
         assert out[host] == max(1, period_ms // d), host
 
 
-def test_autothrottle_equals_oracle_and_speeds_up(spark, tmp_path):
-    spec = synthetic.WebSpec(scale=SCALE)
-    wh = str(tmp_path / "wh_at")
+@pytest.fixture(scope="module")
+def throttled_wh(spark, tmp_path_factory):
+    """One uninterrupted autothrottle crawl, read (never written) by the
+    tests below."""
+    wh = str(tmp_path_factory.mktemp("wh_at"))
     run_crawl(spark, CrawlConfig(
-        warehouse=wh, spec=spec, max_batches=MAX_BATCHES,
-        compact_every=4, autothrottle=True,
+        warehouse=wh, spec=synthetic.WebSpec(scale=SCALE),
+        max_batches=MAX_BATCHES, compact_every=4, autothrottle=True,
     ))
+    return wh
+
+
+def test_autothrottle_equals_oracle_and_speeds_up(spark, throttled_wh):
+    spec = synthetic.WebSpec(scale=SCALE)
+    wh = throttled_wh
     ora = crawl_oracle(spec, max_batches=MAX_BATCHES, autothrottle=True)
 
     cat = SnapshotCatalog(spark, wh)
@@ -82,19 +92,12 @@ def test_autothrottle_equals_oracle_and_speeds_up(spark, tmp_path):
     assert max(n for (b, h), n in per.items() if b > 1) > 6
 
 
-def test_autothrottle_resume_equality(spark, tmp_path):
+def test_autothrottle_resume_equality(spark, tmp_path, throttled_wh):
     """The throttle state is nothing but a fold over the persisted
     metrics log, so a crawl interrupted mid-throttle-ramp and resumed
     must land on the identical final state (no hidden driver-side delay
     state to lose)."""
     spec = synthetic.WebSpec(scale=SCALE)
-
-    wh_full = str(tmp_path / "wh_full")
-    run_crawl(spark, CrawlConfig(
-        warehouse=wh_full, spec=spec, max_batches=MAX_BATCHES,
-        compact_every=4, autothrottle=True,
-    ))
-
     wh_res = str(tmp_path / "wh_res")
     run_crawl(spark, CrawlConfig(  # interrupted mid-ramp
         warehouse=wh_res, spec=spec, max_batches=2,
@@ -113,4 +116,4 @@ def test_autothrottle_resume_equality(spark, tmp_path):
                 for r in cat.read("progress", m).collect()}
         return seen, prog
 
-    assert _state(wh_full) == _state(wh_res)
+    assert _state(throttled_wh) == _state(wh_res)

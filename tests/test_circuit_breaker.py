@@ -6,6 +6,8 @@ table) and the oracle share breaker_tripped_py, so equality here proves
 the fetch histories the two sides judge are identical, batch for batch.
 """
 
+import pytest
+
 from crawlspark import synthetic
 from crawlspark.crawl import CrawlConfig, run_crawl
 from crawlspark.operators.scheduler import (
@@ -76,16 +78,28 @@ def _dead_seed_urls(spec):
     ]
 
 
-def test_breaker_equals_oracle_with_dead_host(spark, tmp_path):
+def _dead_host_kw():
+    spec = synthetic.WebSpec(scale=SCALE, dead_hosts=(DEAD,))
+    return dict(spec=spec, budget_override=2, compact_every=4,
+                seed_urls=_dead_seed_urls(spec),
+                failure_trip_threshold=THRESHOLD,
+                failure_trip_cooldown_batches=COOLDOWN)
+
+
+@pytest.fixture(scope="module")
+def dead_host_wh(spark, tmp_path_factory):
+    """One uninterrupted breaker crawl over a web with a dead host, read
+    (never written) by the tests below."""
+    wh = str(tmp_path_factory.mktemp("wh_cb"))
+    run_crawl(spark, CrawlConfig(warehouse=wh, max_batches=MAX_BATCHES,
+                                 **_dead_host_kw()))
+    return wh
+
+
+def test_breaker_equals_oracle_with_dead_host(spark, dead_host_wh):
     spec = synthetic.WebSpec(scale=SCALE, dead_hosts=(DEAD,))
     seeds = _dead_seed_urls(spec)
-    wh = str(tmp_path / "wh_cb")
-    run_crawl(spark, CrawlConfig(
-        warehouse=wh, spec=spec, max_batches=MAX_BATCHES,
-        budget_override=2, compact_every=4, seed_urls=seeds,
-        failure_trip_threshold=THRESHOLD,
-        failure_trip_cooldown_batches=COOLDOWN,
-    ))
+    wh = dead_host_wh
     ora = crawl_oracle(spec, max_batches=MAX_BATCHES, budget_override=2,
                        seed_urls=seeds, failure_trip_threshold=THRESHOLD,
                        failure_trip_cooldown=COOLDOWN)
@@ -135,19 +149,11 @@ def test_breaker_never_trips_equals_baseline(spark, tmp_path):
     assert prog == {(u, b, a, o) for (u, b, a, o, _s) in ora.progress}
 
 
-def test_breaker_resume_equality(spark, tmp_path):
+def test_breaker_resume_equality(spark, tmp_path, dead_host_wh):
     """The breaker's only state is the persisted metrics log, so a crawl
     interrupted mid-cooldown and resumed must land on the identical final
     state (no hidden driver-side trip state to lose)."""
-    spec = synthetic.WebSpec(scale=SCALE, dead_hosts=(DEAD,))
-    seeds = _dead_seed_urls(spec)
-    kw = dict(spec=spec, budget_override=2, compact_every=4,
-              seed_urls=seeds, failure_trip_threshold=THRESHOLD,
-              failure_trip_cooldown_batches=COOLDOWN)
-
-    wh_full = str(tmp_path / "wh_full")
-    run_crawl(spark, CrawlConfig(warehouse=wh_full, max_batches=MAX_BATCHES,
-                                 **kw))
+    kw = _dead_host_kw()
     wh_res = str(tmp_path / "wh_res")
     run_crawl(spark, CrawlConfig(  # interrupted mid-cooldown
         warehouse=wh_res, max_batches=4, **kw))
@@ -162,4 +168,4 @@ def test_breaker_resume_equality(spark, tmp_path):
                 for r in cat.read("progress", m).collect()}
         return seen, prog
 
-    assert _state(wh_full) == _state(wh_res)
+    assert _state(dead_host_wh) == _state(wh_res)

@@ -1,6 +1,8 @@
 """Golden end-to-end: engine vs single-threaded oracle (SURVEY §5), plus
 resume-from-snapshot equality — the BASELINE.json pytest contract."""
 
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -31,6 +33,24 @@ def engine_run(spark, tmp_path_factory):
 def oracle_run():
     return crawl_oracle(synthetic.WebSpec(scale=SCALE), max_batches=MAX_BATCHES,
                         budget_override=BUDGET)
+
+
+@pytest.fixture(scope="module")
+def epoch1_run(spark, tmp_path_factory):
+    """The first epoch every re-crawl test below starts from: a finished
+    scale-0.1 crawl.  Each test starts its next epoch in a copy of it (the
+    copied manifests still name this warehouse's data files, which nothing
+    writes or deletes)."""
+    wh = str(tmp_path_factory.mktemp("wh_epoch1"))
+    summary = run_crawl(spark, CrawlConfig(
+        warehouse=wh, spec=synthetic.WebSpec(scale=0.1), max_batches=20,
+        budget_override=20, compact_every=4))
+    return wh, summary
+
+
+def _epoch1_copy(epoch1_run, wh):
+    shutil.copytree(epoch1_run[0], wh)
+    return epoch1_run[1]
 
 
 def _tables(spark, wh):
@@ -136,7 +156,7 @@ def test_partitioned_bloom_crawl_equals_broadcast(spark, tmp_path, engine_run):
     assert hosts_tbl.count() == hosts_tbl.select("host").distinct().count() > 0
 
 
-def test_recrawl_serves_articles_from_fetch_cache(spark, tmp_path):
+def test_recrawl_serves_articles_from_fetch_cache(spark, tmp_path, epoch1_run):
     """S9 full semantics (reference HTTPCACHE, settings.py:84-89): a
     re-crawl epoch refetches listings but serves previously-fetched
     articles from the fetched-cache log — no article URL is fetched twice
@@ -145,9 +165,7 @@ def test_recrawl_serves_articles_from_fetch_cache(spark, tmp_path):
     from crawlspark.crawl import reset_for_recrawl
 
     wh = str(tmp_path / "whc")
-    cfg1 = CrawlConfig(warehouse=wh, spec=synthetic.WebSpec(scale=0.1),
-                       max_batches=20, budget_override=20, compact_every=4)
-    s1 = run_crawl(spark, cfg1)
+    s1 = _epoch1_copy(epoch1_run, wh)
     cat = SnapshotCatalog(spark, wh)
     cache1 = {r["url"] for r in cat.read("fetched").select("url").collect()}
     assert cache1 and s1["refetch_skipped"] == 0
@@ -175,7 +193,7 @@ def test_recrawl_serves_articles_from_fetch_cache(spark, tmp_path):
     assert any(u not in cache1 for u in done2)  # genuinely new fetches
 
 
-def test_fetch_cache_staleness_refetches_old_entries(spark, tmp_path):
+def test_fetch_cache_staleness_refetches_old_entries(spark, tmp_path, epoch1_run):
     """Cache expiry (reference HTTPCACHE_EXPIRATION_SECS, settings.py:85):
     with fetch_cache_max_age_snaps set, re-crawl serves only cache entries
     written within the last N commits — stale articles REFETCH (which the
@@ -187,9 +205,7 @@ def test_fetch_cache_staleness_refetches_old_entries(spark, tmp_path):
 
     wh = str(tmp_path / "whs")
     spec = synthetic.WebSpec(scale=0.1)
-    cfg1 = CrawlConfig(warehouse=wh, spec=spec, max_batches=20,
-                       budget_override=20, compact_every=4)
-    run_crawl(spark, cfg1)
+    _epoch1_copy(epoch1_run, wh)
     cat = SnapshotCatalog(spark, wh)
     cache1 = {r["url"]: r["snap_id"]
               for r in cat.read("fetched").groupBy("url")
@@ -277,7 +293,7 @@ def test_recrawl_refreshes_robots(spark, tmp_path):
     assert s["n_progress"] > 0
 
 
-def test_adaptive_fetch_cache_policy(spark, tmp_path):
+def test_adaptive_fetch_cache_policy(spark, tmp_path, epoch1_run):
     """Adaptive per-URL cache freshness (operators/freshness.py wired via
     cfg.fetch_cache_adaptive): base interval 0 makes every cache entry
     immediately due (all articles refetch); a huge base serves everything
@@ -290,9 +306,7 @@ def test_adaptive_fetch_cache_policy(spark, tmp_path):
 
     wh = str(tmp_path / "wha")
     spec = synthetic.WebSpec(scale=0.1)
-    cfg1 = CrawlConfig(warehouse=wh, spec=spec, max_batches=20,
-                       budget_override=20, compact_every=4)
-    run_crawl(spark, cfg1)
+    _epoch1_copy(epoch1_run, wh)
     cat = SnapshotCatalog(spark, wh)
     cache1 = {r["url"] for r in cat.read("fetched").select("url").collect()}
     art1 = {u for u in cache1 if "/news/" in u}

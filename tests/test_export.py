@@ -3,6 +3,7 @@ deterministic sampling, partition pruning for downstream trainers."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from crawlspark import synthetic
@@ -11,11 +12,17 @@ from crawlspark.export import export_documents
 from crawlspark.tables import SnapshotCatalog
 
 
-def test_export_docs_and_spans(spark, tmp_path):
-    wh = str(tmp_path / "wh")
+@pytest.fixture(scope="module")
+def crawl_wh(spark, tmp_path_factory):
+    """One small crawl, read (never written) by the export tests below."""
+    wh = str(tmp_path_factory.mktemp("wh"))
     run_crawl(spark, CrawlConfig(warehouse=wh, spec=synthetic.WebSpec(scale=0.05),
                                  max_batches=8, budget_override=15))
-    cat = SnapshotCatalog(spark, wh)
+    return wh
+
+
+def test_export_docs_and_spans(spark, tmp_path, crawl_wh):
+    cat = SnapshotCatalog(spark, crawl_wh)
     docs = cat.read("documents")
     n_docs = docs.count()
     n_spans = docs.select(F.explode("spans")).count()
@@ -196,7 +203,7 @@ def test_export_incremental_dedupes_against_prior_state(spark, tmp_path):
     assert ids == {"a1", "b1", "d1"}
 
 
-def test_export_media_frames_from_crawl_spans(spark, tmp_path):
+def test_export_media_frames_from_crawl_spans(spark, tmp_path, crawl_wh):
     """Frame export over REAL crawl media spans: documents → media spans →
     payload table → sample_frames → partitioned shards.  Row count must
     equal the frame schedule over the table's video payloads, and every
@@ -207,10 +214,7 @@ def test_export_media_frames_from_crawl_spans(spark, tmp_path):
         sample_frames,
     )
 
-    wh = str(tmp_path / "wh")
-    run_crawl(spark, CrawlConfig(warehouse=wh, spec=synthetic.WebSpec(scale=0.05),
-                                 max_batches=8, budget_override=15))
-    cat = SnapshotCatalog(spark, wh)
+    cat = SnapshotCatalog(spark, crawl_wh)
     docs = cat.read("documents")
     expected = sample_frames(media_payloads_from_documents(docs)).count()
     assert expected > 0

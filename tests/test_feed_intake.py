@@ -6,6 +6,7 @@ is untouched.  Covers BOTH grammars end-to-end: www.mnow.example serves
 RSS 2.0, www.inq.example serves Atom."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from crawlspark import synthetic
 from crawlspark.crawl import CrawlConfig, run_crawl
@@ -25,6 +26,15 @@ def _orphan_urls(spec, host):
     n = spec.hosts[host]["n_articles"]
     return [synthetic.article_url(host, n + i)
             for i in range(synthetic.N_ORPHANS)]
+
+
+@pytest.fixture(scope="module")
+def feed_wh(spark, tmp_path_factory):
+    """One use_feeds=True crawl, read (never written) by the tests below."""
+    wh = str(tmp_path_factory.mktemp("wh_feed"))
+    run_crawl(spark, CrawlConfig(warehouse=wh, spec=_spec(), max_batches=20,
+                                 budget_override=15, use_feeds=True))
+    return wh
 
 
 def _state(spark, wh):
@@ -52,15 +62,12 @@ def test_feed_parser_both_grammars():
         assert all(e["title"] and e["published"] for e in entries)
 
 
-def test_feed_discovery_reaches_orphans(spark, tmp_path):
+def test_feed_discovery_reaches_orphans(spark, feed_wh):
     """use_feeds=True: each feed is discovered from its host's listing
     head, fetched like any frontier row, and every orphan article it
     lists is fetched; orphans still pass through the standard document
     admission filters (feed intake widens REACH, not the rules)."""
-    spec = _spec()
-    wh = str(tmp_path / "wh_feed")
-    run_crawl(spark, CrawlConfig(warehouse=wh, spec=spec, max_batches=20,
-                                 budget_override=15, use_feeds=True))
+    spec, wh = _spec(), feed_wh
     prog, doc_urls = _state(spark, wh)
     for host in (RSS_HOST, ATOM_HOST):
         fu = synthetic.feed_url(host)
@@ -84,19 +91,15 @@ def test_feed_discovery_reaches_orphans(spark, tmp_path):
         assert n_a0 == 1, (host, n_a0)
 
 
-def test_feed_engine_equals_oracle(spark, tmp_path):
+def test_feed_engine_equals_oracle(spark, feed_wh):
     """Feed mode is oracle-verified like the default mode: engine with
     use_feeds=True lands on exactly the single-threaded oracle's seen
     set, per-batch crawl order, and doc ids."""
     from crawlspark.oracle import crawl_oracle
 
-    spec = _spec()
-    wh = str(tmp_path / "wh_feedora")
-    run_crawl(spark, CrawlConfig(warehouse=wh, spec=spec, max_batches=20,
-                                 budget_override=15, use_feeds=True))
-    ora = crawl_oracle(spec, max_batches=20, budget_override=15,
+    ora = crawl_oracle(_spec(), max_batches=20, budget_override=15,
                        use_feeds=True)
-    cat = SnapshotCatalog(spark, wh)
+    cat = SnapshotCatalog(spark, feed_wh)
     m = cat.latest()
     seen = {r["url"] for r in cat.read("urlseen", m).collect()}
     prog = {(r["url"], r["batch_id"], r["attempt"], r["outcome"])

@@ -5,6 +5,8 @@ actually shrink the frontier (rel-blocked discovery paths close), and
 the default walk must treat rel'd anchors as plain links (control run
 follows them)."""
 
+import pytest
+
 from crawlspark import synthetic
 from crawlspark.crawl import CrawlConfig, run_crawl
 from crawlspark.html_parse import rel_blocked_hrefs
@@ -30,24 +32,30 @@ def test_rel_blocked_hrefs_per_anchor_semantics():
     assert rel_blocked_hrefs("<a href='/x'>y</a>") == set()
 
 
+@pytest.fixture(scope="module")
+def gated_wh(spark, tmp_path_factory):
+    """One uninterrupted obey_link_rel=True crawl, read (never written) by
+    the tests below."""
+    wh = str(tmp_path_factory.mktemp("wh_rel_on"))
+    run_crawl(spark, CrawlConfig(
+        warehouse=wh, spec=synthetic.WebSpec(scale=SCALE, rel_nofollow=True),
+        max_batches=MAX_BATCHES, budget_override=BUDGET, compact_every=4,
+        obey_link_rel=True,
+    ))
+    return wh
+
+
 def _seen(spark, wh):
     cat = SnapshotCatalog(spark, wh)
     return {r["url"] for r in cat.read("urlseen", cat.latest()).collect()}
 
 
-def test_link_rel_gate_resume_equals_uninterrupted(spark, tmp_path):
+def test_link_rel_gate_resume_equals_uninterrupted(spark, tmp_path, gated_wh):
     """The gate is stateless (a per-page set subtraction inside the fused
     stage), so an interrupted gated crawl must resume to EXACTLY the
     uninterrupted gated run — the north rule's checkpoint contract holds
     for the newest wired flag too."""
     spec = synthetic.WebSpec(scale=SCALE, rel_nofollow=True)
-
-    wh_full = str(tmp_path / "wh_full")
-    run_crawl(spark, CrawlConfig(
-        warehouse=wh_full, spec=spec, max_batches=MAX_BATCHES,
-        budget_override=BUDGET, compact_every=4, obey_link_rel=True,
-    ))
-
     wh_res = str(tmp_path / "wh_res")
     run_crawl(spark, CrawlConfig(
         warehouse=wh_res, spec=spec, max_batches=2,
@@ -57,19 +65,14 @@ def test_link_rel_gate_resume_equals_uninterrupted(spark, tmp_path):
         warehouse=wh_res, spec=spec, max_batches=MAX_BATCHES,
         budget_override=BUDGET, compact_every=4, obey_link_rel=True,
     ), resume=True)
-    assert _seen(spark, wh_full) == _seen(spark, wh_res)
+    assert _seen(spark, gated_wh) == _seen(spark, wh_res)
 
 
-def test_link_rel_gate_equals_oracle_and_binds(spark, tmp_path):
+def test_link_rel_gate_equals_oracle_and_binds(spark, tmp_path, gated_wh):
     spec = synthetic.WebSpec(scale=SCALE, rel_nofollow=True)
 
     # gate ON: engine == oracle
-    wh = str(tmp_path / "wh_rel_on")
-    run_crawl(spark, CrawlConfig(
-        warehouse=wh, spec=spec, max_batches=MAX_BATCHES,
-        budget_override=BUDGET, compact_every=4, obey_link_rel=True,
-    ))
-    seen_on = _seen(spark, wh)
+    seen_on = _seen(spark, gated_wh)
     ora_on = crawl_oracle(spec, max_batches=MAX_BATCHES,
                           budget_override=BUDGET, obey_link_rel=True)
     assert seen_on == ora_on.seen

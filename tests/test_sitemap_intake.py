@@ -4,6 +4,7 @@ ORPHAN pages no listing links to get crawled — default-off, so the
 oracle-equality e2e contract is untouched."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from crawlspark import synthetic
 from crawlspark.crawl import CrawlConfig, run_crawl
@@ -23,6 +24,15 @@ def _orphan_urls(spec):
             for i in range(synthetic.N_ORPHANS)]
 
 
+@pytest.fixture(scope="module")
+def sitemap_wh(spark, tmp_path_factory):
+    """One use_sitemaps=True crawl, read (never written) by the tests below."""
+    wh = str(tmp_path_factory.mktemp("wh_sm"))
+    run_crawl(spark, CrawlConfig(warehouse=wh, spec=_spec(), max_batches=20,
+                                 budget_override=15, use_sitemaps=True))
+    return wh
+
+
 def _state(spark, wh):
     cat = SnapshotCatalog(spark, wh)
     m = cat.latest()
@@ -32,13 +42,10 @@ def _state(spark, wh):
     return prog, doc_urls
 
 
-def test_sitemap_discovery_reaches_orphans(spark, tmp_path):
+def test_sitemap_discovery_reaches_orphans(spark, sitemap_wh):
     """use_sitemaps=True: the sitemap URL is fetched like any frontier row
     and every orphan article it lists becomes a document."""
-    spec = _spec()
-    wh = str(tmp_path / "wh_sm")
-    run_crawl(spark, CrawlConfig(warehouse=wh, spec=spec, max_batches=20,
-                                 budget_override=15, use_sitemaps=True))
+    spec, wh = _spec(), sitemap_wh
     prog, doc_urls = _state(spark, wh)
     sm = synthetic.sitemap_url(HOST)
     assert (sm, "done") in prog
@@ -65,20 +72,16 @@ def test_sitemap_discovery_reaches_orphans(spark, tmp_path):
     assert n_a0 == 1
 
 
-def test_sitemap_engine_equals_oracle(spark, tmp_path):
+def test_sitemap_engine_equals_oracle(spark, sitemap_wh):
     """Sitemap mode is oracle-verified like the default mode: engine with
     use_sitemaps=True lands on exactly the single-threaded oracle's seen
     set, per-batch crawl order, and doc ids (the intake path joins the
     equality contract, not just the reach assertions above)."""
     from crawlspark.oracle import crawl_oracle
 
-    spec = _spec()
-    wh = str(tmp_path / "wh_smora")
-    run_crawl(spark, CrawlConfig(warehouse=wh, spec=spec, max_batches=20,
-                                 budget_override=15, use_sitemaps=True))
-    ora = crawl_oracle(spec, max_batches=20, budget_override=15,
+    ora = crawl_oracle(_spec(), max_batches=20, budget_override=15,
                        use_sitemaps=True)
-    cat = SnapshotCatalog(spark, wh)
+    cat = SnapshotCatalog(spark, sitemap_wh)
     m = cat.latest()
     seen = {r["url"] for r in cat.read("urlseen", m).collect()}
     prog = {(r["url"], r["batch_id"], r["attempt"], r["outcome"])
