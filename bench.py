@@ -20,7 +20,7 @@ to code vs host load.  crawl_e2e runs once (it dominates wall time) with
 its own load markers.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32),
+     SPARK_GRAFT_CPUS (default: the CPUs this process may run on),
      SPARK_GRAFT_BENCH_REPEATS (default 3 for the cheap workloads).
 """
 

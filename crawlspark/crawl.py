@@ -174,6 +174,11 @@ class CrawlConfig:
     # every plan untouched.
     failure_trip_threshold: int | None = None
     failure_trip_cooldown_batches: int = 4
+    # Seed overrides (reference S1: hard-coded lists + manual_scrape.txt
+    # file seeds :276-295; TEST_SPECIFIC targeted mode :219-295 = article
+    # seeds + max_depth=0):
+    seed_urls: list[str] | None = None
+    seed_file: str | None = None
 
     def __post_init__(self):
         if self.expected_urls:
@@ -186,11 +191,6 @@ class CrawlConfig:
             bits = 1 << max(14, (total_bits // buckets).bit_length())
             self.bloom_buckets = buckets
             self.bloom_bits = bits
-    # Seed overrides (reference S1: hard-coded lists + manual_scrape.txt
-    # file seeds :276-295; TEST_SPECIFIC targeted mode :219-295 = article
-    # seeds + max_depth=0):
-    seed_urls: list[str] | None = None
-    seed_file: str | None = None
 
 
 def _hosts_frame(hosts_df: DataFrame) -> DataFrame:
@@ -218,142 +218,63 @@ def _hosts_frame(hosts_df: DataFrame) -> DataFrame:
     return hosts_df.select("host").distinct().mapInPandas(gen, schema=schemas.HOSTS)
 
 
-# Batch-invariant Column expressions, built ONCE per SparkContext.
-# Driver-side expression construction is py4j-roundtrip-bound (~1-2 ms per
-# pyspark.sql.functions call; one outcome-style CASE chain alone costs
-# ~17 ms) and totalled ~1 s of EVERY politeness batch's plan building.
-# Column objects are unresolved expression trees —
-# reusable across DataFrames and batches; the cache is keyed by the
-# context's applicationId (unique per started context) — id() could be
-# reused by CPython for a NEW SparkContext after the old one is collected,
-# serving Column trees built under a dead context.
-_COLS_CACHE: dict = {}
+# The batch's batch-invariant expressions as SQL text, built once at
+# import; the per-batch values (batch id, snapshot id, max depth) go in as
+# integer literals where they are used.
+_IS_FETCH = f"rec = {U.sql_lit('fetch')}"
+_IS_LINK = f"rec = {U.sql_lit('link')}"
+_IS_DOC = f"rec = {U.sql_lit('doc')}"
+_IS_RETRY = f"outcome = {U.sql_lit('retry')}"
+# 'revalidated' (cfg.revalidate_stale: 304-analog conditional refetch) is
+# a healthy response: it counts as ok for the circuit breaker and
+# autothrottle, exactly like 'done', and passes the fetch-log gate —
+# logging it is the cache RENEWAL (new snap_id, same hash), which restarts
+# the staleness window and extends the adaptive unchanged-streak
+_IS_OK = f"outcome IN ({U.sql_list(('done', 'revalidated'))})"
 
+# fetch row → progress outcome (done | retry | failed | skipped | revalidated)
+_OUTCOME = (
+    "CASE"
+    # corrupt transfer stream (gzip decode failure) retries like a 5xx
+    # (reference GzipRetryMiddleware, middlewares.py:36-52)
+    f" WHEN status = 200 AND decode_error AND retry_count < {U.sql_lit(rules.MAX_RETRIES)}"
+    f" THEN {U.sql_lit('retry')}"
+    f" WHEN status = 200 AND decode_error THEN {U.sql_lit('failed')}"
+    # in-worker 304 verdict (cfg.revalidate_stale): a clean 200 whose body
+    # hash matched the logged cache entry — terminal, unparsed
+    f" WHEN status = 200 AND coalesce(revalidated, false) THEN {U.sql_lit('revalidated')}"
+    f" WHEN status = 200 THEN {U.sql_lit('done')}"
+    f" WHEN status IN ({U.sql_list(rules.SKIP_STATUSES)}) THEN {U.sql_lit('skipped')}"
+    f" WHEN status IN ({U.sql_list(rules.RETRYABLE_STATUSES)})"
+    f" AND retry_count < {U.sql_lit(rules.MAX_RETRIES)} THEN {U.sql_lit('retry')}"
+    f" ELSE {U.sql_lit('failed')} END AS outcome"
+)
 
-def _outcome_expr():
-    """Fetch row → progress outcome (done | retry | failed | skipped |
-    revalidated)."""
-    return (
-        # corrupt transfer stream (gzip decode failure) retries like a 5xx
-        # (reference GzipRetryMiddleware, middlewares.py:36-52)
-        F.when(
-            (F.col("status") == 200) & F.col("decode_error")
-            & (F.col("retry_count") < rules.MAX_RETRIES),
-            F.lit("retry"),
-        )
-        .when((F.col("status") == 200) & F.col("decode_error"), F.lit("failed"))
-        # in-worker 304 verdict (cfg.revalidate_stale): a clean 200 whose
-        # body hash matched the logged cache entry — terminal, unparsed
-        .when(
-            (F.col("status") == 200)
-            & F.coalesce(F.col("revalidated"), F.lit(False)),
-            F.lit("revalidated"),
-        )
-        .when(F.col("status") == 200, F.lit("done"))
-        .when(F.col("status").isin(rules.SKIP_STATUSES), F.lit("skipped"))
-        .when(
-            F.col("status").isin(rules.RETRYABLE_STATUSES)
-            & (F.col("retry_count") < rules.MAX_RETRIES),
-            F.lit("retry"),
-        )
-        .otherwise(F.lit("failed"))
-    )
+_LINKS = [
+    *("url AS src_url" if f.name == "url" else f.name for f in schemas.PARSED.fields),
+    f"{U.host_sql('link')} AS link_host",
+]
+_LINK_DOMAIN = f"{U.domain_sql('link_host')} AS link_domain"
+_LINK_KEEP = f"NOT {U.skip_filter_sql('link', 'link_domain')}"
+# in-batch dedup with a deterministic meta winner (min source url)
+_CAND_WINNER = "min_by(struct(link_host, depth, link_kind, meta), struct(src_url, link)) AS w"
+_CAND = ["url", "w.link_host AS host", "w.depth + 1 AS depth",
+         "w.link_kind AS page_kind", "w.meta AS meta"]
 
-
-def _invariant_cols(spark: SparkSession) -> dict:
-    key = spark.sparkContext.applicationId
-    cached = _COLS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    _COLS_CACHE.clear()
-    lhost = U.host_expr(F.col("link"))
-    c = {
-        "outcome_aliased": _outcome_expr().alias("outcome"),
-        "link_skip": U.skip_filter_expr(
-            F.col("link"), F.col("link_host"), F.col("link_domain")
-        ),
-        "cand_winner": F.min_by(
-            F.struct("link_host", "depth", "link_kind", "meta"),
-            F.struct("src_url", "link"),
-        ).alias("w"),
-        "priority": scheduler.priority_expr(
-            F.col("depth"), F.col("page_kind"), F.col("url")
-        ),
-        "metrics_aggs": [
-            F.count("*").alias("n_scheduled"),
-            # 'revalidated' (cfg.revalidate_stale: 304-analog conditional
-            # refetch) is a healthy response — it must count as ok for the
-            # circuit breaker and autothrottle, exactly like 'done'
-            F.sum(F.col("outcome").isin("done", "revalidated").cast("long")).alias("n_ok"),
-            F.sum((F.col("outcome") == "retry").cast("long")).alias("n_retry"),
-            F.sum((F.col("outcome") == "failed").cast("long")).alias("n_failed"),
-            F.sum((F.col("outcome") == "skipped").cast("long")).alias("n_skipped"),
-            F.sum("elapsed_ms").alias("sum_elapsed_ms"),
-        ],
-        "parsed_aggs": [
-            F.sum(F.when(F.col("rec") == "link", 1).otherwise(0)).alias("n_links_out"),
-            F.sum(F.when(F.col("rec") == "doc", 1).otherwise(0)).alias("n_docs_out"),
-        ],
-        # ---- cached SELECT LISTS for the per-batch projections ----
-        # Each py4j DataFrame/Column call costs ~3-15 ms of driver time
-        # (measured); the batch loop's projections totalled ~100+ calls of
-        # pure plan construction per batch.  Everything batch-INVARIANT
-        # is pre-built here; the batch phases only create the two or three
-        # F.lit(batch_id) terms per projection.
-        "rec_fetch": F.col("rec") == "fetch",
-        "rec_not_fetch": F.col("rec") != "fetch",
-        "rec_link": F.col("rec") == "link",
-        "rec_doc": F.col("rec") == "doc",
-        "is_retry": F.col("outcome") == "retry",
-        # fetch-log gate: 'revalidated' rows were genuinely fetched and
-        # hashed — logging them is the cache RENEWAL (new snap_id, same
-        # hash), which restarts the staleness window and extends the
-        # adaptive unchanged-streak
-        "is_done": F.col("outcome").isin("done", "revalidated"),
-        "fetch_log_pre": [
-            F.col("url"), F.xxhash64("url").alias("url_hash"), F.col("status"),
-            F.col("content_encoding"), F.col("body_hash"),
-        ],
-        "progress_pre": [F.col("url"), F.xxhash64("url").alias("url_hash")],
-        "progress_post": [
-            F.col("status"), F.col("outcome"), F.col("retry_count").alias("attempt"),
-        ],
-        "retries_pre": [
-            F.col("url"), F.xxhash64("url").alias("url_hash"), F.col("host"),
-            F.col("depth"), F.col("priority"),
-        ],
-        "retry_inc": (F.col("retry_count") + 1).alias("retry_count"),
-        "retry_backoff_int": F.pow(F.lit(2.0), F.col("retry_count") + 1).cast("int"),
-        "link_as_url": F.col("link").alias("url"),
-        "cand_sel": [
-            F.col("url"),
-            F.col("w.link_host").alias("host"),
-            (F.col("w.depth") + 1).alias("depth"),
-            F.col("w.link_kind").alias("page_kind"),
-            F.col("w.meta").alias("meta"),
-        ],
-        "links_sel": [
-            *(F.col(f.name).alias("src_url") if f.name == "url" else F.col(f.name)
-              for f in schemas.PARSED.fields),
-            lhost.alias("link_host"),
-        ],
-        "link_domain_aliased": None,  # filled below (references link_host)
-        "zero_retry": F.lit(0).alias("retry_count"),
-        "metrics_sel": [
-            F.col("host"), F.col("n_scheduled"), F.col("n_ok"), F.col("n_retry"),
-            F.col("n_failed"), F.col("n_skipped"),
-            F.coalesce("n_links_out", F.lit(0)).alias("n_links_out"),
-            F.coalesce("n_docs_out", F.lit(0)).alias("n_docs_out"),
-            F.col("sum_elapsed_ms"),
-        ],
-    }
-    c["link_domain_aliased"] = U.domain_expr(F.col("link_host")).alias("link_domain")
-    c["frontier_pre"] = [
-        F.col("url"), F.xxhash64("url").alias("url_hash"), F.col("host"),
-        F.col("depth"), c["priority"].alias("priority"),
-    ]
-    _COLS_CACHE[key] = c
-    return c
+_METRICS_AGGS = [
+    "count(*) AS n_scheduled",
+    f"sum(CAST({_IS_OK} AS BIGINT)) AS n_ok",
+    *(f"sum(CAST(outcome = {U.sql_lit(o)} AS BIGINT)) AS n_{o}"
+      for o in ("retry", "failed", "skipped")),
+    "sum(elapsed_ms) AS sum_elapsed_ms",
+]
+_PARSED_AGGS = [
+    f"sum(CASE WHEN rec = {U.sql_lit(r)} THEN 1 ELSE 0 END) AS n_{r}s_out"
+    for r in ("link", "doc")
+]
+_METRICS = ["host", "n_scheduled", "n_ok", "n_retry", "n_failed", "n_skipped",
+            "coalesce(n_links_out, 0) AS n_links_out",
+            "coalesce(n_docs_out, 0) AS n_docs_out", "sum_elapsed_ms"]
 
 
 def _hosts_with_rx(hosts: DataFrame, budget_override: int | None) -> DataFrame:
@@ -602,7 +523,6 @@ class _Batch:
     manifest: dict
     batch_id: int
     is_compact: bool
-    cols: dict  # _invariant_cols
     seen: object  # URL-seen filter, any layout; the state update folds the batch in
     probed: object  # the pre-update filter the probe broadcast
     prof: dict | None  # phase -> seconds, when CRAWLSPARK_PROF is set
@@ -795,16 +715,14 @@ def _link_probe(b: _Batch) -> None:
     """Extracted links → skip filter → depth cap → in-batch dedup →
     URL-seen probe → the batch's new frontier rows (persisted: the state
     update and the frontier/urlseen appends all read them)."""
-    cols, cfg = b.cols, b.cfg
-    links = b.pipe.filter(cols["rec_link"]).select(*cols["links_sel"])
-    links = links.select("*", cols["link_domain_aliased"])
-    links = links.filter(~cols["link_skip"]).filter(
-        F.col("depth") + 1 <= cfg.max_depth
+    cfg = b.cfg
+    links = (
+        b.pipe.filter(_IS_LINK).selectExpr(*_LINKS)
+        .selectExpr("*", _LINK_DOMAIN)
+        .filter(_LINK_KEEP)
+        .filter(f"depth + 1 <= {cfg.max_depth}")
     )
-    # in-batch dedup with deterministic meta winner (min source url)
-    cand = links.groupBy(cols["link_as_url"]).agg(
-        cols["cand_winner"]
-    ).select(*cols["cand_sel"])
+    cand = links.groupBy(F.expr("link AS url")).agg(F.expr(_CAND_WINNER)).selectExpr(*_CAND)
     # small_positives: a batch's Bloom-positive sliver is bounded by its
     # extracted links, so the exact check broadcast-SCANS urlseen instead
     # of shuffling it (at 10^10 seen rows the shuffle, not the sliver, is
@@ -819,59 +737,54 @@ def _link_probe(b: _Batch) -> None:
         new_links = scheduler.cap_template_explosion(
             new_links, cfg.trap_template_cap
         )
-    b.new_frontier = new_links.select(
-        *cols["frontier_pre"],
-        F.lit(b.batch_id).alias("discovered_batch"),
-        cols["zero_retry"],
-        F.lit(b.batch_id + 1).alias("not_before_batch"),
-        "page_kind",
-        "meta",
+    b.new_frontier = new_links.selectExpr(
+        "url", "xxhash64(url) AS url_hash", "host", "depth",
+        f"{scheduler.PRIORITY_SQL} AS priority",
+        f"{b.batch_id} AS discovered_batch", "0 AS retry_count",
+        f"{b.batch_id + 1} AS not_before_batch", "page_kind", "meta",
     ).persist()
 
 
 def _commit_plans(b: _Batch) -> dict:
     """The batch's per-table appends (lazy plans): frontier (new links +
-    retries), urlseen, progress, documents, metrics and the fetch log.
-    All projections select CACHED batch-invariant Column lists — only the
-    F.lit(batch_id) terms are built per batch."""
-    cols, batch_id = b.cols, b.batch_id
-    bid = F.lit(batch_id)
-    fetched = b.pipe.filter(cols["rec_fetch"]).select("*", cols["outcome_aliased"])
-    progress = fetched.select(
-        *cols["progress_pre"], bid.alias("batch_id"), *cols["progress_post"]
+    retries), urlseen, progress, documents, metrics and the fetch log."""
+    bid = b.batch_id
+    fetched = b.pipe.filter(_IS_FETCH).selectExpr("*", _OUTCOME)
+    progress = fetched.selectExpr(
+        "url", "xxhash64(url) AS url_hash", f"{bid} AS batch_id", "status", "outcome",
+        "retry_count AS attempt",
     ).unionByName(b.retired)
     # retry re-entry with exponential backoff (reference :543-555, :636)
-    retries = fetched.filter(cols["is_retry"]).select(
-        *cols["retries_pre"],
-        bid.alias("discovered_batch"),
-        cols["retry_inc"],
-        (bid + cols["retry_backoff_int"]).alias("not_before_batch"),
+    retries = fetched.filter(_IS_RETRY).selectExpr(
+        "url", "xxhash64(url) AS url_hash", "host", "depth", "priority",
+        f"{bid} AS discovered_batch", "retry_count + 1 AS retry_count",
+        f"{bid} + CAST(pow(2.0D, retry_count + 1) AS INT) AS not_before_batch",
         "page_kind", "meta",
     )
     # docs path: same broadcast-scan inversion as the urlseen exact
     # check — the batch's doc ids are bounded, the documents table grows
     # with the crawl, so scan it against the broadcast batch ids instead
     # of shuffling it
-    docs = docs_from_pipe(b.pipe.filter(cols["rec_doc"]), batch_id)
+    docs = docs_from_pipe(b.pipe.filter(_IS_DOC), bid)
     doc_hits = b.catalog.read("documents", b.manifest).select("doc_id").join(
         F.broadcast(docs.select("doc_id").distinct()), on="doc_id", how="left_semi",
     )
     docs = docs.join(F.broadcast(doc_hits), on="doc_id", how="left_anti")
     # metrics (per batch × host lineage; SURVEY §2.4 A2)
-    parsed_counts = b.pipe.filter(cols["rec_not_fetch"]).groupBy("host").agg(
-        *cols["parsed_aggs"]
+    parsed_counts = b.pipe.filter(f"NOT {_IS_FETCH}").groupBy("host").agg(
+        *map(F.expr, _PARSED_AGGS)
     )
     metrics = (
         fetched.groupBy("host")
-        .agg(*cols["metrics_aggs"])
+        .agg(*map(F.expr, _METRICS_AGGS))
         .join(parsed_counts, on="host", how="left")
-        .select(bid.alias("batch_id"), *cols["metrics_sel"])
+        .selectExpr(f"{bid} AS batch_id", *_METRICS)
     )
     # per-fetch cache log (S9): url + transfer encoding + decoded-body
     # hash; snap_id = this commit's snapshot, the entry's write-time clock
-    fetch_log = fetched.filter(cols["is_done"]).select(
-        *cols["fetch_log_pre"], bid.alias("batch_id"),
-        F.lit(b.manifest["snapshot_id"] + 1).alias("snap_id"),
+    fetch_log = fetched.filter(_IS_OK).selectExpr(
+        "url", "xxhash64(url) AS url_hash", "status", "content_encoding", "body_hash",
+        f"{bid} AS batch_id", f"{b.manifest['snapshot_id'] + 1} AS snap_id",
     )
     # batch-sized appends: coalesce to a file count proportional to the
     # batch so a small politeness batch writes 1 file per table, not
@@ -880,8 +793,8 @@ def _commit_plans(b: _Batch) -> dict:
     k_files = max(1, b.n_sched // 2000)
     return {
         "frontier": retries.unionByName(b.new_frontier).coalesce(k_files),
-        "urlseen": b.new_frontier.select(
-            "url", "url_hash", bid.alias("added_batch")
+        "urlseen": b.new_frontier.selectExpr(
+            "url", "url_hash", f"{bid} AS added_batch"
         ).coalesce(k_files),
         "progress": progress.coalesce(k_files),
         "documents": docs.coalesce(k_files),
@@ -1011,7 +924,7 @@ def run_batch(spark: SparkSession, catalog: SnapshotCatalog, cfg: CrawlConfig,
         spark=spark, catalog=catalog, cfg=cfg, manifest=manifest,
         batch_id=batch_id,
         is_compact=bool(cfg.compact_every) and batch_id % cfg.compact_every == 0,
-        cols=_invariant_cols(spark), seen=seen, probed=seen,
+        seen=seen, probed=seen,
         prof={} if os.environ.get("CRAWLSPARK_PROF") else None,
     )
     try:

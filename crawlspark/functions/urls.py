@@ -8,9 +8,10 @@ chain of protocol/typo repairs + urljoin for relative URLs + strip),
 Two twins of each function:
   * a plain-Python form (used by the single-threaded oracle AND inside the
     Arrow-batched pandas UDFs — never registered as a per-row Python UDF);
-  * a Spark Column form built from pure built-ins (regexp_replace / rlike /
-    isin) for everything that needs no urljoin, so the hot filter stays
-    inside whole-stage codegen.
+  * a Spark form built from pure built-ins (regexp_replace / rlike / IN)
+    for everything that needs no urljoin, so the hot filter stays inside
+    whole-stage codegen: SQL text for host, domain and the skip filter,
+    Column chains for the fix_url repairs and tracking-param stripping.
 """
 
 from __future__ import annotations
@@ -144,17 +145,6 @@ def domain_for_country_py(host: str, country: str) -> str:
     return DOMAIN_REWRITES.get(((country or "").lower(), d), d)
 
 
-def domain_for_country_expr(host: Column, country: Column) -> Column:
-    """Column form of domain_for_country_py: one CASE chain built from the
-    DOMAIN_REWRITES rows — pure built-ins, codegen'd, no UDF."""
-    d = domain_expr(host)
-    c = None
-    for (ctry, dom), out in DOMAIN_REWRITES.items():
-        cond = (F.lower(country) == ctry) & (d == dom)
-        c = F.when(cond, F.lit(out)) if c is None else c.when(cond, F.lit(out))
-    return c.otherwise(d)
-
-
 # ---------- Spark Column forms (pure built-ins, codegen'd) ----------
 
 def fix_url_expr(url: Column) -> Column:
@@ -170,46 +160,91 @@ def fix_url_expr(url: Column) -> Column:
     return c
 
 
-def host_expr(url: Column) -> Column:
-    return F.lower(F.parse_url(url, F.lit("HOST")))
-
-
-def domain_expr(host: Column) -> Column:
-    """Registrable domain from host via regexp (suffix-list aware)."""
-    multi = "|".join(s.replace(".", r"\.") for s in _MULTI_SUFFIXES)
-    m3 = F.regexp_extract(host, rf"([^.]+\.(?:{multi}))$", 1)
-    m2 = F.regexp_extract(host, r"([^.]+\.[^.]+)$", 1)
-    return F.when(m3 != "", m3).otherwise(m2)
-
-
 def _substr_alternation(patterns: list[str]) -> str:
     return "|".join(re.escape(p) for p in patterns)
 
 
-def skip_filter_expr(url: Column, host: Column, domain: Column) -> Column:
+# ---------- Spark SQL forms (pure built-ins, codegen'd) ----------
+# Each takes SQL expression text for its inputs and returns SQL text for
+# F.expr / selectExpr / filter.  Text reaches the engine in one call
+# however long it is; a Column tree costs one py4j call per function.
+
+def sql_lit(v) -> str:
+    """``v`` as a Spark SQL literal.  Strings become raw literals r'…', so
+    a regex escape such as ``\\.`` reaches the engine as written (a plain
+    '…' literal unescapes it to ``.``, which matches any character).  A
+    raw literal cannot hold a quote, so such a value raises."""
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        return f"{v!r}D"
+    if "'" in v:
+        raise ValueError(f"quote in SQL literal: {v!r}")
+    return f"r'{v}'"
+
+
+def sql_list(values) -> str:
+    return ", ".join(sql_lit(v) for v in values)
+
+
+def host_sql(url: str) -> str:
+    return f"lower(parse_url({url}, {sql_lit('HOST')}))"
+
+
+_DOMAIN3_RX = sql_lit(
+    r"([^.]+\.(?:%s))$" % "|".join(s.replace(".", r"\.") for s in _MULTI_SUFFIXES))
+_DOMAIN2_RX = sql_lit(r"([^.]+\.[^.]+)$")
+
+
+def domain_sql(host: str) -> str:
+    """Registrable domain from host via regexp (suffix-list aware)."""
+    m3 = f"regexp_extract({host}, {_DOMAIN3_RX}, 1)"
+    return (f"CASE WHEN {m3} != {sql_lit('')} THEN {m3} "
+            f"ELSE regexp_extract({host}, {_DOMAIN2_RX}, 1) END")
+
+
+_SKIP_SUB_RX = sql_lit(_substr_alternation(rules.SKIP_SUBSTRINGS))
+_SKIP_EXT_RX = sql_lit(_substr_alternation(rules.EXCLUDED_FILE_EXTENSIONS))
+_SKIP_SUBDOMAIN_RX = sql_lit(_substr_alternation(
+    rules.IRRELEVANT_SUBDOMAIN_PATTERNS + rules.INACCESSIBLE_SUBDOMAIN_PATTERNS))
+_INCOMPLETE = sql_list(rules.INCOMPLETE_ARTICLES)
+_ALLOWED = sql_list(rules.ALLOWED_DOMAINS)
+
+
+def skip_filter_sql(url: str, domain: str) -> str:
     """TRUE when the URL must be dropped (reference :735-745 predicate).
 
     All pieces are built-ins: rlike alternations compiled once (the
-    idiomatic Spark form of 'any(substring in url)'), isin for exact
-    blocklist, domain allowlist as isin (small list; at larger allowlists
-    this becomes a broadcast LEFT SEMI join — see operators/filters.py).
-    """
-    lurl = F.lower(url)
-    bad_sub = lurl.rlike(_substr_alternation(rules.SKIP_SUBSTRINGS))
-    bad_ext = lurl.rlike(_substr_alternation(rules.EXCLUDED_FILE_EXTENSIONS))
-    bad_subdomain = lurl.rlike(
-        _substr_alternation(
-            rules.IRRELEVANT_SUBDOMAIN_PATTERNS + rules.INACCESSIBLE_SUBDOMAIN_PATTERNS
-        )
+    idiomatic Spark form of 'any(substring in url)'), IN for the exact
+    blocklist and the domain allowlist (small lists; a larger allowlist
+    becomes a broadcast LEFT SEMI join)."""
+    lurl = f"lower({url})"
+    return (
+        f"(({url}) IS NULL OR length(trim({url})) = 0"
+        f" OR {lurl} RLIKE {_SKIP_SUB_RX}"
+        f" OR {lurl} RLIKE {_SKIP_EXT_RX}"
+        f" OR {lurl} RLIKE {_SKIP_SUBDOMAIN_RX}"
+        f" OR ({url}) IN ({_INCOMPLETE})"
+        f" OR ({domain}) NOT IN ({_ALLOWED}))"
     )
-    incomplete = url.isin(rules.INCOMPLETE_ARTICLES)
-    not_allowed = ~domain.isin(rules.ALLOWED_DOMAINS)
-    empty = url.isNull() | (F.length(F.trim(url)) == 0)
-    return empty | bad_sub | bad_ext | bad_subdomain | incomplete | not_allowed
+
+
+def domain_for_country_sql(host: str, country: str) -> str:
+    """SQL form of domain_for_country_py: one CASE chain built from the
+    DOMAIN_REWRITES rows."""
+    d = domain_sql(host)
+    whens = " ".join(
+        f"WHEN lower({country}) = {sql_lit(ctry)} AND {d} = {sql_lit(dom)} "
+        f"THEN {sql_lit(out)}"
+        for (ctry, dom), out in DOMAIN_REWRITES.items()
+    )
+    return f"CASE {whens} ELSE {d} END"
 
 
 def should_skip_py(url: str) -> bool:
-    """Python twin of skip_filter_expr (oracle)."""
+    """Python twin of skip_filter_sql (oracle)."""
     if not url or not url.strip():
         return True
     lu = url.lower()

@@ -19,6 +19,7 @@ single-threaded oracle — never registered as a row-at-a-time UDF.
 
 from __future__ import annotations
 
+import functools
 from html.parser import HTMLParser
 
 
@@ -95,6 +96,10 @@ class _TreeBuilder(HTMLParser):
             self.cur.children.append(data)
 
 
+# One page's extractors (cards, links, rel gates, article fields) each ask
+# for its tree; keeping the last tree parses each body once.  Trees are
+# never changed after _TreeBuilder builds them, so sharing one is safe.
+@functools.lru_cache(maxsize=1)
 def parse_html(html: str) -> Node:
     tb = _TreeBuilder()
     tb.feed(html or "")
@@ -167,39 +172,6 @@ def rel_blocked_hrefs(html: str) -> set[str]:
         else:
             allowed.add(href)
     return blocked - allowed
-
-
-def extract_links_and_rel_blocked(html: str) -> tuple[list[str], set[str]]:
-    """ONE parse producing both ``extract_links(html)`` and
-    ``rel_blocked_hrefs(html)`` — the engine's obey_link_rel listing path
-    previously parsed every listing body twice for the two views (ADVICE
-    r5).  Same anchor traversal, so the pair is definitionally equal to
-    calling the two functions separately (pinned in test_link_rel); the
-    single-threaded crawl oracle deliberately KEEPS the two independent
-    calls, so the equality e2e still cross-checks two derivations."""
-    import re
-
-    global _ONCLICK_RX
-    if _ONCLICK_RX is None:
-        _ONCLICK_RX = re.compile(r"window\.open\('(.*?)'")
-    root = parse_html(html)
-    links: list[str] = []
-    blocked: set[str] = set()
-    allowed: set[str] = set()
-    for a in root.find_all("a"):
-        href = a.attrs.get("href")
-        if href:
-            links.append(href)
-            rel = (a.attrs.get("rel") or "").lower()
-            if REL_BLOCKED & set(rel.split()):
-                blocked.add(href)
-            else:
-                allowed.add(href)
-        elif a.attrs.get("onclick"):
-            m = _ONCLICK_RX.search(a.attrs["onclick"])
-            if m:
-                links.append(m.group(1))
-    return links, blocked - allowed
 
 
 def extract_targeted_links(html: str, host: str, path: str = "") -> list[str]:

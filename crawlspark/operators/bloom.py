@@ -4,7 +4,7 @@ Replaces the reference's request-fingerprint dupefilter
 (settings.py:92,107) with an explicit, persistable structure:
 
   * keys are canonical URLs, hashed JVM-side into two 64-bit values
-    (h1 = xxhash64(url), h2 = xxhash64(salt, url) | 1; urlseen._hash_cols)
+    (h1 = xxhash64(url), h2 = xxhash64(salt, url) | 1; urlseen.HASH_SQL)
     and probed by double hashing: pos_i = (h1 + i*h2) mod m, computed in
     one place, ``BloomState._positions``;
   * the bit space is split into ``n_buckets`` independent filters keyed by

@@ -9,7 +9,7 @@ that re-admission instead of a separate staleness join).
 
 Layout mirrors BloomState so the probe plumbing is shared:
 
-  * keys are pre-hashed JVM-side (xxhash64 pair, urlseen._hash_cols);
+  * keys are pre-hashed JVM-side (xxhash64 pair, urlseen.HASH_SQL);
     partition ``bucket = h1 % n_buckets`` (power of two — matches pmod);
   * within a partition: ``n_slots`` buckets x 4 slots of uint16
     fingerprints (0 = empty).  ``i1`` comes from the high bits of h1, the
@@ -185,7 +185,7 @@ def apply_partitioned(spark, keys_df, state: CuckooState, op: str = "add"
     bucket's sub-table and ships back ONE (bucket, table) row — the driver
     stitches.  Each bucket is touched by exactly one task (groupBy bucket),
     so there is no merge ambiguity; per-bucket state stays executor-sized
-    at any scale.  keys_df must carry _h1/_h2/bucket (urlseen._hash_cols).
+    at any scale.  keys_df must carry _h1/_h2/bucket (urlseen.HASH_SQL, urlseen.bucket_sql).
     Layout (not just membership) matches the driver-side kernel because
     both sort by (h1, h2) before applying."""
     import pandas as pd

@@ -7,7 +7,7 @@ empty-body drop (:2530-2531), filename → doc_id derivation (:2547-2557).
 
 The Python-only work (span cleaning + messy-date parsing) runs inside the
 fused fetch/parse stage (operators/pipeline.py); every filter after it is
-a pure built-in Column so Catalyst can reorder/push them.
+pure built-in SQL so Catalyst can reorder/push them.
 """
 
 from __future__ import annotations
@@ -15,82 +15,59 @@ from __future__ import annotations
 import hashlib
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from crawlspark import rules
-from crawlspark.functions.urls import domain_expr, host_expr
+from crawlspark.functions.urls import domain_sql, host_sql, sql_lit
 
 
 def doc_id_py(url: str) -> str:
     return hashlib.sha1(url.encode("utf-8", "surrogatepass")).hexdigest()
 
 
-# Batch-invariant Column trees for the filter tail, built once per
-# SparkContext (same pattern and rationale as crawl._invariant_cols: the
-# two CASE chains over DATE_WINDOWS/SOURCE_CODES plus the lambda
-# higher-order functions cost ~100+ py4j roundtrips to construct, and
-# finalize_documents runs EVERY politeness batch).
-_FIN_CACHE: dict = {}
+_DOMAIN = domain_sql(host_sql("url"))
 
 
-def _finalize_cols(spark) -> dict:
-    key = spark.sparkContext.applicationId
-    cached = _FIN_CACHE.get(key)
-    if cached is not None:
-        return cached
-    _FIN_CACHE.clear()
-    domain = domain_expr(host_expr(F.col("url")))
-    # per-source date window as a CASE chain (small dim; reference :2495-2526)
-    lo = F.lit(rules.DEFAULT_DATE_WINDOW[0])
-    hi = F.lit(rules.DEFAULT_DATE_WINDOW[1])
-    for d, (a, b) in rules.DATE_WINDOWS.items():
-        lo = F.when(domain == d, F.lit(a)).otherwise(lo)
-        hi = F.when(domain == d, F.lit(b)).otherwise(hi)
+def _by_domain(values: dict, default: str) -> str:
+    """A CASE chain over the url's domain (small dims; reference :2495-2526)."""
+    whens = " ".join(f"WHEN {_DOMAIN} = {sql_lit(d)} THEN {v}" for d, v in values.items())
+    return f"CASE {whens} ELSE {default} END"
 
-    text_spans = F.filter(F.col("spans"), lambda s: s["kind"] == F.lit("text"))
-    body_text = F.concat_ws(
-        "\n", F.transform(text_spans, lambda s: s["text"])
-    )
-    kw_rx = "|".join(rules.SEARCH_KEYWORDS).replace("-", r"\-")
-    keyword_ok = F.lower(
-        F.concat_ws(" ", F.coalesce(F.col("title"), F.lit("")), body_text)
-    ).rlike(kw_rx)
 
-    src = F.lit(None).cast("string")
-    for d, code in rules.SOURCE_CODES.items():
-        src = F.when(domain == d, F.lit(code)).otherwise(src)
-
-    c = {
-        "nonempty": F.size(text_spans) > 0,
-        "date_notnull": F.col("published_date").isNotNull(),
-        "date_ok": F.year("published_date").between(lo, hi),
-        "keyword_ok": keyword_ok,
-        "sel_pre": [
-            F.sha1(F.encode(F.col("url"), "UTF-8")).alias("doc_id"),  # C6
-            F.col("url"),
-            F.col("title"),
-            F.col("published_date"),
-            src.alias("source"),  # F7
-        ],
-    }
-    _FIN_CACHE[key] = c
-    return c
+_TEXT_SPANS = f"filter(spans, s -> s.kind = {sql_lit('text')})"
+_BODY_TEXT = f"concat_ws({sql_lit(chr(10))}, transform({_TEXT_SPANS}, s -> s.text))"
+_KEYWORD_RX = sql_lit("|".join(rules.SEARCH_KEYWORDS).replace("-", r"\-"))
+_LO, _HI = (
+    _by_domain({d: sql_lit(w[i]) for d, w in rules.DATE_WINDOWS.items()},
+               sql_lit(rules.DEFAULT_DATE_WINDOW[i]))
+    for i in (0, 1)
+)
+# empty-body drop (F5), date window (F4), keyword relevance (F3)
+_KEEP = (
+    f"size({_TEXT_SPANS}) > 0 AND published_date IS NOT NULL"
+    f" AND year(published_date) BETWEEN {_LO} AND {_HI}"
+    f" AND lower(concat_ws({sql_lit(' ')}, coalesce(title, {sql_lit('')}), {_BODY_TEXT}))"
+    f" RLIKE {_KEYWORD_RX}"
+)
+_SELECT = [
+    f"sha1(encode(url, {sql_lit('UTF-8')})) AS doc_id",  # C6
+    "url",
+    "title",
+    "published_date",
+    _by_domain({d: sql_lit(c) for d, c in rules.SOURCE_CODES.items()},
+               "CAST(NULL AS STRING)") + " AS source",  # F7
+]
 
 
 def finalize_documents(cleaned: DataFrame, batch_id: int) -> DataFrame:
-    """The pure-Column filter tail of the fused stage's doc records:
+    """The pure-SQL filter tail of the fused stage's doc records:
     empty-body drop (F5), date window (F4), keyword relevance (F3), source
     labeling (F7), doc_id derivation (C6), in-batch dedup.
 
     ``cleaned`` must carry (url, title, published_date, spans) with spans
     already cleaned and dates already parsed (pipeline.docs_from_pipe).
     """
-    c = _finalize_cols(cleaned.sparkSession)
     return (
-        cleaned.filter(c["nonempty"])  # F5 empty-body drop
-        .filter(c["date_notnull"])
-        .filter(c["date_ok"])  # F4 date window
-        .filter(c["keyword_ok"])  # F3 keyword relevance
-        .select(*c["sel_pre"], F.lit(batch_id).alias("batch_id"), "spans")
+        cleaned.filter(_KEEP)
+        .selectExpr(*_SELECT, f"{batch_id} AS batch_id", "spans")
         .dropDuplicates(["doc_id"])
     )

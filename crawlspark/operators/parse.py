@@ -66,25 +66,17 @@ def _parse_row(url: str, host: str, depth: int, page_kind: str, status: int, bod
                 rec(rec="link", link=canon, link_kind="article",
                     meta={"title": c["title"], "date": c["date"], "article_url": canon})
             )
-        if obey_link_rel and entire_site:
+        more = (html_parse.extract_links(body) if entire_site
+                else html_parse.extract_targeted_links(body, host, path))
+        if obey_link_rel:
             # per-anchor REP gate (cfg.obey_link_rel, default off): hrefs
             # carried ONLY by rel=nofollow/sponsored/ugc anchors leave the
             # frontier walk; listing CARDS are the site's curated article
             # surface and stay (the gate targets the generic anchor walk,
             # where ad/UGC/cross-promo links live).  Raw-href match, same
-            # as the anchors the walk itself returned.  Links and the
-            # blocked set come from ONE parse of the body (ADVICE r5: the
-            # two-call form parsed every listing twice for no semantic
-            # gain); the oracle keeps the two-call derivation, so the e2e
-            # equality still cross-checks them.
-            more, rb = html_parse.extract_links_and_rel_blocked(body)
+            # as the anchors the walk itself returned.
+            rb = html_parse.rel_blocked_hrefs(body)
             more = [u for u in more if u not in rb]
-        else:
-            more = (html_parse.extract_links(body) if entire_site
-                    else html_parse.extract_targeted_links(body, host, path))
-            if obey_link_rel:
-                rb = html_parse.rel_blocked_hrefs(body)
-                more = [u for u in more if u not in rb]
         for href in more:
             canon = _canon(href)
             if canon in card_links:

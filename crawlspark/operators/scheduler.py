@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from crawlspark import rules
+from crawlspark.functions.urls import sql_list, sql_lit
 
 SALT_BUCKETS = 16  # phase-1 sub-groups per host (hot-host skew mitigation)
 # yield admission: the optimistic score of a host without evidence, and
@@ -32,17 +33,17 @@ YIELD_PRIOR_PERMILLE = 1000
 MIN_EVIDENCE = 3
 
 
-def priority_expr(depth, page_kind, url):
-    """Deterministic priority: link-discovery surfaces first (listings,
-    sitemaps, feeds — they keep the frontier fed), keyword-bearing URLs
-    boosted (reference 'higher priority' note :218), deeper pages later."""
-    kw = "|".join(rules.SEARCH_KEYWORDS)
-    return (
-        F.when(page_kind.isin("listing", "sitemap", "feed"), F.lit(10.0))
-        .otherwise(F.lit(0.0))
-        + F.when(F.lower(url).rlike(kw), F.lit(2.0)).otherwise(F.lit(0.0))
-        - depth.cast("double") * 0.1
-    )
+# Deterministic priority over (depth, page_kind, url): link-discovery
+# surfaces first (listings, sitemaps, feeds — they keep the frontier fed),
+# keyword-bearing URLs boosted (reference 'higher priority' note :218),
+# deeper pages later.  priority_py is its Python twin.
+PRIORITY_SQL = (
+    f"CASE WHEN page_kind IN ({sql_list(('listing', 'sitemap', 'feed'))})"
+    f" THEN {sql_lit(10.0)} ELSE {sql_lit(0.0)} END"
+    f" + CASE WHEN lower(url) RLIKE {sql_lit('|'.join(rules.SEARCH_KEYWORDS))}"
+    f" THEN {sql_lit(2.0)} ELSE {sql_lit(0.0)} END"
+    f" - CAST(depth AS DOUBLE) * {sql_lit(0.1)}"
+)
 
 
 def priority_py(depth: int, page_kind: str, url: str) -> float:

@@ -36,35 +36,23 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from crawlspark.functions.urls import sql_lit
 from crawlspark.operators.bloom import BloomBucketStore, BloomState
 
 _H2_SALT = "bloom-h2"
 _VIEW_SEQ = itertools.count()
 
-# Hash/bucket Column lists, built once per (SparkContext, n_buckets): the
-# crawl loop probes EVERY politeness batch and each pyspark.sql.functions
-# call is a ~1-3 ms py4j roundtrip — three withColumns per probe totalled
-# ~25 ms/batch of pure driver-side plan construction (same rationale and
-# keying as crawl._COLS_CACHE).
-_HASH_COLS_CACHE: dict = {}
+# The key hashes the bit kernels take, as SQL select items.  The bits are
+# part of every committed Bloom state: changing them breaks resume.
+HASH_SQL = ["xxhash64(url) AS _h1", f"xxhash64({sql_lit(_H2_SALT)}, url) AS _h2"]
 
 
-def _hash_cols(spark, n_buckets: int | None) -> list:
-    key = (spark.sparkContext.applicationId, n_buckets)
-    c = _HASH_COLS_CACHE.get(key)
-    if c is None:
-        if next(iter(_HASH_COLS_CACHE), (None,))[0] != key[0]:
-            _HASH_COLS_CACHE.clear()  # new context: drop dead Column trees
-        h1 = F.xxhash64("url")
-        c = [h1.alias("_h1"), F.xxhash64(F.lit(_H2_SALT), F.col("url")).alias("_h2")]
-        if n_buckets is not None:
-            c = c + [F.pmod(h1, F.lit(n_buckets)).cast("int").alias("bucket")]
-        _HASH_COLS_CACHE[key] = c
-    return c
+def bucket_sql(n_buckets: int) -> str:
+    return f"CAST(pmod(xxhash64(url), {sql_lit(n_buckets)}) AS INT) AS bucket"
 
 
 def _with_hashes(df: DataFrame) -> DataFrame:
-    return df.select("*", *_hash_cols(df.sparkSession, None))
+    return df.selectExpr("*", *HASH_SQL)
 
 
 def _u64(s: pd.Series) -> np.ndarray:
@@ -185,7 +173,7 @@ def probe_unseen(spark: SparkSession, candidates: DataFrame, urlseen: DataFrame,
                 yield pd.Series(out)
 
         probed = (
-            candidates.select("*", *_hash_cols(spark, state.n_buckets))
+            candidates.selectExpr("*", *HASH_SQL, bucket_sql(state.n_buckets))
             .repartition(F.col("bucket"))
             .sortWithinPartitions("bucket")
             .withColumn("maybe_seen", probe(F.col("_h1"), F.col("_h2"), F.col("bucket")))
@@ -287,7 +275,7 @@ def bloom_delta(
 
     rows = (
         accepted.select(*cols)
-        .select("*", *_hash_cols(spark, state.n_buckets))
+        .selectExpr("*", *HASH_SQL, bucket_sql(state.n_buckets))
         .groupBy("bucket")
         .applyInPandas(
             per_bucket,

@@ -157,9 +157,8 @@ def url_skip_filter(spark, sf_dir):
         .otherwise(F.lit("javascript:void(0)"))
     )
     t = d.select("doc_id", url.alias("url"))
-    host = U.host_expr(F.col("url"))
-    dom = U.domain_expr(host)
-    return t.filter(~U.skip_filter_expr(F.col("url"), host, dom)).select("doc_id", "url")
+    dom = U.domain_sql(U.host_sql("url"))
+    return t.filter(f"NOT {U.skip_filter_sql('url', dom)}").select("doc_id", "url")
 
 
 # === 3. URL-seen dedup as exact anti-join (J1/U2; settings.py:107) ========
@@ -1885,8 +1884,8 @@ def url_domain_extract(spark, sf_dir):
         .when(F.col("doc_id") % 5 == 3, F.concat(F.col("source"), F.lit(".org")))
         .otherwise(F.concat(F.lit("x."), F.col("source"), F.lit(".com.sg")))
     )
-    return d.select(
-        "doc_id", host.alias("host"), U.domain_expr(host).alias("domain")
+    return d.select("doc_id", host.alias("host")).selectExpr(
+        "doc_id", "host", f"{U.domain_sql('host')} AS domain"
     )
 
 
@@ -2265,9 +2264,8 @@ def seed_file_union(spark, sf_dir):
     canon = plans.materialize_once(
         kept, url=U.fix_url_expr(F.col("raw"))
     ).select("url")
-    host = U.host_expr(F.col("url"))
-    dom = U.domain_expr(host)
-    return canon.filter(~U.skip_filter_expr(F.col("url"), host, dom)).distinct()
+    dom = U.domain_sql(U.host_sql("url"))
+    return canon.filter(f"NOT {U.skip_filter_sql('url', dom)}").distinct()
 
 
 # ---- F6/H2/H3 breadth: per-domain rule-table extraction -------------------
@@ -3384,9 +3382,9 @@ def url_domain_rewrite(spark, sf_dir):
         "doc_id",
         F.element_at(countries, i).alias("country"),
         F.element_at(hosts, i).alias("host"),
-        U.domain_for_country_expr(
-            F.element_at(hosts, i), F.element_at(countries, i)
-        ).alias("resolved_domain"),
+    ).selectExpr(
+        "doc_id", "country", "host",
+        f"{U.domain_for_country_sql('host', 'country')} AS resolved_domain",
     )
 
 
@@ -3992,7 +3990,7 @@ def cuckoo_expire_readmit(spark, sf_dir):
     import numpy as np
 
     from crawlspark.operators.cuckoo import CuckooState
-    from crawlspark.operators.urlseen import _hash_cols, probe_unseen
+    from crawlspark.operators.urlseen import HASH_SQL, probe_unseen
 
     od = T(spark, sf_dir, "orders")
     li = T(spark, sf_dir, "lineitem")
@@ -4007,7 +4005,7 @@ def cuckoo_expire_readmit(spark, sf_dir):
         mkurl(F.col("o_orderkey")).alias("url"),
         (F.col("o_orderkey") % 10 == 0).alias("expired"),
     )
-    rows = seen.select("expired", *_hash_cols(spark, None)).collect()
+    rows = seen.selectExpr("expired", *HASH_SQL).collect()
     h1 = np.array([r["_h1"] for r in rows], dtype=np.int64).view(np.uint64)
     h2 = np.array([r["_h2"] for r in rows], dtype=np.int64).view(np.uint64)
     exp = np.array([r["expired"] for r in rows], dtype=bool)

@@ -1,8 +1,10 @@
 """SparkSession factory tuned for the crawl engine.
 
-Local-mode defaults follow the sandbox (local[32], 128 GiB driver); on a
-real cluster the same builder is used via ``spark-submit --py-files`` and
-the master/memory settings come from the submit command instead.
+Local-mode defaults follow the machine: one task slot per CPU this process
+may run on, and a quarter of physical memory as the driver heap.
+SPARK_GRAFT_CPUS and SPARK_GRAFT_DRIVER_MEM override them.  On a real
+cluster the same builder is used via ``spark-submit --py-files`` and the
+master/memory settings come from the submit command instead.
 """
 
 from __future__ import annotations
@@ -11,10 +13,15 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Partition counts sized so that at sf0.1 each shuffle partition holds a
-# few MB; on a 1000-executor cluster the same code paths scale by raising
-# spark.sql.shuffle.partitions via --conf (AQE coalesces the small case).
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Task slots, and the default shuffle partition count: at sf0.1 each
+# shuffle partition holds a few MB; on a 1000-executor cluster the same
+# code paths scale by raising spark.sql.shuffle.partitions via --conf (AQE
+# coalesces the small case).
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+# The JVM's resident size grows well past its heap, and the machine may be
+# shared: a quarter of physical memory, at least 1 GiB.
+_PHYS_MB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{max(1024, _PHYS_MB // 4)}m"
 
 # the directory holding the crawlspark package: Python workers import
 # crawlspark from here whatever the driver's working directory is
@@ -36,9 +43,8 @@ def get_spark(
     The package root goes on the executors' PYTHONPATH, so UDFs that import
     crawlspark work when the driver runs from any directory.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
-    sp = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    master = master or f"local[{CPUS}]"
+    sp = shuffle_partitions or CPUS
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -64,7 +70,7 @@ def get_spark(
         # executeTake's 1→4→16→… partition ramp only adds 2-3 driver job
         # rounds per micro-batch before reading what one round could
         .config("spark.sql.limit.initialNumPartitions", "512")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", DRIVER_MEM)
         .config("spark.ui.enabled", "false")
         # snapshot commits write many small per-table delta files; skip the
         # _SUCCESS marker FS round-trips on every one

@@ -9,7 +9,8 @@ from pyspark.sql import functions as F
 
 from crawlspark.operators.bloom import BloomBucketStore, BloomState
 from crawlspark.operators.cuckoo import CuckooState
-from crawlspark.operators.urlseen import _hash_cols, bloom_delta, probe_unseen
+from crawlspark.operators.urlseen import (HASH_SQL, _with_hashes, bloom_delta, bucket_sql,
+                                          probe_unseen)
 
 U64 = st.integers(min_value=0, max_value=2**64 - 1)
 
@@ -78,7 +79,7 @@ def test_probe_unseen_equals_exact_antijoin(spark, tmp_path, layout, small_posit
     seen = _urls(spark, 3000, F.col("id"))
     live = seen.filter(F.col("id") % 4 != 0).select("url")
     if layout == "cuckoo":
-        keyed = seen.select("id", *_hash_cols(spark, None)).collect()
+        keyed = seen.selectExpr("id", *HASH_SQL).collect()
         h1 = np.array([r["_h1"] for r in keyed], dtype=np.int64).view(np.uint64)
         h2 = np.array([r["_h2"] for r in keyed], dtype=np.int64).view(np.uint64)
         expired = np.array([r["id"] % 4 == 0 for r in keyed])
@@ -236,3 +237,18 @@ def test_small_batch_delta_cap_falls_back_to_distributed(spark):
     assert np.array_equal(d1.blobs, d2.blobs)
     assert int(d1.n_items.sum()) == 60_000
     assert hosts == {f"h{i}" for i in range(9)}
+
+
+def test_sql_hashes_equal_column_hashes(spark):
+    """The SQL hash and bucket items give the bits the Column forms gave,
+    so a committed Bloom state still answers for its keys on resume."""
+    df = spark.range(1000).selectExpr(
+        "concat('https://www.h', id % 7, '.example/p/', id) AS url")
+    got = _with_hashes(df).selectExpr("*", bucket_sql(32))
+    want = df.select(
+        "url", F.xxhash64("url").alias("_h1"),
+        F.xxhash64(F.lit("bloom-h2"), F.col("url")).alias("_h2"),
+        F.pmod(F.xxhash64("url"), F.lit(32)).cast("int").alias("bucket"),
+    )
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())

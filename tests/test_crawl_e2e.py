@@ -1,8 +1,6 @@
 """Golden end-to-end: engine vs single-threaded oracle (SURVEY §5), plus
 resume-from-snapshot equality — the BASELINE.json pytest contract."""
 
-import shutil
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -33,24 +31,6 @@ def engine_run(spark, tmp_path_factory):
 def oracle_run():
     return crawl_oracle(synthetic.WebSpec(scale=SCALE), max_batches=MAX_BATCHES,
                         budget_override=BUDGET)
-
-
-@pytest.fixture(scope="module")
-def epoch1_run(spark, tmp_path_factory):
-    """The first epoch every re-crawl test below starts from: a finished
-    scale-0.1 crawl.  Each test starts its next epoch in a copy of it (the
-    copied manifests still name this warehouse's data files, which nothing
-    writes or deletes)."""
-    wh = str(tmp_path_factory.mktemp("wh_epoch1"))
-    summary = run_crawl(spark, CrawlConfig(
-        warehouse=wh, spec=synthetic.WebSpec(scale=0.1), max_batches=20,
-        budget_override=20, compact_every=4))
-    return wh, summary
-
-
-def _epoch1_copy(epoch1_run, wh):
-    shutil.copytree(epoch1_run[0], wh)
-    return epoch1_run[1]
 
 
 def _tables(spark, wh):
@@ -156,7 +136,7 @@ def test_partitioned_bloom_crawl_equals_broadcast(spark, tmp_path, engine_run):
     assert hosts_tbl.count() == hosts_tbl.select("host").distinct().count() > 0
 
 
-def test_recrawl_serves_articles_from_fetch_cache(spark, tmp_path, epoch1_run):
+def test_recrawl_serves_articles_from_fetch_cache(spark, tmp_path, epoch1_copy):
     """S9 full semantics (reference HTTPCACHE, settings.py:84-89): a
     re-crawl epoch refetches listings but serves previously-fetched
     articles from the fetched-cache log — no article URL is fetched twice
@@ -165,7 +145,7 @@ def test_recrawl_serves_articles_from_fetch_cache(spark, tmp_path, epoch1_run):
     from crawlspark.crawl import reset_for_recrawl
 
     wh = str(tmp_path / "whc")
-    s1 = _epoch1_copy(epoch1_run, wh)
+    s1 = epoch1_copy(wh)
     cat = SnapshotCatalog(spark, wh)
     cache1 = {r["url"] for r in cat.read("fetched").select("url").collect()}
     assert cache1 and s1["refetch_skipped"] == 0
@@ -193,7 +173,7 @@ def test_recrawl_serves_articles_from_fetch_cache(spark, tmp_path, epoch1_run):
     assert any(u not in cache1 for u in done2)  # genuinely new fetches
 
 
-def test_fetch_cache_staleness_refetches_old_entries(spark, tmp_path, epoch1_run):
+def test_fetch_cache_staleness_refetches_old_entries(spark, tmp_path, epoch1_copy):
     """Cache expiry (reference HTTPCACHE_EXPIRATION_SECS, settings.py:85):
     with fetch_cache_max_age_snaps set, re-crawl serves only cache entries
     written within the last N commits — stale articles REFETCH (which the
@@ -205,7 +185,7 @@ def test_fetch_cache_staleness_refetches_old_entries(spark, tmp_path, epoch1_run
 
     wh = str(tmp_path / "whs")
     spec = synthetic.WebSpec(scale=0.1)
-    _epoch1_copy(epoch1_run, wh)
+    epoch1_copy(wh)
     cat = SnapshotCatalog(spark, wh)
     cache1 = {r["url"]: r["snap_id"]
               for r in cat.read("fetched").groupBy("url")
@@ -293,7 +273,7 @@ def test_recrawl_refreshes_robots(spark, tmp_path):
     assert s["n_progress"] > 0
 
 
-def test_adaptive_fetch_cache_policy(spark, tmp_path, epoch1_run):
+def test_adaptive_fetch_cache_policy(spark, tmp_path, epoch1_copy):
     """Adaptive per-URL cache freshness (operators/freshness.py wired via
     cfg.fetch_cache_adaptive): base interval 0 makes every cache entry
     immediately due (all articles refetch); a huge base serves everything
@@ -306,7 +286,7 @@ def test_adaptive_fetch_cache_policy(spark, tmp_path, epoch1_run):
 
     wh = str(tmp_path / "wha")
     spec = synthetic.WebSpec(scale=0.1)
-    _epoch1_copy(epoch1_run, wh)
+    epoch1_copy(wh)
     cat = SnapshotCatalog(spark, wh)
     cache1 = {r["url"] for r in cat.read("fetched").select("url").collect()}
     art1 = {u for u in cache1 if "/news/" in u}
@@ -499,7 +479,7 @@ def test_small_batch_fused_stage_is_materialized(spark, tmp_path):
     """A politeness-sized batch's fused fetch/parse stage is fully cached
     before any downstream job runs, so the commit's overlapped jobs only
     ever read the cache and no page is fetched twice."""
-    from crawlspark.crawl import _Batch, _fetch_parse, _invariant_cols, _release, _schedule
+    from crawlspark.crawl import _Batch, _fetch_parse, _release, _schedule
 
     cfg = CrawlConfig(warehouse=str(tmp_path / "wh"), spec=synthetic.WebSpec(scale=SCALE),
                       budget_override=BUDGET)
@@ -507,8 +487,7 @@ def test_small_batch_fused_stage_is_materialized(spark, tmp_path):
     cat = SnapshotCatalog(spark, cfg.warehouse)
     seen = cat.load_bloom(m)
     b = _Batch(spark=spark, catalog=cat, cfg=cfg, manifest=m, batch_id=1,
-               is_compact=False, cols=_invariant_cols(spark), seen=seen,
-               probed=seen, prof=None)
+               is_compact=False, seen=seen, probed=seen, prof=None)
     try:
         _schedule(b)
         assert 0 < b.n_sched < 1000

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from crawlspark.operators.cuckoo import CuckooFull, CuckooState, apply_partitioned
-from crawlspark.operators.urlseen import _hash_cols
+from crawlspark.operators.urlseen import HASH_SQL, bucket_sql
 
 
 def _urls(lo, hi, tag="p"):
@@ -76,7 +76,7 @@ def test_insert_order_invariant_layout(random_keys):
 
 def _jvm_hashed(spark, urls, nb):
     df = spark.createDataFrame([(u,) for u in urls], "url string")
-    return df.select("url", *_hash_cols(spark, nb))
+    return df.selectExpr("url", *HASH_SQL, bucket_sql(nb))
 
 
 def test_partitioned_apply_matches_driver_kernel(spark):

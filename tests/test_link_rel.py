@@ -92,12 +92,14 @@ def test_link_rel_gate_equals_oracle_and_binds(spark, tmp_path, gated_wh):
     assert seen_on < seen_off, "gate should close some discovery paths"
 
 
-def test_fused_links_and_blocked_equals_two_calls():
-    """extract_links_and_rel_blocked must be definitionally equal to the
-    (extract_links, rel_blocked_hrefs) pair on every anchor shape: plain,
-    rel-blocked, mixed-carrier, onclick-only, and the onclick URL that
-    also appears on a blocked anchor."""
+def test_listing_body_parsed_once(monkeypatch):
+    """A listing body is parsed into a tree once per page, with or without
+    the rel gate: the card, link and rel-gate extractors all read the tree
+    parse_html keeps.  The link views themselves are pinned on every
+    anchor shape: plain, rel-blocked, mixed-carrier, onclick-only, and the
+    onclick URL that also appears on a blocked anchor."""
     from crawlspark import html_parse as hp
+    from crawlspark.operators.parse import _parse_row
 
     html = (
         '<a href="/plain">x</a>'
@@ -109,11 +111,22 @@ def test_fused_links_and_blocked_equals_two_calls():
         '<a rel="me noopener" href="/odd-rel">w</a>'
         '<a>no-attrs</a>'
     )
-    links, blocked = hp.extract_links_and_rel_blocked(html)
-    assert links == hp.extract_links(html)
-    assert blocked == hp.rel_blocked_hrefs(html)
-    # explicit expectations, not just pairwise equality ("/clicky" is
-    # href-carried on a nofollow anchor; its onclick carrier does not
-    # whitelist it under the established href-level subtraction semantics)
-    assert blocked == {"/blocked", "/blocked2", "/clicky"}
-    assert "/both" not in blocked and "/odd-rel" not in blocked
+    assert hp.extract_links(html) == [
+        "/plain", "/blocked", "/blocked2", "/both", "/both", "/clicky", "/clicky", "/odd-rel"]
+    # "/clicky" is href-carried on a nofollow anchor; its onclick carrier
+    # does not whitelist it under the href-level subtraction semantics
+    assert hp.rel_blocked_hrefs(html) == {"/blocked", "/blocked2", "/clicky"}
+
+    spec = synthetic.WebSpec(scale=SCALE, rel_nofollow=True)
+    host = next(iter(spec.hosts))
+    url = synthetic.listing_url(host, 0, 0)
+    body = synthetic.listing_html(spec, host, 0, 0)
+    feeds = []
+    real_feed = hp._TreeBuilder.feed
+    monkeypatch.setattr(hp._TreeBuilder, "feed",
+                        lambda self, data: feeds.append(1) or real_feed(self, data))
+    for gate in (False, True):
+        hp.parse_html.cache_clear()
+        feeds.clear()
+        recs = _parse_row(url, host, 0, "listing", 200, body, None, obey_link_rel=gate)
+        assert recs and len(feeds) == 1, (gate, len(feeds))

@@ -63,7 +63,7 @@ def test_epoch_substrate_deterministic_mutation():
     assert n_changed > 0
 
 
-def test_revalidate_stale_retires_unchanged_articles(spark, tmp_path):
+def test_revalidate_stale_retires_unchanged_articles(spark, tmp_path, epoch1_copy):
     """E2E: epoch-1 crawl, then an epoch-2 recrawl over a mutated web with
     a tight staleness window (everything stale) and revalidate_stale on —
     unchanged cached articles retire 'revalidated' (log renewed, same
@@ -71,9 +71,7 @@ def test_revalidate_stale_retires_unchanged_articles(spark, tmp_path):
     as 'done'."""
     wh = str(tmp_path / "wh_reval")
     spec0 = synthetic.WebSpec(scale=SCALE)
-    cfg1 = CrawlConfig(warehouse=wh, spec=spec0, max_batches=20,
-                       budget_override=BUDGET, compact_every=4)
-    s1 = run_crawl(spark, cfg1)
+    s1 = epoch1_copy(wh)  # epoch 1 at SCALE and BUDGET, shared with test_crawl_e2e
     assert s1["revalidated"] == 0
     cat = SnapshotCatalog(spark, wh)
     art1 = {r["url"] for r in cat.read("fetched").select("url").collect()

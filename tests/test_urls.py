@@ -1,6 +1,7 @@
 """fix_url / skip filter: unit cases + Spark↔Python parity + idempotence."""
 
 import pandas as pd
+import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -73,16 +74,83 @@ SKIP_SAMPLES = [
 
 def test_skip_filter_spark_python_parity(spark):
     df = spark.createDataFrame(pd.DataFrame({"url": SKIP_SAMPLES}))
-    host = U.host_expr(F.col("url"))
-    dom = U.domain_expr(host)
+    dom = U.domain_sql(U.host_sql("url"))
     got = {
         r["url"]: r["skip"]
-        for r in df.select("url", U.skip_filter_expr(F.col("url"), host, dom).alias("skip")).collect()
+        for r in df.selectExpr("url", f"{U.skip_filter_sql('url', dom)} AS skip").collect()
     }
     for u in SKIP_SAMPLES:
         assert got[u] == U.should_skip_py(u), u
     assert not got[SKIP_SAMPLES[0]] and not got[SKIP_SAMPLES[1]]
     assert all(got[u] for u in SKIP_SAMPLES[2:])
+
+
+def test_sql_literals_keep_regex_escapes(spark):
+    """Patterns reach SQL as raw literals: the skip filter's escaped
+    '\\.pdf' must not match 'xpdf' (a plain '...' literal would unescape
+    it to '.pdf', any character then 'pdf'), and the keyword patterns of
+    the priority and the document filter keep '-' literal.  A value a raw
+    literal cannot hold is refused."""
+    from datetime import date
+
+    from pyspark.sql import types as T
+
+    from crawlspark import schemas
+    from crawlspark.operators.docs import finalize_documents
+    from crawlspark.operators.scheduler import PRIORITY_SQL, priority_py
+
+    kept = "https://www.cna.example/brochurexpdf"
+    assert not U.should_skip_py(kept)
+    df = spark.createDataFrame([(kept,), ("https://www.cna.example/brochure.pdf",)], "url string")
+    dom = U.domain_sql(U.host_sql("url"))
+    assert [r.url for r in df.filter(f"NOT {U.skip_filter_sql('url', dom)}").collect()] == [kept]
+
+    rows = [("https://www.cna.example/news/sars-cov-2-update", "article", 1),
+            ("https://www.cna.example/news/sarsxcovx2-update", "article", 2),
+            ("https://www.cna.example/section/0/page/1", "listing", 0)]
+    got = spark.createDataFrame(rows, "url string, page_kind string, depth int").selectExpr(
+        f"{PRIORITY_SQL} AS p").collect()
+    assert [r.p for r in got] == [priority_py(d, k, u) for u, k, d in rows]
+    assert got[0].p > got[1].p
+
+    doc_schema = T.StructType([
+        T.StructField("url", T.StringType()), T.StructField("title", T.StringType()),
+        T.StructField("published_date", T.DateType()),
+        T.StructField("spans", T.ArrayType(schemas.SPAN)),
+    ])
+    docs = spark.createDataFrame([
+        (f"https://www.cna.example/news/{i}", "t", date(2021, 1, 1),
+         [("text", f"about {kw}", None, 0)])
+        for i, kw in enumerate(["sars-cov-2", "sarsxcovx2"])
+    ], doc_schema)
+    assert [r.url for r in finalize_documents(docs, 1).collect()] == [
+        "https://www.cna.example/news/0"]
+
+    with pytest.raises(ValueError):
+        U.sql_lit("it's")
+
+
+def test_host_and_domain_sql_match_python(spark):
+    urls = [
+        "https://www.cna.example/news/1", "https://sub.thestar.com.my/a",
+        "http://a.b.bbc.co.uk/x?q=1", "https://x.y.com.sg", "https://Example.ORG/p",
+        "https://www.inquirer.com.ph/n", "https://phnompenhpost.com.kh/z",
+        "https://www.bernama.com/en/", "https://news.vnanet.vn/a",
+    ]
+    rows = (
+        spark.createDataFrame([(u,) for u in urls], "url string")
+        .selectExpr("url", f"{U.host_sql('url')} AS host")
+        .selectExpr("url", "host", f"{U.domain_sql('host')} AS domain",
+                    f"{U.domain_for_country_sql('host', U.sql_lit('Vietnam'))} AS vn")
+        .collect()
+    )
+    assert len(rows) == len(urls)
+    for r in rows:
+        assert r.host == U.host_of_py(r.url), r
+        assert r.domain == U.domain_of_py(r.host), r
+        assert r.vn == U.domain_for_country_py(r.host, "vietnam"), r
+    assert {r.domain for r in rows} >= {"thestar.com.my", "bbc.co.uk", "y.com.sg",
+                                         "inquirer.com.ph", "phnompenhpost.com.kh"}
 
 
 def test_fix_url_expr_matches_python_on_absolute(spark):
