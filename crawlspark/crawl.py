@@ -28,9 +28,9 @@ from pyspark.sql import functions as F
 from crawlspark import rules, schemas, synthetic
 from crawlspark.functions import urls as U
 from crawlspark.operators import scheduler
-from crawlspark.operators.bloom import new_seen_state
+from crawlspark.operators.bloom import BloomState, new_seen_state
 from crawlspark.operators.pipeline import docs_from_pipe, fetch_parse_stage
-from crawlspark.operators.urlseen import bloom_delta, probe_unseen
+from crawlspark.operators.urlseen import bloom_delta, probe_unseen, probe_unseen_on_driver
 from crawlspark.tables import SnapshotCatalog
 
 
@@ -527,6 +527,10 @@ class _Batch:
     probed: object  # the pre-update filter the probe broadcast
     prof: dict | None  # phase -> seconds, when CRAWLSPARK_PROF is set
     n_sched: int = 0
+    n_retired: int = 0
+    # exact bound on the new frontier rows: the link candidate count when
+    # the driver probe ran, else None
+    n_cand: int | None = None
     pending: DataFrame | None = None
     hosts_tbl: DataFrame | None = None
     trip_hosts: DataFrame | None = None  # hosts behind an open circuit breaker
@@ -535,6 +539,13 @@ class _Batch:
     revalid_hashes: DataFrame | None = None
     pipe: DataFrame | None = None
     new_frontier: DataFrame | None = None
+    cached: list = field(default_factory=list)  # what _release unpersists
+
+
+def _persist(b: _Batch, df: DataFrame) -> DataFrame:
+    """Persist ``df`` until the batch is released."""
+    b.cached.append(df.persist())
+    return b.cached[-1]
 
 
 def _phase(b: _Batch, fn, *args):
@@ -551,7 +562,12 @@ def _schedule(b: _Batch) -> None:
     """Pending frontier → politeness top-K ``scheduled`` plus the
     ``retired`` progress rows (robots-blocked and cache-served rows get a
     terminal record so they leave the pending set instead of being
-    re-scanned every batch), and the ``scheduled`` row count."""
+    re-scanned every batch), and both row counts.
+
+    Both come from one persisted relation, and one job counts both, so
+    the pending ⋈ hosts plan and its robots-regex UDF run once a batch.
+    The capped schedule and the cache hits, which several of the batch's
+    jobs read, are persisted as well."""
     cfg, catalog, manifest = b.cfg, b.catalog, b.manifest
     b.pending = _pending(catalog, manifest)
     b.hosts_tbl = catalog.read("hosts", manifest)
@@ -564,28 +580,28 @@ def _schedule(b: _Batch) -> None:
         # (their pending rows stay in the frontier and re-admit when the
         # cooldown passes).  Applied AFTER autothrottle and regardless of
         # budget_override: a dead host's budget is 0 under every policy.
-        b.trip_hosts = scheduler.breaker_blocked_hosts(
+        b.trip_hosts = _persist(b, scheduler.breaker_blocked_hosts(
             catalog.read("metrics", manifest), batch_id=b.batch_id,
             threshold=cfg.failure_trip_threshold,
             cooldown=cfg.failure_trip_cooldown_batches,
-        ).persist()
+        ))
         hosts_df = scheduler.apply_circuit_breaker(hosts_df, b.trip_hosts)
-    scheduled, robots_blocked = scheduler.schedule(
-        b.pending, hosts_df, b.batch_id, return_blocked=True
-    )
+    selected = _persist(b, scheduler.schedule(b.pending, hosts_df, b.batch_id,
+                                              with_blocked=True))
+    scheduled = selected.filter("NOT blocked").drop("blocked")
     if cfg.global_batch_cap is not None:
         # fleet fetch capacity: admit the top-cap rows by historical host
         # yield (cache-served rows count against the cap too — admission
         # happens before the cache split so the admitted set is a pure
         # function of frontier + metrics state, not of cache contents)
-        scheduled = scheduler.cap_global_batch(
+        scheduled = _persist(b, scheduler.cap_global_batch(
             scheduled,
             scheduler.host_yield_scores(catalog.read("metrics", manifest)),
             cfg.global_batch_cap,
             age_bonus_permille=cfg.yield_age_bonus_permille,
             batch_id=b.batch_id,
-        )
-    retired = robots_blocked.select(
+        ))
+    retired = selected.filter("blocked").select(
         "url", F.xxhash64("url").alias("url_hash"), F.lit(b.batch_id).alias("batch_id"),
         F.lit(0).alias("status"), F.lit("robots_blocked").alias("outcome"),
         F.col("retry_count").alias("attempt"),
@@ -593,11 +609,10 @@ def _schedule(b: _Batch) -> None:
     fetched_log = None
     if cfg.use_fetch_cache:
         fetched_log = catalog.read("fetched", manifest)
-        cached = _cache_hits(b, scheduled, fetched_log)
+        cached = _persist(b, _cache_hits(b, scheduled, fetched_log))
         retired = retired.unionByName(cached)
         scheduled = scheduled.join(cached.select("url"), on="url", how="left_anti")
-    b.scheduled = scheduled.persist()
-    b.retired = retired.persist()
+    b.scheduled, b.retired = scheduled, retired
     if cfg.revalidate_stale and fetched_log is not None:
         # conditional-revalidation lookup: the latest logged body hash of
         # each STALE scheduled article (fresh ones were served as 'cached'
@@ -615,7 +630,10 @@ def _schedule(b: _Batch) -> None:
             )).alias("m"))
             .select("url", F.col("m.body_hash").alias("cached_hash"))
         )
-    b.n_sched = b.scheduled.count()
+    counts = scheduled.selectExpr("1 AS s").unionByName(retired.selectExpr("0 AS s")).agg(
+        F.expr("count_if(s = 1) AS n_sched"), F.expr("count_if(s = 0) AS n_retired")
+    ).first()
+    b.n_sched, b.n_retired = counts["n_sched"], counts["n_retired"]
 
 
 def _cache_hits(b: _Batch, scheduled: DataFrame, fetched_log: DataFrame) -> DataFrame:
@@ -670,10 +688,8 @@ def _zero_batch(b: _Batch) -> dict | None:
     """A batch that scheduled nothing: commit just the retired rows, skip
     forward over a waiting frontier, or finish (None).  It is finished
     only when nothing was retired and no pending row is backoff-gated or
-    held back by an open circuit breaker whose cooldown will pass.  Only
-    here is the retired count needed — the common path unions retired
-    rows into the progress append unconditionally."""
-    retired = b.retired.count() > 0
+    held back by an open circuit breaker whose cooldown will pass."""
+    retired = b.n_retired > 0
     if not retired and not (
         b.pending.filter(F.col("not_before_batch") > b.batch_id).count()
         or (b.trip_hosts is not None and b.pending.filter(
@@ -700,14 +716,14 @@ def _fetch_parse(b: _Batch) -> None:
         # optional cached_hash column for the in-worker 304 check; left
         # join so non-candidates carry null and behave exactly as before
         sched_in = sched_in.join(F.broadcast(b.revalid_hashes), on="url", how="left")
-    b.pipe = fetch_parse_stage(
+    b.pipe = _persist(b, fetch_parse_stage(
         sched_in, cfg.spec, num_partitions=max(1, (b.n_sched + 99) // 100),
         entire_site=cfg.search_entire_site, strip_tracking=cfg.strip_tracking,
         obey_meta_robots=cfg.obey_meta_robots,
         use_canonical_link=cfg.use_canonical_link,
         use_feeds=cfg.use_feeds,
         obey_link_rel=cfg.obey_link_rel,
-    ).persist()
+    ))
     b.pipe.count()
 
 
@@ -723,12 +739,19 @@ def _link_probe(b: _Batch) -> None:
         .filter(f"depth + 1 <= {cfg.max_depth}")
     )
     cand = links.groupBy(F.expr("link AS url")).agg(F.expr(_CAND_WINNER)).selectExpr(*_CAND)
-    # small_positives: a batch's Bloom-positive sliver is bounded by its
-    # extracted links, so the exact check broadcast-SCANS urlseen instead
-    # of shuffling it (at 10^10 seen rows the shuffle, not the sliver, is
-    # what would dominate every micro-batch)
+    # the exact check of the Bloom positives broadcast-SCANS urlseen
+    # instead of shuffling it: the positives are bounded by the batch's
+    # links (at 10^10 seen rows the shuffle, not the sliver, is what would
+    # dominate every micro-batch).  A broadcast Bloom state and a batch of
+    # at most 50k candidates are probed on the driver, which holds the
+    # state; the partitioned layout and larger batches probe distributed.
     urlseen_all = b.catalog.read("urlseen", b.manifest)
-    new_links = probe_unseen(b.spark, cand, urlseen_all, b.seen, small_positives=True)
+    on_driver = (probe_unseen_on_driver(b.spark, cand, urlseen_all, b.seen)
+                 if isinstance(b.seen, BloomState) else None)
+    if on_driver is not None:
+        new_links, b.n_cand = on_driver
+    else:
+        new_links = probe_unseen(b.spark, cand, urlseen_all, b.seen, small_positives=True)
     if cfg.trap_template_cap is not None:
         # cap AFTER the seen-set filter: slots go only to genuinely-new
         # URLs (a re-linked already-seen sibling would otherwise win a
@@ -737,12 +760,12 @@ def _link_probe(b: _Batch) -> None:
         new_links = scheduler.cap_template_explosion(
             new_links, cfg.trap_template_cap
         )
-    b.new_frontier = new_links.selectExpr(
+    b.new_frontier = _persist(b, new_links.selectExpr(
         "url", "xxhash64(url) AS url_hash", "host", "depth",
         f"{scheduler.PRIORITY_SQL} AS priority",
         f"{b.batch_id} AS discovered_batch", "0 AS retry_count",
         f"{b.batch_id + 1} AS not_before_batch", "page_kind", "meta",
-    ).persist()
+    ))
 
 
 def _commit_plans(b: _Batch) -> dict:
@@ -753,7 +776,9 @@ def _commit_plans(b: _Batch) -> dict:
     progress = fetched.selectExpr(
         "url", "xxhash64(url) AS url_hash", f"{bid} AS batch_id", "status", "outcome",
         "retry_count AS attempt",
-    ).unionByName(b.retired)
+    )
+    if b.n_retired:
+        progress = progress.unionByName(b.retired)
     # retry re-entry with exponential backoff (reference :543-555, :636)
     retries = fetched.filter(_IS_RETRY).selectExpr(
         "url", "xxhash64(url) AS url_hash", "host", "depth", "priority",
@@ -809,13 +834,14 @@ def _state_update(b: _Batch) -> dict:
     bytes never reach the driver), plus the capacity auto-guard on
     compaction batches.  Returns the state for the commit's manifest and
     a late hosts append when the batch discovered new hosts."""
-    # politeness-sized batches skip the shuffle job: accepted rows are
-    # bounded by n_sched × links-per-page (~64 is generous for news
-    # listings; overshooting only costs the driver a few MB, never
-    # correctness — same hashes, same numpy kernel either way)
+    # small batches skip the shuffle job: accepted rows are bounded by the
+    # candidate count after a driver probe, else by n_sched × links-per-page
+    # (~64 is generous for news listings; overshooting only costs the
+    # driver a few MB, never correctness — same hashes, same numpy kernel
+    # either way)
     delta, new_hosts = bloom_delta(
         b.spark, b.new_frontier, b.seen, collect_hosts=True,
-        small_batch_rows=b.n_sched * 64,
+        small_batch_rows=b.n_sched * 64 if b.n_cand is None else b.n_cand,
     )
     b.seen.merge(delta)
     hosts = _new_hosts_frame(b.spark, b.hosts_tbl, new_hosts)
@@ -890,9 +916,8 @@ def _commit(b: _Batch, appends: dict) -> dict:
 def _release(b: _Batch) -> None:
     """Drop the batch's caches and broadcasts (its state is committed) and
     print the CRAWLSPARK_PROF line."""
-    for df in (b.scheduled, b.retired, b.pipe, b.new_frontier, b.trip_hosts):
-        if df is not None:
-            df.unpersist()
+    for df in b.cached:
+        df.unpersist()
     b.probed.release()
     b.seen.release()
     if b.prof is not None:

@@ -95,7 +95,7 @@ def robots_allowed_py(url: str, disallow: list[str] | None,
 
 
 def schedule(pending: DataFrame, hosts: DataFrame, batch_id: int,
-             return_blocked: bool = False):
+             with_blocked: bool = False) -> DataFrame:
     """pending(FRONTIER) × hosts → the rows fetched this batch.
 
     hosts is a small dimension → broadcast join (no shuffle on the big
@@ -103,10 +103,13 @@ def schedule(pending: DataFrame, hosts: DataFrame, batch_id: int,
     rank, bounded by the two-phase salt.  hosts must carry the compiled
     ``robots_rx`` column (crawl._hosts_with_rx).
 
-    ``return_blocked=True`` also returns the robots-disallowed eligible
-    rows so the caller can retire them with a terminal progress record —
-    otherwise they would sit in the pending set forever, re-scanned every
-    batch and rewritten by every compaction.
+    ``with_blocked=True`` also keeps the robots-disallowed eligible rows,
+    and adds a boolean ``blocked`` column (false on the fetched rows), so
+    the caller can retire them with a terminal progress record — otherwise
+    they would sit in the pending set forever, re-scanned every batch and
+    rewritten by every compaction.  Both kinds come out of ONE plan: the
+    pending ⋈ hosts join and its robots check run once, and the blocked
+    rows rank in windows of their own, which the budget filter ignores.
     """
     df = pending.filter(F.col("not_before_batch") <= F.lit(batch_id))
     df = df.join(F.broadcast(hosts), on="host", how="inner")
@@ -116,25 +119,24 @@ def schedule(pending: DataFrame, hosts: DataFrame, batch_id: int,
     # rule blocks them here exactly as in robots_allowed_py (oracle twin).
     raw_path = F.regexp_replace(F.col("url"), r"^https?://[^/]+", "")
     path = F.when(raw_path == "", F.lit("/")).otherwise(raw_path)
-    is_blocked = F.col("robots_rx").isNotNull() & F.regexp_like(path, F.col("robots_rx"))
-    drop_cols = ["crawl_delay_s", "budget_per_batch", "robots_disallow",
-                 "robots_allow", "robots_rx"]
-    blocked = df.filter(is_blocked).drop(*drop_cols)
-    df = df.filter(~is_blocked)
+    df = df.withColumn("blocked", F.col("robots_rx").isNotNull()
+                       & F.regexp_like(path, F.col("robots_rx")))
+    if not with_blocked:
+        df = df.filter(~F.col("blocked"))
 
     salt = F.pmod(F.xxhash64("url"), F.lit(SALT_BUCKETS))
-    w1 = Window.partitionBy("host", salt).orderBy(F.desc("priority"), F.asc("url"))
-    w2 = Window.partitionBy("host").orderBy(F.desc("priority"), F.asc("url"))
+    order = (F.desc("priority"), F.asc("url"))
+    w1 = Window.partitionBy("host", salt, "blocked").orderBy(*order)
+    w2 = Window.partitionBy("host", "blocked").orderBy(*order)
     out = (
         df.withColumn("r1", F.row_number().over(w1))
-        .filter(F.col("r1") <= F.col("budget_per_batch"))
+        .filter(F.col("blocked") | (F.col("r1") <= F.col("budget_per_batch")))
         .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= F.col("budget_per_batch"))
-        .drop("r1", "rank", *drop_cols)
+        .filter(F.col("blocked") | (F.col("rank") <= F.col("budget_per_batch")))
+        .drop("r1", "rank", "crawl_delay_s", "budget_per_batch", "robots_disallow",
+              "robots_allow", "robots_rx")
     )
-    if return_blocked:
-        return out, blocked
-    return out
+    return out if with_blocked else out.drop("blocked")
 
 
 # ------------------------------------------------------- adaptive admission

@@ -198,6 +198,44 @@ def probe_unseen(spark: SparkSession, candidates: DataFrame, urlseen: DataFrame,
 _SMALL_BATCH_CAP = 50_000
 
 
+def _driver_hashes(df: DataFrame, keep: list) -> pd.DataFrame | None:
+    """``df``'s (_h1, _h2, *keep) rows on the driver through Arrow, the url
+    hashes computed JVM-side — or None when there are more than
+    _SMALL_BATCH_CAP of them.  limit(cap+1) bounds the collect whatever
+    the caller estimated."""
+    pdf = df.selectExpr(*HASH_SQL, *keep).limit(_SMALL_BATCH_CAP + 1).toPandas()
+    return None if len(pdf) > _SMALL_BATCH_CAP else pdf
+
+
+def probe_unseen_on_driver(spark: SparkSession, candidates: DataFrame,
+                           urlseen: DataFrame, state: BloomState
+                           ) -> Tuple[DataFrame, int] | None:
+    """``probe_unseen(small_positives=True)`` for a batch of at most
+    _SMALL_BATCH_CAP candidates and a ``BloomState``, which the driver
+    already holds: → (unseen candidates, candidate count), or None when
+    the batch is over the cap (the caller falls back to probe_unseen).
+
+    The candidates' (url, h1, h2) come to the driver once, through Arrow;
+    the same ``probe_hashes`` kernel picks the Bloom positives there; one
+    broadcast semi-scan of urlseen finds which positives were really seen,
+    and the candidates anti-join that broadcast hit set: one collect and
+    one scan in place of the distributed probe's pandas UDF and its two
+    shuffles.  ``candidates`` must be url-unique (the crawl loop's
+    in-batch dedup), as the count is the caller's exact bound on the
+    unseen rows."""
+    pdf = _driver_hashes(candidates, ["url"])
+    if pdf is None:
+        return None
+    pos = pdf["url"][state.probe_hashes(_u64(pdf["_h1"]), _u64(pdf["_h2"]))]
+    if pos.empty:
+        return candidates, len(pdf)
+    ids = spark.createDataFrame(pd.DataFrame({"url": pos}), "url string")
+    hits = urlseen.select("url").join(F.broadcast(ids), on="url", how="left_semi")
+    unseen = candidates.join(F.broadcast(hits.withColumnRenamed("url", "_hit")),
+                             F.col("url") == F.col("_hit"), how="left_anti")
+    return unseen, len(pdf)
+
+
 def bloom_delta(
     spark: SparkSession, accepted: DataFrame, state, collect_hosts: bool = False,
     small_batch_rows: int | None = None,
@@ -216,16 +254,16 @@ def bloom_delta(
     one Spark job instead of two per batch) and returns (delta, hosts).
 
     ``small_batch_rows`` (``BloomState`` only): when the caller can BOUND
-    the accepted-row count (the politeness loop: n_scheduled × max
-    links/page) and the bound is small, skip the groupBy+applyInPandas job
-    (two stages, a shuffle and a Python-worker round per micro-batch —
-    ~1.5 s of fixed cost) and instead collect the JVM-computed (h1, h2,
-    host) rows and run the SAME numpy add kernel on the driver.  Identical
-    bits by construction (same hashes, same kernel); the collect is capped
-    by the bound (~24 B/row → a 50k bound is ~1 MB).  The driver already
-    received the touched blobs under the distributed path, so this
-    strictly REDUCES driver traffic for small batches; wide batches keep
-    the distributed path.
+    the accepted-row count (the crawl loop: its candidate count, or
+    n_scheduled × max links/page) and the bound is small, skip the
+    groupBy+applyInPandas job (two stages, a shuffle and a Python-worker
+    round per micro-batch — ~1.5 s of fixed cost) and instead collect the
+    JVM-computed (h1, h2, host) rows and run the SAME numpy add kernel on
+    the driver.  Identical bits by construction (same hashes, same
+    kernel); the collect is capped (~24 B/row → a 50k cap is ~1 MB).  The
+    driver already received the touched blobs under the distributed path,
+    so this strictly REDUCES driver traffic for small batches; wide
+    batches keep the distributed path.
     """
     with_host = collect_hosts and "host" in accepted.columns
     cols = ["url", "host"] if with_host else ["url"]
@@ -233,21 +271,14 @@ def bloom_delta(
 
     if (isinstance(state, BloomState) and small_batch_rows is not None
             and small_batch_rows <= _SMALL_BATCH_CAP):
-        # the caller's bound is an ESTIMATE (pages × assumed links/page) —
-        # hard-cap the driver's exposure with limit(cap+1): if the batch
-        # actually exceeds the cap (link-farm pages), fall through to the
-        # distributed path below instead of materializing an unbounded
-        # collect.  The probe touched only the (persisted) input, so the
-        # fallback recomputes nothing upstream.
-        rows = _with_hashes(accepted.select(*cols)).select(
-            "_h1", "_h2", *cols[1:]
-        ).limit(_SMALL_BATCH_CAP + 1).collect()
-        if len(rows) <= _SMALL_BATCH_CAP:
-            if rows:
-                h1 = np.array([r["_h1"] for r in rows], dtype=np.int64).view(np.uint64)
-                h2 = np.array([r["_h2"] for r in rows], dtype=np.int64).view(np.uint64)
-                delta.add_hashes(h1, h2)
-            hosts = {r["host"] for r in rows} if with_host else set()
+        # an estimated bound can be wrong (link-farm pages): a batch over
+        # the cap falls through to the distributed path below.  The probe
+        # touched only the (persisted) input, so the fallback recomputes
+        # nothing upstream.
+        pdf = _driver_hashes(accepted, cols[1:])
+        if pdf is not None:
+            delta.add_hashes(_u64(pdf["_h1"]), _u64(pdf["_h2"]))
+            hosts = set(pdf["host"]) if with_host else set()
             return (delta, hosts) if collect_hosts else delta
 
     src = dst = None
@@ -273,9 +304,11 @@ def bloom_delta(
              "hosts": [sorted(set(pdf["host"])) if "host" in pdf.columns else []]}
         )
 
+    # only what per_bucket reads goes to Python: the hashes, the bucket and
+    # the host, never the url strings
     rows = (
         accepted.select(*cols)
-        .selectExpr("*", *HASH_SQL, bucket_sql(state.n_buckets))
+        .selectExpr(*HASH_SQL, bucket_sql(state.n_buckets), *cols[1:])
         .groupBy("bucket")
         .applyInPandas(
             per_bucket,

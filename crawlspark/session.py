@@ -81,6 +81,11 @@ def get_spark(
         # any table size; AQE advisory size keeps shuffle partitions aligned
         .config("spark.sql.files.maxPartitionBytes", str(64 * 1024 * 1024))
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", str(32 * 1024 * 1024))
+        # a crawl batch's plans generate ~120 classes; with Spark's default
+        # 100-entry cache every batch compiled them all again (~1,080
+        # Janino compiles per scale-0.1 crawl), with room for 1024 a
+        # repeated batch compiles almost none
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -4,8 +4,9 @@
 import shutil
 import sys
 import tempfile
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from crawlspark import synthetic
 from crawlspark.crawl import CrawlConfig, run_crawl

@@ -14,14 +14,10 @@ from crawlspark.session import get_spark  # noqa: E402
 @pytest.fixture(scope="session")
 def spark():
     # Test data is tiny: four task slots and a 4 GiB heap are plenty, on
-    # any machine.  A crawl batch's plans generate ~120 classes and Spark's
-    # default cache keeps 100, so every batch compiled them all again; with
-    # room for 1024 a repeated crawl compiles none and takes about half the
-    # JVM CPU time.
+    # any machine.
     s = get_spark("tests", master="local[4]", shuffle_partitions=4,
                   extra_conf={"spark.driver.memory":
-                              os.environ.get("SPARK_GRAFT_DRIVER_MEM", "4g"),
-                              "spark.sql.codegen.cache.maxEntries": "1024"})
+                              os.environ.get("SPARK_GRAFT_DRIVER_MEM", "4g")})
     yield s
     s.stop()
 

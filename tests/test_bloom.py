@@ -239,6 +239,40 @@ def test_small_batch_delta_cap_falls_back_to_distributed(spark):
     assert hosts == {f"h{i}" for i in range(9)}
 
 
+def test_driver_probe_equals_distributed_probe(spark, monkeypatch):
+    """The crawl loop's driver probe of a small batch on a BloomState
+    gives the rows of probe_unseen(small_positives=True), and the Bloom
+    bits and hosts of the distributed update follow from its exact bound.
+    A batch over the cap returns None: the caller falls back."""
+    from crawlspark.operators import urlseen
+
+    live = _urls(spark, 3000, F.col("id")).select("url")
+    # ~10 % FPR: many never-seen candidates are Bloom false positives
+    state = BloomState(4, 1 << 12)
+    state.merge(bloom_delta(spark, live, state))
+    # ids 1500..2999 are rediscoveries, 3000..4499 are fresh
+    cand = _urls(spark, 3000, F.col("id") + 1500).withColumn(
+        "host", F.concat(F.lit("h"), (F.col("id") % 7).cast("string")))
+    pdf = _with_hashes(cand).select("url", "_h1", "_h2").toPandas()
+    positive = state.probe_hashes(*(pdf[c].to_numpy().view(np.uint64) for c in ("_h1", "_h2")))
+    seen = pdf["url"].isin({r.url for r in live.collect()}).to_numpy()
+    assert seen.sum() == 1500 and (positive & ~seen).sum() > 0 and (~positive).sum() > 0
+
+    got, n = urlseen.probe_unseen_on_driver(spark, cand, live, state)
+    want = probe_unseen(spark, cand, live, state, small_positives=True)
+    assert n == 3000 and got.columns == cand.columns
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert got.count() == 1500
+    d1, hosts1 = bloom_delta(spark, got, state, collect_hosts=True, small_batch_rows=n)
+    d2, hosts2 = bloom_delta(spark, want, state, collect_hosts=True)
+    assert np.array_equal(d1.blobs, d2.blobs) and np.array_equal(d1.n_items, d2.n_items)
+    assert hosts1 == hosts2 == {f"h{i}" for i in range(7)}
+
+    monkeypatch.setattr(urlseen, "_SMALL_BATCH_CAP", n - 1)
+    assert urlseen.probe_unseen_on_driver(spark, cand, live, state) is None
+    state.release()
+
+
 def test_sql_hashes_equal_column_hashes(spark):
     """The SQL hash and bucket items give the bits the Column forms gave,
     so a committed Bloom state still answers for its keys on resume."""

@@ -475,6 +475,72 @@ def test_zero_batch_stop_check(spark, tmp_path):
     assert cat.read("progress", nxt).count() == 0
 
 
+def _plan_nodes(plan) -> list:
+    """Node names of a physical plan, not counting the plans inside
+    cached relations."""
+    kids = plan.children()
+    return [plan.nodeName()] + [n for i in range(kids.size())
+                                for n in _plan_nodes(kids.apply(i))]
+
+
+def test_schedule_runs_pending_hosts_plan_once(spark, tmp_path):
+    """``scheduled`` and ``retired`` both read one cached relation, so
+    neither reruns the pending ⋈ hosts plan and its robots-regex UDF, and
+    the one count job gives both row counts."""
+    from crawlspark.crawl import _Batch, _release, _schedule
+
+    spec = synthetic.WebSpec(scale=SCALE)
+    # a section page www.fmt.example's robots.txt disallows
+    cfg = CrawlConfig(warehouse=str(tmp_path / "wh"), spec=spec, budget_override=BUDGET,
+                      seed_urls=[*synthetic.seed_urls(spec),
+                                 "https://www.fmt.example/section/1/page/2"])
+    m = init_crawl(spark, cfg)
+    cat = SnapshotCatalog(spark, cfg.warehouse)
+    seen = cat.load_bloom(m)
+    b = _Batch(spark=spark, catalog=cat, cfg=cfg, manifest=m, batch_id=1,
+               is_compact=False, seen=seen, probed=seen, prof=None)
+    try:
+        _schedule(b)
+        assert b.n_retired == b.retired.count() == 1
+        assert b.n_sched == b.scheduled.count() > 0
+        for df in (b.scheduled, b.retired):
+            nodes = _plan_nodes(df._jdf.queryExecution().sparkPlan())
+            assert "InMemoryTableScan" in nodes, nodes
+            assert not any("EvalPython" in n for n in nodes), nodes
+    finally:
+        _release(b)
+
+
+def test_link_probe_over_cap_falls_back(spark, tmp_path, monkeypatch):
+    """A batch's links are probed on the driver, or, over the cap, by the
+    distributed probe; both give the same new frontier rows."""
+    from crawlspark.crawl import _Batch, _fetch_parse, _link_probe, _release, _schedule
+    from crawlspark.operators import urlseen
+
+    cfg = CrawlConfig(warehouse=str(tmp_path / "wh"), spec=synthetic.WebSpec(scale=SCALE),
+                      budget_override=BUDGET)
+    m = init_crawl(spark, cfg)
+    cat = SnapshotCatalog(spark, cfg.warehouse)
+
+    def probe(cap):
+        monkeypatch.setattr(urlseen, "_SMALL_BATCH_CAP", cap)
+        seen = cat.load_bloom(m)
+        b = _Batch(spark=spark, catalog=cat, cfg=cfg, manifest=m, batch_id=1,
+                   is_compact=False, seen=seen, probed=seen, prof=None)
+        try:
+            _schedule(b)
+            _fetch_parse(b)
+            _link_probe(b)
+            return b.n_cand, sorted(b.new_frontier.collect(), key=lambda r: r["url"])
+        finally:
+            _release(b)
+
+    n_cand, on_driver = probe(50_000)
+    n_none, fallback = probe(0)
+    assert n_cand >= len(on_driver) > 0 and n_none is None
+    assert on_driver == fallback
+
+
 def test_small_batch_fused_stage_is_materialized(spark, tmp_path):
     """A politeness-sized batch's fused fetch/parse stage is fully cached
     before any downstream job runs, so the commit's overlapped jobs only

@@ -4,7 +4,6 @@ test_bloom.test_probe_unseen_equals_exact_antijoin)."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from crawlspark.operators.cuckoo import CuckooFull, CuckooState, apply_partitioned
 from crawlspark.operators.urlseen import HASH_SQL, bucket_sql
