@@ -601,11 +601,7 @@ def _schedule(b: _Batch) -> None:
             age_bonus_permille=cfg.yield_age_bonus_permille,
             batch_id=b.batch_id,
         ))
-    retired = selected.filter("blocked").select(
-        "url", F.xxhash64("url").alias("url_hash"), F.lit(b.batch_id).alias("batch_id"),
-        F.lit(0).alias("status"), F.lit("robots_blocked").alias("outcome"),
-        F.col("retry_count").alias("attempt"),
-    )
+    retired = _retired(selected.filter("blocked"), b.batch_id, 0, "robots_blocked")
     fetched_log = None
     if cfg.use_fetch_cache:
         fetched_log = catalog.read("fetched", manifest)
@@ -672,15 +668,22 @@ def _cache_hits(b: _Batch, scheduled: DataFrame, fetched_log: DataFrame) -> Data
         ).select("url").distinct()
     else:
         fresh = fetched_log.select("url").distinct()
-    return (
-        scheduled.filter(F.col("page_kind") == "article")
-        .join(fresh, on="url", how="left_semi")
-        .select(
-            "url", F.xxhash64("url").alias("url_hash"),
-            F.lit(b.batch_id).alias("batch_id"), F.lit(200).alias("status"),
-            F.lit("cached").alias("outcome"),
-            F.col("retry_count").alias("attempt"),
-        )
+    return _retired(
+        scheduled.filter(F.col("page_kind") == "article").join(fresh, on="url", how="left_semi"),
+        b.batch_id, 200, "cached",
+    )
+
+
+def _retired(rows: DataFrame, batch_id: int, status: int, outcome: str) -> DataFrame:
+    """Terminal progress rows for frontier ``rows`` that are not fetched.
+
+    Frontier url and retry_count are never null, but Spark reads every
+    file column as nullable; nvl restates progress's NOT NULL so each
+    progress append writes the declared schema, retired rows or not."""
+    return rows.selectExpr(
+        "nvl(url, '') AS url", "xxhash64(url) AS url_hash", f"{batch_id} AS batch_id",
+        f"{status} AS status", f"{U.sql_lit(outcome)} AS outcome",
+        "nvl(retry_count, 0) AS attempt",
     )
 
 
@@ -773,9 +776,11 @@ def _commit_plans(b: _Batch) -> dict:
     retries), urlseen, progress, documents, metrics and the fetch log."""
     bid = b.batch_id
     fetched = b.pipe.filter(_IS_FETCH).selectExpr("*", _OUTCOME)
+    # status is set on every fetch record, but the pipe's other records
+    # leave it null; nvl restates progress's NOT NULL (see _retired)
     progress = fetched.selectExpr(
-        "url", "xxhash64(url) AS url_hash", f"{bid} AS batch_id", "status", "outcome",
-        "retry_count AS attempt",
+        "url", "xxhash64(url) AS url_hash", f"{bid} AS batch_id", "nvl(status, 0) AS status",
+        "outcome", "retry_count AS attempt",
     )
     if b.n_retired:
         progress = progress.unionByName(b.retired)

@@ -20,12 +20,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-# A selector: (tag, class-or-None).  class=None matches any element of the
-# tag; our mini-DOM has no descendant combinators — the reference's deep
-# CSS paths collapse to their discriminating (tag, class) leaf, which is
-# the honest equivalent over the synthetic fixtures.
-Sel = tuple
-
 DEFAULT_EXCLUDED = frozenset({"ad", "related", "articlePhoto", "promo"})
 
 
@@ -34,7 +28,9 @@ class DomainRules:
     """One site's extraction behavior, declaratively."""
 
     host_key: str = ""  # substring matched against the page host; "" = default
-    # ordered fallback chains — FIRST match wins (reference: or-chains of
+    # ordered fallback chains of (tag, class-or-None) selectors, where
+    # class None matches any element of the tag — FIRST match wins
+    # (reference: or-chains of
     # `response.css(a) or response.css(b)`, e.g. khmertimes title fallback
     # h1 → h2.entry-title :2331-2332)
     body_chain: tuple = (("div", "article-body"), ("div", "article-content"))

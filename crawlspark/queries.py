@@ -18,6 +18,7 @@ Float discipline (cross-engine determinism):
 from __future__ import annotations
 
 import re
+import threading
 
 import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -53,6 +54,36 @@ def q(name: str, sql: str | None = None):
             ORACLE_SQL[name] = sql
         return fn
     return deco
+
+
+TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
+          "lineitem", "events", "documents", "embeddings")
+# one query's tables at a time under their plain names in the session catalog
+_VIEW_LOCK = threading.Lock()
+
+
+def sql_query(name: str, sql: str) -> None:
+    """Register ``sql`` as both sides of query ``name``: the DuckDB
+    oracle, and the Spark query over temp views of the ``T()`` reads of
+    the tables it names.  For twins both engines run unchanged.
+
+    ``spark.sql`` analyzes eagerly, so the DataFrame keeps this
+    ``sf_dir``'s reads once the views are dropped; the lock keeps a
+    concurrent call from rebinding them in between.  A session's own
+    temp view named like a pack table is replaced and dropped."""
+    tables = [t for t in TABLES if re.search(rf"\b{t}\b", sql)]
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        with _VIEW_LOCK:
+            try:
+                for t in tables:
+                    T(spark, sf_dir, t).createOrReplaceTempView(t)
+                return spark.sql(sql)
+            finally:
+                for t in tables:
+                    spark.catalog.dropTempView(t)
+
+    q(name, sql)(run)
 
 
 # ================== 1. URL canonicalization (C1; reference :832-878) =====
@@ -163,7 +194,7 @@ def url_skip_filter(spark, sf_dir):
 
 # === 3. URL-seen dedup as exact anti-join (J1/U2; settings.py:107) ========
 
-@q(
+sql_query(
     "url_dedup_antijoin",
     """
     WITH cand AS (
@@ -175,22 +206,6 @@ def url_skip_filter(spark, sf_dir):
     SELECT url FROM cand WHERE url NOT IN (SELECT url FROM seen)
     """,
 )
-def url_dedup_antijoin(spark, sf_dir):
-    li = T(spark, sf_dir, "lineitem")
-    od = T(spark, sf_dir, "orders")
-    cand = li.select(
-        F.concat(
-            F.lit("https://www.h"), (F.col("l_orderkey") % 50).cast("string"),
-            F.lit(".example/p/"), F.col("l_orderkey").cast("string"),
-        ).alias("url")
-    ).distinct()
-    seen = od.filter(F.col("o_orderkey") % 2 == 0).select(
-        F.concat(
-            F.lit("https://www.h"), (F.col("o_orderkey") % 50).cast("string"),
-            F.lit(".example/p/"), F.col("o_orderkey").cast("string"),
-        ).alias("url")
-    )
-    return cand.join(seen, on="url", how="left_anti")
 
 
 # ====== 4. Per-host top-K priority scheduling (W1; queuelib analog) =======
@@ -224,7 +239,7 @@ def frontier_topk_per_host(spark, sf_dir):
 
 # ====== 5. Politeness budget aggregation (A1; settings.py:25-31) ==========
 
-@q(
+sql_query(
     "politeness_budget",
     """
     SELECT 'h' || (o_custkey % 25) AS host,
@@ -234,21 +249,11 @@ def frontier_topk_per_host(spark, sf_dir):
     FROM orders GROUP BY 1
     """,
 )
-def politeness_budget(spark, sf_dir):
-    od = T(spark, sf_dir, "orders")
-    return (
-        od.groupBy(F.concat(F.lit("h"), (F.col("o_custkey") % 25).cast("string")).alias("host"))
-        .agg(
-            F.count("*").alias("n_pending"),
-            F.max(F.round(F.col("o_totalprice") * 100).cast("long")).alias("top_priority_c"),
-            F.least(F.count("*"), F.lit(60)).alias("budget"),
-        )
-    )
 
 
 # ====== 6. Crawl metrics aggregation (A2; reference :917, :2526) ==========
 
-@q(
+sql_query(
     "crawl_metrics",
     """
     SELECT event_type AS outcome,
@@ -258,13 +263,6 @@ def politeness_budget(spark, sf_dir):
     FROM events GROUP BY 1
     """,
 )
-def crawl_metrics(spark, sf_dir):
-    ev = T(spark, sf_dir, "events")
-    return ev.groupBy(F.col("event_type").alias("outcome")).agg(
-        F.count("*").alias("n"),
-        F.countDistinct("user_id").alias("n_users"),
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_value_c"),
-    )
 
 
 # ====== 7. Retry routing + exponential backoff (F2; middlewares.py:38) ====
@@ -318,7 +316,7 @@ def retry_backoff(spark, sf_dir):
 
 # ====== 8. Distinct counts (A3; reference :571-572) =======================
 
-@q(
+sql_query(
     "distinct_users",
     """
     SELECT event_type, count(DISTINCT user_id) AS n_users,
@@ -326,16 +324,11 @@ def retry_backoff(spark, sf_dir):
     FROM events GROUP BY 1
     """,
 )
-def distinct_users(spark, sf_dir):
-    ev = T(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("n_users"), F.count("*").alias("n_events")
-    )
 
 
 # ====== 9. Seed union + in-batch dedup (U1/U3; reference :288, :571) ======
 
-@q(
+sql_query(
     "union_seeds",
     """
     SELECT DISTINCT url FROM (
@@ -346,14 +339,6 @@ def distinct_users(spark, sf_dir):
       SELECT 'https://www.' || lower(r_name) || '.example/section/0/page/0' AS url FROM region)
     """,
 )
-def union_seeds(spark, sf_dir):
-    rg = T(spark, sf_dir, "region").select(
-        F.concat(F.lit("https://www."), F.lower("r_name"), F.lit(".example/section/0/page/0")).alias("url")
-    )
-    nt = T(spark, sf_dir, "nation").select(
-        F.concat(F.lit("https://www."), F.lower("n_name"), F.lit(".example/section/0/page/0")).alias("url")
-    )
-    return rg.unionByName(nt).unionByName(rg).dropDuplicates(["url"])
 
 
 # ====== 10. Last-element selection (W2; reference :613, :2172) ============
@@ -416,7 +401,7 @@ def keyword_filter(spark, sf_dir):
 
 # ====== 13. Source labeling (F7; reference :1344-1354) ====================
 
-@q(
+sql_query(
     "source_label",
     """
     SELECT doc_id, source,
@@ -427,15 +412,6 @@ def keyword_filter(spark, sf_dir):
     FROM documents
     """,
 )
-def source_label(spark, sf_dir):
-    d = T(spark, sf_dir, "documents")
-    label = (
-        F.when(F.col("source").isin("src0", "src1", "src2"), "CNA")
-        .when(F.col("source").isin("src3", "src4", "src5"), "ST")
-        .when(F.col("source").isin("src6", "src7", "src8"), "INQ")
-        .otherwise("OTHER")
-    )
-    return d.select("doc_id", "source", label.alias("label"))
 
 
 # ====== 14. Media-credit strip (C2; reference :1616-1645) =================
@@ -486,18 +462,13 @@ def doc_fingerprint(spark, sf_dir):
 
 # ---- 16. exact dedup: hash-groupBy (training-pipeline op) ----------------
 
-@q(
+sql_query(
     "dedup_exact",
     """
     SELECT md5(text) AS content_hash, count(*) AS n_docs, min(doc_id) AS keeper_id
     FROM documents GROUP BY 1
     """,
 )
-def dedup_exact(spark, sf_dir):
-    d = T(spark, sf_dir, "documents")
-    return d.groupBy(F.md5("text").alias("content_hash")).agg(
-        F.count("*").alias("n_docs"), F.min("doc_id").alias("keeper_id")
-    )
 
 
 # ---- 17. MinHash signatures + LSH band keys (row-local, shuffle-free) ----
@@ -969,7 +940,7 @@ def events_json_props(spark, sf_dir):
 
 # ---- 29. TPC-H Q1-style pricing summary (relational anchor) ----------------
 
-@q(
+sql_query(
     "tpch_pricing_summary",
     """
     SELECT l_returnflag, l_linestatus,
@@ -981,23 +952,11 @@ def events_json_props(spark, sf_dir):
     GROUP BY 1, 2
     """,
 )
-def tpch_pricing_summary(spark, sf_dir):
-    li = T(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(F.round(F.col("l_quantity") * 100).cast("long")).alias("sum_qty_c"),
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("sum_base_c"),
-            F.sum(F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast("long")).alias("sum_disc_c"),
-            F.count("*").alias("n"),
-        )
-    )
 
 
 # ---- 30. Revenue by nation (multi-join with broadcast dims) ----------------
 
-@q(
+sql_query(
     "revenue_by_nation",
     """
     SELECT n.n_name AS nation,
@@ -1010,21 +969,6 @@ def tpch_pricing_summary(spark, sf_dir):
     GROUP BY 1
     """,
 )
-def revenue_by_nation(spark, sf_dir):
-    li = T(spark, sf_dir, "lineitem")
-    od = T(spark, sf_dir, "orders")
-    cu = T(spark, sf_dir, "customer")
-    na = T(spark, sf_dir, "nation")
-    return (
-        li.join(od, li.l_orderkey == od.o_orderkey)
-        .join(F.broadcast(cu), od.o_custkey == cu.c_custkey)
-        .join(F.broadcast(na), cu.c_nationkey == na.n_nationkey)
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            F.sum(F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast("long")).alias("revenue_c"),
-            F.count("*").alias("n_lines"),
-        )
-    )
 
 
 # ---- 31. Multimodal plumbing: binary columns + typed metadata (stub) -------
@@ -1240,7 +1184,7 @@ def events_pivot(spark, sf_dir):
 
 # ---- 33. Rollup: order counts with subtotal rows (grouping sets) ----------
 
-@q(
+sql_query(
     "orders_rollup",
     """
     SELECT o_orderstatus, o_orderpriority, count(*) AS n,
@@ -1248,15 +1192,6 @@ def events_pivot(spark, sf_dir):
     FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
     """,
 )
-def orders_rollup(spark, sf_dir):
-    od = T(spark, sf_dir, "orders")
-    return (
-        od.rollup("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("sum_price_c"),
-        )
-    )
 
 
 # ==========================================================================
@@ -1891,7 +1826,8 @@ def url_domain_extract(spark, sf_dir):
 
 # ---- S9: fetched-cache anti-join (refetch skip; reference HTTPCACHE) -----
 
-@q(
+# the crawl's refetch decision: listings always, articles only when not in the fetch log
+sql_query(
     "fetched_cache_antijoin",
     """
     WITH cache AS (
@@ -1909,28 +1845,10 @@ def url_domain_extract(spark, sf_dir):
        OR c.url NOT IN (SELECT url FROM cache)
     """,
 )
-def fetched_cache_antijoin(spark, sf_dir):
-    """The re-crawl refetch decision as a standalone query: listings always
-    refetch; articles refetch only when absent from the fetched-cache log
-    (crawl.run_batch's cache-skip anti-join, reference settings.py:84-89)."""
-    d = T(spark, sf_dir, "documents")
-    url = F.concat(F.lit("https://www.cna.example/news/"), _ids(), F.lit("-s"),
-                   (F.col("doc_id") % 7).cast("string"))
-    cache = d.filter(F.col("doc_id") % 3 == 0).select(
-        url.alias("url"), F.md5(F.substring("text", 1, 64)).alias("body_hash")
-    )
-    cand = d.select(
-        "doc_id", url.alias("url"),
-        F.when(F.col("doc_id") % 2 == 0, F.lit("article")).otherwise(F.lit("listing")).alias("page_kind"),
-    )
-    articles = cand.filter(F.col("page_kind") == "article").join(
-        cache.select("url"), on="url", how="left_anti"
-    )
-    listings = cand.filter(F.col("page_kind") == "listing")
-    return articles.unionByName(listings).select("doc_id", "url", "page_kind")
 
 
-@q(
+# refetch with cache expiry: an article is served if any of its log rows is fresh
+sql_query(
     "fetched_cache_staleness",
     """
     WITH cache AS (
@@ -1953,38 +1871,6 @@ def fetched_cache_antijoin(spark, sf_dir):
        OR c.url NOT IN (SELECT url FROM fresh)
     """,
 )
-def fetched_cache_staleness(spark, sf_dir):
-    """The refetch decision WITH cache expiry (reference
-    HTTPCACHE_EXPIRATION_SECS, settings.py:85; crawl.run_batch's
-    fetch_cache_max_age_snaps filter): an article is served from cache only
-    if SOME cache row for its url was written within the last ``max_age``
-    commits (current snap 11, max_age 4 here); stale-only urls refetch.
-    The second cache slice plants fresh duplicate rows for some urls so the
-    any-fresh-row (= max(snap_id) per url) semantics is exercised."""
-    d = T(spark, sf_dir, "documents")
-    url = F.concat(F.lit("https://www.cna.example/news/"), _ids(), F.lit("-s"),
-                   (F.col("doc_id") % 7).cast("string"))
-    cache = d.filter(F.col("doc_id") % 3 == 0).select(
-        url.alias("url"), ((F.col("doc_id") % 10) + 1).alias("snap_id")
-    ).unionByName(
-        d.filter(F.col("doc_id") % 12 == 0).select(
-            url.alias("url"), ((F.col("doc_id") % 3) + 8).alias("snap_id")
-        )
-    )
-    cur_snap, max_age = 11, 4
-    # row-level age filter before distinct ≡ "any row in the window" — the
-    # exact shape run_batch uses, so expiry never shuffles the cache log on
-    # anything but the tiny distinct-url projection
-    fresh = cache.filter(F.col("snap_id") >= cur_snap - max_age).select("url").distinct()
-    cand = d.select(
-        "doc_id", url.alias("url"),
-        F.when(F.col("doc_id") % 2 == 0, F.lit("article")).otherwise(F.lit("listing")).alias("page_kind"),
-    )
-    articles = cand.filter(F.col("page_kind") == "article").join(
-        fresh, on="url", how="left_anti"
-    )
-    listings = cand.filter(F.col("page_kind") == "listing")
-    return articles.unionByName(listings).select("doc_id", "url", "page_kind")
 
 
 # ---- Transfer decoding (gzip middleware; reference middlewares.py:42-61) --
@@ -2101,7 +1987,8 @@ def dedup_cluster_roots(spark, sf_dir):
 
 # ---- J3: redirect detection (reference :2389-2432 final-url semantics) ----
 
-@q(
+# redirected iff final_url differs; rows key by coalesce(final_url, url), as fetch/parse does
+sql_query(
     "redirect_flag",
     """
     WITH f AS (
@@ -2122,30 +2009,6 @@ def dedup_cluster_roots(spark, sf_dir):
     FROM f
     """,
 )
-def redirect_flag(spark, sf_dir):
-    """J3 redirect detection as a standalone query: the fetch stage returns
-    (url, final_url); a page redirected iff final_url differs, and all
-    parse rows are keyed by coalesce(final_url, url) — exactly the fused
-    stage's keying (operators/pipeline.py:104-121; reference alias/query
-    urls collapsing to the canonical article url, :2389-2432)."""
-    d = T(spark, sf_dir, "documents")
-    base = F.concat(F.lit("https://www.cna.example/news/"), _ids())
-    url = F.concat(
-        base,
-        F.when(F.col("doc_id") % 4 == 0, F.lit("?from=rss"))
-        .when(F.col("doc_id") % 4 == 1, F.lit("-alias"))
-        .otherwise(F.lit("")),
-    )
-    status = F.when(F.col("doc_id") % 5 == 4, F.lit(404)).otherwise(F.lit(200))
-    f = d.select("doc_id", url.alias("url"), status.alias("status"),
-                 base.alias("_base"))
-    final_url = F.when(F.col("status") == 200, F.col("_base"))
-    return f.select(
-        "doc_id", "url", "status",
-        final_url.alias("final_url"),
-        F.coalesce(final_url, F.col("url")).alias("parse_url"),
-        ((F.col("status") == 200) & (F.col("_base") != F.col("url"))).alias("redirected"),
-    )
 
 
 # ---- F5: empty-body drop (finalize_documents:99; reference :2530-2531) ----
@@ -2448,7 +2311,8 @@ def whitespace_cleanup(spark, sf_dir):
 
 # ---- J2: meta pass-through (reference :1601 → :2035-2037) -----------------
 
-@q(
+# the listing card's title/date backfill the article's: all four present/absent cases
+sql_query(
     "meta_passthrough",
     """
     WITH t AS (SELECT doc_id,
@@ -2463,30 +2327,6 @@ def whitespace_cleanup(spark, sf_dir):
     FROM t
     """,
 )
-def meta_passthrough(spark, sf_dir):
-    """J2 meta pass-through: the listing card's {title, date} struct rides
-    the frontier row through the fetch hop and backfills the article's
-    missing fields — operators/parse.py:62-63's coalesce (reference: meta=
-    at :1601, consumed :2035-2037).  The fixture exercises all four
-    present/absent combinations; the meta really is a STRUCT column so the
-    pass-through shape matches the engine's."""
-    d = T(spark, sf_dir, "documents")
-    meta = F.struct(
-        F.when(F.col("doc_id") % 3 != 0,
-               F.concat(F.lit("Card title "), _ids())).alias("title"),
-        F.when(F.col("doc_id") % 3 != 0,
-               F.concat(F.lit("May "), ((F.col("doc_id") % 27) + 1).cast("string"),
-                        F.lit(", 2021"))).alias("date"),
-    )
-    page_title = F.when(F.col("doc_id") % 2 == 0, F.concat(F.lit("Page title "), _ids()))
-    page_date = F.when(F.col("doc_id") % 4 == 0, F.lit("June 1, 2021"))
-    t = d.select("doc_id", meta.alias("meta"), page_title.alias("page_title"),
-                 page_date.alias("page_date"))
-    return t.select(
-        "doc_id",
-        F.coalesce("page_title", F.col("meta.title")).alias("title"),
-        F.coalesce("page_date", F.col("meta.date")).alias("date_raw"),
-    )
 
 
 @q(
@@ -3295,7 +3135,8 @@ def media_span_pipeline(spark, sf_dir):
 
 # ---- S9 composition: recrawl change detection over the fetched log -------
 
-@q(
+# recrawl delta from the fetch log's body hash over two epochs: new, changed, unchanged
+sql_query(
     "recrawl_change_report",
     """
     WITH e1 AS (SELECT 'https://www.cna.example/news/' || doc_id AS url,
@@ -3314,31 +3155,6 @@ def media_span_pipeline(spark, sf_dir):
     FROM j GROUP BY 1
     """,
 )
-def recrawl_change_report(spark, sf_dir):
-    """Recrawl delta classification (the S9 fetched log's body_hash across
-    epochs — the reference's HTTPCACHE re-run decides refetch-vs-skip on
-    exactly this signal): pages new to epoch 2, changed (hash differs), or
-    unchanged.  One broadcast-or-shuffle equi-join keyed by url + a
-    map-side-combined count; at 10^10 URLs both epochs are the fetched
-    table's snapshots and the join is url-hash co-partitioned."""
-    d = T(spark, sf_dir, "documents")
-    url = F.concat(F.lit("https://www.cna.example/news/"), F.col("doc_id").cast("string"))
-    e1 = d.filter(F.col("doc_id") % 10 != 9).select(
-        url.alias("url"), F.md5("text").alias("h1"))
-    e2 = d.select(
-        url.alias("url"),
-        F.when(F.col("doc_id") % 10 < 3, F.md5(F.concat(F.col("text"), F.lit(" update"))))
-        .otherwise(F.md5("text")).alias("h2"),
-    )
-    j = e2.join(e1, on="url", how="left")
-    status = (
-        F.when(F.col("h1").isNull(), F.lit("new"))
-        .when(F.col("h1") == F.col("h2"), F.lit("unchanged"))
-        .otherwise(F.lit("changed"))
-    )
-    return j.select(status.alias("status")).groupBy("status").agg(
-        F.count("*").alias("n_pages")
-    )
 
 
 # ---- round-5 rule-table completion: the remaining reference domain
@@ -3932,7 +3748,8 @@ def repetition_ratio(spark, sf_dir):
     )
 
 
-@q(
+# per-source mean-length floor in integer math (n_chars * count >= sum): no float mean
+sql_query(
     "domain_quality_gate",
     """
     WITH s AS (
@@ -3945,21 +3762,6 @@ def repetition_ratio(spark, sf_dir):
     WHERE d.n_chars * src_cnt >= src_sum
     """,
 )
-def domain_quality_gate(spark, sf_dir):
-    """Domain-reputation gate: keep documents at or above their source's
-    mean length — the per-domain quality floor a curated corpus applies.
-    The comparison is pure integer math (n_chars * count >= sum), so no
-    cross-engine float-mean hazard.  One small groupBy on source, then a
-    broadcast join back: the 100 TB side is never shuffled."""
-    d = T(spark, sf_dir, "documents")
-    s = d.groupBy("source").agg(
-        F.sum("n_chars").alias("src_sum"), F.count("*").alias("src_cnt")
-    )
-    return (
-        d.join(F.broadcast(s), "source")
-        .filter(F.col("n_chars") * F.col("src_cnt") >= F.col("src_sum"))
-        .select("doc_id", "source", "n_chars", "src_sum", "src_cnt")
-    )
 
 
 @q(
@@ -4497,7 +4299,8 @@ def anchor_text_agg(spark, sf_dir):
     )
 
 
-@q(
+# host link graph (PageRank input): exact integer weights, one IEEE division
+sql_query(
     "host_graph_edges",
     """
     WITH e AS (
@@ -4513,30 +4316,6 @@ def anchor_text_agg(spark, sf_dir):
     FROM w
     """,
 )
-def host_graph_edges(spark, sf_dir):
-    """Weighted host-level link graph (the input shape for PageRank-style
-    frontier prioritisation): collapse page edges to (src_host, dst_host)
-    weights and per-source transition probabilities.  At 100 TB the page
-    edge set aggregates by host FIRST (partial map-side combine crushes
-    the fan-in before the shuffle), then one window over the already
-    host-sized graph; weights are exact integers, the transition
-    probability is the single IEEE division."""
-    li = T(spark, sf_dir, "lineitem")
-    e = li.select(
-        F.concat(F.lit("h"), (F.col("l_orderkey") % 50).cast("string"))
-        .alias("src_host"),
-        F.concat(F.lit("h"), (F.col("l_partkey") % 50).cast("string"))
-        .alias("dst_host"),
-    ).filter(F.col("l_orderkey") % 50 != F.col("l_partkey") % 50)
-    w = e.groupBy("src_host", "dst_host").agg(F.count("*").alias("w"))
-    wspec = Window.partitionBy("src_host")
-    return w.select(
-        "src_host", "dst_host", F.col("w").cast("long").alias("w"),
-        F.sum("w").over(wspec).alias("out_total"),
-    ).select(
-        "src_host", "dst_host", "w", "out_total",
-        (F.col("w") / F.col("out_total")).alias("transition_p"),
-    )
 
 
 @q(
@@ -5912,7 +5691,8 @@ def crawl_budget_alloc(spark, sf_dir):
     )
 
 
-@q(
+# route media by magic bytes, not by the Content-Type header servers lie in
+sql_query(
     "media_mime_sniff",
     """
     WITH p AS (
@@ -5939,47 +5719,6 @@ def crawl_budget_alloc(spark, sf_dir):
     FROM s
     """,
 )
-def media_mime_sniff(spark, sf_dir):
-    """Content-type sniffing from magic bytes over an opaque binary
-    payload column (the multimodal-intake gate: servers lie in
-    Content-Type headers, so a crawler routes media by the first payload
-    bytes — PNG/JPEG/GIF/PDF signatures here).  The binary column is
-    built identically on both engines (unhex of a magic prefix + the
-    UTF-8 bytes of the text head), sniffed via a hex-prefix CASE, and
-    never returned raw — the parity columns are the derived mime, byte
-    length and head hex.
-
-    100 TB shape: pure row-local projection — zero shuffles, zero UDFs,
-    whole-stage-codegen'd; the sniff cost is O(8 hex chars) per blob
-    regardless of payload size."""
-    d = T(spark, sf_dir, "documents")
-    magic = (
-        F.when(F.col("doc_id") % 5 == 0, F.lit("89504E47"))
-        .when(F.col("doc_id") % 5 == 1, F.lit("FFD8FFE0"))
-        .when(F.col("doc_id") % 5 == 2, F.lit("47494638"))
-        .when(F.col("doc_id") % 5 == 3, F.lit("25504446"))
-        .otherwise(F.lit(""))
-    )
-    p = d.select(
-        "doc_id",
-        F.unhex(F.concat(magic, F.hex(F.substring("text", 1, 40))))
-        .alias("payload"),
-    )
-    s = p.select(
-        "doc_id",
-        F.substring(F.hex("payload"), 1, 8).alias("head_hex"),
-        F.octet_length("payload").cast("long").alias("n_bytes"),
-    )
-    hh = F.col("head_hex")
-    return s.select(
-        "doc_id",
-        F.when(hh.startswith("89504E47"), F.lit("image/png"))
-        .when(hh.startswith("FFD8FF"), F.lit("image/jpeg"))
-        .when(hh.startswith("47494638"), F.lit("image/gif"))
-        .when(hh.startswith("25504446"), F.lit("application/pdf"))
-        .otherwise(F.lit("text/plain")).alias("mime"),
-        "n_bytes", "head_hex",
-    )
 
 
 @q(
@@ -6676,7 +6415,8 @@ def link_farm_score(spark, sf_dir):
 # ============ robots META directive parsing ===============================
 
 
-@q(
+# proves the directive grammar cross-engine: both attribute orders plus an og:title decoy
+sql_query(
     "meta_robots_parse",
     """
     WITH h AS (
@@ -6711,60 +6451,6 @@ def link_farm_score(spark, sf_dir):
     FROM x
     """,
 )
-def meta_robots_parse(spark, sf_dir):
-    """robots META directive parsing — the page-level REP channel
-    robots.txt can't express (noindex / nofollow / none), honored by the
-    crawl loop under cfg.obey_meta_robots (engine: html_parse.
-    meta_robots_directives; e2e-tested against the oracle crawl).  This
-    row proves the DIRECTIVE GRAMMAR cross-engine: per-doc HTML is
-    constructed with both attribute orders plus an og:title decoy, and
-    identical regexps extract the content on Spark and DuckDB.
-    Row-local regexp, zero shuffle, fuses into the scan."""
-    d = T(spark, sf_dir, "documents")
-    frag = F.substring("text", 1, 30)
-    html = (
-        F.when(
-            F.col("doc_id") % 10 == 0,
-            F.concat(F.lit('<html><meta name="robots" content="noindex">'
-                           '<body>'), frag, F.lit("</body>")),
-        )
-        .when(
-            F.col("doc_id") % 10 == 1,
-            F.concat(F.lit('<html><meta content="noindex,nofollow" '
-                           'name="robots"><body>'), frag, F.lit("</body>")),
-        )
-        .when(
-            F.col("doc_id") % 10 == 2,
-            F.concat(F.lit('<html><meta name="robots" content="none">'
-                           '<body>'), frag, F.lit("</body>")),
-        )
-        .otherwise(
-            F.concat(F.lit('<html><meta property="og:title" content="x">'
-                           '<body>'), frag, F.lit("</body>")),
-        )
-    )
-    h = d.select("doc_id", html.alias("html"))
-    direc = F.coalesce(
-        F.nullif(
-            F.regexp_extract(
-                "html", r'<meta name="robots" content="([a-z,]*)"', 1),
-            F.lit(""),
-        ),
-        F.nullif(
-            F.regexp_extract(
-                "html", r'<meta content="([a-z,]*)" name="robots"', 1),
-            F.lit(""),
-        ),
-        F.lit(""),
-    )
-    x = h.select("doc_id", direc.alias("directives"))
-    return x.select(
-        "doc_id", "directives",
-        (F.col("directives").contains("noindex")
-         | F.col("directives").contains("none")).alias("noindex"),
-        (F.col("directives").contains("nofollow")
-         | F.col("directives").contains("none")).alias("nofollow"),
-    )
 
 
 # ============ Tracking-param URL canonicalization =========================
@@ -6945,7 +6631,8 @@ def etag_revalidate(spark, sf_dir):
 # ============ Sitemap-lastmod recrawl hints ================================
 
 
-@q(
+# declared change (sitemap lastmod after our fetch), where adaptive_recrawl_policy sees observed
+sql_query(
     "sitemap_freshness_hint",
     """
     WITH sm AS (
@@ -6966,39 +6653,6 @@ def etag_revalidate(spark, sf_dir):
     FROM sm JOIN f ON f.url = sm.url
     """,
 )
-def sitemap_freshness_hint(spark, sf_dir):
-    """Sitemap-driven recrawl targeting: join each URL's sitemap
-    ``<lastmod>`` against the fetch log's last-fetch time and flag the
-    URLs the SITE says changed since we fetched them.  This is the
-    cheapest freshness signal on the web — one sitemap fetch per host
-    replaces thousands of conditional GETs — and it complements the
-    engine's observation-driven adaptive policy (adaptive_recrawl_policy
-    backs off on OBSERVED stability; this reacts to DECLARED change, so a
-    page that changes right after its adaptive interval doubled still
-    refetches promptly).  One url-keyed equi-join (both sides co-derived
-    here; in production the sitemap side is tiny per host and the join
-    broadcasts per partition), exact integer day math."""
-    d = T(spark, sf_dir, "documents")
-    url = F.concat(F.lit("https://www."), F.col("source"),
-                   F.lit(".example/news/"), F.col("doc_id").cast("string"))
-    sm = d.select(
-        url.alias("url"),
-        F.concat(F.lit("www."), F.col("source"), F.lit(".example"))
-        .alias("host"),
-        (F.col("doc_id") % 28 + 1).cast("long").alias("lastmod_day"),
-    )
-    f = d.select(
-        url.alias("url"),
-        ((F.col("doc_id") * 7) % 28 + 1).cast("long").alias("fetched_day"),
-    )
-    j = sm.join(f, "url")
-    stale = F.col("lastmod_day") > F.col("fetched_day")
-    return j.select(
-        "url", "host", "lastmod_day", "fetched_day",
-        stale.cast("long").alias("stale"),
-        F.when(stale, F.col("lastmod_day") - F.col("fetched_day"))
-        .otherwise(F.lit(0)).cast("long").alias("staleness_days"),
-    )
 
 
 # ============ Politeness compliance audit ==================================
@@ -7397,7 +7051,8 @@ def aligned_lang_pairs(spark, sf_dir):
 # ============ charset negotiation ==========================================
 
 
-@q(
+# HTML5 charset precedence: BOM > Content-Type header > <meta charset> (both grammars) > utf-8
+sql_query(
     "charset_negotiate",
     """
     WITH r AS (
@@ -7437,74 +7092,6 @@ def aligned_lang_pairs(spark, sf_dir):
     FROM x
     """,
 )
-def charset_negotiate(spark, sf_dir):
-    """Charset negotiation with the HTML5 precedence order — BOM beats
-    the Content-Type header beats ``<meta charset>`` beats the utf-8
-    default — over synthesized (BOM flag, header, meta tag) triples that
-    cover both meta grammars (HTML5 ``<meta charset>`` and the legacy
-    http-equiv form) plus a viewport decoy.  This is the decode decision
-    mojibake_repair exists to clean up AFTER someone gets it wrong; a
-    crawler that negotiates correctly never produces the mojibake in the
-    first place (reference scope: scrapy's w3lib does this under
-    response.text).  Row-local regexp + CASE chain, zero shuffle, fuses
-    into the scan."""
-    d = T(spark, sf_dir, "documents")
-    has_bom = F.when(F.col("doc_id") % 7 == 0, F.lit(1)).otherwise(
-        F.lit(0)).cast("long")
-    content_type = (
-        F.when(F.col("doc_id") % 5 == 0,
-               F.lit("text/html; charset=ISO-8859-1"))
-        .when(F.col("doc_id") % 5 == 1, F.lit("text/html; charset=UTF-8"))
-        .otherwise(F.lit("text/html"))
-    )
-    meta_tag = (
-        F.when(F.col("doc_id") % 3 == 0,
-               F.lit('<meta charset="windows-1252">'))
-        .when(
-            F.col("doc_id") % 3 == 1,
-            F.lit('<meta http-equiv="Content-Type" '
-                  'content="text/html; charset=utf-8">'),
-        )
-        .otherwise(
-            F.lit('<meta name="viewport" content="width=device-width">'))
-    )
-    r = d.select(
-        "doc_id", has_bom.alias("has_bom"),
-        content_type.alias("content_type"), meta_tag.alias("meta_tag"),
-    )
-    header_cs = F.lower(
-        F.regexp_extract("content_type", "charset=([A-Za-z0-9-]+)", 1)
-    )
-    meta_cs = F.lower(
-        F.coalesce(
-            F.nullif(
-                F.regexp_extract(
-                    "meta_tag", '<meta charset="([A-Za-z0-9-]+)"', 1),
-                F.lit(""),
-            ),
-            F.nullif(
-                F.regexp_extract(
-                    "meta_tag", 'content="[^"]*charset=([A-Za-z0-9-]+)', 1),
-                F.lit(""),
-            ),
-            F.lit(""),
-        )
-    )
-    x = r.select(
-        "doc_id", "has_bom",
-        header_cs.alias("header_charset"), meta_cs.alias("meta_charset"),
-    )
-    return x.select(
-        "doc_id", "has_bom", "header_charset", "meta_charset",
-        F.when(F.col("has_bom") == 1, F.lit("utf-8"))
-        .when(F.col("header_charset") != "", F.col("header_charset"))
-        .when(F.col("meta_charset") != "", F.col("meta_charset"))
-        .otherwise(F.lit("utf-8")).alias("charset"),
-        F.when(F.col("has_bom") == 1, F.lit("bom"))
-        .when(F.col("header_charset") != "", F.lit("header"))
-        .when(F.col("meta_charset") != "", F.lit("meta"))
-        .otherwise(F.lit("default")).alias("decided_by"),
-    )
 
 
 # ============ BM25 ranking ================================================

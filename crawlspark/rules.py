@@ -371,7 +371,6 @@ MAX_RETRIES = 5
 # Politeness defaults (reference DOWNLOAD_DELAY :427-428, settings.py:23-31)
 DEFAULT_CRAWL_DELAY_S = 0.5
 BATCH_PERIOD_S = 30.0  # virtual micro-batch period → per-host budget
-DEFAULT_BUDGET_PER_BATCH = int(BATCH_PERIOD_S / DEFAULT_CRAWL_DELAY_S)  # 60
 # AutoThrottle delay bounds (reference AUTOTHROTTLE_START_DELAY /
 # AUTOTHROTTLE_MAX_DELAY, settings.py:71-80), in milliseconds
 AUTOTHROTTLE_START_DELAY_MS = 5000

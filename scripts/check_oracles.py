@@ -11,12 +11,12 @@ import duckdb
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from crawlspark.queries import TABLES  # noqa: E402
 from crawlspark.session import get_spark  # noqa: E402
 
 import os
 
 SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.01")
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
 def norm(v):
@@ -27,11 +27,32 @@ def norm(v):
     return str(v)
 
 
-def main():
-    spark = get_spark("oracle-check", shuffle_partitions=8)
+def duckdb_over(sf_dir: str):
+    """A DuckDB connection with a view per pack table of ``sf_dir``."""
     con = duckdb.connect()
     for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def mismatch(sdf, ddf) -> str | None:
+    """Why the Spark and DuckDB results (pandas) differ, or None."""
+    scols, dcols = sorted(sdf.columns), sorted(ddf.columns)
+    if scols != dcols:
+        return f"columns {scols} vs {dcols}"
+    s_rows = sorted(tuple(norm(v) for v in row) for row in sdf[scols].itertuples(index=False))
+    d_rows = sorted(tuple(norm(v) for v in row) for row in ddf[dcols].itertuples(index=False))
+    if len(s_rows) != len(d_rows):
+        return f"rows {len(s_rows)} vs {len(d_rows)}"
+    diffs = [(a, b) for a, b in zip(s_rows, d_rows) if a != b]
+    if diffs:
+        return f"{len(diffs)} differing rows; first: \n  S={diffs[0][0]}\n  D={diffs[0][1]}"
+    return None
+
+
+def main():
+    spark = get_spark("oracle-check", shuffle_partitions=8)
+    con = duckdb_over(SF_DIR)
     qs = entrymod.queries()
     oq = entrymod.oracle_sql()
     names = sys.argv[1:] or sorted(qs)
@@ -42,24 +63,12 @@ def main():
             continue
         try:
             sdf = qs[name](spark, SF_DIR).toPandas()
-            ddf = con.sql(oq[name]).df()
-            scols, dcols = sorted(sdf.columns), sorted(ddf.columns)
-            if scols != dcols:
-                print(f"FAIL {name}: columns {scols} vs {dcols}")
-                n_bad += 1
-                continue
-            s_rows = sorted(tuple(norm(v) for v in row) for row in sdf[scols].itertuples(index=False))
-            d_rows = sorted(tuple(norm(v) for v in row) for row in ddf[dcols].itertuples(index=False))
-            if len(s_rows) != len(d_rows):
-                print(f"FAIL {name}: rows {len(s_rows)} vs {len(d_rows)}")
-                n_bad += 1
-                continue
-            diffs = [(a, b) for a, b in zip(s_rows, d_rows) if a != b]
-            if diffs:
-                print(f"FAIL {name}: {len(diffs)} differing rows; first: \n  S={diffs[0][0]}\n  D={diffs[0][1]}")
+            why = mismatch(sdf, con.sql(oq[name]).df())
+            if why:
+                print(f"FAIL {name}: {why}")
                 n_bad += 1
             else:
-                print(f"OK   {name}  ({len(s_rows)} rows)")
+                print(f"OK   {name}  ({len(sdf)} rows)")
                 n_ok += 1
         except Exception as e:  # noqa: BLE001
             print(f"ERR  {name}: {type(e).__name__}: {str(e)[:300]}")

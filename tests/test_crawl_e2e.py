@@ -511,6 +511,28 @@ def test_schedule_runs_pending_hosts_plan_once(spark, tmp_path):
         _release(b)
 
 
+def test_progress_appends_write_the_declared_schema(spark, tmp_path):
+    """Every per-batch progress file has the declared column nullability,
+    whether or not its batch retired rows (a robots-blocked seed here)."""
+    import pyarrow.parquet as pq
+
+    from crawlspark.schemas import PROGRESS
+
+    spec = synthetic.WebSpec(scale=SCALE)
+    cfg = CrawlConfig(warehouse=str(tmp_path / "wh"), spec=spec, budget_override=BUDGET,
+                      max_batches=4, compact_every=0,
+                      seed_urls=[*synthetic.seed_urls(spec),
+                                 "https://www.fmt.example/section/1/page/2"])
+    run_crawl(spark, cfg)
+    cat = SnapshotCatalog(spark, cfg.warehouse)
+    assert cat.read("progress", cat.latest()).filter("outcome = 'robots_blocked'").count()
+    files = sorted((tmp_path / "wh" / "progress").glob("snap*/*.parquet"))
+    assert len({f.parent for f in files}) >= 2
+    declared = [(f.name, f.nullable) for f in PROGRESS]
+    for f in files:
+        assert [(c.name, c.nullable) for c in pq.read_schema(f)] == declared, f
+
+
 def test_link_probe_over_cap_falls_back(spark, tmp_path, monkeypatch):
     """A batch's links are probed on the driver, or, over the cap, by the
     distributed probe; both give the same new frontier rows."""

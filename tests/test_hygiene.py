@@ -1,8 +1,8 @@
 """Source hygiene without a linter: every import in the crawlspark
 package is used — a module-level one somewhere in its module, one inside
 a function somewhere in that function — every undecorated top-level
-function or class in it is referenced somewhere, and every CrawlConfig
-field is set by some caller."""
+function or class and every module-level assignment in it is referenced
+somewhere, and every CrawlConfig field is set by some caller."""
 
 import ast
 import dataclasses
@@ -66,31 +66,61 @@ def test_no_unused_function_imports():
 
 
 def _referenced(tree: ast.AST) -> set[str]:
-    """Names a module uses: bare names, attributes and imported names."""
-    out = _names(tree)
+    """Names a module reads: bare names (not assignment targets),
+    attributes and imported names."""
+    out: set[str] = set()
     for n in ast.walk(tree):
-        if isinstance(n, ast.Attribute):
+        if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
             out.add(n.attr)
         elif isinstance(n, ast.alias):
             out.add(n.name.rsplit(".", 1)[-1])
     return out
 
 
-def test_no_unreferenced_top_level_defs():
-    """Decorated defs register themselves (query packs, UDFs); any other
-    top-level function or class nobody names is dead code."""
+def _repo_referenced() -> set[str]:
     sources = [*PKG.rglob("*.py"), *(ROOT / "scripts").rglob("*.py"),
                *(ROOT / "perfbench").rglob("*.py"), *(ROOT / "tests").rglob("*.py"),
                ROOT / "bench.py", ROOT / "__spark_entry__.py"]
     used: set[str] = set()
     for p in sources:
         used |= _referenced(ast.parse(p.read_text(), filename=str(p)))
+    return used
+
+
+def _top_level(kinds) -> list[tuple[Path, ast.stmt]]:
+    return [(p, node) for p in sorted(PKG.rglob("*.py"))
+            for node in ast.parse(p.read_text(), filename=str(p)).body
+            if isinstance(node, kinds)]
+
+
+def test_no_unreferenced_top_level_defs():
+    """Decorated defs register themselves (query packs, UDFs); any other
+    top-level function or class nobody names is dead code."""
+    used = _repo_referenced()
     dead = [
         f"{p.relative_to(ROOT)}:{node.lineno} {node.name}"
-        for p in sorted(PKG.rglob("*.py"))
-        for node in ast.parse(p.read_text(), filename=str(p)).body
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-        and not node.decorator_list and node.name not in used
+        for p, node in _top_level((ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        if not node.decorator_list and node.name not in used
+    ]
+    assert dead == []
+
+
+def _assigned(node: ast.Assign | ast.AnnAssign) -> list[str]:
+    targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+    return [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+
+
+def test_no_unreferenced_module_assignments():
+    """A module-level name nothing reads (a constant, or a SQL fragment
+    only a deleted query used) is dead code; dunder names are exempt."""
+    used = _repo_referenced()
+    dead = [
+        f"{p.relative_to(ROOT)}:{node.lineno} {name}"
+        for p, node in _top_level((ast.Assign, ast.AnnAssign))
+        for name in _assigned(node)
+        if not name.startswith("__") and name not in used
     ]
     assert dead == []
 
