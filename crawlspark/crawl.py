@@ -28,9 +28,9 @@ from pyspark.sql import functions as F
 from crawlspark import rules, schemas, synthetic
 from crawlspark.functions import urls as U
 from crawlspark.operators import scheduler
-from crawlspark.operators.bloom import BloomState, new_seen_state
+from crawlspark.operators.bloom import new_seen_state
 from crawlspark.operators.pipeline import docs_from_pipe, fetch_parse_stage
-from crawlspark.operators.urlseen import bloom_delta, probe_unseen, probe_unseen_on_driver
+from crawlspark.operators.urlseen import bloom_delta, probe_unseen
 from crawlspark.tables import SnapshotCatalog
 
 
@@ -495,10 +495,16 @@ def _pending(catalog: SnapshotCatalog, manifest: dict,
     )
 
 
-def _new_hosts_frame(spark: SparkSession, hosts_tbl: DataFrame, hosts) -> DataFrame | None:
-    """HOSTS rows (robots fetched) for the names in ``hosts`` that the
-    hosts table lacks, or None when there are none.  Only the tiny name
-    list touches the driver; the robots fetch+parse runs distributed."""
+def _seen_update(spark: SparkSession, seen, accepted: DataFrame, hosts_tbl: DataFrame,
+                 one_batch: bool = False) -> DataFrame | None:
+    """Fold the ``accepted`` frontier rows into the URL-seen filter
+    ``seen`` and return HOSTS rows (robots fetched) for their hosts that
+    the hosts table lacks, or None when there are none.  The host names
+    piggyback on the Bloom update's job (in the partitioned layout blob
+    bytes never reach the driver); only the tiny name list touches the
+    driver, and the robots fetch+parse runs distributed."""
+    delta, hosts = bloom_delta(spark, accepted, seen, collect_hosts=True, one_batch=one_batch)
+    seen.merge(delta)
     if not hosts:
         return None
     cand_df = spark.createDataFrame([(h,) for h in sorted(hosts)], "host string")
@@ -524,13 +530,9 @@ class _Batch:
     batch_id: int
     is_compact: bool
     seen: object  # URL-seen filter, any layout; the state update folds the batch in
-    probed: object  # the pre-update filter the probe broadcast
     prof: dict | None  # phase -> seconds, when CRAWLSPARK_PROF is set
     n_sched: int = 0
     n_retired: int = 0
-    # exact bound on the new frontier rows: the link candidate count when
-    # the driver probe ran, else None
-    n_cand: int | None = None
     pending: DataFrame | None = None
     hosts_tbl: DataFrame | None = None
     trip_hosts: DataFrame | None = None  # hosts behind an open circuit breaker
@@ -675,15 +677,11 @@ def _cache_hits(b: _Batch, scheduled: DataFrame, fetched_log: DataFrame) -> Data
 
 
 def _retired(rows: DataFrame, batch_id: int, status: int, outcome: str) -> DataFrame:
-    """Terminal progress rows for frontier ``rows`` that are not fetched.
-
-    Frontier url and retry_count are never null, but Spark reads every
-    file column as nullable; nvl restates progress's NOT NULL so each
-    progress append writes the declared schema, retired rows or not."""
+    """Terminal progress rows for frontier ``rows`` that are not fetched."""
     return rows.selectExpr(
-        "nvl(url, '') AS url", "xxhash64(url) AS url_hash", f"{batch_id} AS batch_id",
+        "url", "xxhash64(url) AS url_hash", f"{batch_id} AS batch_id",
         f"{status} AS status", f"{U.sql_lit(outcome)} AS outcome",
-        "nvl(retry_count, 0) AS attempt",
+        "retry_count AS attempt",
     )
 
 
@@ -710,9 +708,9 @@ def _fetch_parse(b: _Batch) -> None:
     small politeness batches don't pay a full worker-pool spin-up.
 
     The stage is persisted and materialized here, before any downstream
-    job reads it: the commit runs the state update overlapped with the
-    table writes, and those concurrent jobs then only ever read a filled
-    cache, so every scheduled page is fetched exactly once."""
+    job reads it: the link probe and the commit's concurrent table writes
+    then only ever read a filled cache, so every scheduled page is fetched
+    exactly once."""
     cfg = b.cfg
     sched_in = b.scheduled
     if b.revalid_hashes is not None:
@@ -742,19 +740,13 @@ def _link_probe(b: _Batch) -> None:
         .filter(f"depth + 1 <= {cfg.max_depth}")
     )
     cand = links.groupBy(F.expr("link AS url")).agg(F.expr(_CAND_WINNER)).selectExpr(*_CAND)
-    # the exact check of the Bloom positives broadcast-SCANS urlseen
-    # instead of shuffling it: the positives are bounded by the batch's
-    # links (at 10^10 seen rows the shuffle, not the sliver, is what would
-    # dominate every micro-batch).  A broadcast Bloom state and a batch of
-    # at most 50k candidates are probed on the driver, which holds the
-    # state; the partitioned layout and larger batches probe distributed.
+    # one_batch: the exact check of the Bloom positives broadcast-SCANS
+    # urlseen instead of shuffling it, since the positives are bounded by
+    # the batch's links (at 10^10 seen rows the shuffle, not the sliver,
+    # is what would dominate every micro-batch); probe_unseen picks the
+    # driver or the executors for the probe itself
     urlseen_all = b.catalog.read("urlseen", b.manifest)
-    on_driver = (probe_unseen_on_driver(b.spark, cand, urlseen_all, b.seen)
-                 if isinstance(b.seen, BloomState) else None)
-    if on_driver is not None:
-        new_links, b.n_cand = on_driver
-    else:
-        new_links = probe_unseen(b.spark, cand, urlseen_all, b.seen, small_positives=True)
+    new_links = probe_unseen(b.spark, cand, urlseen_all, b.seen, one_batch=True)
     if cfg.trap_template_cap is not None:
         # cap AFTER the seen-set filter: slots go only to genuinely-new
         # URLs (a re-linked already-seen sibling would otherwise win a
@@ -776,10 +768,8 @@ def _commit_plans(b: _Batch) -> dict:
     retries), urlseen, progress, documents, metrics and the fetch log."""
     bid = b.batch_id
     fetched = b.pipe.filter(_IS_FETCH).selectExpr("*", _OUTCOME)
-    # status is set on every fetch record, but the pipe's other records
-    # leave it null; nvl restates progress's NOT NULL (see _retired)
     progress = fetched.selectExpr(
-        "url", "xxhash64(url) AS url_hash", f"{bid} AS batch_id", "nvl(status, 0) AS status",
+        "url", "xxhash64(url) AS url_hash", f"{bid} AS batch_id", "status",
         "outcome", "retry_count AS attempt",
     )
     if b.n_retired:
@@ -833,26 +823,14 @@ def _commit_plans(b: _Batch) -> dict:
     }
 
 
-def _state_update(b: _Batch) -> dict:
-    """The commit's ``state_fn``: the Bloom update and host discovery in
-    one job (host names piggyback on it; in the partitioned layout blob
-    bytes never reach the driver), plus the capacity auto-guard on
-    compaction batches.  Returns the state for the commit's manifest and
-    a late hosts append when the batch discovered new hosts."""
-    # small batches skip the shuffle job: accepted rows are bounded by the
-    # candidate count after a driver probe, else by n_sched × links-per-page
-    # (~64 is generous for news listings; overshooting only costs the
-    # driver a few MB, never correctness — same hashes, same numpy kernel
-    # either way)
-    delta, new_hosts = bloom_delta(
-        b.spark, b.new_frontier, b.seen, collect_hosts=True,
-        small_batch_rows=b.n_sched * 64 if b.n_cand is None else b.n_cand,
-    )
-    b.seen.merge(delta)
-    hosts = _new_hosts_frame(b.spark, b.hosts_tbl, new_hosts)
+def _state_update(b: _Batch) -> tuple:
+    """The batch's new frontier rows folded into the URL-seen filter, and
+    the capacity auto-guard on compaction batches: → (the filter, its
+    manifest state, the hosts append or None when no new host was
+    discovered)."""
+    hosts = _seen_update(b.spark, b.seen, b.new_frontier, b.hosts_tbl, one_batch=True)
     resplit = _bloom_autosplit(b) if b.is_compact else {}
-    return {"bloom": b.seen, "state": {**_bloom_lineage(b.seen), **resplit},
-            "appends": {} if hosts is None else {"hosts": hosts}}
+    return b.seen, {**_bloom_lineage(b.seen), **resplit}, hosts
 
 
 def _bloom_autosplit(b: _Batch) -> dict:
@@ -862,13 +840,15 @@ def _bloom_autosplit(b: _Batch) -> dict:
     always re-derive them).  One distributed groupBy(bucket).applyInPandas
     job, same kernel as the steady-state update; old blob files stay
     referenced by old snapshots (isolation) and are swept at expiry.
-    Returns the lineage update."""
+    The replaced filter's broadcast is released.  Returns the lineage
+    update."""
     if b.seen.fpr_estimate() <= 10 * b.cfg.bloom_target_fpr:
         return {}
     all_seen = b.catalog.read("urlseen", b.manifest).select("url").unionByName(
         b.new_frontier.select("url")
     )
-    b.seen = b.seen.empty_like(b.seen.n_buckets * 2)
+    old, b.seen = b.seen, b.seen.empty_like(b.seen.n_buckets * 2)
+    old.release()
     b.seen.merge(bloom_delta(b.spark, all_seen, b.seen))
     return {"bloom_resplit_to": b.seen.n_buckets}
 
@@ -903,15 +883,17 @@ def _compaction(b: _Batch, appends: dict) -> dict:
     }
 
 
-def _commit(b: _Batch, appends: dict) -> dict:
-    """One atomic commit.  The state update runs INSIDE it as ``state_fn``,
-    on this thread, overlapped with the pooled table-delta writes (guide
-    §2.6: independent jobs submitted together back-fill idle cores); its
-    Bloom state and hosts append land in the same manifest."""
+def _commit(b: _Batch, appends: dict, update: tuple) -> dict:
+    """One atomic commit: the table appends (and on a compaction batch the
+    replace and rewrites), with ``_state_update``'s filter, manifest state
+    and hosts append in the same manifest."""
+    bloom, state, hosts = update
+    if hosts is not None:
+        appends["hosts"] = hosts
     kw = _compaction(b, appends) if b.is_compact else {}
     manifest = b.catalog.commit(
-        b.batch_id, appends=appends,
-        state_fn=lambda: _phase(b, _state_update), **kw,
+        b.batch_id, appends=appends, bloom=bloom,
+        state={**state, **kw.pop("state", {})}, **kw,
     )
     if b.is_compact and b.cfg.keep_snapshots:
         b.catalog.expire_snapshots(keep_last=b.cfg.keep_snapshots)
@@ -923,7 +905,6 @@ def _release(b: _Batch) -> None:
     print the CRAWLSPARK_PROF line."""
     for df in b.cached:
         df.unpersist()
-    b.probed.release()
     b.seen.release()
     if b.prof is not None:
         print(f"[prof] batch {b.batch_id} n_sched={b.n_sched}: "
@@ -939,9 +920,9 @@ def run_batch(spark: SparkSession, catalog: SnapshotCatalog, cfg: CrawlConfig,
     The batch runs as phases over one shared ``_Batch``: ``_schedule``
     (pending frontier → politeness top-K, counted), ``_fetch_parse`` (the
     fused fetch→parse→clean stage, materialized), ``_link_probe`` (links →
-    URL-seen probe → new frontier rows), ``_commit_plans`` (the per-table
-    appends) and ``_commit`` (one atomic commit; ``_state_update``, the
-    Bloom update and host discovery, runs inside it).  A batch that
+    URL-seen probe → new frontier rows), ``_state_update`` (the Bloom
+    update and host discovery), ``_commit_plans`` (the per-table appends)
+    and ``_commit`` (one atomic commit of all of them).  A batch that
     schedules nothing goes to ``_zero_batch`` instead, which holds the
     stop check.  Set CRAWLSPARK_PROF=1 to print each phase's wall time,
     one line per batch — the politeness-bound loop's fixed cost is job
@@ -954,7 +935,7 @@ def run_batch(spark: SparkSession, catalog: SnapshotCatalog, cfg: CrawlConfig,
         spark=spark, catalog=catalog, cfg=cfg, manifest=manifest,
         batch_id=batch_id,
         is_compact=bool(cfg.compact_every) and batch_id % cfg.compact_every == 0,
-        seen=seen, probed=seen,
+        seen=seen,
         prof={} if os.environ.get("CRAWLSPARK_PROF") else None,
     )
     try:
@@ -963,8 +944,9 @@ def run_batch(spark: SparkSession, catalog: SnapshotCatalog, cfg: CrawlConfig,
             return _phase(b, _zero_batch)
         _phase(b, _fetch_parse)
         _phase(b, _link_probe)
+        update = _phase(b, _state_update)
         appends = _phase(b, _commit_plans)
-        return _phase(b, _commit, appends)
+        return _phase(b, _commit, appends, update)
     finally:
         _release(b)
 
@@ -983,15 +965,13 @@ def enrich_frontier(spark: SparkSession, cfg: CrawlConfig, extra_seeds) -> dict:
     urlseen_all = catalog.read("urlseen", manifest)
     seeds = extra_seeds.dropDuplicates(["url"])
     new = probe_unseen(spark, seeds, urlseen_all, seen).persist()
-    delta, new_hosts = bloom_delta(spark, new, seen, collect_hosts=True)
-    seen.merge(delta)
+    hosts = _seen_update(spark, seen, new, catalog.read("hosts", manifest))
     appends = {
         "frontier": new.coalesce(1),
         "urlseen": new.select(
             "url", "url_hash", F.lit(batch_id).alias("added_batch")
         ).coalesce(1),
     }
-    hosts = _new_hosts_frame(spark, catalog.read("hosts", manifest), new_hosts)
     if hosts is not None:
         appends["hosts"] = hosts
     out = catalog.commit(batch_id, appends=appends, bloom=seen)

@@ -22,6 +22,9 @@ This module and operators/bloom.py are the only places that know which
 layout a seen state has: ``probe_unseen`` and ``bloom_delta`` take any of
 them (bloom.BloomState, bloom.BloomBucketStore, and for the probe
 cuckoo.CuckooState), and ``state.merge(delta)`` folds an update in.
+Given ``one_batch=True`` they also choose where a batch runs: on the
+driver when the state is driver-held and the batch is small, else on the
+executors.
 """
 
 from __future__ import annotations
@@ -60,13 +63,13 @@ def _u64(s: pd.Series) -> np.ndarray:
 
 
 def _split_and_verify(spark: SparkSession, probed: DataFrame, urlseen: DataFrame,
-                      small_positives: bool, drop: tuple) -> DataFrame:
+                      one_batch: bool, drop: tuple) -> DataFrame:
     """probed(+maybe_seen) → unseen rows: guaranteed-fresh negatives UNION
     the exactly-verified Bloom-positive sliver.
 
-    ``small_positives=False`` verifies the positives with a plain LEFT
-    ANTI join, which shuffles both sides.  ``small_positives=True`` (the
-    crawl loop) relies on the sliver being batch-bounded: it BROADCASTS
+    ``one_batch=False`` verifies the positives with a plain LEFT ANTI
+    join, which shuffles both sides.  ``one_batch=True`` (the crawl loop)
+    relies on the sliver being batch-bounded: it BROADCASTS
     the positive ids and verifies with a broadcast LEFT SEMI **scan** of
     urlseen followed by a broadcast anti-join against the hits, so the
     10^10-row seen table is only ever scanned (column-pruned to url),
@@ -94,7 +97,7 @@ def _split_and_verify(spark: SparkSession, probed: DataFrame, urlseen: DataFrame
         probed.repartition(F.col("url")).withColumnRenamed("maybe_seen", "_ms_raw"),
         maybe_seen=F.col("_ms_raw"),
     ).drop("_ms_raw")
-    if not small_positives:
+    if not one_batch:
         fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen", *drop)
         positives = probed.filter(F.col("maybe_seen")).drop("maybe_seen", *drop)
         return fresh.unionByName(
@@ -128,8 +131,20 @@ def _split_and_verify(spark: SparkSession, probed: DataFrame, urlseen: DataFrame
     return out
 
 
+_SMALL_BATCH_CAP = 50_000
+
+
+def _driver_hashes(df: DataFrame, keep: list) -> pd.DataFrame | None:
+    """``df``'s (_h1, _h2, *keep) rows on the driver through Arrow, the url
+    hashes computed JVM-side — or None when there are more than
+    _SMALL_BATCH_CAP of them.  limit(cap+1) bounds the collect whatever
+    the batch holds."""
+    pdf = df.selectExpr(*HASH_SQL, *keep).limit(_SMALL_BATCH_CAP + 1).toPandas()
+    return None if len(pdf) > _SMALL_BATCH_CAP else pdf
+
+
 def probe_unseen(spark: SparkSession, candidates: DataFrame, urlseen: DataFrame,
-                 state, small_positives: bool = False) -> DataFrame:
+                 state, one_batch: bool = False) -> DataFrame:
     """candidates(url, …) → subset whose url was never seen before.
 
     ``state`` is any URL-seen layout.  A ``BloomState`` or ``CuckooState``
@@ -139,7 +154,27 @@ def probe_unseen(spark: SparkSession, candidates: DataFrame, urlseen: DataFrame,
     blobs (local FS here, object store on a real cluster), so the per-task
     working set is one blob whatever the total state size.  Positives of
     every layout are verified against ``urlseen``, the matching exact set.
+
+    ``one_batch=True``: the candidates are one crawl batch's, so their
+    Bloom positives are few (see _split_and_verify).  A ``BloomState``,
+    which the driver holds, then probes a batch of at most
+    _SMALL_BATCH_CAP candidates on the driver: their (url, h1, h2) come
+    over once through Arrow, the same ``probe_hashes`` kernel picks the
+    positives, one broadcast semi-scan of urlseen finds which were really
+    seen, and the candidates anti-join that broadcast hit set — one
+    collect and one scan in place of the pandas UDF and its two shuffles.
+    A larger batch takes the distributed probe below.
     """
+    if one_batch and isinstance(state, BloomState):
+        pdf = _driver_hashes(candidates, ["url"])
+        if pdf is not None:
+            pos = pdf["url"][state.probe_hashes(_u64(pdf["_h1"]), _u64(pdf["_h2"]))]
+            if pos.empty:
+                return candidates
+            ids = spark.createDataFrame(pd.DataFrame({"url": pos}), "url string")
+            hits = urlseen.select("url").join(F.broadcast(ids), on="url", how="left_semi")
+            return candidates.join(F.broadcast(hits.withColumnRenamed("url", "_hit")),
+                                   F.col("url") == F.col("_hit"), how="left_anti")
     # cached per state version — NOT a fresh broadcast per micro-batch
     # (that accumulated executor copies unboundedly); the crawl loop calls
     # state.release() after each batch's commit
@@ -192,53 +227,12 @@ def probe_unseen(spark: SparkSession, candidates: DataFrame, urlseen: DataFrame,
             "maybe_seen", probe(F.col("_h1"), F.col("_h2"))
         )
         drop = ("_h1", "_h2")
-    return _split_and_verify(spark, probed, urlseen, small_positives, drop)
-
-
-_SMALL_BATCH_CAP = 50_000
-
-
-def _driver_hashes(df: DataFrame, keep: list) -> pd.DataFrame | None:
-    """``df``'s (_h1, _h2, *keep) rows on the driver through Arrow, the url
-    hashes computed JVM-side — or None when there are more than
-    _SMALL_BATCH_CAP of them.  limit(cap+1) bounds the collect whatever
-    the caller estimated."""
-    pdf = df.selectExpr(*HASH_SQL, *keep).limit(_SMALL_BATCH_CAP + 1).toPandas()
-    return None if len(pdf) > _SMALL_BATCH_CAP else pdf
-
-
-def probe_unseen_on_driver(spark: SparkSession, candidates: DataFrame,
-                           urlseen: DataFrame, state: BloomState
-                           ) -> Tuple[DataFrame, int] | None:
-    """``probe_unseen(small_positives=True)`` for a batch of at most
-    _SMALL_BATCH_CAP candidates and a ``BloomState``, which the driver
-    already holds: → (unseen candidates, candidate count), or None when
-    the batch is over the cap (the caller falls back to probe_unseen).
-
-    The candidates' (url, h1, h2) come to the driver once, through Arrow;
-    the same ``probe_hashes`` kernel picks the Bloom positives there; one
-    broadcast semi-scan of urlseen finds which positives were really seen,
-    and the candidates anti-join that broadcast hit set: one collect and
-    one scan in place of the distributed probe's pandas UDF and its two
-    shuffles.  ``candidates`` must be url-unique (the crawl loop's
-    in-batch dedup), as the count is the caller's exact bound on the
-    unseen rows."""
-    pdf = _driver_hashes(candidates, ["url"])
-    if pdf is None:
-        return None
-    pos = pdf["url"][state.probe_hashes(_u64(pdf["_h1"]), _u64(pdf["_h2"]))]
-    if pos.empty:
-        return candidates, len(pdf)
-    ids = spark.createDataFrame(pd.DataFrame({"url": pos}), "url string")
-    hits = urlseen.select("url").join(F.broadcast(ids), on="url", how="left_semi")
-    unseen = candidates.join(F.broadcast(hits.withColumnRenamed("url", "_hit")),
-                             F.col("url") == F.col("_hit"), how="left_anti")
-    return unseen, len(pdf)
+    return _split_and_verify(spark, probed, urlseen, one_batch, drop)
 
 
 def bloom_delta(
     spark: SparkSession, accepted: DataFrame, state, collect_hosts: bool = False,
-    small_batch_rows: int | None = None,
+    one_batch: bool = False,
 ):
     """The accepted URLs' Bloom bits as a delta of ``state``'s own layout,
     folded in by ``state.merge(delta)``.  One grouped-map job: each touched
@@ -253,28 +247,25 @@ def bloom_delta(
     rows onto the same job (the crawl loop needs them for robots state —
     one Spark job instead of two per batch) and returns (delta, hosts).
 
-    ``small_batch_rows`` (``BloomState`` only): when the caller can BOUND
-    the accepted-row count (the crawl loop: its candidate count, or
-    n_scheduled × max links/page) and the bound is small, skip the
+    ``one_batch=True`` (``BloomState`` only): the accepted rows are one
+    crawl batch's, so a batch of at most _SMALL_BATCH_CAP rows skips the
     groupBy+applyInPandas job (two stages, a shuffle and a Python-worker
-    round per micro-batch — ~1.5 s of fixed cost) and instead collect the
-    JVM-computed (h1, h2, host) rows and run the SAME numpy add kernel on
-    the driver.  Identical bits by construction (same hashes, same
-    kernel); the collect is capped (~24 B/row → a 50k cap is ~1 MB).  The
-    driver already received the touched blobs under the distributed path,
-    so this strictly REDUCES driver traffic for small batches; wide
+    round per micro-batch — ~1.5 s of fixed cost): the JVM-computed (h1,
+    h2, host) rows are collected and the SAME numpy add kernel runs on the
+    driver.  Identical bits by construction (same hashes, same kernel);
+    the collect is capped (~24 B/row → a 50k cap is ~1 MB).  The driver
+    already received the touched blobs under the distributed path, so
+    this strictly REDUCES driver traffic for small batches; larger
     batches keep the distributed path.
     """
     with_host = collect_hosts and "host" in accepted.columns
     cols = ["url", "host"] if with_host else ["url"]
     delta = state.empty_like()
 
-    if (isinstance(state, BloomState) and small_batch_rows is not None
-            and small_batch_rows <= _SMALL_BATCH_CAP):
-        # an estimated bound can be wrong (link-farm pages): a batch over
-        # the cap falls through to the distributed path below.  The probe
-        # touched only the (persisted) input, so the fallback recomputes
-        # nothing upstream.
+    if one_batch and isinstance(state, BloomState):
+        # a batch over the cap (link-farm pages) falls through to the
+        # distributed path below; the capped collect read only the
+        # (persisted) input, so the fallback recomputes nothing upstream
         pdf = _driver_hashes(accepted, cols[1:])
         if pdf is not None:
             delta.add_hashes(_u64(pdf["_h1"]), _u64(pdf["_h2"]))

@@ -65,11 +65,6 @@ def get_spark(
         # bound at any row width.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.execution.arrow.maxBytesPerBatch", "16m")
-        # every limit().collect() in the engine is over batch-bounded data
-        # (the crawl loop's capped state collect, the hosts-dim cap), where
-        # executeTake's 1→4→16→… partition ramp only adds 2-3 driver job
-        # rounds per micro-batch before reading what one round could
-        .config("spark.sql.limit.initialNumPartitions", "512")
         .config("spark.driver.memory", DRIVER_MEM)
         .config("spark.ui.enabled", "false")
         # snapshot commits write many small per-table delta files; skip the

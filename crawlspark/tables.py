@@ -35,6 +35,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from crawlspark import schemas
 from crawlspark.operators.bloom import BLOB_DIR, SEEN_STATE_KEYS, load_seen_state, seen_state_files
@@ -43,6 +44,33 @@ from crawlspark.operators.bloom import BLOB_DIR, SEEN_STATE_KEYS, load_seen_stat
 # crash-orphan sweep in expire_snapshots matches against this exactly so
 # it can never touch a dir the catalog didn't write
 _SNAP_DIR_RX = re.compile(r"^snap\d{6}-[0-9a-f]{8}$")
+
+
+def _zero_sql(dt: T.DataType) -> str:
+    zero = "array()" if isinstance(dt, T.ArrayType) else "''" if isinstance(dt, T.StringType) else "0"
+    return f"CAST({zero} AS {dt.simpleString()})"
+
+
+def _declared(df: DataFrame, table: str) -> DataFrame:
+    """``df``'s columns of ``table`` in declared order, typed with the
+    declared fields.
+
+    Spark derives a plan's nullability from its operators (a literal is
+    NOT NULL, a file column or a dedup's first() is nullable, and the
+    optimizer can drop an nvl over a column it has not yet found
+    nullable), so a plain write's Parquet schema would depend on the plan.
+    nvl to a typed zero fills each NOT NULL column, and the rows are
+    written under the declared fields (a column the frame lacks, such as
+    one added to the schema later, stays absent and reads back null)."""
+    fields = [f for f in schemas.TABLE_SCHEMAS[table] if f.name in df.columns]
+    df = df.selectExpr(*(
+        f"`{f.name}`" if f.nullable else f"nvl(`{f.name}`, {_zero_sql(f.dataType)}) AS `{f.name}`"
+        for f in fields
+    ))
+    jspark = df.sparkSession._jsparkSession
+    return DataFrame(jspark.createDataFrame(
+        df._jdf.rdd(), jspark.parseDataType(T.StructType(fields).json())
+    ), df.sparkSession)
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -104,7 +132,6 @@ class SnapshotCatalog:
         state: dict | None = None,
         replace: dict[str, DataFrame] | None = None,
         rewrite: dict[str, tuple[list[str], DataFrame]] | None = None,
-        state_fn=None,
     ) -> dict:
         """Atomic multi-table commit: write deltas, then one manifest swap.
 
@@ -116,7 +143,10 @@ class SnapshotCatalog:
         the dropped files, so snapshot isolation holds and expire_snapshots
         garbage-collects them once no surviving manifest needs them.
         ``bloom`` is the URL-seen filter, in either Bloom layout; the
-        manifest records it under that layout's key only.
+        manifest records it under that layout's key only.  Every write
+        restates the table's declared columns and NOT NULL (see
+        ``_declared``), so each file has the declared schema whatever
+        plan produced it.
 
         Optimistic concurrency: the catalog is single-writer by design;
         if another writer swung LATEST between this commit's base read
@@ -132,7 +162,7 @@ class SnapshotCatalog:
 
         def write(table: str, df: DataFrame) -> str | None:
             path = os.path.join(self.root, table, f"snap{snap_id:06d}-{uuid.uuid4().hex[:8]}")
-            df.write.mode("overwrite").parquet(path)
+            _declared(df, table).write.mode("overwrite").parquet(path)
             # empty writes still create the dir; keep manifest clean
             n_files = sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
             if n_files == 0:
@@ -155,25 +185,12 @@ class SnapshotCatalog:
             jobs.append(("rewrite", table, (drop, df)))
         for table, df in appends.items():
             jobs.append(("append", table, df))
-        late_appends: dict[str, DataFrame] = {}
         with ThreadPoolExecutor(max_workers=min(8, max(1, len(jobs)))) as ex:
             futs = [
                 (kind, table, extra,
                  ex.submit(write, table, extra[1] if kind == "rewrite" else extra))
                 for kind, table, extra in jobs
             ]
-            if state_fn is not None:
-                # engine-state job (Bloom delta + host discovery) runs on
-                # the CALLER thread while the pool writes the table deltas
-                # — independent Spark jobs overlapped per guide §2.6.  Its
-                # results land in the same manifest (state + any late
-                # appends written below, before the pointer swap), so the
-                # atomic multi-table commit property is unchanged.
-                sres = state_fn() or {}
-                bloom = sres.get("bloom", bloom)
-                if sres.get("state"):
-                    state = {**(state or {}), **sres["state"]}
-                late_appends = sres.get("appends") or {}
             results = [(k, t, e, f.result()) for k, t, e, f in futs]
         for kind, table, extra, p in results:
             if kind == "replace":
@@ -189,13 +206,6 @@ class SnapshotCatalog:
                 if p:
                     tables.setdefault(table, []).append(p)
                 lineage[table] = {"mode": "append", "path": p}
-        # late appends go on AFTER the replace/rewrite file lists are
-        # settled: a same-table replace must not drop them
-        for table, df in late_appends.items():
-            p = write(table, df)
-            if p:
-                tables.setdefault(table, []).append(p)
-            lineage[table] = {"mode": "append", "path": p}
 
         new_state = dict(prev.get("state") or {})
         new_state.update(state or {})

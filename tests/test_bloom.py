@@ -69,9 +69,9 @@ def _urls(spark, n, key):
                        F.lit("/p/"), key.cast("string")).alias("url"))
 
 
-@pytest.mark.parametrize("small_positives", [False, True])
+@pytest.mark.parametrize("one_batch", [False, True])
 @pytest.mark.parametrize("layout", ["broadcast", "bucket_store", "cuckoo"])
-def test_probe_unseen_equals_exact_antijoin(spark, tmp_path, layout, small_positives):
+def test_probe_unseen_equals_exact_antijoin(spark, tmp_path, layout, one_batch):
     """probe_unseen over each URL-seen layout returns exactly the
     candidates missing from the exact set, with the candidates' own
     columns.  The cuckoo state holds keys since deleted (expired), which
@@ -92,7 +92,7 @@ def test_probe_unseen_equals_exact_antijoin(spark, tmp_path, layout, small_posit
         state.merge(bloom_delta(spark, live, state))
     # overlaps the live, the expired and the never-seen keys
     cand = _urls(spark, 3000, F.col("id") + 1500).withColumn("tag", F.lit("c"))
-    got = probe_unseen(spark, cand, live, state, small_positives=small_positives)
+    got = probe_unseen(spark, cand, live, state, one_batch=one_batch)
     assert got.columns == cand.columns
     want = {r.url for r in cand.join(live, "url", "left_anti").collect()}
     assert {r.url for r in got.collect()} == want
@@ -176,7 +176,7 @@ def test_capacity_autosplit_doubles_buckets_and_keeps_equality(spark, tmp_path):
         "host", F.lit("h")
     )
     unseen = probe_unseen(
-        spark, cand, cat.read("urlseen"), store, small_positives=True
+        spark, cand, cat.read("urlseen"), store, one_batch=True
     )
     assert unseen.count() == 0, "seen URL probed as unseen after resplit"
     store.release()
@@ -220,8 +220,8 @@ def test_resume_after_autosplit_stays_equal(spark, tmp_path):
 
 
 def test_small_batch_delta_cap_falls_back_to_distributed(spark):
-    """The small-batch collect path is gated by the caller's ESTIMATE; when
-    the actual row count exceeds the hard cap the function must fall
+    """A one-batch update tries the capped driver collect first; when the
+    batch holds more rows than the hard cap the function must fall
     through to the distributed path (bounded driver exposure) and still
     produce exactly the same bits."""
     urls = spark.range(60_000).select(
@@ -230,20 +230,23 @@ def test_small_batch_delta_cap_falls_back_to_distributed(spark):
         F.concat(F.lit("h"), (F.col("id") % 9).cast("string")).alias("host"),
     )
     base = BloomState(8, 1 << 16)
-    # lying estimate (10) selects the collect probe; 60k rows > 50k cap
-    d1, hosts = bloom_delta(spark, urls, base, collect_hosts=True,
-                            small_batch_rows=10)
+    # 60k rows > 50k cap
+    d1, hosts = bloom_delta(spark, urls, base, collect_hosts=True, one_batch=True)
     d2 = bloom_delta(spark, urls, BloomState(8, 1 << 16))
     assert np.array_equal(d1.blobs, d2.blobs)
     assert int(d1.n_items.sum()) == 60_000
     assert hosts == {f"h{i}" for i in range(9)}
 
 
+def _runs_probe_udf(df) -> bool:
+    return "ArrowEvalPython" in df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_driver_probe_equals_distributed_probe(spark, monkeypatch):
-    """The crawl loop's driver probe of a small batch on a BloomState
-    gives the rows of probe_unseen(small_positives=True), and the Bloom
-    bits and hosts of the distributed update follow from its exact bound.
-    A batch over the cap returns None: the caller falls back."""
+    """A one-batch probe of a small batch on a BloomState runs on the
+    driver and gives the rows of the distributed probe, which a batch over
+    the cap falls back to; the Bloom bits and hosts of the one-batch
+    update equal those of the distributed update."""
     from crawlspark.operators import urlseen
 
     live = _urls(spark, 3000, F.col("id")).select("url")
@@ -258,18 +261,18 @@ def test_driver_probe_equals_distributed_probe(spark, monkeypatch):
     seen = pdf["url"].isin({r.url for r in live.collect()}).to_numpy()
     assert seen.sum() == 1500 and (positive & ~seen).sum() > 0 and (~positive).sum() > 0
 
-    got, n = urlseen.probe_unseen_on_driver(spark, cand, live, state)
-    want = probe_unseen(spark, cand, live, state, small_positives=True)
-    assert n == 3000 and got.columns == cand.columns
+    got = probe_unseen(spark, cand, live, state, one_batch=True)
+    monkeypatch.setattr(urlseen, "_SMALL_BATCH_CAP", 2999)
+    want = probe_unseen(spark, cand, live, state, one_batch=True)
+    assert not _runs_probe_udf(got) and _runs_probe_udf(want)
+    assert got.columns == cand.columns
     assert sorted(got.collect()) == sorted(want.collect())
     assert got.count() == 1500
-    d1, hosts1 = bloom_delta(spark, got, state, collect_hosts=True, small_batch_rows=n)
+    monkeypatch.setattr(urlseen, "_SMALL_BATCH_CAP", 50_000)
+    d1, hosts1 = bloom_delta(spark, got, state, collect_hosts=True, one_batch=True)
     d2, hosts2 = bloom_delta(spark, want, state, collect_hosts=True)
     assert np.array_equal(d1.blobs, d2.blobs) and np.array_equal(d1.n_items, d2.n_items)
     assert hosts1 == hosts2 == {f"h{i}" for i in range(7)}
-
-    monkeypatch.setattr(urlseen, "_SMALL_BATCH_CAP", n - 1)
-    assert urlseen.probe_unseen_on_driver(spark, cand, live, state) is None
     state.release()
 
 

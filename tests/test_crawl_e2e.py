@@ -498,7 +498,7 @@ def test_schedule_runs_pending_hosts_plan_once(spark, tmp_path):
     cat = SnapshotCatalog(spark, cfg.warehouse)
     seen = cat.load_bloom(m)
     b = _Batch(spark=spark, catalog=cat, cfg=cfg, manifest=m, batch_id=1,
-               is_compact=False, seen=seen, probed=seen, prof=None)
+               is_compact=False, seen=seen, prof=None)
     try:
         _schedule(b)
         assert b.n_retired == b.retired.count() == 1
@@ -512,25 +512,33 @@ def test_schedule_runs_pending_hosts_plan_once(spark, tmp_path):
 
 
 def test_progress_appends_write_the_declared_schema(spark, tmp_path):
-    """Every per-batch progress file has the declared column nullability,
-    whether or not its batch retired rows (a robots-blocked seed here)."""
+    """Every file of every table has the declared columns and nullability:
+    per-batch appends whether or not their batch retired rows (a
+    robots-blocked seed here), and the compaction replace and rewrites."""
     import pyarrow.parquet as pq
 
-    from crawlspark.schemas import PROGRESS
+    from crawlspark.schemas import TABLE_SCHEMAS
 
     spec = synthetic.WebSpec(scale=SCALE)
     cfg = CrawlConfig(warehouse=str(tmp_path / "wh"), spec=spec, budget_override=BUDGET,
-                      max_batches=4, compact_every=0,
+                      max_batches=4, compact_every=2,
                       seed_urls=[*synthetic.seed_urls(spec),
                                  "https://www.fmt.example/section/1/page/2"])
     run_crawl(spark, cfg)
     cat = SnapshotCatalog(spark, cfg.warehouse)
-    assert cat.read("progress", cat.latest()).filter("outcome = 'robots_blocked'").count()
-    files = sorted((tmp_path / "wh" / "progress").glob("snap*/*.parquet"))
-    assert len({f.parent for f in files}) >= 2
-    declared = [(f.name, f.nullable) for f in PROGRESS]
-    for f in files:
-        assert [(c.name, c.nullable) for c in pq.read_schema(f)] == declared, f
+    m = cat.latest()
+    assert cat.read("progress", m).filter("outcome = 'robots_blocked'").count()
+    assert any(cat.manifest_at(snap)["lineage"]["frontier"]["mode"] == "replace"
+               for snap in cat.snapshots())
+    # a rewrite's output merges several batches' urlseen rows into one file
+    assert any(len(set(pq.read_table(f, columns=["added_batch"]).column(0).to_pylist())) > 1
+               for f in (tmp_path / "wh" / "urlseen").glob("snap*/*.parquet"))
+    for table, schema in TABLE_SCHEMAS.items():
+        files = sorted((tmp_path / "wh" / table).glob("snap*/*.parquet"))
+        assert files, table
+        declared = [(f.name, f.nullable) for f in schema]
+        for f in files:
+            assert [(c.name, c.nullable) for c in pq.read_schema(f)] == declared, f
 
 
 def test_link_probe_over_cap_falls_back(spark, tmp_path, monkeypatch):
@@ -546,27 +554,60 @@ def test_link_probe_over_cap_falls_back(spark, tmp_path, monkeypatch):
 
     def probe(cap):
         monkeypatch.setattr(urlseen, "_SMALL_BATCH_CAP", cap)
-        seen = cat.load_bloom(m)
         b = _Batch(spark=spark, catalog=cat, cfg=cfg, manifest=m, batch_id=1,
-                   is_compact=False, seen=seen, probed=seen, prof=None)
+                   is_compact=False, seen=cat.load_bloom(m), prof=None)
         try:
             _schedule(b)
             _fetch_parse(b)
             _link_probe(b)
-            return b.n_cand, sorted(b.new_frontier.collect(), key=lambda r: r["url"])
+            return sorted(b.new_frontier.collect(), key=lambda r: r["url"])
         finally:
             _release(b)
 
-    n_cand, on_driver = probe(50_000)
-    n_none, fallback = probe(0)
-    assert n_cand >= len(on_driver) > 0 and n_none is None
+    on_driver = probe(50_000)
+    fallback = probe(0)
+    assert len(on_driver) > 0
     assert on_driver == fallback
+
+
+def _cached_buffers_loaded(spark, df) -> bool:
+    entry = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+    return entry.isDefined() and entry.get().cachedRepresentation().cacheBuilder(
+    ).isCachedColumnBuffersLoaded()
+
+
+def test_state_update_runs_before_the_writers(spark, tmp_path):
+    """The URL-seen update is its own phase between the link probe and the
+    commit: after it, the batch's new frontier rows are fully cached, so
+    the probe ran once and the table writers only read the cache."""
+    from crawlspark.crawl import (_Batch, _fetch_parse, _link_probe, _release, _schedule,
+                                  _state_update)
+
+    cfg = CrawlConfig(warehouse=str(tmp_path / "wh"), spec=synthetic.WebSpec(scale=SCALE),
+                      budget_override=BUDGET)
+    m = init_crawl(spark, cfg)
+    cat = SnapshotCatalog(spark, cfg.warehouse)
+    b = _Batch(spark=spark, catalog=cat, cfg=cfg, manifest=m, batch_id=1,
+               is_compact=False, seen=cat.load_bloom(m), prof=None)
+    try:
+        _schedule(b)
+        _fetch_parse(b)
+        _link_probe(b)
+        keys = b.seen.bloom_keys()
+        seen, state, _hosts = _state_update(b)
+        assert _cached_buffers_loaded(spark, b.new_frontier)
+        n_new = b.new_frontier.count()
+        assert n_new > 0 and seen is b.seen and seen.bloom_keys() == keys + n_new
+        assert state["bloom_keys"] == seen.bloom_keys()
+    finally:
+        _release(b)
 
 
 def test_small_batch_fused_stage_is_materialized(spark, tmp_path):
     """A politeness-sized batch's fused fetch/parse stage is fully cached
-    before any downstream job runs, so the commit's overlapped jobs only
-    ever read the cache and no page is fetched twice."""
+    before any downstream job runs, so the link probe and the commit's
+    concurrent table writes only ever read the cache and no page is
+    fetched twice."""
     from crawlspark.crawl import _Batch, _fetch_parse, _release, _schedule
 
     cfg = CrawlConfig(warehouse=str(tmp_path / "wh"), spec=synthetic.WebSpec(scale=SCALE),
@@ -575,15 +616,11 @@ def test_small_batch_fused_stage_is_materialized(spark, tmp_path):
     cat = SnapshotCatalog(spark, cfg.warehouse)
     seen = cat.load_bloom(m)
     b = _Batch(spark=spark, catalog=cat, cfg=cfg, manifest=m, batch_id=1,
-               is_compact=False, seen=seen, probed=seen, prof=None)
+               is_compact=False, seen=seen, prof=None)
     try:
         _schedule(b)
         assert 0 < b.n_sched < 1000
         _fetch_parse(b)
-        cache = spark._jsparkSession.sharedState().cacheManager()
-        entry = cache.lookupCachedData(b.pipe._jdf)
-        assert entry.isDefined()
-        builder = entry.get().cachedRepresentation().cacheBuilder()
-        assert builder.isCachedColumnBuffersLoaded()
+        assert _cached_buffers_loaded(spark, b.pipe)
     finally:
         _release(b)

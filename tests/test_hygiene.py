@@ -2,7 +2,8 @@
 package is used — a module-level one somewhere in its module, one inside
 a function somewhere in that function — every undecorated top-level
 function or class and every module-level assignment in it is referenced
-somewhere, and every CrawlConfig field is set by some caller."""
+somewhere, every CrawlConfig field is set by some caller, and the crawl
+loop names no URL-seen layout."""
 
 import ast
 import dataclasses
@@ -138,3 +139,16 @@ def test_every_crawl_config_field_is_passed_somewhere():
               if isinstance(n, ast.Call) for kw in n.keywords}
     unset = [f.name for f in dataclasses.fields(CrawlConfig) if f.name not in passed]
     assert unset == []
+
+
+def test_crawl_names_no_seen_state_layout():
+    """Only operators/urlseen.py and the state modules know which layout
+    a URL-seen filter has (and so where a batch's probe and update run):
+    crawl.py must not name a layout class."""
+    layouts = {"BloomState", "BloomBucketStore", "CuckooState"}
+    tree = ast.parse((PKG / "crawl.py").read_text(), filename="crawl.py")
+    named = sorted((n.lineno, name) for n in ast.walk(tree)
+                   for name in (getattr(n, "id", None), getattr(n, "attr", None),
+                                getattr(n, "name", None))
+                   if name in layouts)
+    assert named == []

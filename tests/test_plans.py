@@ -107,7 +107,7 @@ def test_pending_antijoin_prunes_progress_columns(spark, tmp_path):
 
 
 def test_probe_small_positives_never_shuffles_urlseen(spark):
-    """crawl-loop dedup: with small_positives the exact check of the Bloom
+    """crawl-loop dedup: with one_batch the exact check of the Bloom
     positives must be two BROADCAST joins (semi-scan of urlseen + anti vs
     the hit set) — zero SortMergeJoin even when auto-broadcast is
     disabled, i.e. the 10^10-row seen table is scanned, never
@@ -129,13 +129,13 @@ def test_probe_small_positives_never_shuffles_urlseen(spark):
         )
         state.merge(bloom_delta(spark, seen, state))
 
-        fast = probe_unseen(spark, cand, seen, state, small_positives=True)
+        fast = probe_unseen(spark, cand, seen, state, one_batch=True)
         plan = _plan(spark, fast)
         assert "SortMergeJoin" not in plan
         # formatted mode lists every node twice (tree + details): 2 joins
         assert plan.count("BroadcastHashJoin") >= 2
 
-        slow = probe_unseen(spark, cand, seen, state, small_positives=False)
+        slow = probe_unseen(spark, cand, seen, state, one_batch=False)
         assert "SortMergeJoin" in _plan(spark, slow)  # the default shape
 
         # and the two shapes agree

@@ -363,10 +363,10 @@ def test_rollback_refuses_moved_latest(spark, tmp_path):
     assert cat.snapshots() == [1, 2]
 
 
-def test_state_fn_late_append_survives_same_table_replace(spark, tmp_path):
-    """A state_fn late append lands on top of a same-table replace: both
-    row sets read back (a compaction batch can replace or rewrite the
-    hosts table while its state update appends newly discovered hosts)."""
+def test_append_survives_same_table_replace(spark, tmp_path):
+    """An append lands on top of a same-table replace in one commit: both
+    row sets read back (a compaction batch can rewrite the hosts table
+    while its state update appends newly discovered hosts)."""
 
     def hosts_df(names):
         return spark.createDataFrame(
@@ -375,8 +375,8 @@ def test_state_fn_late_append_survives_same_table_replace(spark, tmp_path):
     cat = SnapshotCatalog(spark, str(tmp_path))
     cat.commit(1, appends={"hosts": hosts_df(["old.example"])})
     m = cat.commit(
-        2, appends={}, replace={"hosts": hosts_df(["a.example", "b.example"])},
-        state_fn=lambda: {"appends": {"hosts": hosts_df(["new.example"])}},
+        2, appends={"hosts": hosts_df(["new.example"])},
+        replace={"hosts": hosts_df(["a.example", "b.example"])},
     )
     got = sorted(r["host"] for r in cat.read("hosts", m).collect())
     assert got == ["a.example", "b.example", "new.example"]
