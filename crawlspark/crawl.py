@@ -495,6 +495,11 @@ def _pending(catalog: SnapshotCatalog, manifest: dict,
     )
 
 
+# a candidate host set up to this size is looked up in the hosts table as
+# one IN list; a larger one as a broadcast semi-join
+_HOSTS_IN_LIST = 1000
+
+
 def _seen_update(spark: SparkSession, seen, accepted: DataFrame, hosts_tbl: DataFrame,
                  one_batch: bool = False) -> DataFrame | None:
     """Fold the ``accepted`` frontier rows into the URL-seen filter
@@ -502,16 +507,22 @@ def _seen_update(spark: SparkSession, seen, accepted: DataFrame, hosts_tbl: Data
     the hosts table lacks, or None when there are none.  The host names
     piggyback on the Bloom update's job (in the partitioned layout blob
     bytes never reach the driver); only the tiny name list touches the
-    driver, and the robots fetch+parse runs distributed."""
+    driver, and the robots fetch+parse runs distributed.  The names the
+    hosts table already holds come back from one filtered scan of it: a
+    batch's few hosts as an IN list, which needs no local relation and no
+    join (a driver list on a join's left side plans as a shuffle join)."""
     delta, hosts = bloom_delta(spark, accepted, seen, collect_hosts=True, one_batch=one_batch)
     seen.merge(delta)
     if not hosts:
         return None
-    cand_df = spark.createDataFrame([(h,) for h in sorted(hosts)], "host string")
-    unknown = sorted(
-        r["host"]
-        for r in cand_df.join(hosts_tbl.select("host"), on="host", how="left_anti").collect()
-    )
+    names = sorted(hosts)
+    known = hosts_tbl.select("host")
+    if len(names) <= _HOSTS_IN_LIST:
+        known = known.filter(F.col("host").isin(names))
+    else:
+        known = known.join(F.broadcast(spark.createDataFrame(pd.DataFrame({"host": names}))),
+                           on="host", how="left_semi")
+    unknown = sorted(hosts - {r["host"] for r in known.collect()})
     if not unknown:
         return None
     return _hosts_frame(

@@ -89,7 +89,9 @@ def stream_to_snapshot_sink(stream_df, catalog, table: str, checkpoint_dir: str)
     foreachBatch: each micro-batch appends under a snapshot commit keyed by
     the epoch id, and an already-committed epoch is skipped on replay —
     idempotent against Structured Streaming's at-least-once foreachBatch
-    contract.  Returns the StreamingQuery."""
+    contract.  ``table`` must be one the catalog declares
+    (``schemas.TABLE_SCHEMAS``); each micro-batch is written with its
+    declared columns.  Returns the StreamingQuery."""
 
     def sink(batch_df, epoch_id: int):
         m = catalog.latest() or {}

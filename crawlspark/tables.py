@@ -53,23 +53,27 @@ def _zero_sql(dt: T.DataType) -> str:
 
 def _declared(df: DataFrame, table: str) -> DataFrame:
     """``df``'s columns of ``table`` in declared order, typed with the
-    declared fields.
+    declared fields; columns outside the declared schema are not written
+    (every read applies the declared schema, so no reader saw them).
 
     Spark derives a plan's nullability from its operators (a literal is
     NOT NULL, a file column or a dedup's first() is nullable, and the
     optimizer can drop an nvl over a column it has not yet found
-    nullable), so a plain write's Parquet schema would depend on the plan.
-    nvl to a typed zero fills each NOT NULL column, and the rows are
-    written under the declared fields (a column the frame lacks, such as
-    one added to the schema later, stays absent and reads back null)."""
+    nullable), so a plain write's Parquet schema would depend on the plan;
+    no expression can restate it, since constant folding turns any
+    expression over a literal (``fetched.snap_id``) into a NOT NULL
+    literal.  nvl to a typed zero fills each NOT NULL column, and the plan's
+    internal rows are written under the declared fields, with no row
+    conversion (a column the frame lacks, such as one added to the schema
+    later, stays absent and reads back null)."""
     fields = [f for f in schemas.TABLE_SCHEMAS[table] if f.name in df.columns]
     df = df.selectExpr(*(
         f"`{f.name}`" if f.nullable else f"nvl(`{f.name}`, {_zero_sql(f.dataType)}) AS `{f.name}`"
         for f in fields
     ))
     jspark = df.sparkSession._jsparkSession
-    return DataFrame(jspark.createDataFrame(
-        df._jdf.rdd(), jspark.parseDataType(T.StructType(fields).json())
+    return DataFrame(jspark.internalCreateDataFrame(
+        df._jdf.queryExecution().toRdd(), jspark.parseDataType(T.StructType(fields).json()), False
     ), df.sparkSession)
 
 
@@ -146,7 +150,8 @@ class SnapshotCatalog:
         manifest records it under that layout's key only.  Every write
         restates the table's declared columns and NOT NULL (see
         ``_declared``), so each file has the declared schema whatever
-        plan produced it.
+        plan produced it; a table that ``schemas.TABLE_SCHEMAS`` does not
+        declare is refused with ValueError before anything is written.
 
         Optimistic concurrency: the catalog is single-writer by design;
         if another writer swung LATEST between this commit's base read
@@ -155,6 +160,11 @@ class SnapshotCatalog:
         the Iceberg commit-conflict contract, so two drivers pointed at
         one warehouse corrupt nothing (the loser loses cleanly).
         """
+        undeclared = sorted({*appends, *(replace or {}), *(rewrite or {})}
+                            - schemas.TABLE_SCHEMAS.keys())
+        if undeclared:
+            raise ValueError(f"no declared schema for {undeclared}: the catalog "
+                             f"holds only {sorted(schemas.TABLE_SCHEMAS)}")
         prev = self.latest() or {"snapshot_id": 0, "tables": {}, "state": {}}
         snap_id = prev["snapshot_id"] + 1
         tables = {k: list(v) for k, v in prev["tables"].items()}

@@ -560,12 +560,17 @@ def test_link_probe_over_cap_falls_back(spark, tmp_path, monkeypatch):
             _schedule(b)
             _fetch_parse(b)
             _link_probe(b)
-            return sorted(b.new_frontier.collect(), key=lambda r: r["url"])
+            plan = b.new_frontier._jdf.queryExecution().executedPlan().toString()
+            return sorted(b.new_frontier.collect(), key=lambda r: r["url"]), plan
         finally:
             _release(b)
 
-    on_driver = probe(50_000)
-    fallback = probe(0)
+    on_driver, driver_plan = probe(50_000)
+    fallback, fallback_plan = probe(0)
+    # the probe UDF runs only on the distributed path (the plans share the
+    # schedule's robots-regex UDF)
+    udf = "ArrowEvalPython [probe("
+    assert udf not in driver_plan and udf in fallback_plan
     assert len(on_driver) > 0
     assert on_driver == fallback
 

@@ -71,6 +71,34 @@ def test_hosts_bootstrap_distributed(spark):
     assert list(row["robots_disallow"]) == list(ref["disallow"])
 
 
+def test_seen_update_fetches_robots_for_unknown_hosts_only(spark, monkeypatch):
+    """A batch's host discovery gives HOSTS rows for exactly the hosts the
+    hosts table lacks, whether the known names are looked up as an IN
+    list or, past its size, by a broadcast semi-join; both fold the same
+    keys into the URL-seen filter."""
+    from crawlspark import crawl
+    from crawlspark.operators.bloom import BloomState
+
+    hosts_tbl = crawl._hosts_frame(
+        spark.createDataFrame([("a.example",), ("b.example",)], "host string"))
+    accepted = spark.createDataFrame(
+        [(f"https://{h}/{i}", h) for i, h in enumerate(
+            ["a.example", "c.example", "d.example", "c.example"])],
+        "url string, host string")
+    blobs = []
+    for in_list in (crawl._HOSTS_IN_LIST, 0):
+        monkeypatch.setattr(crawl, "_HOSTS_IN_LIST", in_list)
+        seen = BloomState(n_buckets=4, bits_per_bucket=1 << 12)
+        out = crawl._seen_update(spark, seen, accepted, hosts_tbl, one_batch=True)
+        assert sorted(r["host"] for r in out.collect()) == ["c.example", "d.example"]
+        blobs.append(seen.blobs.copy())
+    assert (blobs[0] == blobs[1]).all() and blobs[0].any()
+    known = crawl._seen_update(spark, BloomState(n_buckets=4, bits_per_bucket=1 << 12),
+                               accepted.filter("host = 'a.example'"), hosts_tbl,
+                               one_batch=True)
+    assert known is None
+
+
 def test_synthetic_hosts_roundtrip():
     """The engine's politeness state comes from parsing served robots.txt."""
     assert "Disallow: /section/1" in robots_txt("www.fmt.example")

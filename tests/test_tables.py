@@ -383,6 +383,21 @@ def test_append_survives_same_table_replace(spark, tmp_path):
     assert len(m["tables"]["hosts"]) == 2
 
 
+def test_commit_refuses_an_undeclared_table(spark, tmp_path):
+    """Every table is written and read with its declared schema, so a
+    commit naming a table ``schemas`` does not declare is refused before
+    any file or manifest is written."""
+    import pytest
+
+    cat = SnapshotCatalog(spark, str(tmp_path))
+    m1 = cat.commit(1, appends={"metrics": _metrics_df(spark, 1)})
+    with pytest.raises(ValueError, match="nope"):
+        cat.commit(2, appends={"metrics": _metrics_df(spark, 2), "nope": _metrics_df(spark, 2)})
+    assert cat.latest() == m1
+    assert not (tmp_path / "nope").exists()
+    assert len(os.listdir(tmp_path / "metrics")) == 1
+
+
 def test_commit_records_only_its_own_bloom_layout(spark, tmp_path):
     """A commit records its Bloom layout's manifest key and drops the
     other layout's, whichever the previous snapshot held (broadcast →
